@@ -747,6 +747,120 @@ class CrashOrderSpec extends SparkSpec {
     } finally noInjection()
   }
 
+  test("admitting sinks, output append dies: index unchanged, replays converge to the crash-free output") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import graft.streaming.Streams
+    implicit val sqlCtx = spark.sqlContext
+    case class SinkCase(name: String, build: String => Unit,
+                        start: (DataFrame, String) => StreamingQuery,
+                        b0: Seq[(Long, String)], b1: Seq[(Long, String)])
+    val none = null.asInstanceOf[String]
+    val passage = "alpha beta gamma delta epsilon zeta eta theta" // w=8
+    val novel = "first batch novel content nine ten eleven twelve now here"
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    // every sink writes its index under <wd>/idx and its output to <wd>/out;
+    // batch 1 repeats what batch 0 admitted, adds fresh text and a null row
+    val cases = Seq(
+      SinkCase("ingestGate",
+        idx => Dedup.buildExactKeyIndex(docs((1L, "standing doc")), "text", idx),
+        (s, wd) => Streams.ingestGate(spark, s, "doc_id", "text",
+          s"$wd/idx", s"$wd/out", s"$wd/ckpt"),
+        Seq((10L, "fresh ten"), (11L, "standing doc")),
+        Seq((20L, "fresh ten"), (21L, "fresh twenty one"), (22L, none))),
+      SinkCase("gramExciseSink",
+        idx => Dedup.buildGramIndex(
+          docs((1L, s"standing corpus with $passage in the middle zone")),
+          "text", idx, w = 8),
+        (s, wd) => Streams.gramExciseSink(spark, s, "doc_id", "text",
+          s"$wd/idx", s"$wd/out", s"$wd/ckpt"),
+        Seq((10L, s"$passage novel continuation one two three four five six"),
+          (11L, novel)),
+        Seq((20L, novel), (22L, none),
+          (21L, "second batch fresh material thirteen fourteen fifteen sixteen"))),
+      SinkCase("lineRemovalSink",
+        idx => Dedup.buildLineIndex(docs((1L, "cookie banner\nstanding one"),
+          (2L, "cookie banner\nstanding two")), "doc_id", "text", idx,
+          minDocFreq = 3),
+        (s, wd) => Streams.lineRemovalSink(spark, s, "doc_id", "text",
+          s"$wd/idx", s"$wd/out", s"$wd/ckpt"),
+        Seq((10L, "cookie banner\nalpha uno"), (11L, "promo\nbeta dos")),
+        Seq((20L, "cookie banner\ndelta quat"), (21L, "plain\ngamma tres"),
+          (22L, none))),
+      SinkCase("paragraphRemovalSink",
+        idx => Dedup.buildParagraphIndex(
+          docs((1L, "cookie banner para\n\nstanding one"),
+            (2L, "cookie banner para\n\nstanding two")),
+          "doc_id", "text", idx, minDocFreq = 3),
+        (s, wd) => Streams.paragraphRemovalSink(spark, s, "doc_id", "text",
+          s"$wd/idx", s"$wd/out", s"$wd/ckpt"),
+        Seq((10L, "cookie banner para\n\nalpha uno"), (11L, "promo\n\nbeta dos")),
+        Seq((20L, "cookie banner para\n\ndelta quat"),
+          (21L, "plain para\n\ngamma tres"), (22L, none))))
+
+    // true when the query died on its batch
+    def drain(q: StreamingQuery): Boolean =
+      try { q.processAllAvailable(); false }
+      catch { case _: Exception => true }
+      finally q.stop()
+    def output(wd: String): Seq[String] =
+      spark.read.parquet(s"$wd/out").collect().map(_.toString).sorted.toSeq
+    def indexFiles(wd: String): Set[(String, Long)] = {
+      def walk(f: java.io.File): Seq[(String, Long)] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        else Seq(f.getPath -> f.length())
+      walk(new java.io.File(s"${wd.stripPrefix("faulty://")}/idx")).toSet
+    }
+
+    cases.foreach { c =>
+      val ref = tmpDir("graft_crash_admit_ref_")
+      c.build(s"$ref/idx")
+      val refMem = MemoryStream[(Long, String)]
+      val qr = c.start(refMem.toDF().toDF("doc_id", "text"), ref)
+      try {
+        refMem.addData(c.b0: _*); qr.processAllAvailable()
+        refMem.addData(c.b1: _*); qr.processAllAvailable()
+      } finally qr.stop()
+      val expected = output(ref)
+
+      val wd = faultyDir("graft_crash_admit_")
+      try {
+        c.build(s"$wd/idx")
+        val mem = MemoryStream[(Long, String)]
+        def start() = c.start(mem.toDF().toDF("doc_id", "text"), wd)
+        mem.addData(c.b0: _*)
+        assert(!drain(start()), s"${c.name}: batch 0 must commit")
+        val outB0 = output(wd)
+        val indexB0 = indexFiles(wd)
+
+        mem.addData(c.b1: _*)
+        FaultyFs.failedRenames.clear()
+        failAppendsInto("out")
+        val died = try drain(start()) finally noInjection()
+        assert(died && !FaultyFs.failedRenames.isEmpty,
+          s"${c.name}: the output append must die")
+        assert(output(wd) == outB0, s"${c.name}: no partial output rows")
+        assert(indexFiles(wd) == indexB0,
+          s"${c.name}: the index must not advance past a dead output append")
+
+        assert(!drain(start()), s"${c.name}: the replay must commit")
+        assert(output(wd) == expected,
+          s"${c.name}: the replay must land the crash-free output")
+
+        // drop batch 1's commit marker: a replay after the index advanced
+        // may re-emit rows, and compactOutput converges them
+        val commits = new java.io.File(s"${wd.stripPrefix("faulty://")}/ckpt/commits")
+        assert(commits.listFiles().filter(_.getName.forall(_.isDigit))
+          .maxBy(_.getName.toInt).delete())
+        assert(!drain(start()), s"${c.name}: the second replay must commit")
+        IndexMaintenance.compactOutput(spark, s"$wd/out")
+        assert(output(wd) == expected,
+          s"${c.name}: compactOutput must converge the replays")
+      } finally noInjection()
+    }
+  }
+
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
