@@ -273,9 +273,7 @@ object IndexMaintenance {
     */
   def consolidateTokenBudgetState(spark: SparkSession, path: String,
                                   checkpoint: String): Seq[Long] = {
-    val meta = graft.ops.Similarity.readIndexMeta(spark, path)
-    require(meta.get("layout").contains("token_budget_gate"),
-      s"not a token_budget_gate layout: $path (meta ${meta.get("layout")})")
+    graft.ops.Similarity.requireLayout(spark, path, "token_budget_gate")
     val hc = spark.sparkContext.hadoopConfiguration
     val commits = new org.apache.hadoop.fs.Path(
       s"${checkpoint.stripSuffix("/")}/commits")

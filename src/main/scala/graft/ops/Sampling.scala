@@ -675,9 +675,7 @@ object Sampling {
   def dsirScoreWithModel(spark: org.apache.spark.sql.SparkSession,
                          df: DataFrame, idCol: String, textCol: String,
                          path: String): DataFrame = {
-    val meta = graft.ops.Similarity.readIndexMeta(spark, path)
-    require(meta.get("layout").contains("dsir_model"),
-      s"not a dsir_model layout: $path (meta ${meta.get("layout")})")
+    val meta = graft.ops.Similarity.requireLayout(spark, path, "dsir_model")
     val dim = meta("dim").toInt
     val k = meta("smooth_k").toDouble
     val kd = lit(k) * dim

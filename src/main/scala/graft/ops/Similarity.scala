@@ -1102,10 +1102,11 @@ object Similarity {
   }
 
   /** Bounded read of a layout's centroid table as a cell-ordered
-    * matrix (the ivfPqIndexTopK fetch, shared by the decode paths).
+    * matrix — the one reader the IVF probes, the decode paths and the
+    * streaming sinks' sink-start freeze share.
     */
-  private def readCentroidMatrix(spark: org.apache.spark.sql.SparkSession,
-                                 path: String): Array[Array[Double]] =
+  private[graft] def readCentroidMatrix(spark: org.apache.spark.sql.SparkSession,
+                                         path: String): Array[Array[Double]] =
     spark.read.parquet(s"$path/centroids")
       .select(col("cell"), col("centroid")).collect()
       .sortBy(_.getInt(0))
@@ -1254,10 +1255,7 @@ object Similarity {
                             idCol: String, queryVec: Array[Double],
                             k: Int, nProbe: Int = 3, scale: Int = 6): DataFrame = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    val cents = readCentroidMatrix(spark, path)
     val probes = nearestCells(cents, queryVec, nProbe)
     val q = Seq(Tuple1(quantizeDriver(queryVec).toSeq)).toDF("_qq")
       .withColumn("_qqn", norm(col("_qq")))
@@ -1283,10 +1281,7 @@ object Similarity {
                    idCol: String, vecCol: String, queryVec: Array[Double],
                    k: Int, nProbe: Int = 3, scale: Int = 6): DataFrame = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    val cents = readCentroidMatrix(spark, path)
     val probes = nearestCells(cents, queryVec, nProbe)
     val q = Seq(Tuple1(queryVec.toSeq)).toDF("_qv")
       .withColumn("_qn", norm(col("_qv")))
@@ -1884,6 +1879,19 @@ object Similarity {
     }
   }
 
+  /** [[readIndexMeta]] behind the layout guard the frozen-model readers
+    * and gate sinks share: fail fast unless `path` carries `layout`.
+    */
+  private[graft] def requireLayout(spark: org.apache.spark.sql.SparkSession,
+                                   path: String,
+                                   layout: String): Map[String, String] = {
+    val meta = readIndexMeta(spark, path)
+    val article = if ("aeiou".contains(layout.head)) "an" else "a"
+    require(meta.get("layout").contains(layout),
+      s"not $article $layout layout: $path (meta ${meta.get("layout")})")
+    meta
+  }
+
   /** Does the IVF-PQ layout at `path` carry the residual-encoding
     * marker? One bounded meta read.
     */
@@ -1929,10 +1937,7 @@ object Similarity {
   def ivfPqIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                      idCol: String, queryVec: Array[Double],
                      k: Int, nProbe: Int = 3, scale: Int = 6): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    val cents = readCentroidMatrix(spark, path)
     val probes = nearestCells(cents, queryVec, nProbe)
     val cb = readCodebooks(spark, path)
     val scan = spark.read.parquet(s"$path/data")
@@ -2139,10 +2144,7 @@ object Similarity {
                         idCol: String,
                         queries: DataFrame, qIdCol: String, qVecCol: String,
                         k: Int, nProbe: Int = 3, scale: Int = 6): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid")).collect() // bounded: nCells rows
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    val cents = readCentroidMatrix(spark, path) // bounded: nCells rows
     val cb = readCodebooks(spark, path)
     val index = spark.read.parquet(s"$path/data")
     requireIntegralId(index, idCol, "ivfPqIndexKnnJoin")
@@ -2271,10 +2273,7 @@ object Similarity {
                       idCol: String, vecCol: String,
                       queries: DataFrame, qIdCol: String, qVecCol: String,
                       k: Int, nProbe: Int = 3, scale: Int = 6): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid")).collect() // bounded: nCells rows
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    val cents = readCentroidMatrix(spark, path) // bounded: nCells rows
     val probed = queries
       .select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
       .withColumn("_qn", norm(col("_qv")))
@@ -2309,10 +2308,7 @@ object Similarity {
                                path: String, idCol: String,
                                queries: DataFrame, qIdCol: String, qVecCol: String,
                                k: Int, nProbe: Int = 3, scale: Int = 6): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid")).collect() // bounded: nCells rows
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    val cents = readCentroidMatrix(spark, path) // bounded: nCells rows
     val probed = queries
       .select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
       .withColumn("_qq", graft.functions.VectorFunctions.quantizeInt8(col("_qv"))

@@ -411,9 +411,7 @@ object TextAnalysis {
   def bigramScoreWithModel(spark: org.apache.spark.sql.SparkSession,
                            df: DataFrame, idCol: String, textCol: String,
                            path: String): DataFrame = {
-    val meta = Similarity.readIndexMeta(spark, path)
-    require(meta.get("layout").contains("bigram_lm"),
-      s"not a bigram_lm layout: $path (meta ${meta.get("layout")})")
+    val meta = Similarity.requireLayout(spark, path, "bigram_lm")
     val k = meta("smooth_k").toDouble
     val nv = lit(meta("nv").toLong)
     val big = spark.read.parquet(s"$path/bigrams")
@@ -580,9 +578,7 @@ object TextAnalysis {
   def nbScoreWithModel(spark: org.apache.spark.sql.SparkSession,
                        df: DataFrame, idCol: String, textCol: String,
                        path: String): DataFrame = {
-    val meta = Similarity.readIndexMeta(spark, path)
-    require(meta.get("layout").contains("nb_model"),
-      s"not an nb_model layout: $path (meta ${meta.get("layout")})")
+    val meta = Similarity.requireLayout(spark, path, "nb_model")
     val k = lit(meta("smooth_k").toDouble)
     val denom1 = lit(meta("t1").toLong).cast("double") +
       k * lit(meta("nv").toLong)

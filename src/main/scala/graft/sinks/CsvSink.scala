@@ -41,29 +41,31 @@ object CsvSink {
                           enc: String, truncate: Boolean): Unit = {
     val tmp = Files.createTempDirectory("graft_csv_").toString
     val tmpOut = s"$tmp/out"
-    // coalesce(1) only at the final write: upstream stages keep full
-    // parallelism; one task streams the merged result to a single file.
-    df.coalesce(1).write
-      .option("header", truncate.toString)
-      .option("sep", sep)
-      .option("encoding", enc)
-      .option("emptyValue", "")
-      .csv(tmpOut)
-    val part = new File(tmpOut).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-      .getOrElse(throw new IllegalStateException(s"no part file produced in $tmpOut"))
-    val target = Paths.get(targetFile)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    if (truncate)
-      Files.move(part.toPath, target, StandardCopyOption.REPLACE_EXISTING)
-    else {
-      // stream the part into the target — never buffer the whole file in
-      // driver memory
-      val out = Files.newOutputStream(target,
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-      try Files.copy(part.toPath, out) finally out.close()
-    }
-    deleteRecursively(new File(tmp))
+    // coalesce(1) is narrow, so it adds no shuffle: the whole stage that
+    // feeds it (the scan and the transforms back to the last shuffle)
+    // runs as the one task that writes the single file
+    try {
+      df.coalesce(1).write
+        .option("header", truncate.toString)
+        .option("sep", sep)
+        .option("encoding", enc)
+        .option("emptyValue", "")
+        .csv(tmpOut)
+      val part = new File(tmpOut).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+        .getOrElse(throw new IllegalStateException(s"no part file produced in $tmpOut"))
+      val target = Paths.get(targetFile)
+      Option(target.getParent).foreach(Files.createDirectories(_))
+      if (truncate)
+        Files.move(part.toPath, target, StandardCopyOption.REPLACE_EXISTING)
+      else {
+        // stream the part into the target — never buffer the whole file in
+        // driver memory
+        val out = Files.newOutputStream(target,
+          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        try Files.copy(part.toPath, out) finally out.close()
+      }
+    } finally deleteRecursively(new File(tmp))
   }
 
   private def deleteRecursively(f: File): Unit = {

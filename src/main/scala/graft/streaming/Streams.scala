@@ -20,6 +20,52 @@ import org.apache.spark.sql.functions._
   */
 object Streams {
 
+  /** The one query starter every sink here shares: each micro-batch of
+    * `stream` goes to `f` through `foreachBatch` (plain appends, so a
+    * batch-built layout and streamed appends coexist — the parquet file
+    * sink's `_spark_metadata` log would hide non-log files from later
+    * reads), under `checkpoint`, in append mode.
+    */
+  private def batches(stream: DataFrame, checkpoint: String)
+                     (f: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .foreachBatch(f)
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .start()
+
+  /** The crash-window order every admitting sink keeps, in one place:
+    * persist the screened batch (its consumers must not re-run the
+    * screens), `emit` it to the output, and only then `advanceIndex`.
+    * A failed emit never reaches the index append, so the index never
+    * holds a key the output lacks; a crash after the output append
+    * replays the batch against the not-yet-advanced index and re-emits
+    * at-least-once rows, which [[graft.ops.IndexMaintenance
+    * .compactOutput]] converges. Returns `emit`'s result once the index
+    * advanced.
+    */
+  private def admit[A](screened: DataFrame)(emit: DataFrame => A)
+                      (advanceIndex: DataFrame => Unit): A = {
+    val admitted = screened.persist()
+    try {
+      val emitted = emit(admitted)
+      advanceIndex(admitted)
+      emitted
+    } finally admitted.unpersist()
+  }
+
+  /** A cleaning sink's null-text rows: they carry nothing to clean, so
+    * they pass through as (doc_id, null, 0, 0) under the sink's own
+    * counter columns.
+    */
+  private def nullTextRows(batch: DataFrame, idCol: String, textCol: String,
+                           units: String, cleaned: String): DataFrame =
+    batch.where(col(textCol).isNull)
+      .select(col(idCol).as("doc_id"),
+        lit(null).cast("string").as("clean_text"),
+        lit(0L).as(units), lit(0L).as(cleaned))
+
   /** File-source intake over a capture directory — streaming version of the
     * watcher (processor.py:330-338). `schema` is required: streaming file
     * sources do not infer.
@@ -103,15 +149,6 @@ object Streams {
       .select(col("window.start").as("h") +: keyCols.map(col) :+
         col("cnt") :+ col("sv"): _*)
 
-  /** Sliding-window variant. */
-  def slidingCounts(events: DataFrame, tsCol: String, windowLen: String,
-                    slide: String, watermark: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen, slide))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("ws"), col("window.end").as("we"), col("cnt"))
-
   /** Session-window aggregation (native session_window) — the streaming
     * twin of [[graft.ops.Sessionize]]. Same 30-min default gap.
     */
@@ -141,20 +178,16 @@ object Streams {
   def lshIndexSink(stream: DataFrame, vecCol: String, path: String,
                    checkpoint: String, dim: Int,
                    nBits: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    stream
+    batches(stream
       // same admission rule as the batch builders: a null/empty vector
       // would land in __HIVE_DEFAULT_PARTITION__, invisible to every probe
       .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
       .withColumn("bucket", concat(lit("b"),
         graft.functions.VectorFunctions.lshBucket(
-          transform(col(vecCol), _.cast("double")), dim, nBits)))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("bucket").parquet(s"$path/data")
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+          transform(col(vecCol), _.cast("double")), dim, nBits))),
+      checkpoint) { (batch, _) =>
+      batch.write.mode("append").partitionBy("bucket").parquet(s"$path/data")
+    }
 
   /** Continuously maintain a persisted IVF index built by
     * [[graft.ops.Similarity.buildIvfIndex]]: the index's OWN centroid
@@ -175,21 +208,14 @@ object Streams {
   def ivfIndexSink(spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
                    vecCol: String, indexPath: String,
                    checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-    stream
+    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, indexPath)
+    batches(stream
       .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
       .withColumn("cell", graft.functions.VectorFunctions.nearestCentroid(
-        transform(col(vecCol), _.cast("double")), centroids))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+        transform(col(vecCol), _.cast("double")), centroids)),
+      checkpoint) { (batch, _) =>
+      batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
+    }
   }
 
   /** Continuously maintain a persisted EXACT-dedup key index built by
@@ -212,13 +238,9 @@ object Streams {
   def exactKeyIndexSink(spark: org.apache.spark.sql.SparkSession,
                         stream: DataFrame, textCol: String, path: String,
                         checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Dedup.appendExactKeys(spark, batch, textCol, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    batches(stream, checkpoint) { (batch, _) =>
+      graft.ops.Dedup.appendExactKeys(spark, batch, textCol, path)
+    }
 
   /** Streaming WEB-CORPUS INTAKE — [[graft.ops.Web.intake]]'s crawl-feed
     * form, per micro-batch:
@@ -256,14 +278,10 @@ object Streams {
                     lowercase: Boolean = false,
                     redactPii: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        intakeBatch(spark, batch, idCol, htmlCol, outPath, keyIndexPath,
-          th, lowercase, redactPii)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    batches(stream, checkpoint) { (batch, _) =>
+      intakeBatch(spark, batch, idCol, htmlCol, outPath, keyIndexPath,
+        th, lowercase, redactPii)
+    }
 
   /** One intake micro-batch — shared by [[webIntakeSink]] (row stream)
     * and [[warcIngestSink]] (file-arrival stream).
@@ -276,15 +294,10 @@ object Streams {
                           redactPii: Boolean = false): Unit = {
     val reps = graft.ops.Web.intake(batch, idCol, htmlCol, th, lowercase,
       redactPii)
-    // persisted: two consumers (output append, key admission) must
-    // not re-run the extract/gate/dedup chain twice
-    val admitted = graft.ops.Dedup.exactDedupAgainstIndex(
-      spark, reps, "norm_text", keyIndexPath).persist()
-    try {
-      admitted.write.mode("append").parquet(outPath)
-      graft.ops.Dedup.appendExactKeys(spark, admitted, "norm_text",
-        keyIndexPath)
-    } finally admitted.unpersist()
+    admit(graft.ops.Dedup.exactDedupAgainstIndex(
+        spark, reps, "norm_text", keyIndexPath))(
+      _.write.mode("append").parquet(outPath))(
+      graft.ops.Dedup.appendExactKeys(spark, _, "norm_text", keyIndexPath))
   }
 
   /** CRAWL-FILE streaming intake — [[webIntakeSink]] fed by a directory
@@ -326,31 +339,38 @@ object Streams {
                      digestIndexPath: Option[String] = None,
                      robotsGate: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    warcPathStream(spark, dir, pathGlob)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    shardBatches(spark, dir, pathGlob, checkpoint) { (paths, _) =>
+      val (decoded, digestAdmitted) =
+        decodeWarcBatch(spark, paths, digestIndexPath, robotsGate)
+      try {
+        intakeBatch(spark, decoded, "record_id", "html", outPath,
+          keyIndexPath, th, lowercase)
+        // digest admission LAST — the same keys-last replay
+        // argument as intakeBatch's text keys: a crash before this
+        // append replays the batch, the digest screen re-passes
+        // it, and the TEXT-key gate (already committed) screens
+        // the output, so nothing duplicates and the digest append
+        // completes on the replay
+        digestAdmitted.foreach(da => graft.ops.Dedup.appendKeys(
+          spark, da, "payload_digest", digestIndexPath.get))
+      } finally digestAdmitted.foreach(_.unpersist())
+    }
+
+  /** [[batches]] over [[warcPathStream]]: each micro-batch's new shard
+    * paths — a driver collect bounded by the source's files-per-trigger,
+    * never by file size or record count — with batches that landed
+    * nothing skipped.
+    */
+  private def shardBatches(spark: org.apache.spark.sql.SparkSession,
+                           dir: String, pathGlob: String, checkpoint: String)
+                          (f: (Seq[String], Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    batches(warcPathStream(spark, dir, pathGlob), checkpoint) {
+      (batch, batchId) =>
         val paths = batch.select("path")
           .as(org.apache.spark.sql.Encoders.STRING).collect()
-        if (paths.nonEmpty) {
-          val (decoded, digestAdmitted) =
-            decodeWarcBatch(spark, paths.toSeq, digestIndexPath, robotsGate)
-          try {
-            intakeBatch(spark, decoded, "record_id", "html", outPath,
-              keyIndexPath, th, lowercase)
-            // digest admission LAST — the same keys-last replay
-            // argument as intakeBatch's text keys: a crash before this
-            // append replays the batch, the digest screen re-passes
-            // it, and the TEXT-key gate (already committed) screens
-            // the output, so nothing duplicates and the digest append
-            // completes on the replay
-            digestAdmitted.foreach(da => graft.ops.Dedup.appendKeys(
-              spark, da, "payload_digest", digestIndexPath.get))
-          } finally digestAdmitted.foreach(_.unpersist())
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+        if (paths.nonEmpty) f(paths.toSeq, batchId)
+    }
 
   /** The checkpointed file-arrival listing over a crawl landing dir:
     * NEW warc paths per micro-batch, path column only. The format's
@@ -436,19 +456,11 @@ object Streams {
                       dir: String, outPath: String, checkpoint: String,
                       pathGlob: String = "*.warc*")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    warcPathStream(spark, dir, pathGlob)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val paths = batch.select("path")
-          .as(org.apache.spark.sql.Encoders.STRING).collect()
-        if (paths.nonEmpty)
-          graft.sources.WarcReader.latestByUrl(
-              graft.sources.WarcReader.readMany(spark, paths.toSeq))
-            .write.mode("append").parquet(outPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    shardBatches(spark, dir, pathGlob, checkpoint) { (paths, _) =>
+      graft.sources.WarcReader.latestByUrl(
+          graft.sources.WarcReader.readMany(spark, paths))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** CRAWL → TRAINING-IDS streaming terminal — the q157 composition's
     * streaming twin, rooted at the same file-arrival listing as
@@ -503,58 +515,47 @@ object Streams {
                       robotsGate: Boolean = false,
                       byLanguage: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    warcPathStream(spark, dir, pathGlob)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val paths = batch.select("path")
-          .as(org.apache.spark.sql.Encoders.STRING).collect()
-        if (paths.nonEmpty) {
-          val (decoded, digestAdmitted) =
-            decodeWarcBatch(spark, paths.toSeq, digestIndexPath, robotsGate)
-          try {
-            val pages = decoded.select(col("record_id").as("doc_id"),
-              sourceKey.as("source"), col("html"))
-            val reps = graft.ops.Web.intake(pages, "doc_id", "html",
-              th, lowercase)
-            // persisted: three consumers (emptiness probe, curation,
-            // text-key admission)
-            val admitted = graft.ops.Dedup.exactDedupAgainstIndex(
-              spark, reps, "norm_text", keyIndexPath).persist()
-            try {
-              if (!admitted.isEmpty) {
-                // stratum: the q164 LANGUAGE routing (the decision over
-                // the admitted page's normalized text — one map-side
-                // tokenProfile pass, no join), or the provenance
-                // source join-back: a batch-bounded 2-column broadcast
-                // (column pruning cuts the decode out of this branch —
-                // the domain needs only the url)
-                val packed =
-                  if (byLanguage)
-                    graft.ops.Curation.curateTokensByLanguage(spark,
-                      admitted, "doc_id", "norm_text",
-                      keyIndexPath = None, benchmark = None, cfg, encoder)
-                  else
-                    graft.ops.Curation.curateTokens(spark,
-                      admitted.join(
-                        broadcast(pages.select(col("doc_id"), col("source"))),
-                        Seq("doc_id")),
-                      "doc_id", "norm_text", "source",
-                      keyIndexPath = None, benchmark = None, cfg, encoder)
-                packed
-                  .withColumn("batch_id", lit(batchId))
-                  .write.mode("append").parquet(outPath)
-              }
-              graft.ops.Dedup.appendExactKeys(spark, admitted,
-                "norm_text", keyIndexPath)
-              digestAdmitted.foreach(da => graft.ops.Dedup.appendKeys(
-                spark, da, "payload_digest", digestIndexPath.get))
-            } finally admitted.unpersist()
-          } finally digestAdmitted.foreach(_.unpersist())
+    shardBatches(spark, dir, pathGlob, checkpoint) { (paths, batchId) =>
+      val (decoded, digestAdmitted) =
+        decodeWarcBatch(spark, paths, digestIndexPath, robotsGate)
+      try {
+        val pages = decoded.select(col("record_id").as("doc_id"),
+          sourceKey.as("source"), col("html"))
+        val reps = graft.ops.Web.intake(pages, "doc_id", "html",
+          th, lowercase)
+        admit(graft.ops.Dedup.exactDedupAgainstIndex(
+            spark, reps, "norm_text", keyIndexPath)) { admitted =>
+          if (!admitted.isEmpty) {
+            // stratum: the q164 LANGUAGE routing (the decision over
+            // the admitted page's normalized text — one map-side
+            // tokenProfile pass, no join), or the provenance
+            // source join-back: a batch-bounded 2-column broadcast
+            // (column pruning cuts the decode out of this branch —
+            // the domain needs only the url)
+            val packed =
+              if (byLanguage)
+                graft.ops.Curation.curateTokensByLanguage(spark,
+                  admitted, "doc_id", "norm_text",
+                  keyIndexPath = None, benchmark = None, cfg, encoder)
+              else
+                graft.ops.Curation.curateTokens(spark,
+                  admitted.join(
+                    broadcast(pages.select(col("doc_id"), col("source"))),
+                    Seq("doc_id")),
+                  "doc_id", "norm_text", "source",
+                  keyIndexPath = None, benchmark = None, cfg, encoder)
+            packed
+              .withColumn("batch_id", lit(batchId))
+              .write.mode("append").parquet(outPath)
+          }
+        } { admitted =>
+          graft.ops.Dedup.appendExactKeys(spark, admitted,
+            "norm_text", keyIndexPath)
+          digestAdmitted.foreach(da => graft.ops.Dedup.appendKeys(
+            spark, da, "payload_digest", digestIndexPath.get))
         }
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      } finally digestAdmitted.foreach(_.unpersist())
+    }
 
   /** Streaming SPAN-EXCISION gate over a [[graft.ops.Dedup
     * .buildGramIndex]] layout — the excision family's streaming end
@@ -614,56 +615,52 @@ object Streams {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     // bounded driver read at sink start — w is fixed at index build,
     // appends never change it, so one read serves every batch
-    val w = gramWidth(spark, indexPath)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // stage 0, the ingestGate lesson: min-id representative per
-        // content hash — catches identical rows of EVERY length (span
-        // excision cannot see duplicate docs shorter than w)
-        val withText = batch.where(col(textCol).isNotNull)
-        val reps = graft.ops.Dedup.exact(withText, idCol, textCol)
-          .select(col(idCol))
-        val deduped = withText.join(broadcast(reps), Seq(idCol), "left_semi")
-        val withinBatch = graft.ops.Dedup
-          .exciseDupSpans(deduped, idCol, textCol, w)
-        val screened = graft.ops.Dedup
-          .exciseAgainstIndex(spark,
-            withinBatch.select(col("doc_id"), col("clean_text").as("text")),
-            "doc_id", "text", indexPath)
-          .join(withinBatch.select(col("doc_id"), col("n_words").as("_nw"),
-            col("n_excised").as("_ex1")), Seq("doc_id"))
-          .select(col("doc_id"), col("clean_text"),
-            col("_nw").as("n_words"),
-            (col("_ex1") + col("n_excised")).as("n_excised"))
-          // "excised to emptiness" requires something to have been
-          // excisABLE: a whitespace-only row (n_words = 0) passes
-          // through like the nulls below, it carried nothing to excise
-          .where(col("clean_text") =!= "" || col("n_words") === 0)
-          .persist()
-        try {
-          val nulls = batch.where(col(textCol).isNull)
-            .select(col(idCol).as("doc_id"),
-              lit(null).cast("string").as("clean_text"),
-              lit(0L).as("n_words"), lit(0L).as("n_excised"))
-          screened.unionByName(nulls)
-            .write.mode("append").parquet(outPath)
-          // step 5: original grams ∪ emitted-text grams, one append
-          graft.ops.Dedup.appendGrams(spark,
-            withText.select(col(textCol).as("_gram_text"))
-              .unionByName(screened
-                .select(col("clean_text").as("_gram_text"))),
-            "_gram_text", indexPath)
-        } finally screened.unpersist()
+    val w = layoutParam(spark, indexPath, "w")
+    batches(stream, checkpoint) { (batch, _) =>
+      // stage 0, the ingestGate lesson: min-id representative per
+      // content hash — catches identical rows of EVERY length (span
+      // excision cannot see duplicate docs shorter than w)
+      val withText = batch.where(col(textCol).isNotNull)
+      val reps = graft.ops.Dedup.exact(withText, idCol, textCol)
+        .select(col(idCol))
+      val deduped = withText.join(broadcast(reps), Seq(idCol), "left_semi")
+      val withinBatch = graft.ops.Dedup
+        .exciseDupSpans(deduped, idCol, textCol, w)
+      val screened = graft.ops.Dedup
+        .exciseAgainstIndex(spark,
+          withinBatch.select(col("doc_id"), col("clean_text").as("text")),
+          "doc_id", "text", indexPath)
+        .join(withinBatch.select(col("doc_id"), col("n_words").as("_nw"),
+          col("n_excised").as("_ex1")), Seq("doc_id"))
+        .select(col("doc_id"), col("clean_text"),
+          col("_nw").as("n_words"),
+          (col("_ex1") + col("n_excised")).as("n_excised"))
+        // "excised to emptiness" requires something to have been
+        // excisABLE: a whitespace-only row (n_words = 0) passes
+        // through like the nulls, it carried nothing to excise
+        .where(col("clean_text") =!= "" || col("n_words") === 0)
+      admit(screened) {
+        _.unionByName(nullTextRows(batch, idCol, textCol, "n_words", "n_excised"))
+          .write.mode("append").parquet(outPath)
+      } { emitted =>
+        // step 5: original grams ∪ emitted-text grams, one append
+        graft.ops.Dedup.appendGrams(spark,
+          withText.select(col(textCol).as("_gram_text"))
+            .unionByName(emitted.select(col("clean_text").as("_gram_text"))),
+          "_gram_text", indexPath)
       }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    }
   }
 
-  private def gramWidth(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String): Int =
+  /** One bounded driver read of an integer build parameter (`w`,
+    * `min_doc_freq`) from a layout's `params` table — fixed at index
+    * build, appends never change it, so one read at sink start serves
+    * every batch.
+    */
+  private def layoutParam(spark: org.apache.spark.sql.SparkSession,
+                          indexPath: String, name: String): Int =
     spark.read.parquet(s"$indexPath/params")
-      .select(col("w")).head().getInt(0)
+      .select(col(name)).head().getInt(0)
 
   /** Streaming boilerplate-line removal — the [[graft.ops.Dedup
     * .buildLineIndex]] count layout's sink end, completing the family's
@@ -707,44 +704,11 @@ object Streams {
   def lineRemovalSink(spark: org.apache.spark.sql.SparkSession,
                       stream: DataFrame, idCol: String, textCol: String,
                       indexPath: String, outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val minDocFreq = spark.read.parquet(s"$indexPath/params")
-      .select(col("min_doc_freq")).head().getInt(0)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val token = s"b$batchId"
-        val withText = batch.where(col(textCol).isNotNull)
-        val withinBatch = graft.ops.Dedup
-          .removeFrequentLines(withText, idCol, textCol, minDocFreq)
-        val screened = graft.ops.Dedup
-          .removeLinesAgainstIndex(spark,
-            withinBatch.select(col("doc_id"), col("clean_text").as("text")),
-            "doc_id", "text", indexPath, excludeToken = Some(token),
-            knownMinDocFreq = Some(minDocFreq))
-          .join(withinBatch.select(col("doc_id"), col("n_lines").as("_nl"),
-            col("n_removed").as("_rm1")), Seq("doc_id"))
-          .select(col("doc_id"), col("clean_text"),
-            col("_nl").as("n_lines"),
-            (col("_rm1") + col("n_removed")).as("n_removed"))
-          // empty + something removed = all-boilerplate, drop; empty
-          // with NOTHING removed was empty on arrival, pass through
-          .where(col("clean_text") =!= "" || col("n_removed") === 0)
-          .persist()
-        try {
-          val nulls = batch.where(col(textCol).isNull)
-            .select(col(idCol).as("doc_id"),
-              lit(null).cast("string").as("clean_text"),
-              lit(0L).as("n_lines"), lit(0L).as("n_removed"))
-          screened.unionByName(nulls)
-            .write.mode("append").parquet(outPath)
-          graft.ops.Dedup.appendLineCounts(withText, idCol, textCol,
-            indexPath, token)
-        } finally screened.unpersist()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    unitRemovalSink(spark, stream, idCol, textCol, indexPath, outPath,
+      checkpoint, "n_lines", graft.ops.Dedup.removeFrequentLines,
+      graft.ops.Dedup.removeLinesAgainstIndex,
+      graft.ops.Dedup.appendLineCounts)
 
   /** [[lineRemovalSink]] at the PARAGRAPH unit — the streaming rung of
     * the q152 rule (cookie banners / footers / share blocks repeat as
@@ -776,41 +740,49 @@ object Streams {
                            stream: DataFrame, idCol: String, textCol: String,
                            indexPath: String, outPath: String,
                            checkpoint: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    unitRemovalSink(spark, stream, idCol, textCol, indexPath, outPath,
+      checkpoint, "n_paras", graft.ops.Dedup.removeFrequentParagraphs,
+      graft.ops.Dedup.removeParagraphsAgainstIndex,
+      graft.ops.Dedup.appendParagraphCounts)
+
+  /** The one micro-batch of [[lineRemovalSink]] and
+    * [[paragraphRemovalSink]], over the unit's `Dedup` functions
+    * (within-batch removal, standing probe, count admission) and its
+    * counter column `units`: within-batch pass at the layout's
+    * threshold, standing probe excluding the batch's own `b<batchId>`
+    * token, output append, then the batch's original counts admit under
+    * that token.
+    */
+  private def unitRemovalSink(
+      spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
+      idCol: String, textCol: String, indexPath: String, outPath: String,
+      checkpoint: String, units: String,
+      removeFrequent: (DataFrame, String, String, Int) => DataFrame,
+      removeAgainstIndex: (org.apache.spark.sql.SparkSession, DataFrame,
+        String, String, String, Option[String], Option[Int]) => DataFrame,
+      appendCounts: (DataFrame, String, String, String, String) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val minDocFreq = spark.read.parquet(s"$indexPath/params")
-      .select(col("min_doc_freq")).head().getInt(0)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val token = s"b$batchId"
-        val withText = batch.where(col(textCol).isNotNull)
-        val withinBatch = graft.ops.Dedup
-          .removeFrequentParagraphs(withText, idCol, textCol, minDocFreq)
-        val screened = graft.ops.Dedup
-          .removeParagraphsAgainstIndex(spark,
-            withinBatch.select(col("doc_id"), col("clean_text").as("text")),
-            "doc_id", "text", indexPath, excludeToken = Some(token),
-            knownMinDocFreq = Some(minDocFreq))
-          .join(withinBatch.select(col("doc_id"), col("n_paras").as("_np"),
-            col("n_removed").as("_rm1")), Seq("doc_id"))
-          .select(col("doc_id"), col("clean_text"),
-            col("_np").as("n_paras"),
-            (col("_rm1") + col("n_removed")).as("n_removed"))
-          .where(col("clean_text") =!= "" || col("n_removed") === 0)
-          .persist()
-        try {
-          val nulls = batch.where(col(textCol).isNull)
-            .select(col(idCol).as("doc_id"),
-              lit(null).cast("string").as("clean_text"),
-              lit(0L).as("n_paras"), lit(0L).as("n_removed"))
-          screened.unionByName(nulls)
-            .write.mode("append").parquet(outPath)
-          graft.ops.Dedup.appendParagraphCounts(withText, idCol, textCol,
-            indexPath, token)
-        } finally screened.unpersist()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    val minDocFreq = layoutParam(spark, indexPath, "min_doc_freq")
+    batches(stream, checkpoint) { (batch, batchId) =>
+      val token = s"b$batchId"
+      val withText = batch.where(col(textCol).isNotNull)
+      val withinBatch = removeFrequent(withText, idCol, textCol, minDocFreq)
+      val screened = removeAgainstIndex(spark,
+          withinBatch.select(col("doc_id"), col("clean_text").as("text")),
+          "doc_id", "text", indexPath, Some(token), Some(minDocFreq))
+        .join(withinBatch.select(col("doc_id"), col(units).as("_nu"),
+          col("n_removed").as("_rm1")), Seq("doc_id"))
+        .select(col("doc_id"), col("clean_text"), col("_nu").as(units),
+          (col("_rm1") + col("n_removed")).as("n_removed"))
+        // empty + something removed = all-boilerplate, drop; empty
+        // with NOTHING removed was empty on arrival, pass through
+        .where(col("clean_text") =!= "" || col("n_removed") === 0)
+      admit(screened) {
+        _.unionByName(nullTextRows(batch, idCol, textCol, units, "n_removed"))
+          .write.mode("append").parquet(outPath)
+      }(_ => appendCounts(withText, idCol, textCol, indexPath, token))
+    }
   }
 
   /** The COMPOSED streaming ingest — [[ingestGate]] →
@@ -934,31 +906,18 @@ object Streams {
     // contract (centroids are frozen), the gram width, and the line
     // layout's threshold (all fixed at index build; appends never
     // change any of them)
-    val centroids = spark.read.parquet(s"$ivfIndexPath/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-    val w = gramWidth(spark, gramIndexPath)
-    val lineMdf = lineIndexPath.map(p =>
-      spark.read.parquet(s"$p/params")
-        .select(col("min_doc_freq")).head().getInt(0))
+    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, ivfIndexPath)
+    val w = layoutParam(spark, gramIndexPath, "w")
+    val lineMdf = lineIndexPath.map(layoutParam(spark, _, "min_doc_freq"))
     // learned-screen rungs (the batch Config.pplModel/nbModel twins):
     // fail fast on a wrong layout at sink START, not at first batch.
     // Deterministic pure filters under frozen models, so every crash
     // window's replay argument is unchanged — the rung recomputes
     // byte-identically over the re-admitted rows
-    pplModelPath.foreach { p =>
-      val meta = graft.ops.Similarity.readIndexMeta(spark, p)
-      require(meta.get("layout").contains("bigram_lm"),
-        s"not a bigram_lm layout: $p (meta ${meta.get("layout")})")
-    }
-    nbModelPath.foreach { p =>
-      val meta = graft.ops.Similarity.readIndexMeta(spark, p)
-      require(meta.get("layout").contains("nb_model"),
-        s"not an nb_model layout: $p (meta ${meta.get("layout")})")
-    }
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    pplModelPath.foreach(graft.ops.Similarity.requireLayout(spark, _, "bigram_lm"))
+    nbModelPath.foreach(graft.ops.Similarity.requireLayout(spark, _, "nb_model"))
+    batches(stream, checkpoint) {
+      (batch, batchId) =>
         // ── rung 1: the ingestGate screens ──
         val withText = batch.where(col(textCol).isNotNull)
         val reps = graft.ops.Dedup.exact(withText, idCol, textCol)
@@ -1076,19 +1035,16 @@ object Streams {
                       col("_v"), col("_iv"), col("_vn"), col("_ivn")) >= tau,
                   "left_semi").select(col("doc_id"))
               val semDrop = inBatchDups.unionByName(standingDups).distinct()
-              val survivors = screened
-                .join(semDrop, Seq("doc_id"), "left_anti").persist()
-              try {
-                // ── rung 4: emit, then advance the indexes in REPLAY
-                // order — vectors → grams → exact keys LAST (the key
-                // append is the rung-1 replay gate: any crash before
-                // it leaves a batch the replay re-admits and
-                // re-drives through the later appends; see the
-                // docstring's per-window convergence argument) ──
-                val nulls = batch.where(col(textCol).isNull)
-                  .select(col(idCol).as("doc_id"),
-                    lit(null).cast("string").as("clean_text"),
-                    lit(0L).as("n_words"), lit(0L).as("n_excised"))
+              // ── rung 4: emit, then advance the indexes in REPLAY
+              // order — vectors → grams → exact keys LAST (the key
+              // append is the rung-1 replay gate: any crash before
+              // it leaves a batch the replay re-admits and
+              // re-drives through the later appends; see the
+              // docstring's per-window convergence argument) ──
+              val nulls = nullTextRows(batch, idCol, textCol,
+                "n_words", "n_excised")
+              val ladder = admit(screened
+                  .join(semDrop, Seq("doc_id"), "left_anti")) { survivors =>
                 // ── metrics: the ladder's admission counts, taken
                 // BEFORE the appends — the appends recache-by-path
                 // every frame that reads a standing index (survivors
@@ -1097,7 +1053,7 @@ object Streams {
                 // advanced index, not this batch's view. Every count
                 // is a cache scan (or populates the cache the write
                 // below reuses) ──
-                val ladder = metrics.map { _ =>
+                val counts = metrics.map { _ =>
                   val emitted = survivors.count()
                   Seq("rows_in" -> batch.count(),
                       "keys" -> fresh.count()) ++
@@ -1111,6 +1067,8 @@ object Streams {
                 }
                 survivors.unionByName(nulls)
                   .write.mode("append").parquet(outPath)
+                counts
+              } { survivors =>
                 survVec.join(survivors.select(col("doc_id")),
                     Seq("doc_id"), "left_semi")
                   .select(col("doc_id").as(ivfIdCol),
@@ -1135,22 +1093,18 @@ object Streams {
                     p, s"b$batchId"))
                 graft.ops.Dedup.appendExactKeys(spark, fresh, textCol,
                   keyIndexPath)
-                // recorded only once the batch's appends all committed
-                // (a crashed batch leaves no line, its replay logs its
-                // own)
-                ladder.foreach(metrics.get.record(batchId, _))
-              } finally survivors.unpersist()
+              }
+              // recorded only once the batch's appends all committed
+              // (a crashed batch leaves no line, its replay logs its
+              // own)
+              ladder.foreach(metrics.get.record(batchId, _))
             } finally vecs.unpersist()
           } finally screened.unpersist()
         } finally {
           fresh.unpersist()
           linedP.foreach(_.unpersist())
         }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    }
   }
 
   /** The streaming ADMISSION PIPELINE — the shape a continuous corpus
@@ -1181,38 +1135,32 @@ object Streams {
                  minQuality: Double = 0.0,
                  metrics: Option[RungMetrics] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // null-text rows can never collide (the key-index contract), so
-        // they bypass both dedup stages; a positive quality floor drops
-        // them (no content to score), minQuality = 0 admits them
-        val withText = batch.where(col(textCol).isNotNull)
-        val nullText = batch.where(col(textCol).isNull)
-        val reps = graft.ops.Dedup.exact(withText, idCol, textCol)
-          .select(col(idCol))
-        val deduped = withText.join(broadcast(reps), Seq(idCol), "left_semi")
-        // quality floor inlined (the batch-curate convention): a pure
-        // per-row projection needs no build-and-semi-join-back pass
-        val scored =
-          if (minQuality <= 0.0) deduped.unionByName(nullText)
-          else deduped.where(
-            graft.ops.TextAnalysis.qualityCol(col(textCol)) >= minQuality)
-        val admitted = graft.ops.Dedup.exactDedupAgainstIndex(
-          spark, scored, textCol, keyIndexPath).persist()
-        try {
-          // counts before the key append (which recaches-by-path the
-          // very frame that probed the index), recorded after it
-          val gateLadder = metrics.map(_ =>
-            Seq("rows_in" -> batch.count(), "out_rows" -> admitted.count()))
-          admitted.write.mode("append").parquet(outPath)
-          graft.ops.Dedup.appendExactKeys(spark, admitted, textCol, keyIndexPath)
-          gateLadder.foreach(metrics.get.record(batchId, _))
-        } finally admitted.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    batches(stream, checkpoint) { (batch, batchId) =>
+      // null-text rows can never collide (the key-index contract), so
+      // they bypass both dedup stages; a positive quality floor drops
+      // them (no content to score), minQuality = 0 admits them
+      val withText = batch.where(col(textCol).isNotNull)
+      val nullText = batch.where(col(textCol).isNull)
+      val reps = graft.ops.Dedup.exact(withText, idCol, textCol)
+        .select(col(idCol))
+      val deduped = withText.join(broadcast(reps), Seq(idCol), "left_semi")
+      // quality floor inlined (the batch-curate convention): a pure
+      // per-row projection needs no build-and-semi-join-back pass
+      val scored =
+        if (minQuality <= 0.0) deduped.unionByName(nullText)
+        else deduped.where(
+          graft.ops.TextAnalysis.qualityCol(col(textCol)) >= minQuality)
+      admit(graft.ops.Dedup.exactDedupAgainstIndex(
+          spark, scored, textCol, keyIndexPath)) { admitted =>
+        // counts before the key append (which recaches-by-path the
+        // very frame that probed the index), recorded after it
+        val gateLadder = metrics.map(_ =>
+          Seq("rows_in" -> batch.count(), "out_rows" -> admitted.count()))
+        admitted.write.mode("append").parquet(outPath)
+        gateLadder
+      }(graft.ops.Dedup.appendExactKeys(spark, _, textCol, keyIndexPath))
+        .foreach(metrics.get.record(batchId, _))
+    }
 
   /** The LEARNED-filter admission gate — [[graft.ops.TextAnalysis
     * .naiveBayesScore]]'s streaming twin over a persisted model
@@ -1246,20 +1194,13 @@ object Streams {
                             stream: DataFrame, idCol: String,
                             modelPath: String, layout: String,
                             outPath: String, checkpoint: String)
-                           (admit: DataFrame => DataFrame)
+                           (score: DataFrame => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val meta = graft.ops.Similarity.readIndexMeta(spark, modelPath)
-    require(meta.get("layout").contains(layout),
-      s"not a $layout layout: $modelPath (meta ${meta.get("layout")})")
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.join(admit(batch), Seq(idCol))
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    graft.ops.Similarity.requireLayout(spark, modelPath, layout)
+    batches(stream, checkpoint) { (batch, _) =>
+      batch.join(score(batch), Seq(idCol))
+        .write.mode("append").parquet(outPath)
+    }
   }
 
   def nbGateSink(spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
@@ -1402,45 +1343,38 @@ object Streams {
                     stream: DataFrame, idCol: String, keyCol: String,
                     statePath: String, outPath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val meta = graft.ops.Similarity.readIndexMeta(spark, statePath)
-    require(meta.get("layout").contains("quota_gate"),
-      s"not a quota_gate layout: $statePath (meta ${meta.get("layout")})")
-    val n = meta("n").toInt
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val used = spark.read.parquet(s"$statePath/admitted")
-        val fresh = batch
-          .where(col(idCol).isNotNull && col(keyCol).isNotNull)
-          .select(col(keyCol).cast("string").as("key"),
-            col(idCol).cast("long").as("id"))
-          .distinct()
-          .join(used, Seq("key", "id"), "left_anti")
-        // countDistinct, not count: a replayed delta may sit twice in the
-        // state, and a doubled count would halve a key's real budget
-        val usedPerKey = used.groupBy(col("key"))
-          .agg(countDistinct(col("id")).as("_used"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("key"))
-          .orderBy(md5(col("id").cast("string")), col("id"))
-        val admitted = fresh
-          .withColumn("_rk", row_number().over(w))
-          .join(usedPerKey, Seq("key"), "left")
-          .where(col("_rk") <= lit(n) - coalesce(col("_used"), lit(0L)))
-          .select(col("key"), col("id"))
-          .persist()
-        try {
-          if (!admitted.isEmpty) {
-            batch.join(broadcast(admitted.select(col("id").as("_qid"))),
-                col(idCol).cast("long") === col("_qid"), "left_semi")
-              .write.mode("append").parquet(outPath)
-            admitted.write.mode("append").parquet(s"$statePath/admitted")
-          }
-        } finally admitted.unpersist()
-        ()
+    val n = graft.ops.Similarity
+      .requireLayout(spark, statePath, "quota_gate")("n").toInt
+    batches(stream, checkpoint) { (batch, _) =>
+      val used = spark.read.parquet(s"$statePath/admitted")
+      val fresh = batch
+        .where(col(idCol).isNotNull && col(keyCol).isNotNull)
+        .select(col(keyCol).cast("string").as("key"),
+          col(idCol).cast("long").as("id"))
+        .distinct()
+        .join(used, Seq("key", "id"), "left_anti")
+      // countDistinct, not count: a replayed delta may sit twice in the
+      // state, and a doubled count would halve a key's real budget
+      val usedPerKey = used.groupBy(col("key"))
+        .agg(countDistinct(col("id")).as("_used"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("key"))
+        .orderBy(md5(col("id").cast("string")), col("id"))
+      // an empty admission appends nothing: no output rows, no delta
+      admit(fresh
+        .withColumn("_rk", row_number().over(w))
+        .join(usedPerKey, Seq("key"), "left")
+        .where(col("_rk") <= lit(n) - coalesce(col("_used"), lit(0L)))
+        .select(col("key"), col("id"))) { admitted =>
+        if (!admitted.isEmpty)
+          batch.join(broadcast(admitted.select(col("id").as("_qid"))),
+              col(idCol).cast("long") === col("_qid"), "left_semi")
+            .write.mode("append").parquet(outPath)
+      } { admitted =>
+        if (!admitted.isEmpty)
+          admitted.write.mode("append").parquet(s"$statePath/admitted")
       }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    }
   }
 
   /** The TOKEN-BUDGET admission gate — the mixture recipe (q133/q134)
@@ -1483,11 +1417,9 @@ object Streams {
                           statePath: String, outPath: String,
                           checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val meta = graft.ops.Similarity.readIndexMeta(spark, statePath)
-    require(meta.get("layout").contains("token_budget_gate"),
-      s"not a token_budget_gate layout: $statePath (meta ${meta.get("layout")})")
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    graft.ops.Similarity.requireLayout(spark, statePath, "token_budget_gate")
+    batches(stream, checkpoint) {
+      (batch, batchId) =>
         val budgets = spark.read.parquet(s"$statePath/budgets")
         // spend from EARLIER batches only: a replayed batch must see
         // the same pre-batch state whether or not its own delta landed
@@ -1501,7 +1433,7 @@ object Streams {
           .rowsBetween(
             org.apache.spark.sql.expressions.Window.unboundedPreceding,
             org.apache.spark.sql.expressions.Window.currentRow)
-        val admitted = batch
+        val picked = batch
           .where(col(idCol).isNotNull && col(stratumCol).isNotNull)
           .select(col(stratumCol).cast("string").as("key"),
             col(idCol).cast("long").as("id"),
@@ -1521,23 +1453,20 @@ object Streams {
           .where(col("_cum") <=
             col("budget") - coalesce(col("_used"), lit(0L)))
           .select(col("key"), col("id"), col("_tok"))
-          .persist()
-        try {
-          if (!admitted.isEmpty) {
+        // an empty admission appends nothing: no output rows, no delta
+        admit(picked) { admitted =>
+          if (!admitted.isEmpty)
             batch.join(broadcast(admitted.select(col("id").as("_aid"))),
                 col(idCol).cast("long") === col("_aid"), "left_semi")
               .write.mode("append").parquet(outPath)
+        } { admitted =>
+          if (!admitted.isEmpty)
             admitted.groupBy(col("key"))
               .agg(sum(col("_tok")).as("tokens"))
               .select(col("key"), lit(batchId).as("batch_id"), col("tokens"))
               .write.mode("append").parquet(s"$statePath/committed")
-          }
-        } finally admitted.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+        }
+    }
   }
 
   /** Streaming per-source corpus card — [[graft.ops.Analytics.dataCard]]'s
@@ -1594,11 +1523,8 @@ object Streams {
                        stream: DataFrame, idCol: String, vecCol: String,
                        indexPath: String, checkpoint: String,
                        tau: Double = 0.4): org.apache.spark.sql.streaming.StreamingQuery = {
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-    stream
+    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, indexPath)
+    batches(stream
       // null, empty AND zero-norm vectors are excluded: a zero vector
       // carries no direction (cosineGuarded reads it as 0 ≥ nothing),
       // so admitting it adds un-matchable dead weight — and breaks
@@ -1606,9 +1532,8 @@ object Streams {
       // cosine 1 on a post-append replay and is not re-appended, but a
       // zero vector cannot, so it would duplicate per replay
       .where(col(vecCol).isNotNull && size(col(vecCol)) > 0 &&
-        exists(col(vecCol), _ =!= 0.0f))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+        exists(col(vecCol), _ =!= 0.0f)), checkpoint) {
+      (batch, _) =>
         val b = batch
           .withColumn("_v", transform(col(vecCol), _.cast("double")))
           .withColumn("_vn", graft.ops.Similarity.norm(col("_v")))
@@ -1652,10 +1577,7 @@ object Streams {
           admitted.drop("_v", "_vn")
             .write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
         } finally surv.unpersist()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    }
   }
 
   /** Continuously maintain a QUANTIZED persisted LSH index built by
@@ -1668,7 +1590,7 @@ object Streams {
   def lshIndexQuantizedSink(stream: DataFrame, idCol: String, vecCol: String,
                             path: String, checkpoint: String, dim: Int,
                             nBits: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    stream
+    batches(stream
       .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
       .select(col(idCol),
         graft.functions.VectorFunctions.quantizeInt8(
@@ -1676,14 +1598,9 @@ object Streams {
         concat(lit("b"), graft.functions.VectorFunctions.lshBucket(
           transform(col(vecCol), _.cast("double")), dim, nBits)).as("bucket"))
       .select(col(idCol), col("_z.scale").as("scale"), col("_z.q").as("q"),
-        col("bucket"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("bucket").parquet(s"$path/data")
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+        col("bucket")), checkpoint) { (batch, _) =>
+      batch.write.mode("append").partitionBy("bucket").parquet(s"$path/data")
+    }
 
   /** Continuously maintain a QUANTIZED persisted IVF index built by
     * [[graft.ops.Similarity.buildIvfIndexQuantized]]: same frozen-centroid
@@ -1699,11 +1616,8 @@ object Streams {
                             stream: DataFrame, idCol: String, vecCol: String,
                             indexPath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-    stream
+    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, indexPath)
+    batches(stream
       .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
       .select(col(idCol),
         graft.functions.VectorFunctions.quantizeInt8(
@@ -1711,14 +1625,9 @@ object Streams {
         graft.functions.VectorFunctions.nearestCentroid(
           transform(col(vecCol), _.cast("double")), centroids).as("cell"))
       .select(col(idCol), col("_z.scale").as("scale"), col("_z.q").as("q"),
-        col("cell"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+        col("cell")), checkpoint) { (batch, _) =>
+      batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
+    }
   }
 
   /** IVF index sink WITH A DRIFT CARD — the streaming member of the
@@ -1755,10 +1664,7 @@ object Streams {
     require(layout == "ivf" || layout == "ivf_int8" || layout == "ivf_pq",
       s"ivfDriftCardSink: layout '$layout' at $indexPath is not an IVF " +
         "cell layout (flat PQ has no cells to drift)")
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, indexPath)
     val clean = stream.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
     val placed = layout match {
       case "ivf" =>
@@ -1775,8 +1681,8 @@ object Streams {
       case _ => // ivf_pq: the index sink's own residual-aware encode
         ivfPqEncoded(spark, clean, idCol, vecCol, indexPath)
     }
-    placed.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    batches(placed, checkpoint) {
+      (batch, batchId) =>
         val n = batch.count()
         batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
         val drift =
@@ -1792,11 +1698,7 @@ object Streams {
         Seq((batchId, n, stored, stayed, retention))
           .toDF("batch_id", "n_appended", "n_stored", "n_stayed", "retention")
           .coalesce(1).write.mode("append").parquet(cardPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    }
   }
 
   /** Streaming distribution-drift card — [[graft.ops.Analytics
@@ -1831,8 +1733,8 @@ object Streams {
         reference.schema(bucketCol).copy(nullable = true),
         org.apache.spark.sql.types.StructField("ref_n",
           org.apache.spark.sql.types.LongType, nullable = false))))
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    batches(stream, checkpoint) {
+      (batch, batchId) =>
         // An idle source delivering an empty micro-batch is NOT drift:
         // scoring zero cur rows would mark every frozen reference
         // bucket vanished (cur_n=0, eps-floored PSI) and false-alarm
@@ -1845,11 +1747,7 @@ object Streams {
             .withColumn("batch_id", lit(batchId))
             .coalesce(1).write.mode("append").parquet(cardPath)
         }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    }
   }
 
   /** Continuously maintain a persisted PQ index built by
@@ -1870,18 +1768,14 @@ object Streams {
                   idCol: String, vecCol: String, indexPath: String,
                   checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val cb = readCodebooks(spark, indexPath)
-    stream
+    batches(stream
       .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
       .select(col(idCol),
         graft.functions.VectorFunctions.pqEncode(
-          transform(col(vecCol), _.cast("double")), cb).as("codes"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(s"$indexPath/data")
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+          transform(col(vecCol), _.cast("double")), cb).as("codes")),
+      checkpoint) { (batch, _) =>
+      batch.write.mode("append").parquet(s"$indexPath/data")
+    }
   }
 
   /** Continuously maintain an IVF-PQ index built by
@@ -1901,13 +1795,10 @@ object Streams {
   def ivfPqIndexSink(spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
                      idCol: String, vecCol: String, indexPath: String,
                      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    ivfPqEncoded(spark, stream, idCol, vecCol, indexPath).writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    batches(ivfPqEncoded(spark, stream, idCol, vecCol, indexPath),
+        checkpoint) { (batch, _) =>
+      batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
+    }
 
   /** The IVF-PQ sink's in-flight projection, shared with the drift
     * card: place by the layout's frozen centroids, encode against its
@@ -1918,10 +1809,7 @@ object Streams {
                            stream: DataFrame, idCol: String, vecCol: String,
                            indexPath: String): DataFrame = {
     val cb = readCodebooks(spark, indexPath)
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, indexPath)
     val residual = graft.ops.Similarity.isResidualIndex(spark, indexPath)
     val placed = stream
       .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
@@ -1977,14 +1865,9 @@ object Streams {
                     path: String, checkpoint: String, w: Int = 3, k: Int = 8,
                     bands: Int = 4): org.apache.spark.sql.streaming.StreamingQuery = {
     checkTextLayout(stream, path, w, k, bands)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendTextBatch(batch, idCol, textCol, path, w, k, bands)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    batches(stream, checkpoint) { (batch, _) =>
+      appendTextBatch(batch, idCol, textCol, path, w, k, bands)
+    }
   }
 
   /** The sink-start gate [[textIndexSink]] and [[textIndexCardSink]]
@@ -2067,23 +1950,18 @@ object Streams {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(auditEvery >= 1, s"auditEvery must be positive: $auditEvery")
     checkTextLayout(stream, path, w, k, bands)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendTextBatch(batch, idCol, textCol, path, w, k, bands)
-        if (batchId % auditEvery == 0) {
-          graft.ops.Dedup.dedupRecallFromIndex(spark, path,
-              truthThreshold = truthThreshold, maxBucket = maxBucket,
-              maxDf = maxDf, sample = auditSample)
-            .withColumn("batch_id", lit(batchId))
-            .select(col("batch_id"), col("band"), col("j_lo"),
-              col("n_truth"), col("n_hit"), col("recall"))
-            .coalesce(1).write.mode("append").parquet(cardPath)
-        }
-        ()
+    batches(stream, checkpoint) { (batch, batchId) =>
+      appendTextBatch(batch, idCol, textCol, path, w, k, bands)
+      if (batchId % auditEvery == 0) {
+        graft.ops.Dedup.dedupRecallFromIndex(spark, path,
+            truthThreshold = truthThreshold, maxBucket = maxBucket,
+            maxDf = maxDf, sample = auditSample)
+          .withColumn("batch_id", lit(batchId))
+          .select(col("batch_id"), col("band"), col("j_lo"),
+            col("n_truth"), col("n_hit"), col("recall"))
+          .coalesce(1).write.mode("append").parquet(cardPath)
       }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    }
   }
 
   /** Running token offset per shard for [[packStream]]. */

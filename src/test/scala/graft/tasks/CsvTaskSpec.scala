@@ -170,4 +170,20 @@ class CsvTaskSpec extends SparkSpec {
         |}]}""".stripMargin)
     assert(Files.isDirectory(Paths.get(s"$wd/output/outdir")))
   }
+
+  test("a failed single-file write removes its graft_csv_ temp dir") {
+    val wd = setup()
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def csvTempDirs(): Int =
+      tmpRoot.listFiles().count(_.getName.startsWith("graft_csv_"))
+    val before = csvTempDirs()
+    // the error depends on the row, so it fires inside the write job
+    val failing = spark.range(3)
+      .selectExpr("CAST(raise_error(concat('boom ', id)) AS STRING) AS x")
+    assertThrows[Exception](graft.sinks.CsvSink.write(failing,
+      s"$wd/output/failed.csv", TaskConfig.Node(org.json4s.JObject()),
+      truncate = true))
+    assert(csvTempDirs() == before, "the failed write leaked its temp dir")
+    assert(!Files.exists(Paths.get(s"$wd/output/failed.csv")))
+  }
 }
