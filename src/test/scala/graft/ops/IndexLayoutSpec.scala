@@ -1130,6 +1130,48 @@ class IndexLayoutSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("probe paths agree: point vs batch per float layout; reranks at full kCand equal brute force") {
+    val dir = tmpDir("graft_probeagree_")
+    Similarity.buildIvfIndex(emb, "vec_id", "embedding", s"$dir/ivf", nCells = 16)
+    Similarity.buildLshIndex(emb, "vec_id", "embedding", s"$dir/lsh", dim = dim, nBits = 6)
+    Similarity.buildPqIndex(emb, "vec_id", "embedding", s"$dir/pq", m = 4, nCodes = 8)
+    emb.write.mode("overwrite").parquet(s"$dir/queries_src")
+    val queries = spark.read.parquet(s"$dir/queries_src")
+      .filter(col("vec_id").isin(0L, 50L, 150L))
+    val k = 11
+    val kCand = 200 // the whole corpus: stage 1 can miss nothing
+    assert(emb.count() == kCand)
+    def query0(join: org.apache.spark.sql.DataFrame) =
+      join.filter(col("q_id") === 0L).drop("q_id")
+    // (case, expected, actual): rows compared as (id, score) or
+    // (q_id, id, score) sets
+    val cases = Seq(
+      ("ivfIndexTopK vs ivfIndexKnnJoin",
+        Similarity.ivfIndexTopK(spark, s"$dir/ivf", "vec_id", "embedding", qv,
+          k = k, nProbe = 4),
+        query0(Similarity.ivfIndexKnnJoin(spark, s"$dir/ivf", "vec_id", "embedding",
+          queries, "vec_id", "embedding", k = k, nProbe = 4))),
+      ("lshIndexTopK vs lshIndexKnnJoin",
+        Similarity.lshIndexTopK(spark, s"$dir/lsh", "vec_id", "embedding", qv,
+          dim = dim, k = k, nBits = 6),
+        query0(Similarity.lshIndexKnnJoin(spark, s"$dir/lsh", "vec_id", "embedding",
+          queries, "vec_id", "embedding", k = k, dim = dim, nBits = 6))),
+      ("pqIndexTopKRerank vs bruteForceTopK",
+        Similarity.bruteForceTopK(emb, "vec_id", "embedding", 0L, k),
+        Similarity.pqIndexTopKRerank(spark, s"$dir/pq", emb, "vec_id", "embedding",
+          qv, k = k, kCand = kCand)),
+      ("pqIndexKnnJoinRerank vs bruteKnnJoin",
+        Similarity.bruteKnnJoin(emb, queries, "vec_id", "embedding",
+          "vec_id", "embedding", k = k),
+        Similarity.pqIndexKnnJoinRerank(spark, s"$dir/pq", emb, "vec_id", "embedding",
+          queries, "vec_id", "embedding", k = k, kCand = kCand)))
+    cases.foreach { case (name, expected, actual) =>
+      val want = expected.collect().toSet
+      assert(want.nonEmpty, s"$name: empty expectation")
+      assert(actual.collect().toSet == want, s"$name: rows differ")
+    }
+  }
+
   test("LSH index: driver-side bucket matches the expression's bucket") {
     val fromExpr = emb.filter(col("vec_id") === 0L)
       .select(graft.functions.VectorFunctions.lshBucket(
