@@ -300,6 +300,30 @@ object Similarity {
       .select(col("q_id"), explode(col("_top")).as("_e"))
       .select(col("q_id"), col("_e._1").as(idCol), col("_e._2").as("cos_sim"))
 
+  /** The k-NN joins' query side: (q_id, `_qv` array<double>, norm `_qn`). */
+  private def queryVectors(queries: DataFrame, qIdCol: String,
+                           qVecCol: String): DataFrame =
+    queries.select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
+      .withColumn("_qn", norm(col("_qv")))
+
+  /** Stage 2 of the two-stage k-NN joins: the bounded (q_id, idCol)
+    * candidate set broadcasts into ONE equi-join against `corpus` (only
+    * candidate floats are fetched, the corpus never shuffles), the
+    * broadcast `queryVecs` re-attach each query, exact cosine ranks.
+    */
+  private def exactRerank(corpus: DataFrame, idCol: String, vecCol: String,
+                          cands: DataFrame, queryVecs: DataFrame,
+                          k: Int, scale: Int): DataFrame =
+    topKPerQuery(
+      corpus.select(col(idCol), asDouble(col(vecCol)).as("_v"))
+        .withColumn("_vn", norm(col("_v")))
+        .join(broadcast(cands), Seq(idCol))
+        .join(broadcast(queryVecs), Seq("q_id"))
+        .select(col("q_id"), col(idCol),
+          round(cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
+            scale).as("cos_sim")),
+      idCol, k)
+
   /** Batch ANN via LSH — the hyperplane-bucket twin of [[ivfKnnJoin]]:
     * top-k corpus neighbours for every query row, each query probing its
     * own bucket plus the `nBits` hamming-1 neighbours. Probe expansion is
@@ -323,9 +347,7 @@ object Similarity {
                  broadcastQueries: Boolean = true): DataFrame = {
     requireIntegralId(corpus, idCol, "lshKnnJoin")
     val bucketed = lshBuckets(corpus, idCol, vecCol, dim, nBits)
-    val qb = queries
-      .select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
+    val qb = queryVectors(queries, qIdCol, qVecCol)
       .withColumn("_qb", lshBucket(col("_qv"), dim, nBits))
     val probed = hammingProbesPerQuery(qb, nBits, multiProbe)
     val probeSide = if (broadcastQueries) broadcast(probed) else probed
@@ -365,18 +387,11 @@ object Similarity {
                  excludeSelf: Boolean = false): DataFrame = {
     requireIntegralId(corpus, idCol, "ivfKnnJoin")
     val e = corpus.select(col(idCol), asDouble(col(vecCol)).as("_v"))
-    val centroids: Array[Array[Double]] = e
-      .select(col(idCol).as("_id"), col("_v"), md5(col(idCol).cast("string")).as("_h"))
-      .orderBy(col("_h"), col("_id"))
-      .limit(nCells)
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
+    val centroids = md5Seeds(e, idCol, "_v", nCells)
     val corpusCells = e.withColumn("_cell",
         graft.functions.VectorFunctions.nearestCentroid(col("_v"), centroids))
       .withColumn("_vn", norm(col("_v")))
-    val probed = queries
-      .select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
+    val probed = queryVectors(queries, qIdCol, qVecCol)
       .withColumn("_probe", explode(
         graft.functions.VectorFunctions.nearestCentroids(col("_qv"), centroids, nProbe)))
     val probeSide = if (broadcastQueries) broadcast(probed) else probed
@@ -444,8 +459,7 @@ object Similarity {
                    qIdCol: String, qVecCol: String,
                    k: Int, scale: Int = 6): DataFrame = {
     requireIntegralId(corpus, idCol, "bruteKnnJoin")
-    val qb = queries.select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
+    val qb = queryVectors(queries, qIdCol, qVecCol)
     topKPerQuery(
       corpus.select(col(idCol), asDouble(col(vecCol)).as("_v"))
         .withColumn("_vn", norm(col("_v")))
@@ -491,9 +505,7 @@ object Similarity {
     requireIntegralId(corpus, idCol, "projKnnJoinRerank")
     require(kCand >= k, s"kCand ($kCand) must be >= k ($k)")
     val proj = graft.functions.VectorFunctions.randomProject(_: Column, dim, outDim)
-    val qb = queries
-      .select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
+    val qb = queryVectors(queries, qIdCol, qVecCol)
       .withColumn("_qpv", proj(col("_qv")))
       .withColumn("_qpn", norm(col("_qpv")))
     val cands = topKPerQuery(
@@ -504,14 +516,8 @@ object Similarity {
           round(cosineWithNorms(col("_pv"), col("_qpv"), col("_pn"), col("_qpn")),
             scale).as("cos_sim")),
       idCol, kCand).select(col("q_id"), col(idCol))
-    val scored = corpus.select(col(idCol), asDouble(col(vecCol)).as("_v"))
-      .withColumn("_vn", norm(col("_v")))
-      .join(broadcast(cands), Seq(idCol))
-      .join(broadcast(qb.select(col("q_id"), col("_qv"), col("_qn"))), Seq("q_id"))
-      .select(col("q_id"), col(idCol),
-        round(cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
-          scale).as("cos_sim"))
-    topKPerQuery(scored, idCol, k)
+    exactRerank(corpus, idCol, vecCol, cands,
+      qb.select(col("q_id"), col("_qv"), col("_qn")), k, scale)
   }
 
   /** Recall@k audit — the acceptance gauge for every approximate
@@ -600,12 +606,7 @@ object Similarity {
     require(minSim <= maxSim, s"empty band: [$minSim, $maxSim]")
     val e = corpus.select(col(idCol), asDouble(col(vecCol)).as("_v"),
       col(labelCol).as("_l"))
-    val centroids: Array[Array[Double]] = e
-      .select(col(idCol).as("_id"), col("_v"), md5(col(idCol).cast("string")).as("_h"))
-      .orderBy(col("_h"), col("_id"))
-      .limit(nCells)
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
+    val centroids = md5Seeds(e, idCol, "_v", nCells)
     val corpusCells = e.withColumn("_cell",
         graft.functions.VectorFunctions.nearestCentroid(col("_v"), centroids))
       .withColumn("_vn", norm(col("_v")))
@@ -657,8 +658,7 @@ object Similarity {
                   scale: Int = 6,
                   broadcastLabeled: Boolean = false): DataFrame = {
     requireIntegralId(corpus, idCol, "knnClassify")
-    val qb = queries.select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
+    val qb = queryVectors(queries, qIdCol, qVecCol)
     val cb = corpus.select(col(idCol), asDouble(col(vecCol)).as("_v"))
       .withColumn("_vn", norm(col("_v")))
     // default: bounded queries broadcast against the big labeled corpus
@@ -1175,16 +1175,24 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
   }
 
+  /** The seed sample every IVF centroid set and PQ codebook starts
+    * from: `n` vectors of `vecCol` ordered by (md5(id), numeric id), the
+    * oracles' ROW_NUMBER order. One bounded driver fetch, no RNG state.
+    */
+  private def md5Seeds(e: DataFrame, idCol: String, vecCol: String,
+                       n: Int): Array[Array[Double]] =
+    e.select(col(idCol).as("_id"), col(vecCol).as("_s"),
+        md5(col(idCol).cast("string")).as("_h"))
+      .orderBy(col("_h"), col("_id"))
+      .limit(n)
+      .select(col("_s")).collect().map(_.getSeq[Double](0).toArray)
+
   /** Seed + Lloyd-refine the IVF centroids (shared by the full-precision
     * and quantized builders — both layouts carry the same geometry).
     */
   private def ivfCentroids(e: DataFrame, idCol: String, nCells: Int,
                            kmeansIters: Int): Array[Array[Double]] = {
-    var centroids: Array[Array[Double]] = e
-      .select(col(idCol).as("_id"), col("_v"), md5(col(idCol).cast("string")).as("_h"))
-      .orderBy(col("_h"), col("_id"))
-      .limit(nCells)
-      .select(col("_v")).collect().map(_.getSeq[Double](0).toArray)
+    var centroids = md5Seeds(e, idCol, "_v", nCells)
     var iter = 0
     while (iter < kmeansIters) {
       val cellOf = graft.functions.VectorFunctions.nearestCentroid(col("_v"), centroids)
@@ -1237,6 +1245,28 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
   }
 
+  /** The cosine point probe over an already-pruned `scan` whose stored
+    * vector is `vec`: the driver-held query rides as a one-row broadcast
+    * (no re-scan to fetch it), and the rounded cosine `scoreName` feeds
+    * one TakeOrderedAndProject on (score desc, id).
+    */
+  private def pointProbe(scan: DataFrame, idCol: String, vec: Column,
+                         queryVec: Array[Double], k: Int, scale: Int,
+                         scoreName: String): DataFrame = {
+    val spark = scan.sparkSession
+    import spark.implicits._
+    val q = Seq(Tuple1(queryVec.toSeq)).toDF("_qv")
+      .withColumn("_qn", norm(col("_qv")))
+    scan.select(col(idCol), vec.as("_v"))
+      .withColumn("_vn", norm(col("_v")))
+      .crossJoin(broadcast(q))
+      .select(col(idCol),
+        round(cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
+          scale).as(scoreName))
+      .orderBy(col(scoreName).desc, col(idCol))
+      .limit(k)
+  }
+
   /** Driver-side twin of the QuantizeInt8 expression's rounding (one
     * query vector, bounded).
     */
@@ -1254,21 +1284,11 @@ object Similarity {
   def ivfIndexQuantizedTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                             idCol: String, queryVec: Array[Double],
                             k: Int, nProbe: Int = 3, scale: Int = 6): DataFrame = {
-    import spark.implicits._
-    val cents = readCentroidMatrix(spark, path)
-    val probes = nearestCells(cents, queryVec, nProbe)
-    val q = Seq(Tuple1(quantizeDriver(queryVec).toSeq)).toDF("_qq")
-      .withColumn("_qqn", norm(col("_qq")))
-    spark.read.parquet(s"$path/data")
-      .filter(col("cell").isin(probes.toIndexedSeq: _*))
-      .select(col(idCol), col("q").cast("array<double>").as("_z"))
-      .withColumn("_zn", norm(col("_z")))
-      .crossJoin(broadcast(q))
-      .select(col(idCol),
-        round(cosineWithNorms(col("_z"), col("_qq"), col("_zn"), col("_qqn")),
-          scale).as("qcos_sim"))
-      .orderBy(col("qcos_sim").desc, col(idCol))
-      .limit(k)
+    val probes = nearestCells(readCentroidMatrix(spark, path), queryVec, nProbe)
+    pointProbe(spark.read.parquet(s"$path/data")
+        .filter(col("cell").isin(probes.toIndexedSeq: _*)),
+      idCol, col("q").cast("array<double>"), quantizeDriver(queryVec), k, scale,
+      "qcos_sim")
   }
 
   /** Top-k over a persisted IVF index. Probe selection happens on the
@@ -1280,21 +1300,10 @@ object Similarity {
   def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                    idCol: String, vecCol: String, queryVec: Array[Double],
                    k: Int, nProbe: Int = 3, scale: Int = 6): DataFrame = {
-    import spark.implicits._
-    val cents = readCentroidMatrix(spark, path)
-    val probes = nearestCells(cents, queryVec, nProbe)
-    val q = Seq(Tuple1(queryVec.toSeq)).toDF("_qv")
-      .withColumn("_qn", norm(col("_qv")))
-    spark.read.parquet(s"$path/data")
-      .filter(col("cell").isin(probes.toIndexedSeq: _*))
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
-      .withColumn("_vn", norm(col("_v")))
-      .crossJoin(broadcast(q))
-      .select(col(idCol),
-        round(cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
-          scale).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+    val probes = nearestCells(readCentroidMatrix(spark, path), queryVec, nProbe)
+    pointProbe(spark.read.parquet(s"$path/data")
+        .filter(col("cell").isin(probes.toIndexedSeq: _*)),
+      idCol, asDouble(col(vecCol)), queryVec, k, scale, "cos_sim")
   }
 
   /** Build an LSH index at `path/data`: corpus + `bucket`, partitioned by
@@ -1334,26 +1343,11 @@ object Similarity {
   def lshIndexQuantizedTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                             idCol: String, queryVec: Array[Double],
                             dim: Int, k: Int, nBits: Int = 8,
-                            multiProbe: Boolean = true, scale: Int = 6): DataFrame = {
-    import spark.implicits._
-    val qb = org.apache.spark.sql.graft.RandomHyperplanes.bucketOf(queryVec, dim, nBits)
-    val probes = (if (multiProbe)
-      qb +: (0 until nBits).map(i =>
-        qb.updated(i, if (qb(i) == '1') '0' else '1'))
-    else Seq(qb)).map("b" + _)
-    val q = Seq(Tuple1(quantizeDriver(queryVec).toSeq)).toDF("_qq")
-      .withColumn("_qqn", norm(col("_qq")))
-    spark.read.parquet(s"$path/data")
-      .filter(col("bucket").isin(probes: _*))
-      .select(col(idCol), col("q").cast("array<double>").as("_z"))
-      .withColumn("_zn", norm(col("_z")))
-      .crossJoin(broadcast(q))
-      .select(col(idCol),
-        round(cosineWithNorms(col("_z"), col("_qq"), col("_zn"), col("_qqn")),
-          scale).as("qcos_sim"))
-      .orderBy(col("qcos_sim").desc, col(idCol))
-      .limit(k)
-  }
+                            multiProbe: Boolean = true, scale: Int = 6): DataFrame =
+    pointProbe(spark.read.parquet(s"$path/data")
+        .filter(col("bucket").isin(lshProbeBuckets(queryVec, dim, nBits, multiProbe): _*)),
+      idCol, col("q").cast("array<double>"), quantizeDriver(queryVec), k, scale,
+      "qcos_sim")
 
   /** Batch probes against a quantized LSH index: [[lshIndexKnnJoin]]'s
     * shape (per-query hamming probes broadcast, DPP-or-repaired
@@ -1366,27 +1360,19 @@ object Similarity {
                                queries: DataFrame, qIdCol: String, qVecCol: String,
                                k: Int, dim: Int, nBits: Int = 8,
                                multiProbe: Boolean = true, scale: Int = 6): DataFrame = {
-    val qb = queries
-      .select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
+    val qb = queryVectors(queries, qIdCol, qVecCol)
       .withColumn("_qb", lshBucket(col("_qv"), dim, nBits))
     val probed = hammingProbesPerQuery(qb, nBits, multiProbe)
       .withColumn("_qq", graft.functions.VectorFunctions.quantizeInt8(col("_qv"))
         .getField("q").cast("array<double>"))
-      .select(col("q_id"), col("_qq"), norm(col("_qq")).as("_qqn"),
+      .select(col("q_id"), col("_qq").as("_qv"), norm(col("_qq")).as("_qn"),
         concat(lit("b"), col("_pb")).as("_pb"))
     val index = spark.read.parquet(s"$path/data")
     requireIntegralId(index, idCol, "lshIndexQuantizedKnnJoin")
-    def joinWith(idx: DataFrame): DataFrame =
-      idx.withColumn("_z", col("q").cast("array<double>"))
-        .withColumn("_zn", norm(col("_z")))
-        .join(broadcast(probed), col("bucket") === col("_pb"))
-        .select(col("q_id"), col(idCol),
-          round(cosineWithNorms(col("_z"), col("_qq"), col("_zn"), col("_qqn")),
-            scale).as("cos_sim"))
-    topKPerQuery(
-      repairPartitionPruning(index, "bucket", probed, "_pb", joinWith), idCol, k)
-      .withColumnRenamed("cos_sim", "qcos_sim")
+    batchProbe(index, idCol, "bucket", probed, "_pb",
+      withNorm(col("q").cast("array<double>")),
+      cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
+      k, scale, "qcos_sim")
   }
 
   // ──────────────────── Product quantization (PQ) ────────────────────
@@ -1590,6 +1576,16 @@ object Similarity {
     cb
   }
 
+  /** Persist codebooks as the (s, code, w) table [[readCodebooks]] reads. */
+  private def writeCodebooks(spark: org.apache.spark.sql.SparkSession,
+                             cb: Array[Array[Array[Double]]], path: String): Unit = {
+    import spark.implicits._
+    cb.zipWithIndex.flatMap { case (words, s) =>
+        words.zipWithIndex.map { case (w, c) => (s, c, w.toSeq) }
+      }.toSeq.toDF("s", "code", "w")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+  }
+
   /** The probe side shared by the PQ batch joins: (q_id, _qv, _lut, _qn)
     * — per-query ADC lookup table and query norm computed ONCE per query
     * row as codegen'd projections ([[graft.functions.VectorFunctions
@@ -1628,12 +1624,7 @@ object Similarity {
     requireIntegralId(corpus, idCol, "pqKnnJoin")
     val e = corpus.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
       .select(col(idCol), asDouble(col(vecCol)).as("_v"))
-    val seeds: Array[Array[Double]] = e
-      .select(col(idCol).as("_id"), col("_v"), md5(col(idCol).cast("string")).as("_h"))
-      .orderBy(col("_h"), col("_id"))
-      .limit(nCodes)
-      .select(col("_v")).collect().map(_.getSeq[Double](0).toArray)
-    val cb = pqCodebooks(seeds, m)
+    val cb = pqCodebooks(md5Seeds(e, idCol, "_v", nCodes), m)
     val n2 = pqNorm2(cb)
     val probed = pqProbeSide(queries, qIdCol, qVecCol, cb)
       .select(col("q_id"), col("_lut"), col("_qn"))
@@ -1669,19 +1660,11 @@ object Similarity {
   def buildPqIndex(emb: DataFrame, idCol: String, vecCol: String, path: String,
                    m: Int = 4, nCodes: Int = 16, kmeansIters: Int = 0): Unit = {
     val spark = emb.sparkSession
-    import spark.implicits._
     val e = emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
       .select(col(idCol), asDouble(col(vecCol)).as("_v"))
-    val seeds: Array[Array[Double]] = e
-      .select(col(idCol).as("_id"), col("_v"), md5(col(idCol).cast("string")).as("_h"))
-      .orderBy(col("_h"), col("_id"))
-      .limit(nCodes)
-      .select(col("_v")).collect().map(_.getSeq[Double](0).toArray)
-    val cb = pqRefine(e, pqCodebooks(seeds, m), kmeansIters)
-    cb.zipWithIndex.flatMap { case (words, s) =>
-        words.zipWithIndex.map { case (w, c) => (s, c, w.toSeq) }
-      }.toSeq.toDF("s", "code", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    val cb = pqRefine(e, pqCodebooks(md5Seeds(e, idCol, "_v", nCodes), m),
+      kmeansIters)
+    writeCodebooks(spark, cb, path)
     writeIndexMeta(spark, path, Seq("layout" -> "pq",
       "m" -> m.toString, "n_codes" -> nCodes.toString,
       "kmeans_iters" -> kmeansIters.toString))
@@ -1741,7 +1724,6 @@ object Similarity {
                       nCells: Int = 16, m: Int = 4, nCodes: Int = 16,
                       kmeansIters: Int = 0, residual: Boolean = false): Unit = {
     val spark = emb.sparkSession
-    import spark.implicits._
     val clean = emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
     val e = clean.select(col(idCol), asDouble(col(vecCol)).as("_v"))
     val centroids = ivfCentroids(e, idCol, nCells, kmeansIters)
@@ -1759,18 +1741,9 @@ object Similarity {
             col("_v"), col("cell"), centroids))
       else e
     val encCol = if (residual) "_r" else "_v"
-    val seeds: Array[Array[Double]] = enc
-      .select(col(idCol).as("_id"), col(encCol).as("_s"),
-        md5(col(idCol).cast("string")).as("_h"))
-      .orderBy(col("_h"), col("_id"))
-      .limit(nCodes)
-      .select(col("_s")).collect().map(_.getSeq[Double](0).toArray)
     val cb = pqRefine(enc.select(col(encCol).as("_v")),
-      pqCodebooks(seeds, m), kmeansIters)
-    cb.zipWithIndex.flatMap { case (words, s) =>
-        words.zipWithIndex.map { case (w, c) => (s, c, w.toSeq) }
-      }.toSeq.toDF("s", "code", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+      pqCodebooks(md5Seeds(enc, idCol, encCol, nCodes), m), kmeansIters)
+    writeCodebooks(spark, cb, path)
     // the `encoding` entry is the marker probes switch scoring on
     writeIndexMeta(spark, path, Seq("layout" -> "ivf_pq",
       "encoding" -> (if (residual) "residual" else "raw"),
@@ -2019,22 +1992,12 @@ object Similarity {
                         corpus: DataFrame, idCol: String, vecCol: String,
                         queryVec: Array[Double], k: Int, kCand: Int = 100,
                         scale: Int = 6): DataFrame = {
-    import spark.implicits._
     // bounded: kCand rows; ids carried as Any so every integral id
     // type the index family admits works (an int id would CCE a getLong)
     val ids = pqIndexTopK(spark, path, idCol, queryVec, kCand)
       .select(col(idCol)).collect().map(_.get(0))
-    val q = Seq(Tuple1(queryVec.toSeq)).toDF("_qv")
-      .withColumn("_qn", norm(col("_qv")))
-    corpus.filter(col(idCol).isin(ids.toIndexedSeq: _*))
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
-      .withColumn("_vn", norm(col("_v")))
-      .crossJoin(broadcast(q))
-      .select(col(idCol),
-        round(cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
-          scale).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+    pointProbe(corpus.filter(col(idCol).isin(ids.toIndexedSeq: _*)),
+      idCol, asDouble(col(vecCol)), queryVec, k, scale, "cos_sim")
   }
 
   /** Batch PQ probe + exact rerank — [[pqIndexTopKRerank]]'s k-NN-join
@@ -2052,17 +2015,8 @@ object Similarity {
                            k: Int, kCand: Int = 100, scale: Int = 6): DataFrame = {
     val cands = pqIndexKnnJoin(spark, path, idCol, queries, qIdCol, qVecCol, kCand)
       .select(col("q_id"), col(idCol))
-    val qv = queries.select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
-    val scored = corpus
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
-      .withColumn("_vn", norm(col("_v")))
-      .join(broadcast(cands), Seq(idCol))
-      .join(broadcast(qv), Seq("q_id"))
-      .select(col("q_id"), col(idCol),
-        round(cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
-          scale).as("cos_sim"))
-    topKPerQuery(scored, idCol, k)
+    exactRerank(corpus, idCol, vecCol, cands,
+      queryVectors(queries, qIdCol, qVecCol), k, scale)
   }
 
   /** IVF-PQ probe + exact rerank — the composed best case of the whole
@@ -2085,17 +2039,8 @@ object Similarity {
     val cands = ivfPqIndexKnnJoin(spark, path, idCol,
         queries, qIdCol, qVecCol, kCand, nProbe)
       .select(col("q_id"), col(idCol))
-    val qv = queries.select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
-    val scored = corpus
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
-      .withColumn("_vn", norm(col("_v")))
-      .join(broadcast(cands), Seq(idCol))
-      .join(broadcast(qv), Seq("q_id"))
-      .select(col("q_id"), col(idCol),
-        round(cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
-          scale).as("cos_sim"))
-    topKPerQuery(scored, idCol, k)
+    exactRerank(corpus, idCol, vecCol, cands,
+      queryVectors(queries, qIdCol, qVecCol), k, scale)
   }
 
   /** Batch probes against a persisted PQ index ([[buildPqIndex]]): the
@@ -2159,31 +2104,43 @@ object Similarity {
         .withColumn("_probe", explode(
           graft.functions.VectorFunctions.nearestCentroids(col("_qv"), cents, nProbe)))
         .select(col("q_id"), col("_lutp"), col("_probe"))
-      def joinWith(idx: DataFrame): DataFrame =
-        idx.join(broadcast(probed), col("cell") === col("_probe"))
-          .select(col("q_id"), col(idCol),
-            round(graft.functions.VectorFunctions.pqAdcResidualScore(
-              col("codes"), col("cell").cast("int"), col("_lutp"),
-              n2, cd, cn2), scale).as("cos_sim"))
-      topKPerQuery(
-        repairPartitionPruning(index, "cell", probed, "_probe", joinWith), idCol, k)
-        .withColumnRenamed("cos_sim", "pq_score")
+      batchProbe(index, idCol, "cell", probed, "_probe", identity,
+        graft.functions.VectorFunctions.pqAdcResidualScore(
+          col("codes"), col("cell").cast("int"), col("_lutp"), n2, cd, cn2),
+        k, scale, "pq_score")
     } else {
       val n2 = pqNorm2(cb)
       val probed = pqProbeSide(queries, qIdCol, qVecCol, cb)
         .withColumn("_probe", explode(
           graft.functions.VectorFunctions.nearestCentroids(col("_qv"), cents, nProbe)))
         .select(col("q_id"), col("_lut"), col("_qn"), col("_probe"))
-      def joinWith(idx: DataFrame): DataFrame =
-        idx.join(broadcast(probed), col("cell") === col("_probe"))
-          .select(col("q_id"), col(idCol),
-            round(graft.functions.VectorFunctions.pqAdcScoreBatch(
-              col("codes"), col("_lut"), col("_qn"), n2), scale).as("cos_sim"))
-      topKPerQuery(
-        repairPartitionPruning(index, "cell", probed, "_probe", joinWith), idCol, k)
-        .withColumnRenamed("cos_sim", "pq_score")
+      batchProbe(index, idCol, "cell", probed, "_probe", identity,
+        graft.functions.VectorFunctions.pqAdcScoreBatch(
+          col("codes"), col("_lut"), col("_qn"), n2),
+        k, scale, "pq_score")
     }
   }
+
+  /** The batch probe of the partitioned layouts: the `project`ed index
+    * equi-joins the BROADCAST probe side on `partCol` = `probeCol` (DPP,
+    * or the [[repairPartitionPruning]] IN-list, prunes directories), and
+    * the rounded `score` ranks the per-query top-k as `scoreName`.
+    */
+  private def batchProbe(index: DataFrame, idCol: String, partCol: String,
+                         probed: DataFrame, probeCol: String,
+                         project: DataFrame => DataFrame, score: Column,
+                         k: Int, scale: Int, scoreName: String): DataFrame = {
+    def joinWith(idx: DataFrame): DataFrame =
+      project(idx).join(broadcast(probed), col(partCol) === col(probeCol))
+        .select(col("q_id"), col(idCol), round(score, scale).as("cos_sim"))
+    topKPerQuery(
+      repairPartitionPruning(index, partCol, probed, probeCol, joinWith), idCol, k)
+      .withColumnRenamed("cos_sim", scoreName)
+  }
+
+  /** Cosine batch probes' index side: stored vector `v` as `_v`, norm `_vn`. */
+  private def withNorm(v: Column)(idx: DataFrame): DataFrame =
+    idx.withColumn("_v", v).withColumn("_vn", norm(col("_v")))
 
   /** Dynamic-partition-pruning self-repair for the persisted-index k-NN
     * joins. Spark's PartitionPruning rule inserts the pruning subquery
@@ -2233,9 +2190,7 @@ object Similarity {
                       queries: DataFrame, qIdCol: String, qVecCol: String,
                       k: Int, dim: Int, nBits: Int = 8,
                       multiProbe: Boolean = true, scale: Int = 6): DataFrame = {
-    val qb = queries
-      .select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
+    val qb = queryVectors(queries, qIdCol, qVecCol)
       .withColumn("_qb", lshBucket(col("_qv"), dim, nBits))
     // the on-disk partition values carry the 'b' prefix (anti type
     // inference); broadcast is mandatory here — it is what lets the scan
@@ -2245,15 +2200,10 @@ object Similarity {
         concat(lit("b"), col("_pb")).as("_pb"))
     val index = spark.read.parquet(s"$path/data")
     requireIntegralId(index, idCol, "lshIndexKnnJoin")
-    def joinWith(idx: DataFrame): DataFrame =
-      idx.withColumn("_v", asDouble(col(vecCol)))
-        .withColumn("_vn", norm(col("_v")))
-        .join(broadcast(probed), col("bucket") === col("_pb"))
-        .select(col("q_id"), col(idCol),
-          round(cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
-            scale).as("cos_sim"))
-    topKPerQuery(
-      repairPartitionPruning(index, "bucket", probed, "_pb", joinWith), idCol, k)
+    batchProbe(index, idCol, "bucket", probed, "_pb",
+      withNorm(asDouble(col(vecCol))),
+      cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
+      k, scale, "cos_sim")
   }
 
   /** Batch probes against a persisted IVF index ([[buildIvfIndex]]): the
@@ -2274,22 +2224,15 @@ object Similarity {
                       queries: DataFrame, qIdCol: String, qVecCol: String,
                       k: Int, nProbe: Int = 3, scale: Int = 6): DataFrame = {
     val cents = readCentroidMatrix(spark, path) // bounded: nCells rows
-    val probed = queries
-      .select(col(qIdCol).as("q_id"), asDouble(col(qVecCol)).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
+    val probed = queryVectors(queries, qIdCol, qVecCol)
       .withColumn("_probe", explode(
         graft.functions.VectorFunctions.nearestCentroids(col("_qv"), cents, nProbe)))
     val index = spark.read.parquet(s"$path/data")
     requireIntegralId(index, idCol, "ivfIndexKnnJoin")
-    def joinWith(idx: DataFrame): DataFrame =
-      idx.withColumn("_v", asDouble(col(vecCol)))
-        .withColumn("_vn", norm(col("_v")))
-        .join(broadcast(probed), col("cell") === col("_probe"))
-        .select(col("q_id"), col(idCol),
-          round(cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
-            scale).as("cos_sim"))
-    topKPerQuery(
-      repairPartitionPruning(index, "cell", probed, "_probe", joinWith), idCol, k)
+    batchProbe(index, idCol, "cell", probed, "_probe",
+      withNorm(asDouble(col(vecCol))),
+      cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
+      k, scale, "cos_sim")
   }
 
   /** Batch probes against a QUANTIZED persisted IVF index
@@ -2315,19 +2258,14 @@ object Similarity {
         .getField("q").cast("array<double>"))
       .withColumn("_probe", explode(
         graft.functions.VectorFunctions.nearestCentroids(col("_qv"), cents, nProbe)))
-      .select(col("q_id"), col("_qq"), norm(col("_qq")).as("_qqn"), col("_probe"))
+      .select(col("q_id"), col("_qq").as("_qv"), norm(col("_qq")).as("_qn"),
+        col("_probe"))
     val index = spark.read.parquet(s"$path/data")
     requireIntegralId(index, idCol, "ivfIndexQuantizedKnnJoin")
-    def joinWith(idx: DataFrame): DataFrame =
-      idx.withColumn("_z", col("q").cast("array<double>"))
-        .withColumn("_zn", norm(col("_z")))
-        .join(broadcast(probed), col("cell") === col("_probe"))
-        .select(col("q_id"), col(idCol),
-          round(cosineWithNorms(col("_z"), col("_qq"), col("_zn"), col("_qqn")),
-            scale).as("cos_sim"))
-    topKPerQuery(
-      repairPartitionPruning(index, "cell", probed, "_probe", joinWith), idCol, k)
-      .withColumnRenamed("cos_sim", "qcos_sim")
+    batchProbe(index, idCol, "cell", probed, "_probe",
+      withNorm(col("q").cast("array<double>")),
+      cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
+      k, scale, "qcos_sim")
   }
 
   /** ANN top-k over a persisted LSH index: the query's bucket (and its
@@ -2339,25 +2277,21 @@ object Similarity {
   def lshIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                    idCol: String, vecCol: String, queryVec: Array[Double],
                    dim: Int, k: Int, nBits: Int = 8,
-                   multiProbe: Boolean = true, scale: Int = 6): DataFrame = {
-    import spark.implicits._
+                   multiProbe: Boolean = true, scale: Int = 6): DataFrame =
+    pointProbe(spark.read.parquet(s"$path/data")
+        .filter(col("bucket").isin(lshProbeBuckets(queryVec, dim, nBits, multiProbe): _*)),
+      idCol, asDouble(col(vecCol)), queryVec, k, scale, "cos_sim")
+
+  /** Driver-side LSH layout probes: the query's bucket plus (when
+    * `multiProbe`) its hamming-1 flips, 'b'-prefixed like the partitions.
+    */
+  private def lshProbeBuckets(queryVec: Array[Double], dim: Int, nBits: Int,
+                              multiProbe: Boolean): Seq[String] = {
     val qb = org.apache.spark.sql.graft.RandomHyperplanes.bucketOf(queryVec, dim, nBits)
-    val probes = (if (multiProbe)
+    (if (multiProbe)
       qb +: (0 until nBits).map(i =>
         qb.updated(i, if (qb(i) == '1') '0' else '1'))
     else Seq(qb)).map("b" + _)
-    val q = Seq(Tuple1(queryVec.toSeq)).toDF("_qv")
-      .withColumn("_qn", norm(col("_qv")))
-    spark.read.parquet(s"$path/data")
-      .filter(col("bucket").isin(probes: _*))
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
-      .withColumn("_vn", norm(col("_v")))
-      .crossJoin(broadcast(q))
-      .select(col(idCol),
-        round(cosineWithNorms(col("_v"), col("_qv"), col("_vn"), col("_qn")),
-          scale).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
   }
 
   /** Top-k most-similar pairs via banded random-hyperplane LSH: each

@@ -1194,6 +1194,11 @@ object Extensions {
         queryId = 0L, k = 10, m = 4, nCodes = 16)
       .orderBy(col("vec_id"))
 
+  // the index point-probe queries' query: vector 0, widened to double
+  private def queryVec0(emb: DataFrame): Array[Double] =
+    emb.filter(col("vec_id") === 0L)
+      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
+
   // q101 PQ top-k served from the PERSISTED layout (codes only on disk:
   // m ints per vector vs 64 doubles — the index that still fits the page
   // cache at 100 TB of embeddings). Same deterministic codebooks as
@@ -1201,15 +1206,17 @@ object Extensions {
   // corpus dir like q57/q61 (a standing index is an input, not
   // per-query work).
   private val pqIndexDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  val q101_pq_index_topk: Q = (s, d) => {
-    val emb = t(s, d, "embeddings")
-    val dir = pqIndexDirs.getOrElseUpdate(d, {
+  private def pqIndexDir(s: SparkSession, d: String): String =
+    pqIndexDirs.getOrElseUpdate(d, {
       val p = java.nio.file.Files.createTempDirectory("graft_q101_pqidx_").toString
-      Similarity.buildPqIndex(emb, "vec_id", "embedding", p, m = 4, nCodes = 16)
+      Similarity.buildPqIndex(t(s, d, "embeddings"), "vec_id", "embedding", p,
+        m = 4, nCodes = 16)
       p
     })
-    val qv = emb.filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
+  val q101_pq_index_topk: Q = (s, d) => {
+    val emb = t(s, d, "embeddings")
+    val dir = pqIndexDir(s, d)
+    val qv = queryVec0(emb)
     Similarity.pqIndexTopK(s, dir, "vec_id", qv, k = 10)
       .orderBy(col("vec_id"))
   }
@@ -1219,16 +1226,17 @@ object Extensions {
   // ints per surviving row. Same md5-seeded centroids as q39/q54 and
   // codebooks as q100, so the composition hash-checks deterministically.
   private val ivfPqIndexDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  val q103_ivfpq_topk: Q = (s, d) => {
-    val emb = t(s, d, "embeddings")
-    val dir = ivfPqIndexDirs.getOrElseUpdate(d, {
+  private def ivfPqIndexDir(s: SparkSession, d: String): String =
+    ivfPqIndexDirs.getOrElseUpdate(d, {
       val p = java.nio.file.Files.createTempDirectory("graft_q103_ivfpq_").toString
-      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", p,
+      Similarity.buildIvfPqIndex(t(s, d, "embeddings"), "vec_id", "embedding", p,
         nCells = 16, m = 4, nCodes = 16)
       p
     })
-    val qv = emb.filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
+  val q103_ivfpq_topk: Q = (s, d) => {
+    val emb = t(s, d, "embeddings")
+    val dir = ivfPqIndexDir(s, d)
+    val qv = queryVec0(emb)
     Similarity.ivfPqIndexTopK(s, dir, "vec_id", qv, k = 10, nProbe = 3)
       .orderBy(col("vec_id"))
   }
@@ -1254,11 +1262,7 @@ object Extensions {
   // (identical codebooks), the q57-vs-q54 convention.
   val q105_pq_index_knn_join: Q = (s, d) => {
     val emb = t(s, d, "embeddings")
-    val dir = pqIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q101_pqidx_").toString
-      Similarity.buildPqIndex(emb, "vec_id", "embedding", p, m = 4, nCodes = 16)
-      p
-    })
+    val dir = pqIndexDir(s, d)
     Similarity.pqIndexKnnJoin(s, dir, "vec_id",
         emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", k = 10)
       .orderBy(col("q_id"), col("vec_id"))
@@ -1270,12 +1274,7 @@ object Extensions {
   // scores are identical to q103 point probes over the probed cells.
   val q106_ivfpq_index_knn_join: Q = (s, d) => {
     val emb = t(s, d, "embeddings")
-    val dir = ivfPqIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q103_ivfpq_").toString
-      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", p,
-        nCells = 16, m = 4, nCodes = 16)
-      p
-    })
+    val dir = ivfPqIndexDir(s, d)
     Similarity.ivfPqIndexKnnJoin(s, dir, "vec_id",
         emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
         k = 10, nProbe = 3)
@@ -1290,13 +1289,8 @@ object Extensions {
   // deterministic, so the composition hash-checks like an exact query.
   val q107_pq_rerank_topk: Q = (s, d) => {
     val emb = t(s, d, "embeddings")
-    val dir = pqIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q101_pqidx_").toString
-      Similarity.buildPqIndex(emb, "vec_id", "embedding", p, m = 4, nCodes = 16)
-      p
-    })
-    val qv = emb.filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
+    val dir = pqIndexDir(s, d)
+    val qv = queryVec0(emb)
     Similarity.pqIndexTopKRerank(s, dir, emb, "vec_id", "embedding", qv,
         k = 10, kCand = 50)
       .orderBy(col("vec_id"))
@@ -1304,11 +1298,7 @@ object Extensions {
 
   val q108_pq_rerank_knn_join: Q = (s, d) => {
     val emb = t(s, d, "embeddings")
-    val dir = pqIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q101_pqidx_").toString
-      Similarity.buildPqIndex(emb, "vec_id", "embedding", p, m = 4, nCodes = 16)
-      p
-    })
+    val dir = pqIndexDir(s, d)
     Similarity.pqIndexKnnJoinRerank(s, dir, emb, "vec_id", "embedding",
         emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
         k = 10, kCand = 50)
@@ -1331,8 +1321,7 @@ object Extensions {
     })
   val q109_ivfpq_residual_topk: Q = (s, d) => {
     val emb = t(s, d, "embeddings")
-    val qv = emb.filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
+    val qv = queryVec0(emb)
     Similarity.ivfPqIndexTopK(s, ivfPqResDir(s, d), "vec_id", qv, k = 10, nProbe = 3)
       .orderBy(col("vec_id"))
   }
@@ -1352,28 +1341,16 @@ object Extensions {
   // the refit reproduces the build exactly (retention 1.0 everywhere —
   // the oracle pins that identity); drift appears once a stream appends
   // (spec-pinned in IndexLayoutSpec).
-  val q111_ivf_rebuild_drift: Q = (s, d) => {
-    val emb = t(s, d, "embeddings")
-    val dir = ivfIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q57_ivfidx_").toString
-      Similarity.buildIvfIndex(emb, "vec_id", "embedding", p, nCells = 16)
-      p
-    })
-    Similarity.ivfRebuildDrift(s, dir, "vec_id", "embedding")
+  val q111_ivf_rebuild_drift: Q = (s, d) =>
+    Similarity.ivfRebuildDrift(s, ivfIndexDir(s, d), "vec_id", "embedding")
       .orderBy(col("cell"))
-  }
 
   // q112 IVF-PQ + exact rerank — the composed best case per probed
   // byte: cell pruning × code-only scan proposes kCand per query,
   // bounded float fetch + exact cosine finishes. Reuses the q103 index.
   val q112_ivfpq_rerank_knn_join: Q = (s, d) => {
     val emb = t(s, d, "embeddings")
-    val dir = ivfPqIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q103_ivfpq_").toString
-      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", p,
-        nCells = 16, m = 4, nCodes = 16)
-      p
-    })
+    val dir = ivfPqIndexDir(s, d)
     Similarity.ivfPqIndexKnnJoinRerank(s, dir, emb, "vec_id", "embedding",
         emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
         k = 10, kCand = 50, nProbe = 3)
@@ -1387,15 +1364,8 @@ object Extensions {
   // replayed by the DuckDB oracle, so the audit hash-checks even where
   // decode error flips a boundary row — the numbers ARE the contract,
   // not an assumed identity.
-  val q114_code_rebuild_drift: Q = (s, d) => {
-    val emb = t(s, d, "embeddings")
-    val dir = ivfQIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q61_ivfqidx_").toString
-      Similarity.buildIvfIndexQuantized(emb, "vec_id", "embedding", p, nCells = 16)
-      p
-    })
-    Similarity.codeRebuildDrift(s, dir, "vec_id").orderBy(col("cell"))
-  }
+  val q114_code_rebuild_drift: Q = (s, d) =>
+    Similarity.codeRebuildDrift(s, ivfQIndexDir(s, d), "vec_id").orderBy(col("cell"))
 
   // q113 token-id materialization — q52's packing arithmetic made REAL:
   // the pipeline terminal that emits training-ready array<int> id
@@ -1825,13 +1795,16 @@ object Extensions {
   // pack → q92 training order. The oracle chains the stages' own SQL
   // fragments over the same slices.
   private val pipeKeyDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  val q93_curation_pipeline: Q = (s, d) => {
-    val docs = t(s, d, "documents")
-    val keyDir = pipeKeyDirs.getOrElseUpdate(d, {
+  private def pipeKeyDir(s: SparkSession, d: String): String =
+    pipeKeyDirs.getOrElseUpdate(d, {
       val p = java.nio.file.Files.createTempDirectory("graft_q93_keys_").toString
-      Dedup.buildExactKeyIndex(docs.filter(col("doc_id") % 4 === 0), "text", p)
+      Dedup.buildExactKeyIndex(t(s, d, "documents").filter(col("doc_id") % 4 === 0),
+        "text", p)
       p
     })
+  val q93_curation_pipeline: Q = (s, d) => {
+    val docs = t(s, d, "documents")
+    val keyDir = pipeKeyDir(s, d)
     Curation.curate(s, docs.where(col("doc_id") % 4 =!= 0),
         "doc_id", "text", "source",
         keyIndexPath = Some(keyDir),
@@ -1848,11 +1821,7 @@ object Extensions {
   // machinery.
   val q115_curate_token_ids: Q = (s, d) => {
     val docs = t(s, d, "documents")
-    val keyDir = pipeKeyDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q93_keys_").toString
-      Dedup.buildExactKeyIndex(docs.filter(col("doc_id") % 4 === 0), "text", p)
-      p
-    })
+    val keyDir = pipeKeyDir(s, d)
     serializeIdArrays(
       Curation.curateTokens(s, docs.where(col("doc_id") % 4 =!= 0),
           "doc_id", "text", "source",
@@ -1916,13 +1885,16 @@ object Extensions {
   // oracle verbatim. The index scan prunes non-probed cell directories
   // (DPP, or the self-repaired static IN-list).
   private val ivfIndexDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  val q57_ivf_index_knn_join: Q = (s, d) => {
-    val emb = t(s, d, "embeddings")
-    val dir = ivfIndexDirs.getOrElseUpdate(d, {
+  private def ivfIndexDir(s: SparkSession, d: String): String =
+    ivfIndexDirs.getOrElseUpdate(d, {
       val p = java.nio.file.Files.createTempDirectory("graft_q57_ivfidx_").toString
-      Similarity.buildIvfIndex(emb, "vec_id", "embedding", p, nCells = 16)
+      Similarity.buildIvfIndex(t(s, d, "embeddings"), "vec_id", "embedding", p,
+        nCells = 16)
       p
     })
+  val q57_ivf_index_knn_join: Q = (s, d) => {
+    val emb = t(s, d, "embeddings")
+    val dir = ivfIndexDir(s, d)
     Similarity.ivfIndexKnnJoin(s, dir, "vec_id", "embedding",
         emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
         k = 10, nProbe = 3)
@@ -1936,13 +1908,16 @@ object Extensions {
   // arrays 4× narrower than the float index. Memoized per corpus dir
   // like q57 (a standing index is an input, not per-query work).
   private val ivfQIndexDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  val q61_ivf_quantized_knn_join: Q = (s, d) => {
-    val emb = t(s, d, "embeddings")
-    val dir = ivfQIndexDirs.getOrElseUpdate(d, {
+  private def ivfQIndexDir(s: SparkSession, d: String): String =
+    ivfQIndexDirs.getOrElseUpdate(d, {
       val p = java.nio.file.Files.createTempDirectory("graft_q61_ivfqidx_").toString
-      Similarity.buildIvfIndexQuantized(emb, "vec_id", "embedding", p, nCells = 16)
+      Similarity.buildIvfIndexQuantized(t(s, d, "embeddings"), "vec_id", "embedding", p,
+        nCells = 16)
       p
     })
+  val q61_ivf_quantized_knn_join: Q = (s, d) => {
+    val emb = t(s, d, "embeddings")
+    val dir = ivfQIndexDir(s, d)
     Similarity.ivfIndexQuantizedKnnJoin(s, dir, "vec_id",
         emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
         k = 10, nProbe = 3)

@@ -63,11 +63,13 @@ final class Watcher(spark: SparkSession, workDir: String, log: TaskLog,
 
   private def processZip(path: String): Unit = {
     val tmp = Files.createTempDirectory("graft_pkg_").toString
-    Tasks.unzipInto(path, tmp)
-    val extracted = Option(new File(tmp).listFiles()).getOrElse(Array.empty)
-      .filter(_.isFile).map(_.getPath).toSeq.sorted
-    processList(extracted)
-    Files.deleteIfExists(Paths.get(path))
+    try {
+      Tasks.unzipInto(path, tmp)
+      val extracted = Option(new File(tmp).listFiles()).getOrElse(Array.empty)
+        .filter(_.isFile).map(_.getPath).toSeq.sorted
+      processList(extracted)
+      Files.deleteIfExists(Paths.get(path))
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new File(tmp))
   }
 
   /** Non-task files route to input/ (jars to module/). */
