@@ -87,6 +87,21 @@ class TextRetrievalSpec extends SparkSpec {
     assert(empty.getMessage.contains("no tokens"))
   }
 
+  test("bigramLmScore equals the cross-scorer scoring its own training corpus") {
+    val docs = Seq((1L, "the cat sat on the mat"),
+      (2L, "the dog sat on the rug"), (3L, "a cat and a dog sat"),
+      (4L, "mat"), // < 2 tokens: absent from both
+      (5L, null.asInstanceOf[String]), (6L, "the  cat  sat")).toDF("doc_id", "text")
+    val self = TextAnalysis.bigramLmScore(docs, "doc_id", "text")
+      .orderBy(col("doc_id")).as[(Long, Double, Long)].collect().toSeq
+    val against = TextAnalysis.bigramLmScoreAgainst(docs, docs, "doc_id", "text")
+      .orderBy(col("doc_id")).as[(Long, Double, Long, Long)].collect().toSeq
+    assert(self == against.map(r => (r._1, r._2, r._3)))
+    assert(self.map(_._1) == Seq(1L, 2L, 3L, 6L))
+    // every bigram of the training corpus is in its own table
+    assert(against.forall(_._4 == 0L))
+  }
+
   test("perplexityPartition labels the CCNet bands against fixed cuts") {
     // train "a b a b": from the backoff spec, seen pair -> 0.263 bits,
     // unseen pair -> 2.585, unseen w1 -> 1.000
