@@ -208,20 +208,11 @@ object IndexMaintenance {
 
   private def consolidateCountDeltas(spark: SparkSession, path: String,
                                      checkpoint: String, subdir: String,
-                                     keyCol: String): Seq[String] = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    val commits = new org.apache.hadoop.fs.Path(
-      s"${checkpoint.stripSuffix("/")}/commits")
-    val cfs = commits.getFileSystem(hc)
-    val lastCommitted: Option[Long] =
-      if (!cfs.exists(commits)) None
-      else cfs.listStatus(commits).toSeq.map(_.getPath.getName)
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-        .maxOption
-    lastCommitted.map { last =>
+                                     keyCol: String): Seq[String] =
+    lastCommitted(spark, checkpoint).map { last =>
       val unitsDir = s"${path.stripSuffix("/")}/$subdir"
       val lp = new org.apache.hadoop.fs.Path(unitsDir)
-      val lfs = lp.getFileSystem(hc)
+      val lfs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val tokens = lfs.listStatus(lp).toSeq.map(_.getPath.getName)
         .filter(_.startsWith("delta=")).map(_.stripPrefix("delta="))
       val foldable = tokens.filter(t => t != "base" && t.startsWith("b") &&
@@ -243,6 +234,19 @@ object IndexMaintenance {
         foldable
       }
     }.getOrElse(Seq.empty)
+
+  /** The newest micro-batch id committed in a streaming `checkpoint`
+    * (its `commits/` epoch files); None before the first commit.
+    */
+  private def lastCommitted(spark: SparkSession,
+                            checkpoint: String): Option[Long] = {
+    val commits = new org.apache.hadoop.fs.Path(
+      s"${checkpoint.stripSuffix("/")}/commits")
+    val cfs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!cfs.exists(commits)) None
+    else cfs.listStatus(commits).toSeq.map(_.getPath.getName)
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+      .maxOption
   }
 
   /** Fold the token-budget gate's committed spend ledger behind the
@@ -274,16 +278,7 @@ object IndexMaintenance {
   def consolidateTokenBudgetState(spark: SparkSession, path: String,
                                   checkpoint: String): Seq[Long] = {
     graft.ops.Similarity.requireLayout(spark, path, "token_budget_gate")
-    val hc = spark.sparkContext.hadoopConfiguration
-    val commits = new org.apache.hadoop.fs.Path(
-      s"${checkpoint.stripSuffix("/")}/commits")
-    val cfs = commits.getFileSystem(hc)
-    val lastCommitted: Option[Long] =
-      if (!cfs.exists(commits)) None
-      else cfs.listStatus(commits).toSeq.map(_.getPath.getName)
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-        .maxOption
-    lastCommitted.map { last =>
+    lastCommitted(spark, checkpoint).map { last =>
       val dir = s"${path.stripSuffix("/")}/committed"
       // DISTINCT first: a replayed batch's crash-window duplicate rows
       // collapse exactly as the gate's own read collapses them

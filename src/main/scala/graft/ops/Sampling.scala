@@ -601,30 +601,48 @@ object Sampling {
                      isTarget: Column, dim: Int = 64,
                      smoothK: Double = 0.5): DataFrame = {
     require(dim >= 1, s"dim must be positive: $dim")
-    val sparse = df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        coalesce(isTarget.cast("boolean"), lit(false)).as("_t"),
-        posexplode(graft.functions.VectorFunctions.hashEmbed(col(textCol), dim))
-          .as(Seq("bucket", "cnt")))
+    val sparse = bucketStream(df, textCol, dim, col(idCol).as("doc_id"),
+      coalesce(isTarget.cast("boolean"), lit(false)).as("_t"))
+    val btab = bucketCounts(sparse)
+    val ratio = btab
+      .crossJoin(broadcast(btab.agg(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"))))
+      .select(col("bucket"), dsirLogRatio(smoothK, dim, col).as("_lr"))
+    dsirDocWeights(sparse.join(broadcast(ratio), Seq("bucket")))
+  }
+
+  // ── Shared scaffolding of the DSIR forms: ONE sparse (`keep`, bucket,
+  // cnt) stream, ONE bucket-count fit (in-memory weights and the layout
+  // build), ONE log-ratio and ONE per-doc aggregate (in-memory and frozen
+  // scoring). `v` reads the totals (tt, tr): columns of the broadcast
+  // totals row in memory, literals from the model's meta when frozen.
+
+  private def bucketStream(df: DataFrame, textCol: String, dim: Int,
+                           keep: Column*): DataFrame =
+    df.where(col(textCol).isNotNull)
+      .select(keep :+ posexplode(graft.functions.VectorFunctions.hashEmbed(
+        col(textCol), dim)).as(Seq("bucket", "cnt")): _*)
       .where(col("cnt") > 0)
-      .select(col("doc_id"), col("_t"), col("bucket").cast("long").as("bucket"),
-        col("cnt").cast("long").as("cnt"))
-    val btab = sparse.groupBy(col("bucket")).agg(
+      .withColumns(Map("bucket" -> col("bucket").cast("long"),
+        "cnt" -> col("cnt").cast("long")))
+
+  private def bucketCounts(sparse: DataFrame): DataFrame =
+    sparse.groupBy(col("bucket")).agg(
       sum(when(col("_t"), col("cnt")).otherwise(lit(0L))).as("ct"),
       sum(col("cnt")).as("cr"))
-    val tot = btab.agg(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"))
-    val kd = lit(smoothK) * dim
-    val ratio = btab.crossJoin(broadcast(tot))
-      .select(col("bucket"),
-        (log((col("ct").cast("double") + smoothK) /
-            (col("tt").cast("double") + kd)) -
-          log((col("cr").cast("double") + smoothK) /
-            (col("tr").cast("double") + kd))).as("_lr"))
-    sparse.join(broadcast(ratio), Seq("bucket"))
-      .groupBy(col("doc_id"))
+
+  /** ln p(b) − ln q(b) of the add-k target and pool bucket models. */
+  private def dsirLogRatio(k: Double, dim: Int, v: String => Column): Column = {
+    val kd = lit(k) * dim
+    log((coalesce(col("ct"), lit(0L)).cast("double") + k) /
+        (v("tt").cast("double") + kd)) -
+      log((coalesce(col("cr"), lit(0L)).cast("double") + k) /
+        (v("tr").cast("double") + kd))
+  }
+
+  private def dsirDocWeights(scored: DataFrame): DataFrame =
+    scored.groupBy(col("doc_id"))
       .agg(round(sum(col("cnt").cast("double") * col("_lr")), 3).as("log_w"),
         sum(col("cnt")).as("n_tokens"))
-  }
 
   /** Persist the [[dsirLogWeights]] models as a layout: `buckets/`
     * (bucket, ct, cr — the exact target/pool counts) plus a `meta`
@@ -640,15 +658,8 @@ object Sampling {
                      textCol: String, isTarget: Column, path: String,
                      dim: Int = 64, smoothK: Double = 0.5): Unit = {
     require(dim >= 1, s"dim must be positive: $dim")
-    df.where(col(textCol).isNotNull)
-      .select(coalesce(isTarget.cast("boolean"), lit(false)).as("_t"),
-        posexplode(graft.functions.VectorFunctions.hashEmbed(col(textCol), dim))
-          .as(Seq("bucket", "cnt")))
-      .where(col("cnt") > 0)
-      .groupBy(col("bucket").cast("long").as("bucket"))
-      .agg(sum(when(col("_t"), col("cnt").cast("long")).otherwise(lit(0L)))
-          .as("ct"),
-        sum(col("cnt").cast("long")).as("cr"))
+    bucketCounts(bucketStream(df, textCol, dim,
+        coalesce(isTarget.cast("boolean"), lit(false)).as("_t")))
       .write.mode("overwrite").parquet(s"$path/buckets")
     val Array(tt, tr) = spark.read.parquet(s"$path/buckets")
       .agg(sum(col("ct")), sum(col("cr")))
@@ -670,36 +681,25 @@ object Sampling {
     * fit never saw cannot join (nothing hashed into it then), so a NEW
     * corpus can observe it — those tokens back off to the smoothing
     * floors k/(T+k·dim), the identical difference-of-logs arithmetic
-    * folded as the coalesce default.
+    * over its counts read as 0.
     */
   def dsirScoreWithModel(spark: org.apache.spark.sql.SparkSession,
                          df: DataFrame, idCol: String, textCol: String,
-                         path: String): DataFrame = {
+                         path: String): DataFrame =
+    dsirModel(spark, path, idCol, textCol)(df)
+
+  /** Open a [[buildDsirModel]] layout once (layout check, meta read, count
+    * table) and return its scorer — reused per batch by the gate. */
+  private[graft] def dsirModel(spark: org.apache.spark.sql.SparkSession,
+                               path: String, idCol: String,
+                               textCol: String): DataFrame => DataFrame = {
     val meta = graft.ops.Similarity.requireLayout(spark, path, "dsir_model")
     val dim = meta("dim").toInt
-    val k = meta("smooth_k").toDouble
-    val kd = lit(k) * dim
-    val ratio = spark.read.parquet(s"$path/buckets")
-      .select(col("bucket"),
-        (log((coalesce(col("ct"), lit(0L)).cast("double") + k) /
-            (lit(meta("tt").toLong).cast("double") + kd)) -
-          log((coalesce(col("cr"), lit(0L)).cast("double") + k) /
-            (lit(meta("tr").toLong).cast("double") + kd))).as("_lr"))
-    df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        posexplode(graft.functions.VectorFunctions.hashEmbed(col(textCol), dim))
-          .as(Seq("bucket", "cnt")))
-      .where(col("cnt") > 0)
-      .select(col("doc_id"), col("bucket").cast("long").as("bucket"),
-        col("cnt").cast("long").as("cnt"))
-      .join(broadcast(ratio), Seq("bucket"), "left")
-      .select(col("doc_id"), col("cnt"),
-        coalesce(col("_lr"),
-          lit(math.log(k / (meta("tt").toLong + k * dim)) -
-            math.log(k / (meta("tr").toLong + k * dim)))).as("_lr"))
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("cnt").cast("double") * col("_lr")), 3).as("log_w"),
-        sum(col("cnt")).as("n_tokens"))
+    val buckets = spark.read.parquet(s"$path/buckets")
+    df => dsirDocWeights(bucketStream(df, textCol, dim, col(idCol).as("doc_id"))
+      .join(broadcast(buckets), Seq("bucket"), "left")
+      .select(col("doc_id"), col("cnt"), dsirLogRatio(meta("smooth_k").toDouble,
+        dim, key => lit(meta(key).toLong)).as("_lr")))
   }
 
   /** DSIR importance RESAMPLING — the selection step over

@@ -180,6 +180,88 @@ object TextAnalysis {
           "precompute a count column and pass it to the consumer directly")
     }
 
+  /** The whitespace token array, empties dropped — the one tokenizer of
+    * the count-based operators here (and of their DuckDB twins). */
+  private def wsTokens(textCol: String): Column =
+    expr(s"filter(split($textCol, ' '), x -> x <> '')")
+
+  private def tokenFrame(df: DataFrame, textCol: String, keep: Column*): DataFrame =
+    df.where(col(textCol).isNotNull).select(keep :+ wsTokens(textCol).as("t"): _*)
+
+  private def bigramStream(toks: DataFrame, keep: Seq[Column]): DataFrame =
+    toks.where(size(col("t")) >= 2)
+      .select(keep :+ explode(expr(
+        "transform(sequence(0, size(t)-2), i -> struct(t[i] AS w1, t[i+1] AS w2))"))
+        .as("b"): _*)
+      .select(keep ++ Seq(col("b.w1").as("w1"), col("b.w2").as("w2")): _*)
+
+  // ── Shared scaffolding of the learned filters (the add-k bigram LM and
+  // weak-label NB): ONE count recipe per filter, shared by the in-memory
+  // fit and the layout build, and ONE scorer per filter, shared by the
+  // in-memory and the frozen form. A scorer reads its totals through `v`:
+  // columns of the broadcast one-row `totals` frames in memory, plan
+  // literals from the model's meta when frozen (read once, by the
+  // layout's loader).
+
+  private def bigramCounts(toks: DataFrame): (DataFrame, DataFrame) = (
+    bigramStream(toks, Seq.empty)
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")),
+    toks.select(explode(col("t")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("c1")))
+
+  private def addK(c12: Column, c1: Column, k: Double, nv: Column): Column =
+    (c12.cast("double") + k) / (c1.cast("double") + lit(k) * nv)
+
+  private def withTotals(df: DataFrame, totals: Seq[DataFrame]): DataFrame =
+    totals.foldLeft(df)((d, t) => d.crossJoin(broadcast(t)))
+
+  private def bigramXent(df: DataFrame, idCol: String, textCol: String,
+                         big: DataFrame, uni: DataFrame, totals: Seq[DataFrame],
+                         k: Double, v: String => Column): DataFrame =
+    withTotals(bigramStream(tokenFrame(df, textCol, col(idCol).as("doc_id")),
+          Seq(col("doc_id")))
+        .join(big, Seq("w1", "w2"), "left")
+        .join(uni.select(col("w").as("w1"), col("c1")), Seq("w1"), "left"),
+      totals)
+      .select(col("doc_id"), col("c12").isNull.as("_oov"),
+        addK(coalesce(col("c12"), lit(0L)), coalesce(col("c1"), lit(0L)),
+          k, v("nv")).as("_p"))
+      .groupBy(col("doc_id"))
+      .agg(round(avg(-log2(col("_p"))), 3).as("xent_bits"),
+        count(lit(1)).as("n_bigrams"),
+        count(when(col("_oov"), lit(1))).as("n_oov"))
+
+  private def nbCounts(labeled: DataFrame): DataFrame =
+    labeled.select(col("_y"), explode(col("t")).as("w"))
+      .groupBy(col("w")).agg(
+        count(when(col("_y") === 1, lit(1))).as("c1"),
+        count(when(col("_y") === 0, lit(1))).as("c0"))
+
+  private def nbTotals(cw: DataFrame): DataFrame =
+    cw.agg(sum(col("c1")).as("t1"), sum(col("c0")).as("t0"),
+      count(lit(1)).as("nv"))
+
+  private def nbPriors(labeled: DataFrame): DataFrame =
+    labeled.agg(
+      count(when(col("_y") === 1, lit(1))).as("n1"),
+      count(when(col("_y") === 0, lit(1))).as("n0"))
+
+  private def nbLogOdds(toks: DataFrame, cw: DataFrame, totals: Seq[DataFrame],
+                        smoothK: Double, v: String => Column): DataFrame = {
+    val k = lit(smoothK)
+    withTotals(toks.join(cw, Seq("w"), "left"), totals)
+      .withColumn("_term",
+        log2((coalesce(col("c1"), lit(0L)).cast("double") + k) /
+            (v("t1").cast("double") + k * v("nv"))) -
+          log2((coalesce(col("c0"), lit(0L)).cast("double") + k) /
+            (v("t0").cast("double") + k * v("nv"))))
+      .groupBy(col("doc_id"))
+      .agg(round(first(log2(v("n1").cast("double") / v("n0"))) +
+          sum(col("_term")), 3).as("log_odds"),
+        count(lit(1)).as("n_tokens"))
+      .withColumn("pred", (col("log_odds") > 0).cast("int"))
+  }
+
   /** Corpus vocabulary: whitespace-token → frequency over the whole
     * corpus, `minCount` floor, deterministic top-`topN` (count desc, then
     * token) — the tokenizer-training / vocab-audit primitive.
@@ -196,8 +278,7 @@ object TextAnalysis {
   def vocab(df: DataFrame, textCol: String,
             minCount: Long = 2, topN: Int = 1000): DataFrame =
     df.where(col(textCol).isNotNull)
-      .select(explode(expr(s"filter(split($textCol, ' '), x -> x <> '')"))
-        .as("token"))
+      .select(explode(wsTokens(textCol)).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("cnt"))
       .where(col("cnt") >= minCount)
@@ -226,27 +307,16 @@ object TextAnalysis {
     */
   def collocations(df: DataFrame, textCol: String,
                    minCount: Long = 5, topN: Int = 100): DataFrame = {
-    val toks = df.where(col(textCol).isNotNull)
-      .select(expr(s"filter(split($textCol, ' '), x -> x <> '')").as("t"))
-    val bigrams = toks.where(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(0, size(t)-2), i -> struct(t[i] AS w1, t[i+1] AS w2))"))
-        .as("b"))
-      .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
-    val big = bigrams.groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("pair_count"))
-    val uni = toks.select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-    val total = big.agg(sum(col("pair_count")).as("_n"))
-    big.where(col("pair_count") >= minCount)
-      .join(uni.select(col("w").as("w1"), col("c").as("_c1")), "w1")
-      .join(uni.select(col("w").as("w2"), col("c").as("_c2")), "w2")
-      .crossJoin(broadcast(total))
+    val (big, uni) = bigramCounts(tokenFrame(df, textCol))
+    big.where(col("c12") >= minCount)
+      .join(uni.select(col("w").as("w1"), col("c1").as("_c1")), "w1")
+      .join(uni.select(col("w").as("w2"), col("c1").as("_c2")), "w2")
+      .crossJoin(broadcast(big.agg(sum(col("c12")).as("_n"))))
       // association order pinned to the oracle: (pair·N) / (c1·c2), all
       // factors integer-valued doubles < 2^53 -> exact products, one
       // correctly-rounded division
-      .select(col("w1"), col("w2"), col("pair_count"),
-        round((col("pair_count").cast("double") * col("_n")) /
+      .select(col("w1"), col("w2"), col("c12").as("pair_count"),
+        round((col("c12").cast("double") * col("_n")) /
           (col("_c1").cast("double") * col("_c2")), 6).as("pmi_ratio"))
       .orderBy(col("pmi_ratio").desc, col("w1"), col("w2"))
       .limit(topN)
@@ -273,26 +343,14 @@ object TextAnalysis {
     */
   def bigramLmScore(df: DataFrame, idCol: String, textCol: String,
                     smoothK: Double = 0.5): DataFrame = {
-    val toks = df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        expr(s"filter(split($textCol, ' '), x -> x <> '')").as("t"))
-    val bigrams = toks.where(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(t)-2), i -> struct(t[i] AS w1, t[i+1] AS w2))"))
-        .as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-    val big = bigrams.groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c12"))
-    val uni = toks.select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-    val vocab = uni.agg(count(lit(1)).as("_v"))
+    val toks = tokenFrame(df, textCol, col(idCol).as("doc_id"))
+    val (big, uni) = bigramCounts(toks)
     val probs = big
       .join(uni.select(col("w").as("w1"), col("c1")), "w1")
-      .crossJoin(broadcast(vocab))
+      .crossJoin(broadcast(uni.agg(count(lit(1)).as("nv"))))
       .select(col("w1"), col("w2"),
-        ((col("c12").cast("double") + smoothK) /
-          (col("c1").cast("double") + lit(smoothK) * col("_v"))).as("_p"))
-    bigrams.join(probs, Seq("w1", "w2"))
+        addK(col("c12"), col("c1"), smoothK, col("nv")).as("_p"))
+    bigramStream(toks, Seq(col("doc_id"))).join(probs, Seq("w1", "w2"))
       .groupBy(col("doc_id"))
       .agg(round(avg(-log2(col("_p"))), 3).as("xent_bits"),
         count(lit(1)).as("n_bigrams"))
@@ -333,36 +391,9 @@ object TextAnalysis {
   def bigramLmScoreAgainst(train: DataFrame, score: DataFrame,
                            idCol: String, textCol: String,
                            smoothK: Double = 0.5): DataFrame = {
-    def tokens(df: DataFrame, keep: Seq[Column]): DataFrame =
-      df.where(col(textCol).isNotNull)
-        .select(keep :+
-          expr(s"filter(split($textCol, ' '), x -> x <> '')").as("t"): _*)
-    def bigramStream(toks: DataFrame, keep: Seq[Column]): DataFrame =
-      toks.where(size(col("t")) >= 2)
-        .select(keep :+ explode(expr(
-          "transform(sequence(0, size(t)-2), i -> struct(t[i] AS w1, t[i+1] AS w2))"))
-          .as("b"): _*)
-        .select(keep ++ Seq(col("b.w1").as("w1"), col("b.w2").as("w2")): _*)
-    val trainToks = tokens(train, Seq.empty)
-    val big = bigramStream(trainToks, Seq.empty)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-    val uni = trainToks.select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-    val vocab = uni.agg(count(lit(1)).as("_v"))
-    val scored = bigramStream(
-      tokens(score, Seq(col(idCol).as("doc_id"))), Seq(col("doc_id")))
-    scored
-      .join(big, Seq("w1", "w2"), "left")
-      .join(uni.select(col("w").as("w1"), col("c1")), Seq("w1"), "left")
-      .crossJoin(broadcast(vocab))
-      .select(col("doc_id"), col("c12").isNull.as("_oov"),
-        ((coalesce(col("c12"), lit(0L)).cast("double") + smoothK) /
-          (coalesce(col("c1"), lit(0L)).cast("double") +
-            lit(smoothK) * col("_v"))).as("_p"))
-      .groupBy(col("doc_id"))
-      .agg(round(avg(-log2(col("_p"))), 3).as("xent_bits"),
-        count(lit(1)).as("n_bigrams"),
-        count(when(col("_oov"), lit(1))).as("n_oov"))
+    val (big, uni) = bigramCounts(tokenFrame(train, textCol))
+    bigramXent(score, idCol, textCol, big, uni,
+      Seq(uni.agg(count(lit(1)).as("nv"))), smoothK, col)
   }
 
   /** Persist the [[bigramLmScoreAgainst]] reference model as a layout:
@@ -379,18 +410,9 @@ object TextAnalysis {
   def buildBigramLm(spark: org.apache.spark.sql.SparkSession,
                     train: DataFrame, textCol: String, path: String,
                     smoothK: Double = 0.5): Unit = {
-    val toks = train.where(col(textCol).isNotNull)
-      .select(expr(s"filter(split($textCol, ' '), x -> x <> '')").as("t"))
-    toks.where(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(0, size(t)-2), i -> struct(t[i] AS w1, t[i+1] AS w2))"))
-        .as("b"))
-      .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .write.mode("overwrite").parquet(s"$path/bigrams")
-    toks.select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-      .write.mode("overwrite").parquet(s"$path/unigrams")
+    val (big, uni) = bigramCounts(tokenFrame(train, textCol))
+    big.write.mode("overwrite").parquet(s"$path/bigrams")
+    uni.write.mode("overwrite").parquet(s"$path/unigrams")
     val nv = spark.read.parquet(s"$path/unigrams").count()
     require(nv > 0, "training slice has no tokens to fit a bigram LM on")
     Similarity.writeIndexMeta(spark, path, Seq(
@@ -410,30 +432,19 @@ object TextAnalysis {
     */
   def bigramScoreWithModel(spark: org.apache.spark.sql.SparkSession,
                            df: DataFrame, idCol: String, textCol: String,
-                           path: String): DataFrame = {
+                           path: String): DataFrame =
+    bigramModel(spark, path, idCol, textCol)(df)
+
+  /** Open a [[buildBigramLm]] layout once (layout check, meta read, count
+    * tables) and return its scorer — reused per batch by the gates. */
+  private[graft] def bigramModel(spark: org.apache.spark.sql.SparkSession,
+                                 path: String, idCol: String,
+                                 textCol: String): DataFrame => DataFrame = {
     val meta = Similarity.requireLayout(spark, path, "bigram_lm")
-    val k = meta("smooth_k").toDouble
-    val nv = lit(meta("nv").toLong)
     val big = spark.read.parquet(s"$path/bigrams")
     val uni = spark.read.parquet(s"$path/unigrams")
-    df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        expr(s"filter(split($textCol, ' '), x -> x <> '')").as("t"))
-      .where(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(t)-2), i -> struct(t[i] AS w1, t[i+1] AS w2))"))
-        .as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .join(big, Seq("w1", "w2"), "left")
-      .join(uni.select(col("w").as("w1"), col("c1")), Seq("w1"), "left")
-      .select(col("doc_id"), col("c12").isNull.as("_oov"),
-        ((coalesce(col("c12"), lit(0L)).cast("double") + k) /
-          (coalesce(col("c1"), lit(0L)).cast("double") +
-            lit(k) * nv)).as("_p"))
-      .groupBy(col("doc_id"))
-      .agg(round(avg(-log2(col("_p"))), 3).as("xent_bits"),
-        count(lit(1)).as("n_bigrams"),
-        count(when(col("_oov"), lit(1))).as("n_oov"))
+    df => bigramXent(df, idCol, textCol, big, uni, Seq.empty,
+      meta("smooth_k").toDouble, key => lit(meta(key).toLong))
   }
 
   /** Perplexity-bucketed partition — the CCNet head/middle/tail split
@@ -499,35 +510,12 @@ object TextAnalysis {
     */
   def naiveBayesScore(df: DataFrame, idCol: String, textCol: String,
                       labelCol: String, smoothK: Double = 0.5): DataFrame = {
-    val base = df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"), col(labelCol).cast("int").as("_y"),
-        expr(s"filter(split($textCol, ' '), x -> x <> '')").as("t"))
+    val base = tokenFrame(df, textCol, col(idCol).as("doc_id"),
+      col(labelCol).cast("int").as("_y"))
     val train = base.where(col("_y").isNotNull)
-    val tok = train.select(col("_y"), explode(col("t")).as("w"))
-    val cw = tok.groupBy(col("w")).agg(
-      count(when(col("_y") === 1, lit(1))).as("c1"),
-      count(when(col("_y") === 0, lit(1))).as("c0"))
-    val tot = cw.agg(sum(col("c1")).as("t1"), sum(col("c0")).as("t0"),
-      count(lit(1)).as("_v"))
-    val prior = train.agg(
-      count(when(col("_y") === 1, lit(1))).as("n1"),
-      count(when(col("_y") === 0, lit(1))).as("n0"))
-    val k = lit(smoothK)
-    base.select(col("doc_id"), explode(col("t")).as("w"))
-      .join(cw, Seq("w"), "left")
-      .crossJoin(broadcast(tot))
-      .crossJoin(broadcast(prior))
-      .select(col("doc_id"), col("n1"), col("n0"),
-        (log2((coalesce(col("c1"), lit(0L)).cast("double") + k) /
-            (col("t1").cast("double") + k * col("_v"))) -
-          log2((coalesce(col("c0"), lit(0L)).cast("double") + k) /
-            (col("t0").cast("double") + k * col("_v")))).as("_term"))
-      .groupBy(col("doc_id"))
-      .agg(
-        round(first(log2(col("n1").cast("double") / col("n0"))) +
-          sum(col("_term")), 3).as("log_odds"),
-        count(lit(1)).as("n_tokens"))
-      .withColumn("pred", (col("log_odds") > 0).cast("int"))
+    val cw = nbCounts(train)
+    nbLogOdds(base.select(col("doc_id"), explode(col("t")).as("w")), cw,
+      Seq(nbTotals(cw), nbPriors(train)), smoothK, col)
   }
 
   /** Persist the [[naiveBayesScore]] fit as a layout: `counts/`
@@ -543,23 +531,13 @@ object TextAnalysis {
   def buildNbModel(spark: org.apache.spark.sql.SparkSession, train: DataFrame,
                    textCol: String, labelCol: String, path: String,
                    smoothK: Double = 0.5): Unit = {
-    val lab = train.where(col(textCol).isNotNull)
-      .select(col(labelCol).cast("int").as("_y"),
-        expr(s"filter(split($textCol, ' '), x -> x <> '')").as("t"))
+    val lab = tokenFrame(train, textCol, col(labelCol).cast("int").as("_y"))
       .where(col("_y").isNotNull)
-    val tok = lab.select(col("_y"), explode(col("t")).as("w"))
-    tok.groupBy(col("w")).agg(
-        count(when(col("_y") === 1, lit(1))).as("c1"),
-        count(when(col("_y") === 0, lit(1))).as("c0"))
-      .write.mode("overwrite").parquet(s"$path/counts")
-    val counts = spark.read.parquet(s"$path/counts")
-    val Array(t1, t0, nv) = counts
-      .agg(sum(col("c1")), sum(col("c0")), count(lit(1)))
-      .collect().head.toSeq.map(_.asInstanceOf[Long].toString).toArray
-    val Array(n1, n0) = lab
-      .agg(count(when(col("_y") === 1, lit(1))),
-        count(when(col("_y") === 0, lit(1))))
-      .collect().head.toSeq.map(_.asInstanceOf[Long].toString).toArray
+    nbCounts(lab).write.mode("overwrite").parquet(s"$path/counts")
+    def longs(row: DataFrame) =
+      row.collect().head.toSeq.map(_.asInstanceOf[Long].toString).toArray
+    val Array(t1, t0, nv) = longs(nbTotals(spark.read.parquet(s"$path/counts")))
+    val Array(n1, n0) = longs(nbPriors(lab))
     require(n1.toLong > 0 && n0.toLong > 0,
       s"both classes must be present to fit: n1=$n1 n0=$n0")
     Similarity.writeIndexMeta(spark, path, Seq(
@@ -577,28 +555,19 @@ object TextAnalysis {
     */
   def nbScoreWithModel(spark: org.apache.spark.sql.SparkSession,
                        df: DataFrame, idCol: String, textCol: String,
-                       path: String): DataFrame = {
+                       path: String): DataFrame =
+    nbModel(spark, path, idCol, textCol)(df)
+
+  /** Open a [[buildNbModel]] layout once (layout check, meta read, count
+    * table) and return its scorer — reused per batch by the gates. */
+  private[graft] def nbModel(spark: org.apache.spark.sql.SparkSession,
+                             path: String, idCol: String,
+                             textCol: String): DataFrame => DataFrame = {
     val meta = Similarity.requireLayout(spark, path, "nb_model")
-    val k = lit(meta("smooth_k").toDouble)
-    val denom1 = lit(meta("t1").toLong).cast("double") +
-      k * lit(meta("nv").toLong)
-    val denom0 = lit(meta("t0").toLong).cast("double") +
-      k * lit(meta("nv").toLong)
-    val prior = log2(lit(meta("n1").toLong).cast("double") /
-      lit(meta("n0").toLong))
     val cw = spark.read.parquet(s"$path/counts")
-    df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        explode(expr(s"filter(split($textCol, ' '), x -> x <> '')")).as("w"))
-      .join(cw, Seq("w"), "left")
-      .select(col("doc_id"),
-        (log2((coalesce(col("c1"), lit(0L)).cast("double") + k) / denom1) -
-          log2((coalesce(col("c0"), lit(0L)).cast("double") + k) / denom0))
-          .as("_term"))
-      .groupBy(col("doc_id"))
-      .agg(round(first(prior) + sum(col("_term")), 3).as("log_odds"),
-        count(lit(1)).as("n_tokens"))
-      .withColumn("pred", (col("log_odds") > 0).cast("int"))
+    df => nbLogOdds(df.where(col(textCol).isNotNull)
+        .select(col(idCol).as("doc_id"), explode(wsTokens(textCol)).as("w")),
+      cw, Seq.empty, meta("smooth_k").toDouble, key => lit(meta(key).toLong))
   }
 
   /** TF-IDF top terms per document — the keyword/topic-signal primitive
@@ -629,7 +598,7 @@ object TextAnalysis {
             perDoc: Int = 3): DataFrame = {
     val tf = df.where(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"),
-        explode(expr(s"filter(split($textCol, ' '), x -> x <> '')")).as("token"))
+        explode(wsTokens(textCol)).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
     val n = df.where(col(textCol).isNotNull)
@@ -691,7 +660,7 @@ object TextAnalysis {
            queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
            topN: Int = 20): DataFrame = {
     require(queryTerms.nonEmpty, "bm25 needs at least one query term")
-    val toks = bm25Toks(df, idCol, textCol)
+    val toks = tokenFrame(df, textCol, col(idCol).as("doc_id"))
     val stats = bm25Stats(toks)
     val tf = bm25Tf(toks, _.where(col("token").isin(queryTerms: _*)))
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("_df"))
@@ -705,15 +674,10 @@ object TextAnalysis {
   }
 
   // ── Shared scaffolding of [[bm25]] and [[bm25Join]]: ONE definition of
-  // the tokenized view, the (N, avgdl) stats row, the filtered tf table
-  // with the carried doc length, and the Okapi weight — the engine-side
-  // twin of the shared oracle CTE fragments, so the two retrieval forms
-  // (and their DuckDB twins) cannot drift apart.
-
-  private def bm25Toks(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        expr(s"filter(split($textCol, ' '), x -> x <> '')").as("t"))
+  // the (N, avgdl) stats row, the filtered tf table with the carried doc
+  // length, and the Okapi weight over the one [[tokenFrame]] — the
+  // engine-side twin of the shared oracle CTE fragments, so the two
+  // retrieval forms (and their DuckDB twins) cannot drift apart.
 
   private def bm25Stats(toks: DataFrame): DataFrame =
     toks.select(size(col("t")).cast("double").as("dl"))
@@ -881,11 +845,11 @@ object TextAnalysis {
       s"maxDfFrac must be in (0, 1]: $maxDfFrac")
     val qterms = queries.where(col(qtextCol).isNotNull)
       .select(col(qidCol).as("q_id"),
-        explode(expr(s"filter(split($qtextCol, ' '), x -> x <> '')"))
+        explode(wsTokens(qtextCol))
           .as("token"))
       .distinct()
     val qvocab = qterms.select(col("token")).distinct()
-    val toks = bm25Toks(df, idCol, textCol)
+    val toks = tokenFrame(df, textCol, col(idCol).as("doc_id"))
     val stats = bm25Stats(toks)
     // df via two-level aggregate + join-back (see [[tfidf]]): the former
     // token-partitioned count window was the family's one uncapped
@@ -976,7 +940,7 @@ object TextAnalysis {
       .select(col("token"))
     docs
       .select(col(idCol).as("doc_id"),
-        posexplode_outer(expr(s"filter(split($textCol, ' '), x -> x <> '')"))
+        posexplode_outer(wsTokens(textCol))
           .as(Seq("pos", "w")))
       .join(broadcast(stop), col("w") === col("token"), "left")
       .groupBy(col("doc_id"))

@@ -910,12 +910,16 @@ object Streams {
     val w = layoutParam(spark, gramIndexPath, "w")
     val lineMdf = lineIndexPath.map(layoutParam(spark, _, "min_doc_freq"))
     // learned-screen rungs (the batch Config.pplModel/nbModel twins):
-    // fail fast on a wrong layout at sink START, not at first batch.
-    // Deterministic pure filters under frozen models, so every crash
-    // window's replay argument is unchanged — the rung recomputes
-    // byte-identically over the re-admitted rows
-    pplModelPath.foreach(graft.ops.Similarity.requireLayout(spark, _, "bigram_lm"))
-    nbModelPath.foreach(graft.ops.Similarity.requireLayout(spark, _, "nb_model"))
+    // each model loads ONCE at sink start — a wrong layout fails here,
+    // not at first batch, and no batch re-reads the meta. Deterministic
+    // pure filters under frozen models, so every crash window's replay
+    // argument is unchanged — the rung recomputes byte-identically over
+    // the re-admitted rows
+    val learnedScreens =
+      pplModelPath.map(p => graft.ops.TextAnalysis.bigramModel(
+        spark, p, idCol, textCol) -> (col("xent_bits") <= pplMaxBits)) ++
+      nbModelPath.map(p => graft.ops.TextAnalysis.nbModel(
+        spark, p, idCol, textCol) -> (col("log_odds") > nbMinLogOdds))
     batches(stream, checkpoint) {
       (batch, batchId) =>
         // ── rung 1: the ingestGate screens ──
@@ -930,20 +934,10 @@ object Streams {
           else deduped.where(
             graft.ops.TextAnalysis.qualityCol(col(textCol)) >= minQuality)
         // ── rung 1L (optional): the learned screens, batch-curate order ──
-        val learnedScreens: Seq[DataFrame => DataFrame] = Seq(
-          pplModelPath.map(p => (d: DataFrame) => d.join(
-            broadcast(graft.ops.TextAnalysis
-              .bigramScoreWithModel(spark, d, idCol, textCol, p)
-              .where(col("xent_bits") <= pplMaxBits)
-              .select(col("doc_id").as(idCol))),
-            Seq(idCol), "left_semi")),
-          nbModelPath.map(p => (d: DataFrame) => d.join(
-            broadcast(graft.ops.TextAnalysis
-              .nbScoreWithModel(spark, d, idCol, textCol, p)
-              .where(col("log_odds") > nbMinLogOdds)
-              .select(col("doc_id").as(idCol))),
-            Seq(idCol), "left_semi"))).flatten
-        val gated = learnedScreens.foldLeft(scored)((d, f) => f(d))
+        val gated = learnedScreens.foldLeft(scored) { case (d, (score, keep)) =>
+          d.join(broadcast(score(d).where(keep).select(col("doc_id").as(idCol))),
+            Seq(idCol), "left_semi")
+        }
         val fresh = graft.ops.Dedup.exactDedupAgainstIndex(
           spark, gated, textCol, keyIndexPath).persist()
         // metrics count the line rung's survivors; persisted so that
@@ -1162,6 +1156,22 @@ object Streams {
         .foreach(metrics.get.record(batchId, _))
     }
 
+  /** Shared skeleton of the learned admission gates, whose callers
+    * load (and layout-check) their frozen model at sink START: per
+    * micro-batch score under it, keep the admitted ids + score columns,
+    * and append the original rows with scores attached. Stateless given
+    * the layout; deterministic scoring makes at-least-once replays
+    * byte-identical (the compactOutput keep-any discipline).
+    */
+  private def modelGateSink(stream: DataFrame, idCol: String,
+                            outPath: String, checkpoint: String)
+                           (score: DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    batches(stream, checkpoint) { (batch, _) =>
+      batch.join(score(batch), Seq(idCol))
+        .write.mode("append").parquet(outPath)
+    }
+
   /** The LEARNED-filter admission gate — [[graft.ops.TextAnalysis
     * .naiveBayesScore]]'s streaming twin over a persisted model
     * ([[graft.ops.TextAnalysis.buildNbModel]]): every micro-batch is
@@ -1183,38 +1193,17 @@ object Streams {
     * semantic cells ([[semanticGateSink]]), heuristic floors (the
     * quality knob), and now a trained provenance classifier.
     */
-  /** Shared skeleton of the learned admission gates: fail fast at sink
-    * START on a wrong model layout, then per micro-batch score under the
-    * frozen model, keep the admitted ids + score columns, and append the
-    * original rows with scores attached. Stateless given the layout;
-    * deterministic scoring makes at-least-once replays byte-identical
-    * (the compactOutput keep-any discipline).
-    */
-  private def modelGateSink(spark: org.apache.spark.sql.SparkSession,
-                            stream: DataFrame, idCol: String,
-                            modelPath: String, layout: String,
-                            outPath: String, checkpoint: String)
-                           (score: DataFrame => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.ops.Similarity.requireLayout(spark, modelPath, layout)
-    batches(stream, checkpoint) { (batch, _) =>
-      batch.join(score(batch), Seq(idCol))
-        .write.mode("append").parquet(outPath)
-    }
-  }
-
   def nbGateSink(spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
                  idCol: String, textCol: String, modelPath: String,
                  outPath: String, checkpoint: String,
                  threshold: Double = 0.0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    modelGateSink(spark, stream, idCol, modelPath, "nb_model",
-        outPath, checkpoint) { batch =>
-      graft.ops.TextAnalysis
-        .nbScoreWithModel(spark, batch, idCol, textCol, modelPath)
-        .where(col("log_odds") > threshold)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val score = graft.ops.TextAnalysis.nbModel(spark, modelPath, idCol, textCol)
+    modelGateSink(stream, idCol, outPath, checkpoint) { batch =>
+      score(batch).where(col("log_odds") > threshold)
         .select(col("doc_id").as(idCol), col("log_odds"))
     }
+  }
 
   /** The perplexity admission gate — [[graft.ops.TextAnalysis
     * .bigramLmScoreAgainst]]'s streaming twin over a persisted reference
@@ -1235,14 +1224,13 @@ object Streams {
   def pplGateSink(spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
                   idCol: String, textCol: String, modelPath: String,
                   outPath: String, checkpoint: String, maxBits: Double)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    modelGateSink(spark, stream, idCol, modelPath, "bigram_lm",
-        outPath, checkpoint) { batch =>
-      graft.ops.TextAnalysis
-        .bigramScoreWithModel(spark, batch, idCol, textCol, modelPath)
-        .where(col("xent_bits") <= maxBits)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val score = graft.ops.TextAnalysis.bigramModel(spark, modelPath, idCol, textCol)
+    modelGateSink(stream, idCol, outPath, checkpoint) { batch =>
+      score(batch).where(col("xent_bits") <= maxBits)
         .select(col("doc_id").as(idCol), col("xent_bits"), col("n_oov"))
     }
+  }
 
   /** The importance admission gate — [[graft.ops.Sampling
     * .dsirLogWeights]]'s streaming twin over a persisted model
@@ -1262,14 +1250,13 @@ object Streams {
   def dsirGateSink(spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
                    idCol: String, textCol: String, modelPath: String,
                    outPath: String, checkpoint: String, minLogW: Double)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    modelGateSink(spark, stream, idCol, modelPath, "dsir_model",
-        outPath, checkpoint) { batch =>
-      graft.ops.Sampling
-        .dsirScoreWithModel(spark, batch, idCol, textCol, modelPath)
-        .where(col("log_w") >= minLogW)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val score = graft.ops.Sampling.dsirModel(spark, modelPath, idCol, textCol)
+    modelGateSink(stream, idCol, outPath, checkpoint) { batch =>
+      score(batch).where(col("log_w") >= minLogW)
         .select(col("doc_id").as(idCol), col("log_w"), col("n_tokens"))
     }
+  }
 
   /** The k-NN admission gate — [[graft.ops.Similarity.knnClassify]]'s
     * streaming twin over a persisted labeled seed ([[graft.ops
@@ -1295,9 +1282,9 @@ object Streams {
                   outPath: String, checkpoint: String,
                   k: Int, minVoteFrac: Double,
                   admitLabels: Seq[Int] = Seq.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    modelGateSink(spark, stream, idCol, seedPath, "knn_seed",
-        outPath, checkpoint) { batch =>
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    graft.ops.Similarity.requireLayout(spark, seedPath, "knn_seed")
+    modelGateSink(stream, idCol, outPath, checkpoint) { batch =>
       val seed = spark.read.parquet(s"$seedPath/seed")
       val voted = graft.ops.Similarity.knnClassify(seed, batch,
           "id", "vec", "label", idCol, vecCol, k,
@@ -1309,6 +1296,7 @@ object Streams {
       admitted.select(col("q_id").as(idCol), col("pred_label"),
         col("vote_frac"))
     }
+  }
 
   /** The per-key QUOTA gate — [[graft.ops.Sampling.capPerKey]]'s
     * streaming counterpart over a [[graft.ops.Sampling.buildQuotaState]]

@@ -69,21 +69,11 @@ object PipelineTasks {
   private def sink(ctx: TaskContext, task: Node)(df: DataFrame,
       lg: TaskLog, meter: graft.runner.ProgressMeter): Unit = {
     val tgt = task("target")
+    lazy val out = s"${ctx.dir(tgt.str("folder", "output"))}/${tgt.str("file")}"
     tgt.str("format", "parquet") match {
-      case "parquet" =>
-        val out = s"${ctx.dir(tgt.str("folder", "output"))}/${tgt.str("file")}"
+      case f @ ("parquet" | "jsonl" | "orc") =>
         df.write.mode(if (tgt.bool("truncate")) "overwrite" else "append")
-          .parquet(out)
-        lg.write(s"wrote $out")
-      case "jsonl" =>
-        val out = s"${ctx.dir(tgt.str("folder", "output"))}/${tgt.str("file")}"
-        df.write.mode(if (tgt.bool("truncate")) "overwrite" else "append")
-          .json(out)
-        lg.write(s"wrote $out")
-      case "orc" =>
-        val out = s"${ctx.dir(tgt.str("folder", "output"))}/${tgt.str("file")}"
-        df.write.mode(if (tgt.bool("truncate")) "overwrite" else "append")
-          .orc(out)
+          .format(if (f == "jsonl") "json" else f).save(out)
         lg.write(s"wrote $out")
       case "csv" => Tasks.csvTarget(ctx, task)(df, lg, meter)
       case "warc" =>
@@ -94,7 +84,6 @@ object PipelineTasks {
         // `truncate` follows every other target's contract (clear the
         // stale shards, or fail loudly on a shard-name collision); a
         // successful commit sweeps stranded `_tmp.` attempt files.
-        val out = s"${ctx.dir(tgt.str("folder", "output"))}/${tgt.str("file")}"
         graft.sources.WarcWriter.prepareShardDir(ctx.spark, out,
           tgt.bool("truncate"))
         graft.sources.WarcWriter.writeShards(
@@ -105,7 +94,6 @@ object PipelineTasks {
         // extracted-text shards (`conversion` records, text/plain) —
         // intake/curation output ships as a text crawl; `text` names
         // the column (default: the first of norm_text/clean_text/text)
-        val out = s"${ctx.dir(tgt.str("folder", "output"))}/${tgt.str("file")}"
         val textCol = tgt.strOpt("text").getOrElse(
           Seq("norm_text", "clean_text", "text").find(df.columns.contains)
             .getOrElse(throw new IllegalArgumentException(
@@ -184,10 +172,13 @@ object PipelineTasks {
 
   /** `excise`: duplicated-span rewriting — `mode` `cross-doc` (q88
     * default), `within-doc` (q90 collapse), `lines` (q97 corpus-
-    * frequency boilerplate removal at `min_doc_freq`), or incremental
-    * against a standing gram index when `index` is set (q91). Output is
-    * the ops' (id, clean_text, n_words, n_excised) contract — the
-    * `lines` mode counts lines, not words: (…, n_lines, n_removed).
+    * frequency boilerplate removal at `min_doc_freq`) or `paragraphs`
+    * (q152). With `index` set, `cross-doc` runs against a standing gram
+    * index (q91), `lines`/`paragraphs` against a line/paragraph-count
+    * index (q99); `within-doc` has no standing form and is rejected, as
+    * is any unknown mode. Output is the ops' (id, clean_text, n_words,
+    * n_excised) contract — the unit modes count units, not words:
+    * (…, n_lines | n_paras, n_removed).
     */
   object ExciseTask extends Task {
     def run(ctx: TaskContext, task: Node, log: TaskLog): Unit =
@@ -197,11 +188,15 @@ object PipelineTasks {
         val text = cfg.str("text", "text")
         val w = cfg.int("w", 8)
         val out = (cfg.strOpt("index"), cfg.str("mode", "cross-doc")) match {
-          // standing-index forms: gram excision (q91) or line-count
-          // removal (q99) depending on mode
+          // standing-index forms: line- or paragraph-count removal
+          // (q99), gram excision (q91) for the cross-doc default
           case (Some(p), "lines") =>
             Dedup.removeLinesAgainstIndex(ctx.spark, df, id, text, ctx.dir(p))
-          case (Some(p), _) =>
+          case (Some(p), "paragraphs") =>
+            Dedup.removeParagraphsAgainstIndex(ctx.spark, df, id, text, ctx.dir(p))
+          case (Some(_), "within-doc") => throw new IllegalArgumentException(
+            "excise mode within-doc has no standing-index form: drop `index`")
+          case (Some(p), "cross-doc") =>
             Dedup.exciseAgainstIndex(ctx.spark, df, id, text, ctx.dir(p))
           case (None, "cross-doc")  => Dedup.exciseDupSpans(df, id, text, w)
           case (None, "within-doc") => Dedup.collapseRepeats(df, id, text, w)
@@ -213,7 +208,7 @@ object PipelineTasks {
           case (None, "paragraphs") =>
             Dedup.removeFrequentParagraphs(df, id, text,
               cfg.int("min_doc_freq", 2))
-          case (None, m) =>
+          case (_, m) =>
             throw new IllegalArgumentException(s"unknown excise mode: $m")
         }
         sink(ctx, task)(out, lg, meter)

@@ -1864,6 +1864,37 @@ class StreamsSpec extends SparkSpec {
     assert(bad.getMessage.contains("nb_model"))
   }
 
+  test("nbGateSink reads the model meta once, at sink start") {
+    implicit val sqlCtx = spark.sqlContext
+    val train = Seq(
+      (1L, "good clean prose here", 1), (2L, "good signal rich text", 1),
+      (3L, "spam click bait spam", 0), (4L, "bait noise spam junk", 0))
+      .toDF("doc_id", "text", "label")
+    val model = tmpDir("graft_nbonce_model_")
+    graft.ops.TextAnalysis.buildNbModel(spark, train, "text", "label", model)
+    val batch1 = Seq((10L, "clean prose signal"), (11L, "spam bait click"))
+    val batch2 = Seq((12L, "good text"), (13L, "junk noise"))
+    val expected = graft.ops.TextAnalysis.nbScoreWithModel(spark,
+        (batch1 ++ batch2).toDF("doc_id", "text"), "doc_id", "text", model)
+      .where(col("log_odds") > 0)
+      .select("doc_id", "log_odds").as[(Long, Double)].collect().toSet
+    val out = tmpDir("graft_nbonce_out_")
+    val mem = MemoryStream[(Long, String)]
+    val q = Streams.nbGateSink(spark, mem.toDF().toDF("doc_id", "text"),
+      "doc_id", "text", model, out, tmpDir("graft_nbonce_ck_"))
+    try {
+      mem.addData(batch1: _*); q.processAllAvailable()
+      // retag the meta under the running sink; the count tables stay
+      val meta = graft.ops.Similarity.readIndexMeta(spark, model)
+      graft.ops.Similarity.writeIndexMeta(spark, model,
+        (meta + ("layout" -> "retired_model")).toSeq)
+      mem.addData(batch2: _*); q.processAllAvailable()
+    } finally q.stop()
+    assert(spark.read.parquet(out).select("doc_id", "log_odds")
+      .as[(Long, Double)].collect().toSet == expected)
+    assert(expected.map(_._1) == Set(10L, 12L))
+  }
+
   test("pplGateSink admits in-domain stream rows under the frozen reference LM") {
     implicit val sqlCtx = spark.sqlContext
     val train = Seq((0L, "the cat sat on the mat"),

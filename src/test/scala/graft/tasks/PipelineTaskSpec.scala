@@ -137,6 +137,37 @@ class PipelineTaskSpec extends SparkSpec {
         minDocFreq = 2)))
   }
 
+  test("excise task paragraphs mode with index == Dedup.removeParagraphsAgainstIndex") {
+    val wd = tmpDir("graft_pipetask_")
+    Dedup.buildParagraphIndex(docs.where(col("doc_id") % 2 === 0), "doc_id",
+      "text", s"$wd/paraidx", minDocFreq = 2)
+    runTask(wd,
+      s"""{"tasks": [{"type": "excise", "name": "pi",
+         |  "source": {"folder": "$sfDir", "file": "documents.parquet"},
+         |  "excise": {"mode": "paragraphs", "index": "paraidx"},
+         |  "target": {"file": "pix", "truncate": true}}]}""".stripMargin)
+    assert(rows(outParquet(wd, "pix")) ==
+      rows(Dedup.removeParagraphsAgainstIndex(spark, docs, "doc_id", "text",
+        s"$wd/paraidx")))
+  }
+
+  test("excise task rejects within-doc and unknown modes with an index") {
+    val wd = tmpDir("graft_pipetask_")
+    Dedup.buildGramIndex(docs, "text", s"$wd/gramidx", w = 3)
+    def chain(t: Throwable): Seq[Throwable] =
+      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+    // neither may fall through to gram excision against the index
+    for (mode <- Seq("within-doc", "line")) {
+      val e = intercept[Exception](runTask(wd,
+        s"""{"tasks": [{"type": "excise", "name": "wi",
+           |  "source": {"folder": "$sfDir", "file": "documents.parquet"},
+           |  "excise": {"mode": "$mode", "index": "gramidx"},
+           |  "target": {"file": "wix", "truncate": true}}]}""".stripMargin))
+      assert(chain(e).exists(x => x.isInstanceOf[IllegalArgumentException] &&
+        x.getMessage.contains(mode)))
+    }
+  }
+
   test("chunk task == Packing.chunkDocs (q98 parity)") {
     val wd = tmpDir("graft_pipetask_")
     runTask(wd,
