@@ -111,6 +111,37 @@ class TransformsSpec extends SparkSpec {
     assert(out.collect().head.isNullAt(0))
   }
 
+  test("repeated converts of one field compose in config order") {
+    val df = Seq(("  ab ", "x")).toDF("f", "g")
+    // dict after upper only hits if upper ran first: order is observable
+    val task = taskNode(
+      """{"transform": {"convert": [["f", "strip"], ["f", "upper"],
+        |                           ["f", {"AB": "hit"}]]}}""".stripMargin)
+    val out = Transforms(df, task, TaskLog.Silent)
+    assert(out.columns.toSeq == Seq("f", "g"))
+    assert(out.collect().toSeq == Seq(Row("hit", "x")))
+  }
+
+  test("converts naming one field in different case compose (case-insensitive resolver)") {
+    val df = Seq(("  ab ", "x")).toDF("A", "g")
+    val task = taskNode(
+      """{"transform": {"convert": [["A", "strip"], ["a", "upper"]]}}""")
+    val out = Transforms(df, task, TaskLog.Silent)
+    // the replaced column takes the last convert's spelling, like withColumn
+    assert(out.columns.toSeq == Seq("a", "g"))
+    assert(out.collect().toSeq == Seq(Row("AB", "x")))
+  }
+
+  test("empty_as_null and the convert block keep the input's column order") {
+    val df = Seq(("", "b", "7", "d")).toDF("w", "x", "y", "z")
+    val task = taskNode(
+      """{"transforms": [{"module": "empty_as_null"}],
+        | "transform": {"convert": [["z", "upper"], ["y", "int"], ["x", "upper"]]}}""".stripMargin)
+    val out = Transforms(df, task, TaskLog.Silent)
+    assert(out.columns.toSeq == Seq("w", "x", "y", "z"))
+    assert(out.collect().toSeq == Seq(Row(null, "B", 7L, "D")))
+  }
+
   test("custom TransformModule loads by class name") {
     val df = Seq(1, 2).toDF("n")
     val task = taskNode(
