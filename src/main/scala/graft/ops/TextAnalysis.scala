@@ -468,12 +468,19 @@ object TextAnalysis {
                           idCol: String, textCol: String,
                           loBits: Double, hiBits: Double,
                           smoothK: Double = 0.5): DataFrame = {
-    require(loBits < hiBits, s"need loBits < hiBits: $loBits >= $hiBits")
+    val band = perplexityBand(loBits, hiBits)
     bigramLmScoreAgainst(train, score, idCol, textCol, smoothK)
-      .withColumn("bucket",
-        when(col("xent_bits") < loBits, lit("head"))
-          .when(col("xent_bits") >= hiBits, lit("tail"))
-          .otherwise(lit("middle")))
+      .withColumn("bucket", band)
+  }
+
+  /** [[perplexityPartition]]'s head/middle/tail label over `xent_bits`,
+    * shared with the score task's `lo_bits`/`hi_bits` band.
+    */
+  private[graft] def perplexityBand(loBits: Double, hiBits: Double): Column = {
+    require(loBits < hiBits, s"need loBits < hiBits: $loBits >= $hiBits")
+    when(col("xent_bits") < loBits, lit("head"))
+      .when(col("xent_bits") >= hiBits, lit("tail"))
+      .otherwise(lit("middle"))
   }
 
   /** Weak-label Naive-Bayes document scorer — the learned quality filter

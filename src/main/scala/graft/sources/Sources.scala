@@ -3,6 +3,7 @@ package graft.sources
 import graft.config.TaskConfig.Node
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CsvHeader
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** File sources with the reference's semantics.
@@ -11,6 +12,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * names, every value a string, delimiter default `;`, encoding default
   * utf-8. We read with inferSchema=false so all columns are StringType —
   * petl parity ('' vs null, string comparisons in filters behave alike).
+  * For a single file the header is read on the driver
+  * ([[org.apache.spark.sql.graft.CsvHeader]]) and handed to the reader as
+  * its schema, so no Spark job runs to find it; a directory or a glob
+  * matching several files keeps Spark's own inference.
   * Typed columns are opt-in via a source `"schema"` node —
   * `{"schema": {"name": "string", "bal": "int"}}` — parsed as Spark DDL
   * in declaration order (position-mapped to the file, like the header).
@@ -52,13 +57,13 @@ object Sources {
     spark.read.schema(schema).orc(path)
 
   def csv(spark: SparkSession, path: String, node: Node): DataFrame = {
-    val reader = spark.read
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .option("sep", node.str("delimiter", ";"))
-      .option("encoding", node.str("encoding", "utf-8"))
+    val options = Map("header" -> "true", "inferSchema" -> "false",
+      "sep" -> node.str("delimiter", ";"),
+      "encoding" -> node.str("encoding", "utf-8"))
+    val reader = spark.read.options(options)
     val fields = node.objFields("schema")
-    if (fields.isEmpty) reader.csv(path)
+    if (fields.isEmpty)
+      CsvHeader.schema(spark, path, options).fold(reader.csv(path))(reader.schema(_).csv(path))
     else {
       // {"schema": {"col": "type", ...}} — declaration order maps to file
       // column order, types are Spark DDL (int, bigint, double, date,

@@ -1271,7 +1271,8 @@ object Streams {
     * vector-neighborhood vote from a human-labeled seed.
     *
     * Same replay contract as [[nbGateSink]]: deterministic under the
-    * frozen seed, stateless given the layout, at-least-once replays
+    * frozen seed (opened once at sink start, as the other gates load
+    * their models), stateless given the layout, at-least-once replays
     * re-emit byte-identical rows (the compactOutput keep-any
     * discipline). `excludeSelf` is OFF here — stream ids and seed ids
     * are different id spaces, and an accidental numeric collision must
@@ -1284,8 +1285,8 @@ object Streams {
                   admitLabels: Seq[Int] = Seq.empty)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     graft.ops.Similarity.requireLayout(spark, seedPath, "knn_seed")
+    val seed = spark.read.parquet(s"$seedPath/seed")
     modelGateSink(stream, idCol, outPath, checkpoint) { batch =>
-      val seed = spark.read.parquet(s"$seedPath/seed")
       val voted = graft.ops.Similarity.knnClassify(seed, batch,
           "id", "vec", "label", idCol, vecCol, k,
           excludeSelf = false, broadcastLabeled = true)

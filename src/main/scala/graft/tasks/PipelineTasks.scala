@@ -799,10 +799,10 @@ object PipelineTasks {
             }
             val banded = (cfg.strOpt("lo_bits"), cfg.strOpt("hi_bits")) match {
               case (Some(lo), Some(hi)) => base.withColumn("bucket",
-                when(col("xent_bits") < lo.toDouble, lit("head"))
-                  .when(col("xent_bits") >= hi.toDouble, lit("tail"))
-                  .otherwise(lit("middle")))
-              case _ => base
+                ta.perplexityBand(lo.toDouble, hi.toDouble))
+              case (None, None) => base
+              case (lo, _) => throw new IllegalArgumentException(
+                s"ppl band needs lo_bits and hi_bits: ${if (lo.isEmpty) "lo_bits" else "hi_bits"} is missing")
             }
             cfg.strOpt("max_bits")
               .map(t => banded.where(col("xent_bits") <= t.toDouble))

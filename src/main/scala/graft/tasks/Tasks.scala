@@ -38,6 +38,9 @@ trait CustomTask {
   *  - empty source → "Task skipped. No rows on source", sink untouched.
   *    We probe with isEmpty (one lightweight job) instead of the
   *    reference's double materialization (task.py:181 re-runs the source).
+  *  - a CSV-sourced task runs two Spark jobs: that probe and the sink's
+  *    write. The header is read on the driver ([[Sources.csv]]) and the
+  *    transform block is analysed as one projection per step.
   *  - transform block order fixed: modules → convert → filter → remove →
   *    rename.
   *  - truncate vs append per sink type.

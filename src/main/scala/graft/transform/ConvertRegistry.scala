@@ -49,25 +49,29 @@ object ConvertRegistry {
     // markup to strip — feed archives, scraped attributes)
     "decode_entities"   -> (c => graft.ops.Web.decodeHtmlEntitiesComposed(c)))
 
-  /** Compile one convert spec (string method name or dict mapping) into a
-    * Column transformation of `col`. `rules` (the transform node's
-    * `psl`-loaded [[graft.ops.PublicSuffixRules]]) reroutes the
-    * domain-cut methods; every other method ignores it.
-    */
   def compile(colName: String, spec: JValue,
               rules: Option[graft.ops.PublicSuffixRules] = None): Column =
+    compile(col(colName), spec, rules)
+
+  /** Compile one convert spec (string method name or dict mapping) into a
+    * Column transformation of `input` (a column, or an earlier convert of
+    * the same field). `rules` (the transform node's `psl`-loaded
+    * [[graft.ops.PublicSuffixRules]]) reroutes the domain-cut methods;
+    * every other method ignores it.
+    */
+  def compile(input: Column, spec: JValue,
+              rules: Option[graft.ops.PublicSuffixRules]): Column =
     spec match {
     case JString(method) =>
       val table = rules.map(r => methods ++ pslMethods(r)).getOrElse(methods)
       table.getOrElse(method,
         throw new IllegalArgumentException(
           s"unsupported convert method '$method' (supported: ${methods.keys.toSeq.sorted.mkString(", ")})"))
-        .apply(col(colName))
+        .apply(input)
     case JObject(fields) =>
       // dictionary mapping with passthrough default — chained when()s keep
       // it codegen-friendly for the small maps this DSL carries.
-      val c = col(colName)
-      fields.foldRight(c: Column) { case ((from, to), rest) =>
+      fields.foldRight(input) { case ((from, to), rest) =>
         val target = to match {
           case JString(s) => lit(s)
           case JInt(i)    => lit(i.toLong)
@@ -76,7 +80,7 @@ object ConvertRegistry {
           case JNull      => lit(null)
           case other      => lit(other.toString)
         }
-        when(c === lit(from), target).otherwise(rest)
+        when(input === lit(from), target).otherwise(rest)
       }
     case other =>
       throw new IllegalArgumentException(s"unsupported convert spec: $other")

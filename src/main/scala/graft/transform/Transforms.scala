@@ -2,8 +2,9 @@ package graft.transform
 
 import graft.config.TaskConfig.Node
 import graft.runner.TaskLog
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.VectorMap
 
 /** SPI for user transform modules — the reference's Python-module transform
   * surface (/root/reference/dasladen/task.py:110-140) re-expressed as a
@@ -18,28 +19,16 @@ trait TransformModule {
   * (reference util/empty_as_null.py:4-17).
   */
 class EmptyAsNull extends TransformModule {
-  def transform(df: DataFrame, fields: Seq[String], args: Map[String, String]): DataFrame = {
-    val targets =
-      if (fields.nonEmpty) fields
-      else df.schema.fields.filter(_.dataType.typeName == "string").map(_.name).toSeq
-    targets.foldLeft(df) { (d, f) =>
-      d.withColumn(f, when(col(f) === "", lit(null)).otherwise(col(f)))
-    }
-  }
+  def transform(df: DataFrame, fields: Seq[String], args: Map[String, String]): DataFrame =
+    Transforms.onStrings(df, fields)(c => when(c === "", lit(null)).otherwise(c))
 }
 
 /** Shipped module: control chars (codepoint < 32) → space on given or all
   * string fields (reference util/sanitize_string.py:4-17). Pure Column op.
   */
 class SanitizeString extends TransformModule {
-  def transform(df: DataFrame, fields: Seq[String], args: Map[String, String]): DataFrame = {
-    val targets =
-      if (fields.nonEmpty) fields
-      else df.schema.fields.filter(_.dataType.typeName == "string").map(_.name).toSeq
-    targets.foldLeft(df) { (d, f) =>
-      d.withColumn(f, regexp_replace(col(f), "[\\x00-\\x1F]", " "))
-    }
-  }
+  def transform(df: DataFrame, fields: Seq[String], args: Map[String, String]): DataFrame =
+    Transforms.onStrings(df, fields)(c => regexp_replace(c, "[\\x00-\\x1F]", " "))
 }
 
 /** The ordered transform block applied by every ETL task: module transforms
@@ -72,6 +61,24 @@ object Transforms {
       val cls = ModuleClasspath.classFor(name, workDir)
       cls.getDeclaredConstructor().newInstance().asInstanceOf[TransformModule]
     }
+
+  /** Per-field rewrites as ONE projection, not a `withColumn` per step: a
+    * field's steps compose in order, fields matched under the session's
+    * case sensitivity (a replaced column takes the last step's spelling).
+    */
+  private[transform] def project(df: DataFrame, steps: Seq[(String, Column => Column)]): DataFrame = {
+    val cs = df.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
+    val key = (f: String) => if (cs) f else f.toLowerCase(java.util.Locale.ROOT)
+    val cols = steps.foldLeft(VectorMap.empty[String, (String, Column)]) { case (m, (f, step)) =>
+      m.updated(key(f), f -> step(m.get(key(f)).fold(col(f))(_._2)))
+    }
+    if (cols.isEmpty) df else df.withColumns(VectorMap.from(cols.values))
+  }
+
+  /** `f` over `fields`, or over every string field when none are given. */
+  private[transform] def onStrings(df: DataFrame, fields: Seq[String])(f: Column => Column): DataFrame =
+    project(df, (if (fields.nonEmpty) fields
+      else df.schema.fields.filter(_.dataType.typeName == "string").map(_.name).toSeq).map(_ -> f))
 
   def apply(df: DataFrame, task: Node, log: TaskLog,
             workDir: Option[String] = None): DataFrame = {
@@ -120,9 +127,9 @@ object Transforms {
       graft.ops.Web.loadPublicSuffixes(resolved)
     }
     // convert
-    t.pairs("convert").foreach { case (field, spec) =>
-      d = d.withColumn(field, ConvertRegistry.compile(field, spec, pslRules))
-    }
+    d = project(d, t.pairs("convert").map { case (field, spec) =>
+      field -> ((c: Column) => ConvertRegistry.compile(c, spec, pslRules))
+    })
     // filter (petl expression subset → Spark SQL predicate)
     t.strOpt("filter").foreach { f =>
       d = d.filter(expr(PetlExpr.compile(f)))

@@ -2016,6 +2016,32 @@ class StreamsSpec extends SparkSpec {
     assert(bad.getMessage.contains("knn_seed"))
   }
 
+  test("knnGateSink opens the seed once at sink start: seed files added mid-stream do not vote") {
+    implicit val sqlCtx = spark.sqlContext
+    val seedDf = ((0L until 6L).map(i => (i, Seq(1.0, 0.0, 0.001 * i), 1)) ++
+      (10L until 16L).map(i => (i, Seq(0.0, 1.0, 0.001 * i), 2)))
+      .toDF("vec_id", "embedding", "label")
+    val seedPath = tmpDir("graft_knngate_once_seed_")
+    graft.ops.Similarity.buildLabelSeed(spark, seedDf,
+      "vec_id", "embedding", "label", seedPath)
+    val out = tmpDir("graft_knngate_once_out_")
+    val mem = MemoryStream[(Long, Seq[Double])]
+    val q = Streams.knnGateSink(spark, mem.toDF().toDF("vec_id", "embedding"),
+      "vec_id", "embedding", seedPath, out, tmpDir("graft_knngate_once_ck_"),
+      k = 4, minVoteFrac = 0.75, admitLabels = Seq(1))
+    try {
+      mem.addData((100L, Seq(0.99, 0.01, 0.0))); q.processAllAvailable()
+      // a parquet file under seed/ planting label 3 right on cluster 1:
+      // read per batch, it would outvote label 1 for the next row
+      (1000L until 1010L).map(i => (i, Seq(1.0, 0.0, 0.0), 3))
+        .toDF("id", "vec", "label").coalesce(1)
+        .write.mode("append").parquet(s"$seedPath/seed")
+      mem.addData((101L, Seq(0.98, 0.02, 0.0))); q.processAllAvailable()
+    } finally q.stop()
+    assert(spark.read.parquet(out).select("vec_id", "pred_label")
+      .as[(Long, Int)].collect().toSet == Set((100L, 1), (101L, 1)))
+  }
+
   test("quotaGateSink admits at most n ids per key over the stream's lifetime, md5-coin pick, re-arrivals inert") {
     implicit val sqlCtx = spark.sqlContext
     val state = tmpDir("graft_quota_state_")

@@ -49,6 +49,40 @@ class CsvTaskSpec extends SparkSpec {
     assert(out == "name;bal\nBOB;2000\nCAROL;1500\n")
   }
 
+  test("a csv-csv task with the full transform block runs two Spark jobs: the probe and the write") {
+    val wd = setup()
+    writeFile(s"$wd/input/items.csv",
+      "id;flag;price;disc;ship;tax\n1;A;10.5;0.05;AIR;0.1\n2;R;3.0;0.01;;0.2\n3;N;7.25;0.04;MAIL;0.0\n")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBridge.drain(sc, 10000)
+    sc.addSparkListener(listener)
+    try {
+      runTasks(wd,
+        """{"tasks": [{
+          |  "type": "csv-csv", "name": "jobs",
+          |  "source": {"file": "items.csv"},
+          |  "transform": {
+          |    "module": "empty_as_null",
+          |    "convert": [["flag", "lower"], ["price", "float"], ["disc", "float"]],
+          |    "filter": "{disc} >= 0.02 and {ship} is not None",
+          |    "remove": ["tax"],
+          |    "rename": [["price", "extended_price"]]
+          |  },
+          |  "target": {"file": "items_out.csv", "truncate": true}
+          |}]}""".stripMargin)
+      org.apache.spark.graft.ListenerBridge.drain(sc, 10000)
+    } finally sc.removeSparkListener(listener)
+    // the header is read on the driver: no inference job
+    assert(jobs.get() == 2, s"expected the isEmpty probe and the write, saw ${jobs.get()} jobs")
+    assert(read(s"$wd/output/items_out.csv") ==
+      "id;flag;extended_price;disc;ship\n1;a;10.5;0.05;AIR\n3;n;7.25;0.04;MAIL\n")
+  }
+
   test("typed schema opt-in: declared types flow through filter; default stays all-string") {
     val wd = setup()
     // all-string default: '{bal} < 500' compares lexicographically, so

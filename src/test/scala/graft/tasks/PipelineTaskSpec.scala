@@ -828,6 +828,24 @@ class PipelineTaskSpec extends SparkSpec {
       rows(sel.select("doc_id", "log_w")))
   }
 
+  test("score task: a ppl band needs both bounds and lo_bits < hi_bits") {
+    val wd = tmpDir("graft_pipetask_band_")
+    def chain(t: Throwable): Seq[Throwable] =
+      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+    def rejected(band: String): Seq[Throwable] = chain(intercept[Exception](runTask(wd,
+      s"""{"tasks": [{"type": "score", "name": "p",
+         |  "source": {"folder": "$sfDir", "file": "documents.parquet"},
+         |  "score": {"method": "ppl", "train_where": "lang = 'en'", $band},
+         |  "target": {"file": "pb", "truncate": true}}]}""".stripMargin)))
+      .filter(_.isInstanceOf[IllegalArgumentException])
+    // an inverted band would label no row `middle`
+    assert(rejected(""""lo_bits": 5.0, "hi_bits": 4.9""").exists(
+      _.getMessage.contains("loBits < hiBits")))
+    // one bound alone would silently add no band: the message names the other
+    assert(rejected(""""lo_bits": 4.9""").exists(_.getMessage.contains("hi_bits is missing")))
+    assert(rejected(""""hi_bits": 5.0""").exists(_.getMessage.contains("lo_bits is missing")))
+  }
+
   test("fit + score tasks: the dsir lifecycle == buildDsirModel/dsirScoreWithModel") {
     val wd = tmpDir("graft_pipetask_dsir_")
     Files.createDirectories(Paths.get(s"$wd/output"))

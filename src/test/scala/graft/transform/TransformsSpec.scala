@@ -142,6 +142,33 @@ class TransformsSpec extends SparkSpec {
     assert(out.collect().toSeq == Seq(Row(null, "B", 7L, "D")))
   }
 
+  test("the lineitem transform block analyses to one projection per step") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val names = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+      "l_quantity", "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
+      "l_linestatus", "l_shipdate", "l_commitdate", "l_receiptdate",
+      "l_shipinstruct", "l_shipmode", "l_comment")
+    // a bare relation: toDF's own renaming projection would blur the count
+    val df = spark.createDataFrame(
+      java.util.List.of(Row.fromSeq(names.map(n => if (n == "l_discount") "0.05" else "1"))),
+      StructType(names.map(StructField(_, StringType))))
+    val task = taskNode(
+      """{"transform": {"module": "empty_as_null",
+        | "convert": [["l_returnflag", "lower"], ["l_linestatus", "lower"],
+        |             ["l_extendedprice", "float"], ["l_discount", "float"],
+        |             ["l_quantity", "float"]],
+        | "filter": "{l_discount} >= 0.02 and {l_shipmode} is not None",
+        | "remove": ["l_tax", "l_suppkey"],
+        | "rename": [["l_extendedprice", "extended_price"],
+        |            ["l_returnflag", "return_flag"]]}}""".stripMargin)
+    val out = Transforms(df, task, TaskLog.Silent)
+    // empty_as_null, convert, remove, rename: one Project each
+    val projects = out.queryExecution.analyzed.collect { case p: Project => p }.size
+    assert(projects <= 4, s"$projects Project nodes in\n${out.queryExecution.analyzed}")
+    assert(out.count() == 1)
+  }
+
   test("custom TransformModule loads by class name") {
     val df = Seq(1, 2).toDF("n")
     val task = taskNode(
