@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.{medianOf, time}
+import ScaleBench.{Ctx, Record}
 
 /** The ANN recall-vs-cost surface (round-11 verdict item 2): every rung
   * of the approximate-retrieval ladder — IVF float, IVF int8, LSH float,
@@ -32,521 +36,350 @@ import org.apache.spark.sql.functions._
   * k-NN-join collect at this (tiny) scale — plan-shape overhead, not
   * bandwidth; the bytes column is the number that scales.
   *
-  * One JSON line on stdout (the [[Bench]] discipline) + the same content
-  * at `ANN_RECALL.json`; summarized in BASELINE.md with the recommended
-  * defaults, which this main ASSERTS so a regression fails the bench
-  * rather than silently shifting the table.
+  * Two [[ScaleBench]] families: `ann_recall` (the full ladder on the
+  * 2k planted corpus plus the random contrast rows) and `ann_scale`
+  * (the decision-carrying arms at 200k). Each prints one row per config
+  * and ASSERTS the recommended defaults BASELINE.md summarizes, so a
+  * regression fails the family rather than silently shifting the table.
   */
 object AnnRecallBench {
 
-  final case class Row(family: String, storage: String, fixture: String,
-                       params: String, buildS: Double, queryS: Double,
-                       recallMean: Double, recallMin: Double,
-                       probedFrac: Double, probedKbPerQuery: Double)
+  private val dim = 64
+  private val nClusters = 50
+  private val eps = "0.15d"
+  private val k = 10
+  private val nCells = 16
+  private val sim = graft.ops.Similarity
 
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.{medianOf, time}
-    val spark = BenchHarness.session(BenchHarness.cpus(), logLevel = "ERROR")
+  /** One corpus of `nVecs` rows (embedding SQL `vecSql`), its 1% query
+    * slice and their exact top-k — ONE exact pass reused by every
+    * config — plus the rows recorded against it.
+    */
+  private final class Fixture(ctx: Ctx, name: String, nVecs: Int,
+                              vecSql: String) {
+    private val spark = ctx.spark
     import spark.implicits._
+    private val dir = s"${ctx.tmp}/${name.replace('@', '_')}"
+    spark.range(nVecs.toLong)
+      .select(col("id").as("vec_id"), expr(vecSql).as("embedding"))
+      .write.mode("overwrite").parquet(dir)
+    val corpus: DataFrame = spark.read.parquet(dir)
+    val queries: DataFrame =
+      corpus.filter(col("vec_id") % (nVecs / 100).max(1) === 0)
+    private val nQ = queries.count()
+    private val truth = sim.bruteKnnJoin(corpus, queries,
+      "vec_id", "embedding", "vec_id", "embedding", k).localCheckpoint(true)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Record]
+    private val means = scala.collection.mutable.Map.empty[String, Double]
 
+    def idx(layout: String): String = s"${dir}_idx/$layout"
+
+    /** Build index layout `layout` with `f(path)`; its path and seconds. */
+    def build(layout: String)(f: String => Any): (String, Double) =
+      (idx(layout), time(f(idx(layout)))._2)
+
+    // the k-NN joins more than one arm measures
+    def ivf(path: String, nProbe: Int) = () => sim.ivfIndexKnnJoin(spark,
+      path, "vec_id", "embedding", queries, "vec_id", "embedding", k, nProbe)
+    def ivfInt8(path: String, nProbe: Int) = () =>
+      sim.ivfIndexQuantizedKnnJoin(spark, path, "vec_id", queries,
+        "vec_id", "embedding", k, nProbe)
+    def pqRerank(path: String, kCand: Int) = () => sim.pqIndexKnnJoinRerank(
+      spark, path, corpus, "vec_id", "embedding", queries, "vec_id",
+      "embedding", k, kCand)
+    def ivfPqRerank(path: String, kCand: Int, nProbe: Int) = () =>
+      sim.ivfPqIndexKnnJoinRerank(spark, path, corpus, "vec_id",
+        "embedding", queries, "vec_id", "embedding", k, kCand, nProbe)
+
+    /** Time `join` (warm median of `runs`), score it against the truth,
+      * print and keep the row. Cost: `frac` of the corpus at `rowBytes`
+      * per row, plus `kCand` float rows per query (a rerank's reads).
+      */
+    def record(family: String, storage: String, params: String,
+               buildS: Double, frac: Double, rowBytes: Int,
+               join: () => DataFrame, kCand: Int = 0, runs: Int = 3): Unit = {
+      val tQ = medianOf(runs)(join().collect())
+      val recalls = sim.annRecall(join(), truth, "vec_id")
+        .select(col("recall")).as[Double].collect()
+      require(recalls.length == nQ, s"$family $params: missing queries")
+      val (mean, min) = (recalls.sum / recalls.length, recalls.min)
+      val kb = nVecs * frac * rowBytes / 1024.0 + kCand * dim * 8 / 1024.0
+      println(f"$family%-7s $storage%-6s $name%-13s $params%-28s " +
+        f"build $buildS%6.2fs  q $tQ%6.3fs  recall $mean%5.3f (min $min%5.3f)  " +
+        f"probed $frac%5.3f  $kb%8.1f KB/q")
+      means(s"$family/$storage/$params") = mean
+      rows += ("family" -> family) ~ ("storage" -> storage) ~
+        ("fixture" -> name) ~ ("params" -> params) ~ ("build_s" -> buildS) ~
+        ("query_s" -> tQ) ~ ("recall_mean" -> mean) ~ ("recall_min" -> min) ~
+        ("probed_frac" -> frac) ~ ("probed_kb_per_query" -> kb)
+    }
+
+    def recall(family: String, storage: String, params: String): Double =
+      means.getOrElse(s"$family/$storage/$params",
+        sys.error(s"missing $name config $family/$storage/$params"))
+  }
+
+  private def planted(ctx: Ctx, name: String, nVecs: Int): Fixture =
+    new Fixture(ctx, name, nVecs,
+      BenchHarness.md5VecSql(s"(id % $nClusters)", dim, eps))
+
+  /** `ann_recall`: the whole ladder on the planted corpus, the IVF rows
+    * on the random one, and the recommended-default asserts.
+    */
+  def recall(ctx: Ctx): Record = {
+    val spark = ctx.spark
     val nVecs = BenchHarness.env("SPARK_GRAFT_VECS", "2000").toInt // sf0.1 scale
-    val dim = 64
-    val nClusters = 50
-    val eps = "0.15d"
-    val k = 10
-    val nCells = 16
+    val fx = planted(ctx, "planted", nVecs)
+    val (corpus, queries) = (fx.corpus, fx.queries)
+    import fx.{build, record}
 
-    val loadBefore = BenchHarness.loadavg
-    val base = BenchHarness.tmp("graft_annrecall_")
-
-    // planted corpus: center keyed on the cluster id, noise on the row id
-    spark.range(nVecs.toLong)
-      .select(col("id").as("vec_id"),
-        expr(BenchHarness.md5VecSql(s"(id % $nClusters)", dim, eps)).as("embedding"))
-      .write.mode("overwrite").parquet(s"$base/planted")
-    // worst-case corpus: the same recipe keyed on the raw id = uniform
-    // random, no structure to exploit (what the sf fixture is)
-    spark.range(nVecs.toLong)
-      .select(col("id").as("vec_id"),
-        expr(BenchHarness.md5VecSql("id", dim, "0.0d")).as("embedding"))
-      .write.mode("overwrite").parquet(s"$base/random")
-
-    val results = scala.collection.mutable.ArrayBuffer.empty[Row]
-
-    def sweep(fixture: String): Unit = {
-      val corpus = spark.read.parquet(s"$base/$fixture")
-      val queries = corpus.filter(col("vec_id") % (nVecs / 100).max(1) === 0)
-      val nQ = queries.count()
-      val truth = graft.ops.Similarity.bruteKnnJoin(corpus, queries,
-        "vec_id", "embedding", "vec_id", "embedding", k)
-        .localCheckpoint(true) // ONE exact pass reused by every config
-
-      def record(family: String, storage: String, params: String,
-                 buildS: Double, frac: Double, rowBytes: Int,
-                 join: () => DataFrame, extraKbPerQuery: Double = 0.0): Row = {
-        val (recalls, tQ) = {
-          val t = medianOf(3)(join().collect())
-          val r = graft.ops.Similarity.annRecall(join(), truth, "vec_id")
-            .select(col("recall")).as[Double].collect()
-          (r, t)
-        }
-        require(recalls.length == nQ, s"$family $params: missing queries")
-        val row = Row(family, storage, fixture, params, buildS, tQ,
-          recalls.sum / recalls.length, recalls.min,
-          frac, nVecs * frac * rowBytes / 1024.0 + extraKbPerQuery)
-        results += row
-        println(f"${row.family}%-7s ${row.storage}%-6s ${row.fixture}%-7s " +
-          f"${row.params}%-28s build ${row.buildS}%6.2fs  q ${row.queryS}%6.3fs  " +
-          f"recall ${row.recallMean}%5.3f (min ${row.recallMin}%5.3f)  " +
-          f"probed ${row.probedFrac}%5.3f  ${row.probedKbPerQuery}%8.1f KB/q")
-        row
-      }
-
-      // ----- IVF: float + int8, kmeansIters ∈ {0, 3}, nProbe swept -----
-      for (ki <- Seq(0, 3)) {
-        val fp = s"$base/${fixture}_idx/ivf_ki$ki"
-        val (_, bF) = time(graft.ops.Similarity.buildIvfIndex(
-          corpus, "vec_id", "embedding", fp, nCells, kmeansIters = ki))
-        val qp = s"$base/${fixture}_idx/ivfq_ki$ki"
-        val (_, bQ) = time(graft.ops.Similarity.buildIvfIndexQuantized(
-          corpus, "vec_id", "embedding", qp, nCells, kmeansIters = ki))
-        for (nProbe <- Seq(1, 2, 3, 4, 6, 8)) {
-          record("ivf", "float", s"nCells=$nCells nProbe=$nProbe ki=$ki",
-            bF, nProbe.toDouble / nCells, dim * 8,
-            () => graft.ops.Similarity.ivfIndexKnnJoin(spark, fp,
-              "vec_id", "embedding", queries, "vec_id", "embedding", k, nProbe))
-          record("ivf", "int8", s"nCells=$nCells nProbe=$nProbe ki=$ki",
-            bQ, nProbe.toDouble / nCells, dim + 8,
-            () => graft.ops.Similarity.ivfIndexQuantizedKnnJoin(spark, qp,
-              "vec_id", queries, "vec_id", "embedding", k, nProbe))
-        }
-      }
-
-      // ----- LSH: float (nBits × multiProbe), int8 at the default -----
-      for (nBits <- Seq(6, 8)) {
-        val lp = s"$base/${fixture}_idx/lsh_b$nBits"
-        val (_, bL) = time(graft.ops.Similarity.buildLshIndex(
-          corpus, "vec_id", "embedding", lp, dim, nBits))
-        for (multi <- Seq(true, false)) {
-          val frac = (if (multi) nBits + 1 else 1).toDouble / (1 << nBits)
-          record("lsh", "float", s"nBits=$nBits multiProbe=$multi",
-            bL, frac, dim * 8,
-            () => graft.ops.Similarity.lshIndexKnnJoin(spark, lp,
-              "vec_id", "embedding", queries, "vec_id", "embedding",
-              k, dim, nBits, multi))
-        }
-      }
-      val lqp = s"$base/${fixture}_idx/lshq_b8"
-      val (_, bLq) = time(graft.ops.Similarity.buildLshIndexQuantized(
-        corpus, "vec_id", "embedding", lqp, dim, nBits = 8))
-      record("lsh", "int8", "nBits=8 multiProbe=true",
-        bLq, 9.0 / 256, dim + 8,
-        () => graft.ops.Similarity.lshIndexQuantizedKnnJoin(spark, lqp,
-          "vec_id", queries, "vec_id", "embedding", k, dim, nBits = 8))
-
-      // ----- random projection: brute rank in projected space — the
-      // pure rank-preservation of the md5 matrix at each width (the
-      // probe-byte lever BEFORE any index; composes with all of them)
-      for (outDim <- Seq(8, 16, 32)) {
-        def proj(df: DataFrame) = df.select(col("vec_id"),
-          graft.functions.VectorFunctions.randomProject(
-            col("embedding").cast("array<double>"), dim, outDim)
-            .as("embedding"))
-        val pc = proj(corpus).localCheckpoint(true)
-        val pqs = proj(queries).localCheckpoint(true)
-        record("proj", "float", s"outDim=$outDim brute",
-          0.0, 1.0, outDim * 8,
-          () => graft.ops.Similarity.bruteKnnJoin(pc, pqs,
-            "vec_id", "embedding", "vec_id", "embedding", k))
-        // projected ranks PROPOSE kCand, full-precision floats decide —
-        // the two-stage recipe (the PQ-rerank story at a different rung);
-        // cost = the projected scan + kCand float rows per query
-        val kCand = 50
-        // the first-class operator (q132) — same recipe the ad-hoc arm
-        // measured originally: projected brute proposes kCand, the
-        // original floats decide
-        record("proj", "rerank", s"outDim=$outDim kCand=$kCand",
-          0.0, 1.0, outDim * 8,
-          () => graft.ops.Similarity.projKnnJoinRerank(corpus, queries,
-            "vec_id", "embedding", "vec_id", "embedding",
-            k, dim, outDim, kCand),
-          extraKbPerQuery = kCand * dim * 8 / 1024.0)
-      }
-
-      // ----- flat PQ: m × nCodes × kmeansIters -----
-      for (m <- Seq(2, 4, 8); nCodes <- Seq(16, 256); ki <- Seq(0, 3)) {
-        val pp = s"$base/${fixture}_idx/pq_m${m}_c${nCodes}_ki$ki"
-        val (_, bP) = time(graft.ops.Similarity.buildPqIndex(
-          corpus, "vec_id", "embedding", pp, m, nCodes, kmeansIters = ki))
-        record("pq", "codes", s"m=$m nCodes=$nCodes ki=$ki",
-          bP, 1.0, m * 4,
-          () => graft.ops.Similarity.pqIndexKnnJoin(spark, pp,
-            "vec_id", queries, "vec_id", "embedding", k))
-      }
-
-      // ----- PQ + exact rerank: the two-stage retrieval the flat-PQ
-      // rows above prescribe — codes propose kCand, floats re-rank.
-      // Cost = the full code scan + kCand float rows per query.
-      for (kCand <- Seq(50, 100)) {
-        val pp = s"$base/${fixture}_idx/pq_m4_c16_ki0" // built in the loop above
-        record("pq", "rerank", s"m=4 nCodes=16 kCand=$kCand",
-          0.0, 1.0, 4 * 4,
-          () => graft.ops.Similarity.pqIndexKnnJoinRerank(spark, pp,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand),
-          extraKbPerQuery = kCand * dim * 8 / 1024.0)
-      }
-
-      // ----- IVF-PQ: nCodes × kmeansIters × {raw, residual} encoding,
-      // nProbe swept, m = 4. Residual is the classic recall fix at
-      // IDENTICAL bytes — same cells, same code width, the codes just
-      // describe v − centroid[cell] instead of v.
-      for (nCodes <- Seq(16, 256); ki <- Seq(0, 3);
-           res <- Seq(false, true)) {
-        val tag = if (res) "res" else "raw"
-        val ip = s"$base/${fixture}_idx/ivfpq_c${nCodes}_ki${ki}_$tag"
-        val (_, bI) = time(graft.ops.Similarity.buildIvfPqIndex(
-          corpus, "vec_id", "embedding", ip, nCells, m = 4, nCodes,
-          kmeansIters = ki, residual = res))
-        for (nProbe <- Seq(1, 3, 8)) {
-          record("ivfpq", if (res) "res" else "codes",
-            s"nCells=$nCells m=4 nCodes=$nCodes nProbe=$nProbe ki=$ki",
-            bI, nProbe.toDouble / nCells, 4 * 4,
-            () => graft.ops.Similarity.ivfPqIndexKnnJoin(spark, ip,
-              "vec_id", queries, "vec_id", "embedding", k, nProbe))
-        }
-      }
-
-      // ----- IVF-PQ + exact rerank: the composed best case per probed
-      // byte — cells cut the scan, codes cut the row width, the float
-      // read is kCand rows per query.
-      for (nProbe <- Seq(1, 3)) {
-        val ip = s"$base/${fixture}_idx/ivfpq_c16_ki0_raw"
-        record("ivfpq", "rerank", s"nCells=$nCells m=4 nCodes=16 nProbe=$nProbe kCand=100",
-          0.0, nProbe.toDouble / nCells, 4 * 4,
-          () => graft.ops.Similarity.ivfPqIndexKnnJoinRerank(spark, ip,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = 100, nProbe),
-          extraKbPerQuery = 100 * dim * 8 / 1024.0)
+    // ----- IVF: float + int8, kmeansIters ∈ {0, 3}, nProbe swept -----
+    for (ki <- Seq(0, 3)) {
+      val (fp, bF) = build(s"ivf_ki$ki")(sim.buildIvfIndex(
+        corpus, "vec_id", "embedding", _, nCells, kmeansIters = ki))
+      val (qp, bQ) = build(s"ivfq_ki$ki")(sim.buildIvfIndexQuantized(
+        corpus, "vec_id", "embedding", _, nCells, kmeansIters = ki))
+      for (nProbe <- Seq(1, 2, 3, 4, 6, 8)) {
+        record("ivf", "float", s"nCells=$nCells nProbe=$nProbe ki=$ki",
+          bF, nProbe.toDouble / nCells, dim * 8, fx.ivf(fp, nProbe))
+        record("ivf", "int8", s"nCells=$nCells nProbe=$nProbe ki=$ki",
+          bQ, nProbe.toDouble / nCells, dim + 8, fx.ivfInt8(qp, nProbe))
       }
     }
 
-    // SPARK_GRAFT_ANN_SMALL=0 skips the small-fixture sweep (and the
-    // assertions that read it) — iteration aid for the scale phase
-    val runSmall = BenchHarness.env("SPARK_GRAFT_ANN_SMALL", "1") == "1"
-    if (runSmall) sweep("planted")
-    // worst-case contrast: the full ladder at one representative config
-    // each would repeat q102's lesson 50×; the IVF rows alone show it
-    if (runSmall) locally {
-      val corpus = spark.read.parquet(s"$base/random")
-      val queries = corpus.filter(col("vec_id") % (nVecs / 100).max(1) === 0)
-      val truth = graft.ops.Similarity.bruteKnnJoin(corpus, queries,
-        "vec_id", "embedding", "vec_id", "embedding", k).localCheckpoint(true)
-      for (ki <- Seq(0, 3)) {
-        val fp = s"$base/random_idx/ivf_ki$ki"
-        val (_, bF) = time(graft.ops.Similarity.buildIvfIndex(
-          corpus, "vec_id", "embedding", fp, nCells, kmeansIters = ki))
-        for (nProbe <- Seq(3, 8)) {
-          val join = () => graft.ops.Similarity.ivfIndexKnnJoin(spark, fp,
-            "vec_id", "embedding", queries, "vec_id", "embedding", k, nProbe)
-          val tQ = medianOf(3)(join().collect())
-          val recalls = graft.ops.Similarity.annRecall(join(), truth, "vec_id")
-            .select(col("recall")).as[Double].collect()
-          val row = Row("ivf", "float", "random",
-            s"nCells=$nCells nProbe=$nProbe ki=$ki", bF, tQ,
-            recalls.sum / recalls.length, recalls.min,
-            nProbe.toDouble / nCells, nVecs * (nProbe.toDouble / nCells) * dim * 8 / 1024.0)
-          results += row
-          println(f"${row.family}%-7s ${row.storage}%-6s ${row.fixture}%-7s " +
-            f"${row.params}%-28s build ${row.buildS}%6.2fs  q ${row.queryS}%6.3fs  " +
-            f"recall ${row.recallMean}%5.3f (min ${row.recallMin}%5.3f)  " +
-            f"probed ${row.probedFrac}%5.3f  ${row.probedKbPerQuery}%8.1f KB/q")
-        }
+    // ----- LSH: float (nBits × multiProbe), int8 at the default -----
+    for (nBits <- Seq(6, 8)) {
+      val (lp, bL) = build(s"lsh_b$nBits")(sim.buildLshIndex(
+        corpus, "vec_id", "embedding", _, dim, nBits))
+      for (multi <- Seq(true, false)) {
+        val frac = (if (multi) nBits + 1 else 1).toDouble / (1 << nBits)
+        record("lsh", "float", s"nBits=$nBits multiProbe=$multi",
+          bL, frac, dim * 8,
+          () => sim.lshIndexKnnJoin(spark, lp, "vec_id", "embedding",
+            queries, "vec_id", "embedding", k, dim, nBits, multi))
       }
     }
+    val (lqp, bLq) = build("lshq_b8")(sim.buildLshIndexQuantized(
+      corpus, "vec_id", "embedding", _, dim, nBits = 8))
+    record("lsh", "int8", "nBits=8 multiProbe=true", bLq, 9.0 / 256, dim + 8,
+      () => sim.lshIndexQuantizedKnnJoin(spark, lqp,
+        "vec_id", queries, "vec_id", "embedding", k, dim, nBits = 8))
 
-    // ---- headline arms at IndexBench scale (round-12 verdict #6): the
-    // 2k planted corpus is generous for nCells=16, so re-validate the
-    // recommended defaults at 200k × 64 (50 clusters of 4k) and ASSERT
-    // them there too. Only the decision-carrying arms run — the full
-    // ladder's shape questions are already answered above. Skip with
-    // SPARK_GRAFT_ANN_SCALE=0 for a quick surface-only run.
-    val scaleVecs = BenchHarness.env("SPARK_GRAFT_ANN_SCALE_VECS", "200000").toInt
-    if (BenchHarness.env("SPARK_GRAFT_ANN_SCALE", "1") == "1") {
-      val fx = "planted@scale"
-      spark.range(scaleVecs.toLong)
-        .select(col("id").as("vec_id"),
-          expr(BenchHarness.md5VecSql(s"(id % $nClusters)", dim, eps)).as("embedding"))
-        .write.mode("overwrite").parquet(s"$base/scale")
-      val corpus = spark.read.parquet(s"$base/scale")
-      val queries = corpus.filter(col("vec_id") % (scaleVecs / 100).max(1) === 0)
-      val nQ = queries.count()
-      val truth = graft.ops.Similarity.bruteKnnJoin(corpus, queries,
-        "vec_id", "embedding", "vec_id", "embedding", k)
-        .localCheckpoint(true)
-      def recordAt(family: String, storage: String, params: String,
-                   buildS: Double, frac: Double, rowBytes: Int,
-                   join: () => DataFrame, extraKb: Double = 0.0,
-                   runs: Int = 3): Row = {
-        val tQ = medianOf(runs)(join().collect())
-        val recalls = graft.ops.Similarity.annRecall(join(), truth, "vec_id")
-          .select(col("recall")).as[Double].collect()
-        require(recalls.length == nQ, s"$family $params: missing queries")
-        val row = Row(family, storage, fx, params, buildS, tQ,
-          recalls.sum / recalls.length, recalls.min,
-          frac, scaleVecs * frac * rowBytes / 1024.0 + extraKb)
-        results += row
-        println(f"${row.family}%-7s ${row.storage}%-6s ${row.fixture}%-13s " +
-          f"${row.params}%-28s build ${row.buildS}%6.2fs  q ${row.queryS}%6.3fs  " +
-          f"recall ${row.recallMean}%5.3f (min ${row.recallMin}%5.3f)  " +
-          f"probed ${row.probedFrac}%5.3f  ${row.probedKbPerQuery}%8.1f KB/q")
-        row
-      }
+    // ----- random projection: brute rank in projected space — the
+    // pure rank-preservation of the md5 matrix at each width (the
+    // probe-byte lever BEFORE any index; composes with all of them)
+    for (outDim <- Seq(8, 16, 32)) {
+      def proj(df: DataFrame) = df.select(col("vec_id"),
+        graft.functions.VectorFunctions.randomProject(
+          col("embedding").cast("array<double>"), dim, outDim)
+          .as("embedding"))
+      val pc = proj(corpus).localCheckpoint(true)
+      val pqs = proj(queries).localCheckpoint(true)
+      record("proj", "float", s"outDim=$outDim brute", 0.0, 1.0, outDim * 8,
+        () => sim.bruteKnnJoin(pc, pqs,
+          "vec_id", "embedding", "vec_id", "embedding", k))
+      // projected ranks PROPOSE kCand, full-precision floats decide —
+      // the two-stage recipe as the first-class operator (q132); cost =
+      // the projected scan + kCand float rows per query
+      val kCand = 50
+      record("proj", "rerank", s"outDim=$outDim kCand=$kCand",
+        0.0, 1.0, outDim * 8,
+        () => sim.projKnnJoinRerank(corpus, queries,
+          "vec_id", "embedding", "vec_id", "embedding",
+          k, dim, outDim, kCand), kCand = kCand)
+    }
 
-      // arm selector (iteration aid): SPARK_GRAFT_ANN_ARMS=res,m8
-      // runs only the tagged arms (and skips the assertions, which need
-      // the full set); default "all"
-      val armSel = BenchHarness.env("SPARK_GRAFT_ANN_ARMS", "all")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSet
-      def on(tag: String): Boolean = armSel("all") || armSel(tag)
-      val kWide = (scaleVecs / nClusters) * 2
+    // ----- flat PQ: m × nCodes × kmeansIters -----
+    for (m <- Seq(2, 4, 8); nCodes <- Seq(16, 256); ki <- Seq(0, 3)) {
+      val (pp, bP) = build(s"pq_m${m}_c${nCodes}_ki$ki")(sim.buildPqIndex(
+        corpus, "vec_id", "embedding", _, m, nCodes, kmeansIters = ki))
+      record("pq", "codes", s"m=$m nCodes=$nCodes ki=$ki", bP, 1.0, m * 4,
+        () => sim.pqIndexKnnJoin(spark, pp,
+          "vec_id", queries, "vec_id", "embedding", k))
+    }
 
-      if (on("ivf")) {
-        val fp = s"$base/scale_idx/ivf"
-        val (_, bF) = time(graft.ops.Similarity.buildIvfIndex(
-          corpus, "vec_id", "embedding", fp, nCells, kmeansIters = 0))
-        for (nProbe <- Seq(1, 3, 8))
-          recordAt("ivf", "float", s"nCells=$nCells nProbe=$nProbe ki=0",
-            bF, nProbe.toDouble / nCells, dim * 8,
-            () => graft.ops.Similarity.ivfIndexKnnJoin(spark, fp,
-              "vec_id", "embedding", queries, "vec_id", "embedding", k, nProbe))
-        val qp = s"$base/scale_idx/ivf_q8"
-        val (_, bQ) = time(graft.ops.Similarity.buildIvfIndexQuantized(
-          corpus, "vec_id", "embedding", qp, nCells, kmeansIters = 0))
-        recordAt("ivf", "int8", s"nCells=$nCells nProbe=3 ki=0",
-          bQ, 3.0 / nCells, dim + 8,
-          () => graft.ops.Similarity.ivfIndexQuantizedKnnJoin(spark, qp,
-            "vec_id", queries, "vec_id", "embedding", k, nProbe = 3))
-      }
+    // ----- PQ + exact rerank: the two-stage retrieval the flat-PQ
+    // rows above prescribe — codes propose kCand, floats re-rank.
+    // Cost = the full code scan + kCand float rows per query.
+    for (kCand <- Seq(50, 100)) {
+      val pp = fx.idx("pq_m4_c16_ki0") // built in the loop above
+      record("pq", "rerank", s"m=4 nCodes=16 kCand=$kCand", 0.0, 1.0, 4 * 4,
+        fx.pqRerank(pp, kCand), kCand = kCand)
+    }
 
-      // PQ+rerank, tiny codebook: the 2k fixture's recall-1.0 number
-      // does NOT transfer — at 200k each planted cluster holds 4k rows,
-      // a 16-codeword budget can only IDENTIFY the cluster, and the
-      // id-tie-broken kCand=100 cut misses the true top-k almost
-      // surely (measured 0.039). Recorded as the labelled collapse row;
-      // the fixes are measured right below.
-      if (on("collapse")) {
-        val pp = s"$base/scale_idx/pq"
-        val (_, bP) = time(graft.ops.Similarity.buildPqIndex(
-          corpus, "vec_id", "embedding", pp, m = 4, nCodes = 16, kmeansIters = 0))
-        recordAt("pq", "rerank", "m=4 nCodes=16 kCand=100",
-          bP, 1.0, 4 * 4,
-          () => graft.ops.Similarity.pqIndexKnnJoinRerank(spark, pp,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = 100),
-          extraKb = 100 * dim * 8 / 1024.0)
-        val ip = s"$base/scale_idx/ivfpq"
-        val (_, bI) = time(graft.ops.Similarity.buildIvfPqIndex(
-          corpus, "vec_id", "embedding", ip, nCells, m = 4, nCodes = 16,
-          kmeansIters = 0))
-        recordAt("ivfpq", "rerank", s"nCells=$nCells m=4 nCodes=16 nProbe=3 kCand=100",
-          bI, 3.0 / nCells, 4 * 4,
-          () => graft.ops.Similarity.ivfPqIndexKnnJoinRerank(spark, ip,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = 100, nProbe = 3),
-          extraKb = 100 * dim * 8 / 1024.0)
-      }
+    // ----- IVF-PQ: nCodes × kmeansIters × {raw, residual} encoding,
+    // nProbe swept, m = 4. Residual is the classic recall fix at
+    // IDENTICAL bytes — same cells, same code width, the codes just
+    // describe v − centroid[cell] instead of v.
+    for (nCodes <- Seq(16, 256); ki <- Seq(0, 3); res <- Seq(false, true)) {
+      val tag = if (res) "res" else "raw"
+      val (ip, bI) = build(s"ivfpq_c${nCodes}_ki${ki}_$tag")(sim.buildIvfPqIndex(
+        corpus, "vec_id", "embedding", _, nCells, m = 4, nCodes,
+        kmeansIters = ki, residual = res))
+      for (nProbe <- Seq(1, 3, 8))
+        record("ivfpq", if (res) "res" else "codes",
+          s"nCells=$nCells m=4 nCodes=$nCodes nProbe=$nProbe ki=$ki",
+          bI, nProbe.toDouble / nCells, 4 * 4,
+          () => sim.ivfPqIndexKnnJoin(spark, ip,
+            "vec_id", queries, "vec_id", "embedding", k, nProbe))
+    }
 
-      // fix 1: widen kCand past the PQ score's tie multiplicity (here
-      // the 4k cluster) — the proposer only needs to CONTAIN the top-k.
-      // Measured 0.996, but the wide TopKAgg cut is itself expensive
-      // (~4 min at kCand=8000 × 100 queries) — a finding, not a default
-      if (on("kwide")) {
-        val pp = s"$base/scale_idx/pq"
-        if (!on("collapse")) graft.ops.Similarity.buildPqIndex(
-          corpus, "vec_id", "embedding", pp, m = 4, nCodes = 16, kmeansIters = 0)
-        recordAt("pq", "rerank", s"m=4 nCodes=16 kCand=$kWide",
-          0.0, 1.0, 4 * 4,
-          () => graft.ops.Similarity.pqIndexKnnJoinRerank(spark, pp,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = kWide),
-          extraKb = kWide.toDouble * dim * 8 / 1024.0,
-          runs = 1) // ~4 min per execution — one timing sample suffices
-      }
+    // ----- IVF-PQ + exact rerank: the composed best case per probed
+    // byte — cells cut the scan, codes cut the row width, the float
+    // read is kCand rows per query.
+    for (nProbe <- Seq(1, 3)) {
+      val ip = fx.idx("ivfpq_c16_ki0_raw") // built in the loop above
+      record("ivfpq", "rerank", s"nCells=$nCells m=4 nCodes=16 nProbe=$nProbe kCand=100",
+        0.0, nProbe.toDouble / nCells, 4 * 4,
+        fx.ivfPqRerank(ip, 100, nProbe), kCand = 100)
+    }
 
-      // fix 2 candidates: spend codes instead of candidates. The global
-      // codebook at nCodes=256+ki=3 helps (0.039 → 0.233) but its
-      // codewords chase cluster CENTERS, not within-cluster noise —
-      // residual encoding (codes describe v − centroid[cell]) is the
-      // textbook answer measured here
-      if (on("pq256")) {
-        val pp256 = s"$base/scale_idx/pq256"
-        val (_, bP256) = time(graft.ops.Similarity.buildPqIndex(
-          corpus, "vec_id", "embedding", pp256, m = 4, nCodes = 256,
-          kmeansIters = 3))
-        recordAt("pq", "rerank", "m=4 nCodes=256 ki=3 kCand=100",
-          bP256, 1.0, 4 * 4,
-          () => graft.ops.Similarity.pqIndexKnnJoinRerank(spark, pp256,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = 100),
-          extraKb = 100 * dim * 8 / 1024.0)
-      }
-      if (on("m8")) {
-        val pm8 = s"$base/scale_idx/pq_m8c256"
-        val (_, bM8) = time(graft.ops.Similarity.buildPqIndex(
-          corpus, "vec_id", "embedding", pm8, m = 8, nCodes = 256,
-          kmeansIters = 3))
-        recordAt("pq", "rerank", "m=8 nCodes=256 ki=3 kCand=100",
-          bM8, 1.0, 8 * 4,
-          () => graft.ops.Similarity.pqIndexKnnJoinRerank(spark, pm8,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = 100),
-          extraKb = 100 * dim * 8 / 1024.0)
-      }
-      if (on("m16")) {
-        val pm16 = s"$base/scale_idx/pq_m16c256"
-        val (_, bM16) = time(graft.ops.Similarity.buildPqIndex(
-          corpus, "vec_id", "embedding", pm16, m = 16, nCodes = 256,
-          kmeansIters = 3))
-        recordAt("pq", "rerank", "m=16 nCodes=256 ki=3 kCand=100",
-          bM16, 1.0, 16 * 4,
-          () => graft.ops.Similarity.pqIndexKnnJoinRerank(spark, pm16,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = 100),
-          extraKb = 100 * dim * 8 / 1024.0)
-      }
-      if (on("res64")) {
-        val rp64 = s"$base/scale_idx/ivfpq_res64"
-        val (_, bR64) = time(graft.ops.Similarity.buildIvfPqIndex(
-          corpus, "vec_id", "embedding", rp64, nCells = 64, m = 8,
-          nCodes = 256, kmeansIters = 3, residual = true))
-        recordAt("ivfpq", "res+rerank",
-          "nCells=64 m=8 nCodes=256 ki=3 nProbe=6 kCand=100",
-          bR64, 6.0 / 64, 8 * 4,
-          () => graft.ops.Similarity.ivfPqIndexKnnJoinRerank(spark, rp64,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = 100, nProbe = 6),
-          extraKb = 100 * dim * 8 / 1024.0)
-      }
-      if (on("res64b")) {
-        // the asserted scale-recipe arm builds through the SHIPPED
-        // preset (buildIvfPqIndexScale) so the gate pins the one
-        // constructor a 100 TB user actually calls
-        val rpb = s"$base/scale_idx/ivfpq_res64_m16"
-        val (_, bRb) = time(graft.ops.Similarity.buildIvfPqIndexScale(
-          corpus, "vec_id", "embedding", rpb, nCells = 64))
-        recordAt("ivfpq", "res+rerank",
-          "nCells=64 m=16 nCodes=256 ki=3 nProbe=6 kCand=100",
-          bRb, 6.0 / 64, 16 * 4,
-          () => graft.ops.Similarity.ivfPqIndexKnnJoinRerank(spark, rpb,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = 100, nProbe = 6),
-          extraKb = 100 * dim * 8 / 1024.0)
-        val rp64 = s"$base/scale_idx/ivfpq_res64"
-        if (!on("res64")) graft.ops.Similarity.buildIvfPqIndex(
-          corpus, "vec_id", "embedding", rp64, nCells = 64, m = 8,
-          nCodes = 256, kmeansIters = 3, residual = true)
-        recordAt("ivfpq", "res+rerank",
-          "nCells=64 m=8 nCodes=256 ki=3 nProbe=6 kCand=400",
-          0.0, 6.0 / 64, 8 * 4,
-          () => graft.ops.Similarity.ivfPqIndexKnnJoinRerank(spark, rp64,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = 400, nProbe = 6),
-          extraKb = 400 * dim * 8 / 1024.0)
-      }
-      if (on("res")) {
-        val rp = s"$base/scale_idx/ivfpq_res256"
-        val (_, bR) = time(graft.ops.Similarity.buildIvfPqIndex(
-          corpus, "vec_id", "embedding", rp, nCells, m = 4, nCodes = 256,
-          kmeansIters = 3, residual = true))
-        recordAt("ivfpq", "res+rerank",
-          s"nCells=$nCells m=4 nCodes=256 ki=3 nProbe=3 kCand=100",
-          bR, 3.0 / nCells, 4 * 4,
-          () => graft.ops.Similarity.ivfPqIndexKnnJoinRerank(spark, rp,
-            corpus, "vec_id", "embedding", queries, "vec_id", "embedding",
-            k, kCand = 100, nProbe = 3),
-          extraKb = 100 * dim * 8 / 1024.0)
-      }
-
-      // what must HOLD at this scale — including the collapse being
-      // real (if it vanished, the guidance above would be stale).
-      // Selector runs skip the gate (arms are missing by construction).
-      if (armSel("all")) {
-        def at(family: String, storage: String, params: String): Double =
-          results.find(r => r.fixture == fx && r.family == family &&
-            r.storage == storage && r.params == params)
-            .getOrElse(sys.error(s"missing scale config $family/$storage/$params"))
-            .recallMean
-        val sIvf = at("ivf", "float", s"nCells=$nCells nProbe=3 ki=0")
-        require(sIvf >= 0.90,
-          f"scale: IVF float default recall $sIvf%.3f < 0.90 at $scaleVecs vectors")
-        val sInt8 = at("ivf", "int8", s"nCells=$nCells nProbe=3 ki=0")
-        require(math.abs(sInt8 - sIvf) <= 0.05,
-          f"scale: int8 must track float: $sInt8%.3f vs $sIvf%.3f")
-        require(at("pq", "rerank", "m=4 nCodes=16 kCand=100") < 0.5,
-          "scale: the tiny-codebook rerank collapse should reproduce — if " +
-            "it stopped reproducing, re-adjudicate the kCand guidance")
-        val sWide = at("pq", "rerank", s"m=4 nCodes=16 kCand=$kWide")
-        require(sWide >= 0.95,
-          f"scale: rerank with kCand past the tie multiplicity $sWide%.3f < 0.95")
-        // the scale-correct recipe: residual IVF-PQ with cells ≈ cluster
-        // count and a real code budget — measured 0.999 at kCand=100,
-        // 9.4% probed, 8× compression; the global-codebook ladder
-        // (0.233 → 0.330 → 0.523 at m=4/8/16) is recorded above it
-        val sRes = at("ivfpq", "res+rerank",
-          "nCells=64 m=16 nCodes=256 ki=3 nProbe=6 kCand=100")
-        require(sRes >= 0.95,
-          f"scale: residual IVF-PQ at the scale recipe $sRes%.3f < 0.95")
-      }
+    // worst-case contrast: the same recipe keyed on the raw id = uniform
+    // random, no structure to exploit (what the sf fixture is). The full
+    // ladder would repeat q102's lesson 50×; the IVF rows alone show it
+    val rnd = new Fixture(ctx, "random", nVecs,
+      BenchHarness.md5VecSql("id", dim, "0.0d"))
+    for (ki <- Seq(0, 3)) {
+      val (fp, bF) = rnd.build(s"ivf_ki$ki")(sim.buildIvfIndex(
+        rnd.corpus, "vec_id", "embedding", _, nCells, kmeansIters = ki))
+      for (nProbe <- Seq(3, 8))
+        rnd.record("ivf", "float", s"nCells=$nCells nProbe=$nProbe ki=$ki",
+          bF, nProbe.toDouble / nCells, dim * 8, rnd.ivf(fp, nProbe))
     }
 
     // ---- recommended-default assertions: a regression here must FAIL the
     // bench, not silently shift the recorded table ----
-    if (runSmall) {
-    def recallOf(family: String, storage: String, params: String): Double =
-      results.find(r => r.fixture == "planted" && r.family == family &&
-        r.storage == storage && r.params == params)
-        .getOrElse(sys.error(s"missing config $family/$storage/$params")).recallMean
-    val ivfDefault = recallOf("ivf", "float", s"nCells=$nCells nProbe=3 ki=0")
+    val ivfDefault = fx.recall("ivf", "float", s"nCells=$nCells nProbe=3 ki=0")
     require(ivfDefault >= 0.90,
       f"IVF float default (nProbe=3, ki=0) recall $ivfDefault%.3f < 0.90 on planted structure")
-    val int8Default = recallOf("ivf", "int8", s"nCells=$nCells nProbe=3 ki=0")
+    val int8Default = fx.recall("ivf", "int8", s"nCells=$nCells nProbe=3 ki=0")
     require(math.abs(int8Default - ivfDefault) <= 0.05,
       f"int8 must track float at the default config: $int8Default%.3f vs $ivfDefault%.3f")
-    // kmeansIters default adjudication: the measured gap between ki=0 and
-    // ki=3 across the IVF nProbe sweep decides whether 0 stays the default
-    val rerank = recallOf("pq", "rerank", "m=4 nCodes=16 kCand=100")
+    val rerank = fx.recall("pq", "rerank", "m=4 nCodes=16 kCand=100")
     require(rerank >= 0.95,
       f"PQ+rerank (kCand=100) recall $rerank%.3f < 0.95 on planted structure " +
         "- the two-stage contract")
+    // kmeansIters default adjudication: the measured gap between ki=0 and
+    // ki=3 across the IVF nProbe sweep decides whether 0 stays the default
     val kiGap = Seq(1, 2, 3, 4, 6, 8).map { p =>
-      recallOf("ivf", "float", s"nCells=$nCells nProbe=$p ki=3") -
-        recallOf("ivf", "float", s"nCells=$nCells nProbe=$p ki=0")
+      fx.recall("ivf", "float", s"nCells=$nCells nProbe=$p ki=3") -
+        fx.recall("ivf", "float", s"nCells=$nCells nProbe=$p ki=0")
     }
     println(f"kmeansIters adjudication: mean recall gain of ki=3 over ki=0 " +
       f"across the IVF sweep = ${kiGap.sum / kiGap.size}%+.3f " +
       f"(max ${kiGap.max}%+.3f)")
-    }
 
-    val loadAfter = BenchHarness.loadavg
-    def j(r: Row): String =
-      s"""{"family":"${r.family}","storage":"${r.storage}","fixture":"${r.fixture}",""" +
-        s""""params":"${r.params}","build_s":${BenchHarness.fmt(r.buildS, 3)},""" +
-        s""""query_s":${BenchHarness.fmt(r.queryS, 3)},""" +
-        s""""recall_mean":${BenchHarness.fmt(r.recallMean, 4)},""" +
-        s""""recall_min":${BenchHarness.fmt(r.recallMin, 4)},""" +
-        s""""probed_frac":${BenchHarness.fmt(r.probedFrac, 4)},""" +
-        s""""probed_kb_per_query":${BenchHarness.fmt(r.probedKbPerQuery, 1)}}"""
-    val json =
-      s"""{"metric":"ann_recall_surface","n_vecs":$nVecs,"dim":$dim,""" +
-        s""""scale_vecs":$scaleVecs,""" +
-        s""""n_clusters":$nClusters,"eps":"$eps","k":$k,""" +
-        s""""loadavg_before":"$loadBefore","loadavg_after":"$loadAfter",""" +
-        s""""contended":${BenchHarness.contended(loadBefore)},""" +
-        s""""configs":[${results.map(j).mkString(",")}]}"""
-    println(json)
-    java.nio.file.Files.write(java.nio.file.Paths.get("ANN_RECALL.json"),
-      json.getBytes("UTF-8"))
-    spark.stop()
+    ("metric" -> "ann_recall_surface") ~ ("n_vecs" -> nVecs) ~ ("dim" -> dim) ~
+      ("n_clusters" -> nClusters) ~ ("eps" -> eps) ~ ("k" -> k) ~
+      ("configs" -> (fx.rows ++ rnd.rows))
+  }
+
+  /** `ann_scale`: the headline arms at IndexBench scale (round-12 verdict
+    * #6). The 2k planted corpus is generous for nCells=16, so the
+    * recommended defaults are re-validated at 200k × 64 (50 clusters of
+    * 4k) and ASSERTED there too. Only the decision-carrying arms run —
+    * the full ladder's shape questions are answered by `ann_recall`.
+    */
+  def scale(ctx: Ctx): Record = {
+    val scaleVecs = BenchHarness.env("SPARK_GRAFT_ANN_SCALE_VECS", "200000").toInt
+    val fx = planted(ctx, "planted@scale", scaleVecs)
+    val corpus = fx.corpus
+    import fx.{build, record}
+    val kWide = (scaleVecs / nClusters) * 2
+
+    val (fp, bF) = build("ivf")(sim.buildIvfIndex(
+      corpus, "vec_id", "embedding", _, nCells, kmeansIters = 0))
+    for (nProbe <- Seq(1, 3, 8))
+      record("ivf", "float", s"nCells=$nCells nProbe=$nProbe ki=0",
+        bF, nProbe.toDouble / nCells, dim * 8, fx.ivf(fp, nProbe))
+    val (qp, bQ) = build("ivf_q8")(sim.buildIvfIndexQuantized(
+      corpus, "vec_id", "embedding", _, nCells, kmeansIters = 0))
+    record("ivf", "int8", s"nCells=$nCells nProbe=3 ki=0",
+      bQ, 3.0 / nCells, dim + 8, fx.ivfInt8(qp, 3))
+
+    // PQ+rerank, tiny codebook: the 2k fixture's recall-1.0 number
+    // does NOT transfer — at 200k each planted cluster holds 4k rows,
+    // a 16-codeword budget can only IDENTIFY the cluster, and the
+    // id-tie-broken kCand=100 cut misses the true top-k almost
+    // surely (measured 0.039). Recorded as the labelled collapse row;
+    // the fixes are measured right below.
+    val (pp, bP) = build("pq")(sim.buildPqIndex(
+      corpus, "vec_id", "embedding", _, m = 4, nCodes = 16, kmeansIters = 0))
+    record("pq", "rerank", "m=4 nCodes=16 kCand=100",
+      bP, 1.0, 4 * 4, fx.pqRerank(pp, 100), kCand = 100)
+    val (ip, bI) = build("ivfpq")(sim.buildIvfPqIndex(
+      corpus, "vec_id", "embedding", _, nCells, m = 4, nCodes = 16,
+      kmeansIters = 0))
+    record("ivfpq", "rerank", s"nCells=$nCells m=4 nCodes=16 nProbe=3 kCand=100",
+      bI, 3.0 / nCells, 4 * 4, fx.ivfPqRerank(ip, 100, 3), kCand = 100)
+
+    // fix 1: widen kCand past the PQ score's tie multiplicity (here
+    // the 4k cluster) — the proposer only needs to CONTAIN the top-k.
+    // Measured 0.996, but the wide TopKAgg cut is itself expensive
+    // (~4 min at kCand=8000 × 100 queries) — a finding, not a default;
+    // one timing sample suffices
+    record("pq", "rerank", s"m=4 nCodes=16 kCand=$kWide",
+      0.0, 1.0, 4 * 4, fx.pqRerank(pp, kWide), kCand = kWide, runs = 1)
+
+    // fix 2 candidates: spend codes instead of candidates. The global
+    // codebook at nCodes=256+ki=3 helps (0.039 → 0.233, then 0.330 and
+    // 0.523 at m=8/16) but its codewords chase cluster CENTERS, not
+    // within-cluster noise — residual encoding (codes describe
+    // v − centroid[cell]) is the textbook answer measured after it
+    for (m <- Seq(4, 8, 16)) {
+      val (pm, b) = build(s"pq_m${m}c256")(sim.buildPqIndex(
+        corpus, "vec_id", "embedding", _, m = m, nCodes = 256, kmeansIters = 3))
+      record("pq", "rerank", s"m=$m nCodes=256 ki=3 kCand=100",
+        b, 1.0, m * 4, fx.pqRerank(pm, 100), kCand = 100)
+    }
+    val (rp64, bR64) = build("ivfpq_res64")(sim.buildIvfPqIndex(
+      corpus, "vec_id", "embedding", _, nCells = 64, m = 8,
+      nCodes = 256, kmeansIters = 3, residual = true))
+    record("ivfpq", "res+rerank",
+      "nCells=64 m=8 nCodes=256 ki=3 nProbe=6 kCand=100",
+      bR64, 6.0 / 64, 8 * 4, fx.ivfPqRerank(rp64, 100, 6), kCand = 100)
+    // the asserted scale-recipe arm builds through the SHIPPED preset
+    // (buildIvfPqIndexScale) so the gate pins the one constructor a
+    // 100 TB user actually calls
+    val (rpb, bRb) = build("ivfpq_res64_m16")(sim.buildIvfPqIndexScale(
+      corpus, "vec_id", "embedding", _, nCells = 64))
+    record("ivfpq", "res+rerank",
+      "nCells=64 m=16 nCodes=256 ki=3 nProbe=6 kCand=100",
+      bRb, 6.0 / 64, 16 * 4, fx.ivfPqRerank(rpb, 100, 6), kCand = 100)
+    record("ivfpq", "res+rerank",
+      "nCells=64 m=8 nCodes=256 ki=3 nProbe=6 kCand=400",
+      0.0, 6.0 / 64, 8 * 4, fx.ivfPqRerank(rp64, 400, 6), kCand = 400)
+    val (rp, bR) = build("ivfpq_res256")(sim.buildIvfPqIndex(
+      corpus, "vec_id", "embedding", _, nCells, m = 4, nCodes = 256,
+      kmeansIters = 3, residual = true))
+    record("ivfpq", "res+rerank",
+      s"nCells=$nCells m=4 nCodes=256 ki=3 nProbe=3 kCand=100",
+      bR, 3.0 / nCells, 4 * 4, fx.ivfPqRerank(rp, 100, 3), kCand = 100)
+
+    // what must HOLD at this scale — including the collapse being
+    // real (if it vanished, the guidance above would be stale)
+    val sIvf = fx.recall("ivf", "float", s"nCells=$nCells nProbe=3 ki=0")
+    require(sIvf >= 0.90,
+      f"scale: IVF float default recall $sIvf%.3f < 0.90 at $scaleVecs vectors")
+    val sInt8 = fx.recall("ivf", "int8", s"nCells=$nCells nProbe=3 ki=0")
+    require(math.abs(sInt8 - sIvf) <= 0.05,
+      f"scale: int8 must track float: $sInt8%.3f vs $sIvf%.3f")
+    require(fx.recall("pq", "rerank", "m=4 nCodes=16 kCand=100") < 0.5,
+      "scale: the tiny-codebook rerank collapse should reproduce — if " +
+        "it stopped reproducing, re-adjudicate the kCand guidance")
+    val sWide = fx.recall("pq", "rerank", s"m=4 nCodes=16 kCand=$kWide")
+    require(sWide >= 0.95,
+      f"scale: rerank with kCand past the tie multiplicity $sWide%.3f < 0.95")
+    // the scale-correct recipe: residual IVF-PQ with cells ≈ cluster
+    // count and a real code budget — measured 0.999 at kCand=100,
+    // 9.4% probed, 8× compression
+    val sRes = fx.recall("ivfpq", "res+rerank",
+      "nCells=64 m=16 nCodes=256 ki=3 nProbe=6 kCand=100")
+    require(sRes >= 0.95,
+      f"scale: residual IVF-PQ at the scale recipe $sRes%.3f < 0.95")
+
+    ("metric" -> "ann_recall_surface") ~ ("scale_vecs" -> scaleVecs) ~
+      ("dim" -> dim) ~ ("n_clusters" -> nClusters) ~ ("eps" -> eps) ~
+      ("k" -> k) ~ ("configs" -> fx.rows)
   }
 }

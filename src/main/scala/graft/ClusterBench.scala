@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.time
 
 /** Spot-bench for the clustering family (q41 components / q42 star
   * contraction / q53 representatives) at sf1-equivalent volume — the
@@ -25,19 +28,16 @@ import org.apache.spark.sql.functions._
   *     picks local below, distributed above; both sides are timed so a
   *     scale cliff at the boundary would be visible in the artifact.
   *
-  * Output: one compact JSON line on stdout (same discipline as
-  * [[Bench]] — the driver log tail is bounded); recorded in BASELINE.md's
-  * sf1 section.
+  * The [[ScaleBench]] family `cluster`; recorded in BASELINE.md's sf1
+  * section.
   */
 object ClusterBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.{fmt, sfDir, time}
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
     val repl = BenchHarness.env("SPARK_GRAFT_REPL", "15").toInt
-    val cpus = BenchHarness.cpus()
-    val spark = BenchHarness.session(cpus)
 
     // ── 1. sf1-equivalent corpus ─────────────────────────────────────
-    val docs = BenchHarness.replicatedDocs(spark, sfDir, repl, cpus,
+    val docs = BenchHarness.replicatedDocs(spark, ctx.sfDir, repl, ctx.cpus,
       salt = false)
     val nDocs = docs.count()
 
@@ -49,16 +49,13 @@ object ClusterBench {
     }
     val nPairs = pairs.count()
 
-    val (ccDist, tCcDist) = time {
-      val r = graft.ops.Dedup.components(pairs, localThreshold = 0)
-        .localCheckpoint(true)
-      r.count(); r
-    }
-    val (ccStar, tCcStar) = time {
-      val r = graft.ops.Dedup.componentsStar(pairs, localThreshold = 0)
-        .localCheckpoint(true)
-      r.count(); r
-    }
+    // a component labelling, checkpointed and counted inside the timer
+    def labels(cc: => DataFrame): (DataFrame, Double) =
+      time { val r = cc.localCheckpoint(true); r.count(); r }
+    val (ccDist, tCcDist) =
+      labels(graft.ops.Dedup.components(pairs, localThreshold = 0))
+    val (ccStar, tCcStar) =
+      labels(graft.ops.Dedup.componentsStar(pairs, localThreshold = 0))
     // label agreement between the two distributed formulations — and,
     // when the graph is inside the local threshold, with the driver path
     def labelSet(df: DataFrame) =
@@ -67,11 +64,8 @@ object ClusterBench {
     assert(distLabels == labelSet(ccStar),
       "components() and componentsStar() must agree on the sf1 graph")
     val tCcLocal = if (nPairs <= graft.ops.Dedup.LocalCcThreshold) {
-      val (ccLoc, t) = time {
-        val r = graft.ops.Dedup.components(pairs, localThreshold = Long.MaxValue)
-          .localCheckpoint(true)
-        r.count(); r
-      }
+      val (ccLoc, t) = labels(
+        graft.ops.Dedup.components(pairs, localThreshold = Long.MaxValue))
       assert(labelSet(ccLoc) == distLabels,
         "local union-find must match the distributed labels")
       t
@@ -101,6 +95,7 @@ object ClusterBench {
     val nBig = big.count()
     assert(nBelow <= graft.ops.Dedup.LocalCcThreshold
       && nAbove > graft.ops.Dedup.LocalCcThreshold)
+    // components() runs its rounds eagerly: the timer must enclose it
     def cc(pairs: DataFrame, threshold: Long): Double =
       time {
         graft.ops.Dedup.components(pairs, localThreshold = threshold)
@@ -118,13 +113,11 @@ object ClusterBench {
     val tAbove = cc(above, 0)
     val tBig = cc(big, 0)
 
-    println(
-      s"""{"bench":"cluster_sf1","sf":"$sfDir","repl":$repl,"n_docs":$nDocs,""" +
-      s""""n_pairs":$nPairs,"pairs_s":${fmt(tPairs)},"cc_dist_s":${fmt(tCcDist)},""" +
-      s""""cc_star_s":${fmt(tCcStar)},"cc_local_s":${fmt(tCcLocal)},""" +
-      s""""keep_s":${fmt(tKeep)},"handoff_edges":[$nBelow,$nAbove,$nBig],""" +
-      s""""handoff_local_s":[${fmt(tBelowLocal)},-1,-1],""" +
-      s""""handoff_dist_s":[${fmt(tBelowDist)},${fmt(tAbove)},${fmt(tBig)}]}""")
-    spark.stop()
+    ("bench" -> "cluster_sf1") ~ ("repl" -> repl) ~ ("n_docs" -> nDocs) ~
+      ("n_pairs" -> nPairs) ~ ("pairs_s" -> tPairs) ~ ("cc_dist_s" -> tCcDist) ~
+      ("cc_star_s" -> tCcStar) ~ ("cc_local_s" -> tCcLocal) ~
+      ("keep_s" -> tKeep) ~ ("handoff_edges" -> Seq(nBelow, nAbove, nBig)) ~
+      ("handoff_local_s" -> Seq(tBelowLocal, -1.0, -1.0)) ~
+      ("handoff_dist_s" -> Seq(tBelowDist, tAbove, tBig))
   }
 }

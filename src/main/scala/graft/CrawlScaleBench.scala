@@ -1,13 +1,17 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.Crawl
 
 /** sf1 spot-bench for the CRAWL family (q153/q155/q157 shapes) — the
   * BASELINE.md family-spot-bench protocol applied to the round-17/18
   * crawl terminals: the sf0.1 documents table replicated 10× (salted
   * text, so pages stay unique and dedup keeps its real shape), rendered
-  * into 8 `.warc.gz` shards per scale, and the SAME composed pipelines
-  * the suite declares run at 1× and 10×:
+  * into 8 `.warc.gz` shards per scale (the [[BenchHarness.Crawl]]
+  * fixture), and the SAME composed pipelines the suite declares run at
+  * 1× and 10×:
   *
   *   - `scan`   (q153 shape): WarcReader.responses scan + charset
   *     decode + count;
@@ -21,50 +25,13 @@ import org.apache.spark.sql.functions._
   * partition count frozen at the small scale). Linear-ish ratios
   * (≤10× wall for 10× data; sublinear where fixed per-job overhead
   * amortizes) mean the composed terminals inherit the per-operator
-  * scale contracts. One JSON line (the Bench discipline) →
-  * CRAWL_SCALE.json, recorded in BASELINE.md.
+  * scale contracts. The [[ScaleBench]] family `crawl_scale`, recorded
+  * in BASELINE.md.
   */
 object CrawlScaleBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.time
-    val sfDir = BenchHarness.env("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
     val repl = BenchHarness.env("SPARK_GRAFT_CRAWL_REPL", "10").toInt
-    val cpus = BenchHarness.cpus()
-    val spark = BenchHarness.session(cpus, logLevel = "ERROR")
-    val base = BenchHarness.tmp("graft_crawlscale_")
-
-    val domains = Seq("alpha.com", "beta.org", "gamma.net", "delta.io")
-    val budgets = domains.map(_ -> 10000000L).toMap
-    val th = graft.ops.TextAnalysis.GopherThresholds(minWords = 10)
-    val cfg = graft.ops.Curation.Config(budgets = budgets, minQuality = 0.0)
-    val enc = graft.functions.TokenCounters.tinyBpe
-
-    /** Render `repl`-replicated salted docs into 8 shards; returns the
-      * doc count. Driver-side single-stream writes (the WarcWriter
-      * contract — the 100 TB direction is READING crawls).
-      */
-    def writeCrawl(dir: String, replicas: Int): Long = {
-      val docs = BenchHarness.replicatedDocs(spark, sfDir, replicas, cpus,
-          salt = true)
-        .where(col("text").isNotNull)
-        .select(col("doc_id"), col("text"))
-        .collect() // bounded: fixture construction, ≤ 50k rows
-      docs.zipWithIndex.grouped((docs.length + 7) / 8).zipWithIndex
-        .foreach { case (group, shard) =>
-          graft.sources.WarcWriter.write(spark, s"$dir/crawl-$shard.warc.gz",
-            group.iterator.map { case (r, _) =>
-              val id = r.getLong(0)
-              val dom = domains((id % 4).toInt)
-              graft.sources.WarcWriter.responseRecord(
-                s"https://$dom/doc/$id", "2026-01-02T03:04:05Z",
-                f"<urn:doc:$id%012d>",
-                s"<html><body><h1>D$id</h1><p>${r.getString(1)}" +
-                  "</p><ul><li>alpha&nbsp;caf&eacute;</li></ul></body></html>",
-                "utf-8", declareInHeader = true)
-            })
-        }
-      docs.length.toLong
-    }
 
     def pages(dir: String) = graft.sources.WarcReader.responses(spark, dir)
       .select(col("record_id").as("doc_id"),
@@ -76,50 +43,42 @@ object CrawlScaleBench {
 
     def withSource(dir: String) = {
       val p = pages(dir)
-      graft.ops.Web.intake(p, "doc_id", "html", th)
+      graft.ops.Web.intake(p, "doc_id", "html", Crawl.th)
         .join(p.select("doc_id", "source"), Seq("doc_id"))
     }
 
     def curate(dir: String): Long =
       graft.ops.Curation.curate(spark, withSource(dir), "doc_id",
         "norm_text", "source", keyIndexPath = None, benchmark = None,
-        cfg).count()
+        Crawl.cfg).count()
 
     def tokens(dir: String): Long =
       graft.ops.Curation.curateTokens(spark, withSource(dir), "doc_id",
         "norm_text", "source", keyIndexPath = None, benchmark = None,
-        cfg, enc).count()
+        Crawl.cfg, Crawl.enc).count()
 
-    def fmt(d: Double): String = BenchHarness.fmt(d, scale = 3)
     val arms = Seq("1x" -> 1, s"${repl}x" -> repl).map { case (tag, r) =>
-      val dir = s"$base/$tag"
-      val nDocs = writeCrawl(dir, r)
+      val dir = s"${ctx.tmp}/$tag"
+      val nDocs = Crawl.writeShards(spark, ctx.sfDir, ctx.cpus, dir, r, 8)
       // warm-up scan (JIT + page cache), then one timed run per stage —
       // the RelationalCoreBench protocol
       scan(dir)
-      val (nScan, tScan) = time(scan(dir))
-      val (nCur, tCur) = time(curate(dir))
-      val (nTok, tTok) = time(tokens(dir))
+      val (nScan, tScan) = BenchHarness.time(scan(dir))
+      val (nCur, tCur) = BenchHarness.time(curate(dir))
+      val (nTok, tTok) = BenchHarness.time(tokens(dir))
       require(nScan == nDocs, s"$tag: $nScan of $nDocs pages scanned")
-      (tag, nDocs, tScan, nCur, tCur, nTok, tTok)
+      (nDocs, tScan, nCur, tCur, nTok, tTok)
     }
-    val (_, n1, s1, c1n, c1, t1n, t1) = arms(0)
-    val (_, n2, s2, c2n, c2, t2n, t2) = arms(1)
-    val json =
-      s"""{"metric":"crawl_scale","repl":$repl,""" +
-        s""""docs_1x":$n1,"docs_big":$n2,""" +
-        s""""scan_1x_s":${fmt(s1)},"scan_big_s":${fmt(s2)},""" +
-        s""""scan_ratio":${fmt(s2 / s1)},""" +
-        s""""curate_1x_s":${fmt(c1)},"curate_big_s":${fmt(c2)},""" +
-        s""""curate_ratio":${fmt(c2 / c1)},""" +
-        s""""curate_rows_1x":$c1n,"curate_rows_big":$c2n,""" +
-        s""""tokens_1x_s":${fmt(t1)},"tokens_big_s":${fmt(t2)},""" +
-        s""""tokens_ratio":${fmt(t2 / t1)},""" +
-        s""""tokens_rows_1x":$t1n,"tokens_rows_big":$t2n}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_CRAWL_SCALE_OUT", "CRAWL_SCALE.json")),
-      (json + "\n").getBytes("UTF-8"))
-    println(json)
-    spark.stop()
+    val (n1, s1, c1n, c1, t1n, t1) = arms(0)
+    val (n2, s2, c2n, c2, t2n, t2) = arms(1)
+    ("metric" -> "crawl_scale") ~ ("repl" -> repl) ~
+      ("docs_1x" -> n1) ~ ("docs_big" -> n2) ~
+      ("scan_1x_s" -> s1) ~ ("scan_big_s" -> s2) ~ ("scan_ratio" -> s2 / s1) ~
+      ("curate_1x_s" -> c1) ~ ("curate_big_s" -> c2) ~
+      ("curate_ratio" -> c2 / c1) ~
+      ("curate_rows_1x" -> c1n) ~ ("curate_rows_big" -> c2n) ~
+      ("tokens_1x_s" -> t1) ~ ("tokens_big_s" -> t2) ~
+      ("tokens_ratio" -> t2 / t1) ~
+      ("tokens_rows_1x" -> t1n) ~ ("tokens_rows_big" -> t2n)
   }
 }

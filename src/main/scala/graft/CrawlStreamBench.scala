@@ -1,12 +1,16 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+
+import org.json4s.JsonDSL._
+
+import BenchHarness.Crawl
 
 /** Spot-bench for the STREAMING crawl terminals ([[graft.streaming
   * .Streams.warcIngestSink]] intake rung, [[graft.streaming.Streams
   * .crawlTokensSink]] tokens terminal, ± the pre-decode digest rung) —
-  * the [[StreamIngestBench]] protocol applied to the [[CrawlScaleBench]]
-  * 10× shard set: the sf-dir documents table replicated (salted — pages
+  * the [[BenchHarness.streamProtocol]] applied to the
+  * [[BenchHarness.Crawl]] 10× shard set: the sf-dir documents table replicated (salted — pages
   * unique at the exact rung, interior spans cross-replica duplicated,
   * the excision worst case), rendered once into a POOL of `.warc.gz`
   * shards, then dropped into each arm's landing directory one shard per
@@ -28,114 +32,49 @@ import org.apache.spark.sql.functions._
   *    nothing. Asserted in-bench, recorded as `replay_s` /
   *    `replay_added`.
   *
-  * One JSON line (the [[Bench]] discipline) → CRAWL_STREAM.json,
-  * recorded in BASELINE.md's streaming section.
+  * The [[ScaleBench]] family `crawl_stream`, recorded in BASELINE.md's
+  * streaming section.
   */
 object CrawlStreamBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.time
-    val sfDir = BenchHarness.env("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
+    import spark.implicits._
     val repl = BenchHarness.env("SPARK_GRAFT_CRAWL_REPL", "10").toInt
     val nShards = BenchHarness.env("SPARK_GRAFT_CRAWL_SHARDS", "16").toInt
-    val cpus = BenchHarness.cpus()
-    val spark = BenchHarness.session(cpus, logLevel = "ERROR")
-    import spark.implicits._
-    val base = BenchHarness.tmp("graft_crawlstream_")
+    val base = ctx.tmp
 
-    val domains = Seq("alpha.com", "beta.org", "gamma.net", "delta.io")
-    val budgets = domains.map(_ -> 10000000L).toMap
-    val th = graft.ops.TextAnalysis.GopherThresholds(minWords = 10)
-    val cfg = graft.ops.Curation.Config(budgets = budgets, minQuality = 0.0)
-    val enc = graft.functions.TokenCounters.tinyBpe
-
-    // render the salted crawl ONCE into a shard pool (driver-side
-    // single-stream writes — the WarcWriter contract; the 100 TB
-    // direction is READING crawls)
+    // render the salted crawl ONCE into a shard pool
     val pool = s"$base/pool"
-    val docs = BenchHarness.replicatedDocs(spark, sfDir, repl, cpus,
-        salt = true)
-      .where(col("text").isNotNull)
-      .select(col("doc_id"), col("text"))
-      .collect() // bounded: fixture construction, ≤ ~50k rows at 10×
-    val nDocs = docs.length.toLong
-    docs.grouped((docs.length + nShards - 1) / nShards).zipWithIndex
-      .foreach { case (group, shard) =>
-        graft.sources.WarcWriter.write(spark,
-          f"$pool/crawl-$shard%03d.warc.gz",
-          group.iterator.map { r =>
-            val id = r.getLong(0)
-            val dom = domains((id % 4).toInt)
-            graft.sources.WarcWriter.responseRecord(
-              s"https://$dom/doc/$id", "2026-01-02T03:04:05Z",
-              f"<urn:doc:$id%012d>",
-              s"<html><body><h1>D$id</h1><p>${r.getString(1)}" +
-                "</p><ul><li>alpha&nbsp;caf&eacute;</li></ul></body></html>",
-              "utf-8", declareInHeader = true)
-          })
-      }
+    val nDocs = Crawl.writeShards(spark, ctx.sfDir, ctx.cpus, pool, repl,
+      nShards)
     val shardFiles = new java.io.File(pool).listFiles()
       .filter(_.getName.endsWith(".warc.gz")).sortBy(_.getName)
 
-    def land(dst: String, f: java.io.File, as: String = ""): Unit = {
-      val name = if (as.isEmpty) f.getName else as
-      java.nio.file.Files.copy(f.toPath,
-        java.nio.file.Paths.get(s"$dst/$name"))
-    }
+    def land(dst: String, f: java.io.File, as: String = ""): Unit =
+      Files.copy(f.toPath, Paths.get(dst, if (as.isEmpty) f.getName else as))
 
-    def fmt(d: Double): String = BenchHarness.fmt(d, scale = 3)
-
-    /** One arm: stream every pool shard through `start`, kill-and-
-      * resume at the halfway shard, then the replay probe. Returns the
-      * JSON fragment.
+    /** One arm: every pool shard is a batch through `start`; the replay
+      * lands the last shard's CONTENT again as a new file —
+      * byte-identical re-fetches the standing screens must not admit.
       */
-    def runArm(tag: String,
-               start: (String, String) => org.apache.spark.sql.streaming.StreamingQuery,
-               outPath: String): String = {
-      val landing = s"$base/$tag/landing"
-      val ckpt = s"$base/$tag/ckpt"
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(landing))
-      val resumeAt = shardFiles.length / 2
-      var q = start(landing, ckpt)
-      var resumeS = -1.0
-      val batchTimes = try {
-        shardFiles.zipWithIndex.map { case (f, i) =>
-          if (i == resumeAt && i > 0) {
-            q.stop()
-            land(landing, f)
-            val (q2, t) = time {
-              val qq = start(landing, ckpt); qq.processAllAvailable(); qq
-            }
-            q = q2
-            resumeS = t
-            t
-          } else {
-            land(landing, f)
-            val (_, t) = time(q.processAllAvailable())
-            t
-          }
-        }.toVector
-      } catch { case e: Throwable => q.stop(); throw e }
-      // replay probe: the last shard's CONTENT lands again as a new
-      // file — byte-identical re-fetches, the standing screens must
-      // admit nothing
-      val before = spark.read.parquet(outPath).count()
-      land(landing, shardFiles.last, as = "replay-of-last.warc.gz")
-      val (_, replayS) = time(q.processAllAvailable())
-      q.stop()
-      val after = spark.read.parquet(outPath).count()
-      assert(after == before,
-        s"$tag: replayed shard must add nothing: $before -> $after")
-      val totalS = batchTimes.sum
-      s""""$tag":{"total_s":${fmt(totalS)},""" +
-        s""""pages_per_s":${fmt(nDocs / totalS)},""" +
-        s""""out_rows":$before,""" +
-        s""""resume_s":${fmt(resumeS)},"replay_s":${fmt(replayS)},""" +
-        s""""replay_added":${after - before},""" +
-        s""""batch_s":[${batchTimes.map(fmt).mkString(",")}]}"""
+    def runArm(tag: String, start: (String, String, String) =>
+                 org.apache.spark.sql.streaming.StreamingQuery)
+        : (String, ScaleBench.Record) = {
+      val (landing, out, ckpt) =
+        (s"$base/$tag/landing", s"$base/$tag/out", s"$base/$tag/ckpt")
+      Files.createDirectories(Paths.get(landing))
+      val r = BenchHarness.streamProtocol[java.io.File](shardFiles.toSeq,
+        () => start(landing, out, ckpt), land(landing, _),
+        () => land(landing, shardFiles.last, as = "replay-of-last.warc.gz"),
+        () => spark.read.parquet(out).count(), s"$tag: replayed shard")
+      val totalS = r.batchS.sum
+      tag -> (("total_s" -> totalS) ~ ("pages_per_s" -> nDocs / totalS) ~
+        ("out_rows" -> r.outRows) ~ r.fields)
     }
 
-    // the empty-seed key/digest layouts, sized with the capacity hint
+    // the empty-seed key/digest layouts, sized with the capacity hint,
+    // built ONCE per arm before it starts (a rebuild at the resume
+    // would wipe what the first half admitted)
     def freshKeys(tag: String): String = {
       val p = s"$base/$tag/keys"
       graft.ops.Dedup.buildExactKeyIndex(
@@ -151,42 +90,23 @@ object CrawlStreamBench {
       p
     }
 
-    val intakeOut = s"$base/intake/out"
-    val intakeArm = runArm("intake",
-      (landing, ckpt) => graft.streaming.Streams.warcIngestSink(spark,
-        landing, intakeOut, freshOrExisting("intake", freshKeys), ckpt, th),
-      intakeOut)
-    val tokensOut = s"$base/tokens/out"
-    val tokensArm = runArm("tokens",
-      (landing, ckpt) => graft.streaming.Streams.crawlTokensSink(spark,
-        landing, tokensOut, freshOrExisting("tokens", freshKeys), ckpt,
-        enc, cfg, th),
-      tokensOut)
-    val tokDigOut = s"$base/tokens_digest/out"
-    val tokensDigestArm = runArm("tokens_digest",
-      (landing, ckpt) => graft.streaming.Streams.crawlTokensSink(spark,
-        landing, tokDigOut,
-        freshOrExisting("tokens_digest", freshKeys), ckpt, enc, cfg, th,
-        digestIndexPath =
-          Some(freshOrExisting("tokens_digest_dg", freshDigests))),
-      tokDigOut)
+    val intakeKeys = freshKeys("intake")
+    val intakeArm = runArm("intake", (landing, out, ckpt) =>
+      graft.streaming.Streams.warcIngestSink(spark, landing, out,
+        intakeKeys, ckpt, Crawl.th))
+    val tokensKeys = freshKeys("tokens")
+    val tokensArm = runArm("tokens", (landing, out, ckpt) =>
+      graft.streaming.Streams.crawlTokensSink(spark, landing, out,
+        tokensKeys, ckpt, Crawl.enc, Crawl.cfg, Crawl.th))
+    val digestKeys = freshKeys("tokens_digest")
+    val digests = freshDigests("tokens_digest_dg")
+    val tokensDigestArm = runArm("tokens_digest", (landing, out, ckpt) =>
+      graft.streaming.Streams.crawlTokensSink(spark, landing, out,
+        digestKeys, ckpt, Crawl.enc, Crawl.cfg, Crawl.th,
+        digestIndexPath = Some(digests)))
 
-    val json =
-      s"""{"metric":"crawl_stream","sf":"$sfDir","repl":$repl,""" +
-        s""""shards":${shardFiles.length},"pages":$nDocs,""" +
-        s"""$intakeArm,$tokensArm,$tokensDigestArm}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_CRAWL_STREAM_OUT", "CRAWL_STREAM.json")),
-      (json + "\n").getBytes("UTF-8"))
-    println(json)
-    spark.stop()
+    ("metric" -> "crawl_stream") ~ ("repl" -> repl) ~
+      ("shards" -> shardFiles.length) ~ ("pages" -> nDocs) ~
+      intakeArm ~ tokensArm ~ tokensDigestArm
   }
-
-  // a kill-and-resume arm restarts its sink mid-run: the index must be
-  // built exactly ONCE per arm (a rebuild would wipe what the first
-  // half admitted), so the builder memoizes per tag
-  private val built = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def freshOrExisting(tag: String,
-                              build: String => String): String =
-    built.getOrElseUpdate(tag, build(tag))
 }

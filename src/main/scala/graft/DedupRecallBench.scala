@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.time
 
 /** Measured precision/recall surface for the lexical near-dup family —
   * the [[AnnRecallBench]] discipline (truth op + audit op + sweep +
@@ -39,20 +43,18 @@ import org.apache.spark.sql.functions._
   * trade); the containment blind spot must reproduce (< 0.5 recall on
   * j < 0.3 bands of containment≈1 pairs, ≥ 0.9 on j ≥ 0.8).
   *
-  * Output: one JSON line (the [[Bench]] discipline) + the full table
-  * in DEDUP_RECALL.json; recorded in BASELINE.md.
+  * The [[ScaleBench]] family `dedup_recall`: the full table plus the
+  * default's headline numbers, recorded in BASELINE.md.
   */
 object DedupRecallBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.{fmt, sfDir}
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
+    val cpus = ctx.cpus
     val dedup = graft.ops.Dedup
     val nBase = BenchHarness.env("SPARK_GRAFT_DEDUP_DOCS", "600").toInt
-    val cpus = BenchHarness.cpus()
-    val spark = BenchHarness.session(cpus)
-    val lv0 = BenchHarness.loadavg
 
     val perturbs = Seq(2, 4, 8, 16, 32, 100)
-    val base = Tables.load(spark, sfDir, "documents")
+    val base = Tables.load(spark, ctx.sfDir, "documents")
       .where(col("text").isNotNull &&
         expr("size(filter(split(text, ' '), x -> x <> ''))") >= 24)
       .orderBy(col("doc_id")).limit(nBase)
@@ -80,30 +82,30 @@ object DedupRecallBench {
     val byW = arms.map(_.w).distinct.map { w =>
       val sets = dedup.shingleSets(corpus, "doc_id", "text", w)
         .localCheckpoint(true)
-      val t0 = System.nanoTime()
-      val truth = dedup.ngramJaccard(corpus, "doc_id", "text",
-          w = w, threshold = 0.05)
-        .localCheckpoint(true)
-      val nPairs = truth.count()
-      val truthS = (System.nanoTime() - t0) / 1e9
+      val ((truth, nPairs), truthS) = time {
+        val t = dedup.ngramJaccard(corpus, "doc_id", "text",
+          w = w, threshold = 0.05).localCheckpoint(true)
+        (t, t.count())
+      }
       w -> ((sets, truth, truthS, nPairs))
     }.toMap
+    // (band, n_truth, n_hit, recall) rows of a dedupRecall audit
+    def curveOf(audit: DataFrame): Seq[(Long, Long, Long, Double)] =
+      audit.orderBy(col("band")).collect()
+        .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getDouble(4)))
+        .toSeq
 
     case class Res(arm: Arm, curve: Seq[(Long, Long, Long, Double)],
                    sum: (Long, Long, Long, Double, Double), secs: Double)
     val results = arms.map { a =>
       val (sets, truth, _, _) = byW(a.w)
-      val t0 = System.nanoTime()
-      val cand = dedup.lshCandidates(
-        dedup.minHashSignatures(sets, a.k), a.k, a.bands)
-        .localCheckpoint(true)
-      val curve = dedup.dedupRecall(truth, cand).orderBy(col("band"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getDouble(4)))
-        .toSeq
-      val s = dedup.dedupScreenSummary(
-          truth.where(col("jaccard") >= 0.5), cand).collect().head
-      val secs = (System.nanoTime() - t0) / 1e9
+      val ((curve, s), secs) = time {
+        val cand = dedup.lshCandidates(
+          dedup.minHashSignatures(sets, a.k), a.k, a.bands)
+          .localCheckpoint(true)
+        (curveOf(dedup.dedupRecall(truth, cand)), dedup.dedupScreenSummary(
+          truth.where(col("jaccard") >= 0.5), cand).collect().head)
+      }
       Res(a, curve,
         (s.getLong(0), s.getLong(1), s.getLong(2), s.getDouble(3),
           s.getDouble(4)), secs)
@@ -118,16 +120,6 @@ object DedupRecallBench {
       results.find(r => r.arm == Arm(w, k, b))
         .getOrElse(sys.error(s"missing arm w=$w k=$k bands=$b"))
 
-    val armJson = results.map { r =>
-      val curve = r.curve.map { case (b, t, h, rec) =>
-        s"""{"band":$b,"n_truth":$t,"n_hit":$h,"recall":${fmt(rec, 4)}}"""
-      }.mkString("[", ",", "]")
-      val (st, sc, shh, p, rec) = r.sum
-      s"""{"w":${r.arm.w},"k":${r.arm.k},"bands":${r.arm.bands},""" +
-        s""""rows_per_band":${r.arm.k / r.arm.bands},"secs":${fmt(r.secs)},""" +
-        s""""curve":$curve,"at_threshold_0.5":{"n_truth":$st,"n_cand":$sc,""" +
-        s""""n_hit":$shh,"precision":${fmt(p, 4)},"recall":${fmt(rec, 4)}}}"""
-    }.mkString("[", ",", "]")
     // ---- the containment BLIND SPOT, measured (q142's story) ----
     // Plant prefix slices: doc (id + stride·p) = the first ~frac of a
     // base doc's words, so containment(slice ⊂ base) ≈ 1 while jaccard
@@ -155,27 +147,9 @@ object DedupRecallBench {
       .select(col("d1"), col("d2"), col("jaccard"))
     val candC = dedup.lshCandidates(
       dedup.minHashSignatures(setsC, 8), 8, 4)
-    val contCurve = dedup.dedupRecall(contTruth, candC)
-      .orderBy(col("band")).collect()
-      .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getDouble(4)))
-      .toSeq
-    val contJson = contCurve.map { case (b, t, h, rec) =>
-      s"""{"j_band":$b,"n_truth":$t,"n_hit":$h,"recall":${fmt(rec, 4)}}"""
-    }.mkString("[", ",", "]")
+    val contCurve = curveOf(dedup.dedupRecall(contTruth, candC))
 
-    val json =
-      s"""{"bench":"dedup_recall","sf":"$sfDir","n_base":$nBase,""" +
-        s""""n_docs":$nDocs,"perturbs":${perturbs.mkString("[", ",", "]")},""" +
-        s""""truth":${byW.toSeq.sortBy(_._1).map { case (w, (_, _, s, n)) =>
-          s"""{"w":$w,"secs":${fmt(s)},"n_pairs":$n}"""
-        }.mkString("[", ",", "]")},""" +
-        s""""containment_blind_spot":$contJson,""" +
-        s""""arms":$armJson,"loadavg_before":"$lv0"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("DEDUP_RECALL.json"),
-      (json + "\n").getBytes("UTF-8"))
-
-    // the shipped-default gate — regressions fail the bench (AFTER the
-    // artifact write, so a failed gate still leaves the table to read).
+    // the shipped-default gate — regressions fail the bench.
     // Directions follow the banding math: at fixed r, more bands only
     // ADD collision chances (monotone up); r=1 collides near-always
     // (recall ~1 at every band, precision collapses — asserted as the
@@ -213,14 +187,27 @@ object DedupRecallBench {
     require(blindHi >= 0.9,
       f"high-jaccard containment pairs must still hit: $blindHi%.3f")
 
-    // stdout stays short (the driver log tail is bounded): defaults +
-    // the headline numbers only
-    println(
-      s"""{"bench":"dedup_recall","n_docs":$nDocs,""" +
-        s""""default_recall_j_ge_0.8":${fmt(dHi, 4)},""" +
-        s""""default_recall_thr_0.5":${fmt(dflt.sum._5, 4)},""" +
-        s""""default_precision_thr_0.5":${fmt(dflt.sum._4, 4)},""" +
-        s""""arms":${results.size}}""")
-    spark.stop()
+    def curveJson(band: String, c: Seq[(Long, Long, Long, Double)]) =
+      c.map { case (b, t, h, rec) =>
+        (band -> b) ~ ("n_truth" -> t) ~ ("n_hit" -> h) ~ ("recall" -> rec)
+      }
+    val armJson = results.map { r =>
+      val (st, sc, shh, p, rec) = r.sum
+      ("w" -> r.arm.w) ~ ("k" -> r.arm.k) ~ ("bands" -> r.arm.bands) ~
+        ("rows_per_band" -> r.arm.k / r.arm.bands) ~ ("secs" -> r.secs) ~
+        ("curve" -> curveJson("band", r.curve)) ~
+        ("at_threshold_0.5" -> (("n_truth" -> st) ~ ("n_cand" -> sc) ~
+          ("n_hit" -> shh) ~ ("precision" -> p) ~ ("recall" -> rec)))
+    }
+    ("bench" -> "dedup_recall") ~ ("n_base" -> nBase) ~ ("n_docs" -> nDocs) ~
+      ("perturbs" -> perturbs) ~
+      ("truth" -> byW.toSeq.sortBy(_._1).map { case (w, (_, _, s, n)) =>
+        ("w" -> w) ~ ("secs" -> s) ~ ("n_pairs" -> n)
+      }) ~
+      ("containment_blind_spot" -> curveJson("j_band", contCurve)) ~
+      ("arms" -> armJson) ~
+      ("default_recall_j_ge_0.8" -> dHi) ~
+      ("default_recall_thr_0.5" -> dflt.sum._5) ~
+      ("default_precision_thr_0.5" -> dflt.sum._4)
   }
 }

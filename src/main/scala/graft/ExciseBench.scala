@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.{runNoop, time}
 
 /** Spot-bench for the round-7 excision family (q88 cross-doc span
   * excision / q90 intra-doc collapsing / q91 incremental
@@ -16,19 +18,17 @@ import org.apache.spark.sql.functions._
   * Measurements: q88 end-to-end on the replicated corpus; gram-index
   * build on one replica slice + the incremental probe of a second
   * slice against it (the q91/sink path — every probe span matches, the
-  * worst probe case); q90 at the same volume. One JSON line (the
-  * [[Bench]] discipline); recorded in BASELINE.md.
+  * worst probe case); q90 at the same volume. The [[ScaleBench]] family
+  * `excise`; recorded in BASELINE.md.
   */
 object ExciseBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.{fmt, runNoop, sfDir, time}
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
     val repl = BenchHarness.env("SPARK_GRAFT_REPL", "15").toInt
-    val cpus = BenchHarness.cpus()
-    val spark = BenchHarness.session(cpus)
 
-    val base = Tables.load(spark, sfDir, "documents")
+    val base = Tables.load(spark, ctx.sfDir, "documents")
       .select(col("doc_id"), col("text"))
-    val docs = BenchHarness.replicatedDocs(spark, sfDir, repl, cpus,
+    val docs = BenchHarness.replicatedDocs(spark, ctx.sfDir, repl, ctx.cpus,
       salt = false)
     val nDocs = docs.count()
 
@@ -59,7 +59,7 @@ object ExciseBench {
 
     // incremental path: standing index = replica 0, probe = replica 1
     // (every probe span matches — the worst probe case)
-    val idx = BenchHarness.tmp("graft_excbench_")
+    val idx = s"${ctx.tmp}/grams"
     val (_, tBuild) = time(graft.ops.Dedup.buildGramIndex(
       base, "text", idx, w = 8))
     val probe = base.select(
@@ -77,12 +77,10 @@ object ExciseBench {
     assert(nEmpty >= probed - shortDocs,
       s"full-dup probe should empty all long docs: $nEmpty of $probed (short=$shortDocs)")
 
-    println(
-      s"""{"bench":"excise_sf1","sf":"$sfDir","repl":$repl,"n_docs":$nDocs,""" +
-      s""""excise_s":${fmt(tExcise)},"collapse_s":${fmt(tCollapse)},""" +
-      s""""lines_s":${fmt(tLines)},""" +
-      s""""index_build_s":${fmt(tBuild)},"probe_s":${fmt(tProbe)},""" +
-      s""""probe_emptied":$nEmpty}""")
-    spark.stop()
+    ("bench" -> "excise_sf1") ~ ("repl" -> repl) ~ ("n_docs" -> nDocs) ~
+      ("excise_s" -> tExcise) ~ ("collapse_s" -> tCollapse) ~
+      ("lines_s" -> tLines) ~
+      ("index_build_s" -> tBuild) ~ ("probe_s" -> tProbe) ~
+      ("probe_emptied" -> nEmpty)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
 
 /** Spot-bench for the LEARNED-filter family at sf1-equivalent volume —
   * the [[PipelineBench]] recipe: the sf0.1 documents table replicated
@@ -24,52 +26,50 @@ import org.apache.spark.sql.functions._
   *    built-in BPE.
   *
   * Also recorded: per-replica-decade growth for the cross-ppl scorer
-  * (repl/5 vs repl volume) — the linearity check that the model-side
-  * aggregates stay bounded while the scored stream scales.
-  * One JSON line (the [[Bench]] discipline); recorded in BASELINE.md.
+  * (repl/3 vs repl volume) — the linearity check that the model-side
+  * aggregates stay bounded while the scored stream scales. Every time
+  * is the best of two runs. The [[ScaleBench]] family `filter`;
+  * recorded in BASELINE.md.
   */
 object FilterBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.{fmt, runNoop, sfDir, time}
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
     val repl = BenchHarness.env("SPARK_GRAFT_REPL", "15").toInt
-    val cpus = BenchHarness.cpus()
-    val spark = BenchHarness.session(cpus)
     val ta = graft.ops.TextAnalysis
 
-    val docs = BenchHarness.replicatedDocs(spark, sfDir, repl, cpus,
+    val docs = BenchHarness.replicatedDocs(spark, ctx.sfDir, repl, ctx.cpus,
       salt = true, extraCols = Seq("source", "lang"))
     val nDocs = docs.count()
-    val lv0 = BenchHarness.loadavg
 
-    def med(f: => org.apache.spark.sql.DataFrame): Double =
-      (1 to 2).map(_ => runNoop(f)).min
+    def best(f: => DataFrame): Double = BenchHarness.minOf(2)(BenchHarness.runNoop(f))
 
-    val tXent = med(ta.bigramLmScoreAgainst(
+    val tXent = best(ta.bigramLmScoreAgainst(
       docs.where(col("lang") === "en"), docs, "doc_id", "text"))
     val labeled = docs.withColumn("label",
       col("source").isin("src0", "src1", "src2").cast("int"))
-    val tNb = med(ta.naiveBayesScore(labeled, "doc_id", "text", "label"))
+    val tNb = best(ta.naiveBayesScore(labeled, "doc_id", "text", "label"))
     val tgt = col("source").isin("src0", "src1", "src2")
-    val tDsir = med(graft.ops.Sampling.dsirLogWeights(
+    val tDsir = best(graft.ops.Sampling.dsirLogWeights(
       docs, "doc_id", "text", tgt))
-    val tDsirTop = med(graft.ops.Sampling.dsirResample(
+    val tDsirTop = best(graft.ops.Sampling.dsirResample(
       docs, "doc_id", "text", tgt, n = (nDocs / 100).toInt.max(1)))
-    val tAudit = med(graft.ops.Analytics.scoreAudit(
+    val tAudit = best(graft.ops.Analytics.scoreAudit(
       ta.naiveBayesScore(labeled, "doc_id", "text", "label")
         .join(labeled.select(col("doc_id"), col("label")), Seq("doc_id")),
       "log_odds", "label", Seq(-4.0, -2.7, -1.5)))
-    val tFert = med(graft.ops.Packing.tokenizerFertility(
+    val tFert = best(graft.ops.Packing.tokenizerFertility(
       docs, "text", "lang", graft.functions.TokenCounters.tinyBpe))
-    val tCard = med(graft.ops.Packing.tokenizedCard(
+    val tCard = best(graft.ops.Packing.tokenizedCard(
       docs, "doc_id", "text", "source", 512,
       graft.functions.TokenCounters.tinyBpe))
 
     // linearity: the same cross-ppl job at 1/3 the replicas — the model
     // side is slice-bounded, so time should scale ~linearly in the
     // SCORED stream, not super-linearly in the corpus
-    val docsSmall = BenchHarness.replicatedDocs(spark, sfDir,
-      (repl / 3).max(1), cpus, salt = true, extraCols = Seq("source", "lang"))
-    val tXentSmall = med(ta.bigramLmScoreAgainst(
+    val docsSmall = BenchHarness.replicatedDocs(spark, ctx.sfDir,
+      (repl / 3).max(1), ctx.cpus, salt = true,
+      extraCols = Seq("source", "lang"))
+    val tXentSmall = best(ta.bigramLmScoreAgainst(
       docsSmall.where(col("lang") === "en"), docsSmall, "doc_id", "text"))
 
     // selection QUALITY, not just time: what fraction of the Gumbel
@@ -84,16 +84,13 @@ object FilterBench {
       .where(col("_t")).count()
     val baseRate = docs.where(tgt).count().toDouble / nDocs
 
-    println(
-      s"""{"bench":"filter_sf1","sf":"$sfDir","repl":$repl,""" +
-      s""""n_docs":$nDocs,"xent_s":${fmt(tXent)},"nb_s":${fmt(tNb)},""" +
-      s""""dsir_s":${fmt(tDsir)},"dsir_topk_s":${fmt(tDsirTop)},""" +
-      s""""audit_s":${fmt(tAudit)},"fertility_s":${fmt(tFert)},""" +
-      s""""card_s":${fmt(tCard)},""" +
-      s""""xent_third_volume_s":${fmt(tXentSmall)},""" +
-      s""""dsir_top${nSel}_target_frac":${fmt(selTgt.toDouble / nSel, 4)},""" +
-      s""""target_base_rate":${fmt(baseRate, 4)},""" +
-      s""""loadavg_before":"$lv0"}""")
-    spark.stop()
+    ("bench" -> "filter_sf1") ~ ("repl" -> repl) ~
+      ("n_docs" -> nDocs) ~ ("xent_s" -> tXent) ~ ("nb_s" -> tNb) ~
+      ("dsir_s" -> tDsir) ~ ("dsir_topk_s" -> tDsirTop) ~
+      ("audit_s" -> tAudit) ~ ("fertility_s" -> tFert) ~
+      ("card_s" -> tCard) ~
+      ("xent_third_volume_s" -> tXentSmall) ~
+      (s"dsir_top${nSel}_target_frac" -> selTgt.toDouble / nSel) ~
+      ("target_base_rate" -> baseRate)
   }
 }

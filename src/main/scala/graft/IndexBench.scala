@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.{dirBytes, medianOf, time}
 
 /** Spot-bench for the persisted ANN index layouts at a volume where scan
   * bandwidth is measurable — the evidence behind two claims the sf0.1
@@ -16,28 +18,20 @@ import org.apache.spark.sql.functions._
   * Corpus: `SPARK_GRAFT_VECS` (default 200k) deterministic 64-dim
   * vectors derived from md5 of the row id (seedless, reproducible).
   * Measures build once, then warm-median point probes and one batch
-  * k-NN join per layout. One JSON line on stdout (the [[Bench]]
-  * discipline); recorded in BASELINE.md.
+  * k-NN join per layout. The [[ScaleBench]] family `index`; recorded in
+  * BASELINE.md.
   */
 object IndexBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.{medianOf, time}
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
+    import spark.implicits._
     val nVecs = BenchHarness.env("SPARK_GRAFT_VECS", "200000").toInt
     val dim = 64
-    val spark = BenchHarness.session(BenchHarness.cpus(), logLevel = "ERROR")
-    import spark.implicits._
-
-    def dirBytes(p: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isFile) f.length()
-        else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      walk(new java.io.File(p))
-    }
-    def fmt(d: Double): String = BenchHarness.fmt(d, scale = 3)
 
     // deterministic corpus: component j of row i = centered md5 nibbles
     // (eps 0 in the shared recipe — the perturbation term vanishes)
-    val base = BenchHarness.tmp("graft_idxbench_")
+    val base = ctx.tmp
+    val sim = graft.ops.Similarity
     spark.range(nVecs.toLong)
       .select(col("id").as("vec_id"),
         expr(BenchHarness.md5VecSql("id", dim, "0.0d")).as("embedding"))
@@ -46,85 +40,77 @@ object IndexBench {
     val queryVec = emb.filter(col("vec_id") === 0L)
       .select(col("embedding")).as[Seq[Double]].head().toArray
 
-    val (_, tBuildF) = time(graft.ops.Similarity.buildIvfIndex(
+    val (_, tBuildF) = time(sim.buildIvfIndex(
       emb, "vec_id", "embedding", s"$base/ivf", nCells = 64))
-    val (_, tBuildQ) = time(graft.ops.Similarity.buildIvfIndexQuantized(
+    val (_, tBuildQ) = time(sim.buildIvfIndexQuantized(
       emb, "vec_id", "embedding", s"$base/ivfq", nCells = 64))
     val floatBytes = dirBytes(s"$base/ivf/data")
     val quantBytes = dirBytes(s"$base/ivfq/data")
 
-    val tPointF = medianOf(5)(graft.ops.Similarity.ivfIndexTopK(
-      spark, s"$base/ivf", "vec_id", "embedding", queryVec,
-      k = 10, nProbe = 4).collect())
-    val tPointQ = medianOf(5)(graft.ops.Similarity.ivfIndexQuantizedTopK(
-      spark, s"$base/ivfq", "vec_id", queryVec,
-      k = 10, nProbe = 4).collect())
+    val tPointF = medianOf(5)(sim.ivfIndexTopK(spark, s"$base/ivf",
+      "vec_id", "embedding", queryVec, k = 10, nProbe = 4).collect())
+    val tPointQ = medianOf(5)(sim.ivfIndexQuantizedTopK(spark, s"$base/ivfq",
+      "vec_id", queryVec, k = 10, nProbe = 4).collect())
 
     // batch join: every 1000th vector probes (file-backed -> DPP)
     emb.filter(col("vec_id") % 1000 === 0)
       .write.mode("overwrite").parquet(s"$base/queries")
     val queries = spark.read.parquet(s"$base/queries")
-    val tJoinF = medianOf(3)(graft.ops.Similarity.ivfIndexKnnJoin(
-      spark, s"$base/ivf", "vec_id", "embedding", queries,
-      "vec_id", "embedding", k = 10, nProbe = 4).collect())
-    val tJoinQ = medianOf(3)(graft.ops.Similarity.ivfIndexQuantizedKnnJoin(
-      spark, s"$base/ivfq", "vec_id", queries,
-      "vec_id", "embedding", k = 10, nProbe = 4).collect())
+    val tJoinF = medianOf(3)(sim.ivfIndexKnnJoin(spark, s"$base/ivf",
+      "vec_id", "embedding", queries, "vec_id", "embedding", k = 10,
+      nProbe = 4).collect())
+    val tJoinQ = medianOf(3)(sim.ivfIndexQuantizedKnnJoin(spark,
+      s"$base/ivfq", "vec_id", queries, "vec_id", "embedding", k = 10,
+      nProbe = 4).collect())
 
     // PQ rungs at the same volume: the measured form of the "~64×
     // narrower probe scan" claim. Flat PQ (codes only) and IVF-PQ
     // (cell-partitioned codes, the smallest-probe layout).
-    val (_, tBuildP) = time(graft.ops.Similarity.buildPqIndex(
+    val (_, tBuildP) = time(sim.buildPqIndex(
       emb, "vec_id", "embedding", s"$base/pq", m = 4, nCodes = 256))
-    val (_, tBuildIP) = time(graft.ops.Similarity.buildIvfPqIndex(
-      emb, "vec_id", "embedding", s"$base/ivfpq", nCells = 64,
-      m = 4, nCodes = 256))
+    val (_, tBuildIP) = time(sim.buildIvfPqIndex(emb, "vec_id",
+      "embedding", s"$base/ivfpq", nCells = 64, m = 4, nCodes = 256))
     val pqBytes = dirBytes(s"$base/pq/data")
     val ivfpqBytes = dirBytes(s"$base/ivfpq/data")
-    val tPointP = medianOf(5)(graft.ops.Similarity.pqIndexTopK(
+    val tPointP = medianOf(5)(sim.pqIndexTopK(
       spark, s"$base/pq", "vec_id", queryVec, k = 10).collect())
-    val tPointIP = medianOf(5)(graft.ops.Similarity.ivfPqIndexTopK(
+    val tPointIP = medianOf(5)(sim.ivfPqIndexTopK(
       spark, s"$base/ivfpq", "vec_id", queryVec, k = 10, nProbe = 4).collect())
-    val tJoinP = medianOf(3)(graft.ops.Similarity.pqIndexKnnJoin(
-      spark, s"$base/pq", "vec_id", queries,
-      "vec_id", "embedding", k = 10).collect())
-    val tJoinIP = medianOf(3)(graft.ops.Similarity.ivfPqIndexKnnJoin(
-      spark, s"$base/ivfpq", "vec_id", queries,
-      "vec_id", "embedding", k = 10, nProbe = 4).collect())
-    val tRerank = medianOf(3)(graft.ops.Similarity.pqIndexKnnJoinRerank(
+    val tJoinP = medianOf(3)(sim.pqIndexKnnJoin(spark, s"$base/pq",
+      "vec_id", queries, "vec_id", "embedding", k = 10).collect())
+    val tJoinIP = medianOf(3)(sim.ivfPqIndexKnnJoin(spark, s"$base/ivfpq",
+      "vec_id", queries, "vec_id", "embedding", k = 10, nProbe = 4).collect())
+    val tRerank = medianOf(3)(sim.pqIndexKnnJoinRerank(
       spark, s"$base/pq", emb, "vec_id", "embedding", queries,
       "vec_id", "embedding", k = 10, kCand = 100).collect())
 
     // the SCALE RECIPE rung (BASELINE.md "recall at scale": residual
     // IVF-PQ, cells ≈ cluster count, real code budget — 0.999 recall on
     // planted structure): its cost side at the same volume
-    val (_, tBuildR) = time(graft.ops.Similarity.buildIvfPqIndex(
+    val (_, tBuildR) = time(sim.buildIvfPqIndex(
       emb, "vec_id", "embedding", s"$base/ivfpq_res", nCells = 64,
       m = 16, nCodes = 256, kmeansIters = 3, residual = true))
     val resBytes = dirBytes(s"$base/ivfpq_res/data")
-    val tPointR = medianOf(5)(graft.ops.Similarity.ivfPqIndexTopK(
-      spark, s"$base/ivfpq_res", "vec_id", queryVec, k = 10,
-      nProbe = 6).collect())
-    val tJoinR = medianOf(3)(graft.ops.Similarity.ivfPqIndexKnnJoinRerank(
+    val tPointR = medianOf(5)(sim.ivfPqIndexTopK(spark, s"$base/ivfpq_res",
+      "vec_id", queryVec, k = 10, nProbe = 6).collect())
+    val tJoinR = medianOf(3)(sim.ivfPqIndexKnnJoinRerank(
       spark, s"$base/ivfpq_res", emb, "vec_id", "embedding", queries,
       "vec_id", "embedding", k = 10, kCand = 100, nProbe = 6).collect())
 
-    println(s"""{"metric":"index_bench","vecs":$nVecs,"dim":$dim,""" +
-      s""""float_mb":${fmt(floatBytes / 1e6)},"int8_mb":${fmt(quantBytes / 1e6)},""" +
-      s""""pq_mb":${fmt(pqBytes / 1e6)},"ivfpq_mb":${fmt(ivfpqBytes / 1e6)},""" +
-      s""""ivfpq_res_recipe_mb":${fmt(resBytes / 1e6)},""" +
-      s""""size_ratio":${fmt(floatBytes.toDouble / quantBytes)},""" +
-      s""""pq_size_ratio":${fmt(floatBytes.toDouble / pqBytes)},""" +
-      s""""build_s":{"float":${fmt(tBuildF)},"int8":${fmt(tBuildQ)},""" +
-      s""""pq":${fmt(tBuildP)},"ivfpq":${fmt(tBuildIP)},""" +
-      s""""ivfpq_res_recipe":${fmt(tBuildR)}},""" +
-      s""""point_s":{"float":${fmt(tPointF)},"int8":${fmt(tPointQ)},""" +
-      s""""pq":${fmt(tPointP)},"ivfpq":${fmt(tPointIP)},""" +
-      s""""ivfpq_res_recipe":${fmt(tPointR)}},""" +
-      s""""join_s":{"float":${fmt(tJoinF)},"int8":${fmt(tJoinQ)},""" +
-      s""""pq":${fmt(tJoinP)},"ivfpq":${fmt(tJoinIP)},""" +
-      s""""pq_rerank":${fmt(tRerank)},""" +
-      s""""ivfpq_res_recipe_rerank":${fmt(tJoinR)}}}""")
-    spark.stop()
+    ("metric" -> "index_bench") ~ ("vecs" -> nVecs) ~ ("dim" -> dim) ~
+      ("float_mb" -> floatBytes / 1e6) ~ ("int8_mb" -> quantBytes / 1e6) ~
+      ("pq_mb" -> pqBytes / 1e6) ~ ("ivfpq_mb" -> ivfpqBytes / 1e6) ~
+      ("ivfpq_res_recipe_mb" -> resBytes / 1e6) ~
+      ("size_ratio" -> floatBytes.toDouble / quantBytes) ~
+      ("pq_size_ratio" -> floatBytes.toDouble / pqBytes) ~
+      ("build_s" -> (("float" -> tBuildF) ~ ("int8" -> tBuildQ) ~
+        ("pq" -> tBuildP) ~ ("ivfpq" -> tBuildIP) ~
+        ("ivfpq_res_recipe" -> tBuildR))) ~
+      ("point_s" -> (("float" -> tPointF) ~ ("int8" -> tPointQ) ~
+        ("pq" -> tPointP) ~ ("ivfpq" -> tPointIP) ~
+        ("ivfpq_res_recipe" -> tPointR))) ~
+      ("join_s" -> (("float" -> tJoinF) ~ ("int8" -> tJoinQ) ~
+        ("pq" -> tJoinP) ~ ("ivfpq" -> tJoinIP) ~ ("pq_rerank" -> tRerank) ~
+        ("ivfpq_res_recipe_rerank" -> tJoinR)))
   }
 }

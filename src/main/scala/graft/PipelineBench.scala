@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.{minOf, time}
 
 /** End-to-end bench for the COMPOSED curation pipeline (q93 /
   * [[graft.ops.Curation.curate]]) at sf1-equivalent volume — the
@@ -19,23 +24,21 @@ import org.apache.spark.sql.functions._
   * Measured: standing key-index build (the %4==0 slice), the chained
   * clean → dedup → excise → decontaminate → sample → pack → order job
   * (one noop write), rows out, and the executed-plan exchange/scan
-  * counts of the final stage chain. One JSON line (the [[Bench]]
-  * discipline); recorded in BASELINE.md.
+  * counts of the final stage chain. The [[ScaleBench]] family
+  * `pipeline`; recorded in BASELINE.md.
   */
 object PipelineBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.{fmt, sfDir, time}
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
     val repl = BenchHarness.env("SPARK_GRAFT_REPL", "15").toInt
-    val cpus = BenchHarness.cpus()
-    val spark = BenchHarness.session(cpus)
 
-    val docs = BenchHarness.replicatedDocs(spark, sfDir, repl, cpus,
+    val docs = BenchHarness.replicatedDocs(spark, ctx.sfDir, repl, ctx.cpus,
       salt = true, extraCols = Seq("source"))
     val nDocs = docs.count()
 
     // standing corpus: the %4==0 slice, persisted key index (stage-2
     // input — an index is a pipeline INPUT, so its build is timed apart)
-    val keyDir = BenchHarness.tmp("graft_pipebench_")
+    val keyDir = s"${ctx.tmp}/keys"
     val (_, tBuild) = time(graft.ops.Dedup.buildExactKeyIndex(
       docs.filter(col("doc_id") % 4 === 0), "text", keyDir))
 
@@ -50,16 +53,14 @@ object PipelineBench {
     def cfgFor(strategy: String) = graft.ops.Curation.Config(
       budgets = budgets, materialize = strategy)
 
-    def runOnce(strategy: String = "local")
-        : (org.apache.spark.sql.DataFrame, Double) = time {
+    def runOnce(cfg: graft.ops.Curation.Config): (DataFrame, Double) = time {
       val result = graft.ops.Curation.curate(spark, batch,
         "doc_id", "text", "source",
-        keyIndexPath = Some(keyDir), benchmark = Some(bench),
-        cfg = cfgFor(strategy))
+        keyIndexPath = Some(keyDir), benchmark = Some(bench), cfg = cfg)
       result.write.format("noop").mode("overwrite").save()
       result
     }
-    val (out, tPipe) = runOnce()
+    val (out, tPipe) = runOnce(cfgFor("local"))
     val nOut = out.count()
     val plan = out.queryExecution.executedPlan.toString
     val nExchange = "(?i)exchange".r.findAllIn(plan).length
@@ -70,52 +71,37 @@ object PipelineBench {
     // under each Curation.materialize strategy, 2 runs each, best-of
     // (one warm run above already paged the corpus in). Lazy persists
     // are dropped between arms so no arm reads another's blocks.
-    val ab = for (strategy <- Seq("local", "disk", "memdisk", "none")) yield {
-      val ts = (1 to 2).map { _ =>
-        val t = runOnce(strategy)._2
+    val ab = for (strategy <- Seq("local", "disk", "memdisk", "none"))
+      yield strategy -> minOf(2) {
+        val t = runOnce(cfgFor(strategy))._2
         spark.catalog.clearCache()
         t
       }
-      strategy -> ts.min
-    }
 
     // per-source cap rung: the quality rank between decontamination and
     // sampling — its marginal cost over the uncapped run, with a cap
     // sized to genuinely cut (~half of each source's survivors)
     val capN = math.max(1, (nOut / 40).toInt)
-    val (capOut, tCap) = time {
-      val r = graft.ops.Curation.curate(spark, batch,
-        "doc_id", "text", "source",
-        keyIndexPath = Some(keyDir), benchmark = Some(bench),
-        cfg = cfgFor("local").copy(capPerSource = Some(capN)))
-      r.write.format("noop").mode("overwrite").save()
-      r
-    }
+    val (capOut, tCap) =
+      runOnce(cfgFor("local").copy(capPerSource = Some(capN)))
     val nCap = capOut.count()
 
     // curateTo: the write-terminal form that realizes the lazy-memdisk
     // win end-to-end AND unpersists behind itself — both the time and
     // the cache-residue claim are measured (cachedAfter must be 0)
-    val outDir = BenchHarness.tmp("graft_pipebench_out_")
-    val tTo = (1 to 2).map { _ =>
-      val (_, t) = time(graft.ops.Curation.curateTo(spark, batch,
-        "doc_id", "text", "source",
-        keyIndexPath = Some(keyDir), benchmark = Some(bench),
-        cfg = cfgFor("memdisk"), outPath = s"$outDir/curated"))
-      t
-    }.min
+    val tTo = minOf(2)(time(graft.ops.Curation.curateTo(spark, batch,
+      "doc_id", "text", "source",
+      keyIndexPath = Some(keyDir), benchmark = Some(bench),
+      cfg = cfgFor("memdisk"), outPath = s"${ctx.tmp}/out/curated"))._2)
     val cachedAfter = spark.sharedState.cacheManager.isEmpty
 
-    println(
-      s"""{"bench":"pipeline_sf1","sf":"$sfDir","repl":$repl,"n_docs":$nDocs,""" +
-      s""""key_index_build_s":${fmt(tBuild)},"pipeline_s":${fmt(tPipe)},""" +
-      s""""rows_out":$nOut,"final_stage_exchanges":$nExchange,""" +
-      s""""final_stage_scans":$nScan,"materialize_ab":{""" +
-      ab.map { case (s, t) => s""""$s":${fmt(t)}""" }.mkString(",") +
-      s"""},"cap_per_source":$capN,"cap_pipeline_s":${fmt(tCap)},""" +
-      s""""rows_out_capped":$nCap,""" +
-      s""""curate_to_memdisk_s":${fmt(tTo)},""" +
-      s""""cache_empty_after_curate_to":$cachedAfter}""")
-    spark.stop()
+    ("bench" -> "pipeline_sf1") ~ ("repl" -> repl) ~ ("n_docs" -> nDocs) ~
+      ("key_index_build_s" -> tBuild) ~ ("pipeline_s" -> tPipe) ~
+      ("rows_out" -> nOut) ~ ("final_stage_exchanges" -> nExchange) ~
+      ("final_stage_scans" -> nScan) ~ ("materialize_ab" -> ListMap(ab: _*)) ~
+      ("cap_per_source" -> capN) ~ ("cap_pipeline_s" -> tCap) ~
+      ("rows_out_capped" -> nCap) ~
+      ("curate_to_memdisk_s" -> tTo) ~
+      ("cache_empty_after_curate_to" -> cachedAfter)
   }
 }

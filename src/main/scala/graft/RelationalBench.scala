@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.time
 
 /** sf1 spot-bench for the RELATIONAL core (q01–q26, q12b/q17b) — the one
   * family whose scaling the per-round sf0.1 bench never measured. The
@@ -17,19 +22,19 @@ import org.apache.spark.sql.functions._
   *
   * Output: per-query seconds at the sf0.1 base and at the replica dir,
   * plus the ratio — a ratio well above the replication factor flags a
-  * superlinear scaler. One JSON line (the [[Bench]] discipline);
-  * recorded in BASELINE.md.
+  * superlinear scaler. The [[ScaleBench]] family `relational`; recorded
+  * in BASELINE.md.
   */
 object RelationalCoreBench {
   private val OFF = 100000000L
 
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.sfDir
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
+    val sfDir = ctx.sfDir
     val repl = BenchHarness.env("SPARK_GRAFT_REPL", "10").toInt
-    val spark = BenchHarness.session(BenchHarness.cpus())
     graft.functions.VectorFunctions.registerSql(spark)
 
-    val dir = BenchHarness.tmp("graft_relbench_")
+    val dir = ctx.tmp
     replicate(spark, sfDir, dir, repl)
 
     // the relational core: q01..q26 incl. the q12b/q17b twins
@@ -43,29 +48,21 @@ object RelationalCoreBench {
         catch { case _: Throwable => () }
       }
       core.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val t = try {
-          fn(spark, d).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-        (name, t)
+        name -> (try time(fn(spark, d).write.format("noop").mode("overwrite").save())._2
+                 catch { case _: Throwable => -1.0 })
       }
     }
 
     val base = timeAll(sfDir)
     val big = timeAll(dir)
-    def fmt(d: Double): String = BenchHarness.fmt(d, scale = 3)
-    def obj(ts: Seq[(String, Double)]): String =
-      ts.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val ratios = base.zip(big).map { case ((k, b), (_, g)) =>
       (k, if (b > 0 && g > 0) g / b else -1.0)
     }
-    println(
-      s"""{"bench":"relational_sf1","sf":"$sfDir","repl":$repl,""" +
-      s""""base_total":${fmt(base.map(_._2).filter(_ >= 0).sum)},""" +
-      s""""sf1_total":${fmt(big.map(_._2).filter(_ >= 0).sum)},""" +
-      s""""base":${obj(base)},"sf1":${obj(big)},"ratio":${obj(ratios)}}""")
-    spark.stop()
+    ("bench" -> "relational_sf1") ~ ("repl" -> repl) ~
+      ("base_total" -> base.map(_._2).filter(_ >= 0).sum) ~
+      ("sf1_total" -> big.map(_._2).filter(_ >= 0).sum) ~
+      ("base" -> ListMap(base: _*)) ~ ("sf1" -> ListMap(big: _*)) ~
+      ("ratio" -> ListMap(ratios: _*))
   }
 
   /** Key-consistent replication: every FK family shifts by r·OFF. */

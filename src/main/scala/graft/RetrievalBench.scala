@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.{runNoop, time}
 
 /** Scale-proof for the retrieval family (q75 tfidf / q76 bm25 / q85
   * bm25Join / q86 retrievalDecontaminate) on a ZIPFIAN corpus at
@@ -34,19 +37,17 @@ import org.apache.spark.sql.functions._
   *     decontamination-sized benchmark drawn from the same
   *     distribution (so query bags contain hot tokens).
   *
-  * Output: one compact JSON line on stdout (the [[Bench]] discipline);
-  * recorded in BASELINE.md's retrieval section.
+  * The [[ScaleBench]] family `retrieval`; recorded in BASELINE.md's
+  * retrieval section.
   */
 object RetrievalBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.{fmt, time}
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
     val nDocs = BenchHarness.env("SPARK_GRAFT_DOCS", "75000").toLong
     val vocab = BenchHarness.env("SPARK_GRAFT_VOCAB", "50000").toInt
     val docLen = BenchHarness.env("SPARK_GRAFT_DOCLEN", "200").toInt
     val nQueries = BenchHarness.env("SPARK_GRAFT_QUERIES", "500").toLong
     val qLen = 20
-    val cpus = BenchHarness.cpus()
-    val spark = BenchHarness.session(cpus)
 
     // Zipf(1.1) token for (id, slot, salt): bounded-Pareto inverse CDF
     // over ranks lo..V, driven by a deterministic per-slot uniform.
@@ -66,22 +67,20 @@ object RetrievalBench {
     val corpus = spark.range(nDocs)
       .select(col("id").as("doc_id"),
         concat_ws(" ", zipfTokens("id", docLen, 1)).as("text"))
-      .repartition(cpus.toInt)
+      .repartition(ctx.cpus)
       .localCheckpoint(true)
-    val benchmark = spark.range(nQueries)
+    def queries(salt: Int, lo: Int = 1) = spark.range(nQueries)
       .select(col("id").as("q_id"),
-        concat_ws(" ", zipfTokens("id", qLen, 2)).as("q_text"))
+        concat_ws(" ", zipfTokens("id", qLen, salt, lo)).as("q_text"))
       .localCheckpoint(true)
+    val benchmark = queries(2)
     // realistic benchmark items: tokens from ranks ≥ 40 — ABOVE the
     // maxDfFrac=0.5 cut, which in THIS corpus reaches rank ~31 (the
     // truncated inverse CDF fattens the head well past the analytic
     // Zipf estimate: measured df(20) = 49.8k, df(30) = 38.3k,
     // df(40) = 30.2k vs the 37.5k cut) — the way real eval questions
     // carry discriminative terms, not stopword bags
-    val benchmarkTail = spark.range(nQueries)
-      .select(col("id").as("q_id"),
-        concat_ws(" ", zipfTokens("id", qLen, 3, lo = 40)).as("q_text"))
-      .localCheckpoint(true)
+    val benchmarkTail = queries(3, lo = 40)
     corpus.count(); benchmark.count(); benchmarkTail.count()
 
     // ── 1. df microbench on the posting table ────────────────────────
@@ -109,10 +108,9 @@ object RetrievalBench {
       s"df forms must agree: window=$dfWindow twoLevel=$dfTwoLevel")
 
     // ── 2. end-to-end family ─────────────────────────────────────────
-    def run(df: DataFrame): Double = BenchHarness.runNoop(df)
-    val tTfidf = run(graft.ops.TextAnalysis.tfidf(corpus, "doc_id", "text"))
+    val tTfidf = runNoop(graft.ops.TextAnalysis.tfidf(corpus, "doc_id", "text"))
     // hot (t1, t3) + mid + rare terms in one bag
-    val tBm25 = run(graft.ops.TextAnalysis.bm25(corpus, "doc_id", "text",
+    val tBm25 = runNoop(graft.ops.TextAnalysis.bm25(corpus, "doc_id", "text",
       queryTerms = Seq("t1", "t3", "t120", "t9999")))
     // the hot-term throttle: stopword-grade terms (df > N/2 — the ~14
     // hottest ranks of this Zipf) dropped after df; surviving weights
@@ -133,20 +131,19 @@ object RetrievalBench {
     val (exactTail, tTailExact) = runJoin(benchmarkTail, 1.0)
     val (cappedTail, tTailCap) = runJoin(benchmarkTail, 0.5)
     val overlapTail = (exactTail & cappedTail).size.toDouble / exactTail.size
-    val tDecon = run(graft.ops.TextAnalysis.retrievalDecontaminate(
+    val tDecon = runNoop(graft.ops.TextAnalysis.retrievalDecontaminate(
       corpus, "doc_id", "text", benchmark, "q_id", "q_text"))
 
-    println(
-      s"""{"bench":"retrieval_zipf","n_docs":$nDocs,"vocab":$vocab,""" +
-      s""""doc_len":$docLen,"n_queries":$nQueries,"n_postings":$nPostings,""" +
-      s""""hot_token":"${hot.getString(0)}","hot_df":${hot.getLong(1)},""" +
-      s""""df_window_s":${fmt(tDfWindow)},"df_two_level_s":${fmt(tDfTwoLevel)},""" +
-      s""""tfidf_s":${fmt(tTfidf)},"bm25_s":${fmt(tBm25)},""" +
-      s""""bm25_join_s":${fmt(tJoin)},"bm25_join_capped_s":${fmt(tJoinCap)},""" +
-      s""""capped_top10_overlap":${fmt(overlap)},""" +
-      s""""tail_join_s":${fmt(tTailExact)},"tail_capped_s":${fmt(tTailCap)},""" +
-      s""""tail_top10_overlap":${fmt(overlapTail)},""" +
-      s""""decontaminate_s":${fmt(tDecon)}}""")
-    spark.stop()
+    ("bench" -> "retrieval_zipf") ~ ("n_docs" -> nDocs) ~ ("vocab" -> vocab) ~
+      ("doc_len" -> docLen) ~ ("n_queries" -> nQueries) ~
+      ("n_postings" -> nPostings) ~
+      ("hot_token" -> hot.getString(0)) ~ ("hot_df" -> hot.getLong(1)) ~
+      ("df_window_s" -> tDfWindow) ~ ("df_two_level_s" -> tDfTwoLevel) ~
+      ("tfidf_s" -> tTfidf) ~ ("bm25_s" -> tBm25) ~
+      ("bm25_join_s" -> tJoin) ~ ("bm25_join_capped_s" -> tJoinCap) ~
+      ("capped_top10_overlap" -> overlap) ~
+      ("tail_join_s" -> tTailExact) ~ ("tail_capped_s" -> tTailCap) ~
+      ("tail_top10_overlap" -> overlapTail) ~
+      ("decontaminate_s" -> tDecon)
   }
 }

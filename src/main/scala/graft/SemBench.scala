@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.time
 
 /** Spot-bench for the semantic-dedup family (q80 semDedup / q84 semantic
   * contamination pairs / semanticGateSink) at sf1-equivalent volume —
@@ -32,24 +34,20 @@ import org.apache.spark.sql.functions._
   *     [[graft.streaming.Streams.semanticGateSink]] — per-batch wall
   *     seconds and admitted counts (novel admitted, dups dropped).
   *
-  * One JSON line on stdout (the [[Bench]] discipline); recorded in
-  * BASELINE.md's semantic section.
+  * The [[ScaleBench]] family `sem`; recorded in BASELINE.md's semantic
+  * section.
   */
 object SemBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.time
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
+    import spark.implicits._
     val nVecs = BenchHarness.env("SPARK_GRAFT_VECS", "75000").toLong
     val batchRows = BenchHarness.env("SPARK_GRAFT_BATCH", "2500").toInt
-    val cpus = BenchHarness.cpus()
     val dim = 64
     val tau = 0.6
-    val spark = BenchHarness.session(cpus, logLevel = "ERROR")
-    import spark.implicits._
-
-    def fmt(d: Double): String = BenchHarness.fmt(d)
 
     // deterministic corpus; every 20th row ≈ its predecessor (dup pair)
-    val base = BenchHarness.tmp("graft_sembench_")
+    val base = ctx.tmp
     val vecExpr = (idRef: String, eps: String) =>
       BenchHarness.md5VecSql(idRef, dim, eps)
     val corpus = spark.range(nVecs)
@@ -57,7 +55,7 @@ object SemBench {
         expr(s"""CASE WHEN id % 20 = 0 AND id > 0
                  THEN ${vecExpr("id - 1", "0.01d")}
                  ELSE ${vecExpr("id", "0.0d")} END""").as("embedding"))
-      .repartition(cpus.toInt)
+      .repartition(ctx.cpus)
     corpus.write.mode("overwrite").parquet(s"$base/corpus")
     val emb = spark.read.parquet(s"$base/corpus")
 
@@ -92,7 +90,7 @@ object SemBench {
     val gate = graft.streaming.Streams.semanticGateSink(spark,
       mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
       s"$base/gate", s"$base/gate_ck", tau)
-    val batches = (0 until 3).map { b =>
+    val batches = try (0 until 3).map { b =>
       // half dups of standing rows (same md5 recipe, id < nVecs/2),
       // half novel (ids beyond the corpus)
       val rows = spark.range(batchRows)
@@ -103,28 +101,20 @@ object SemBench {
                    ELSE ${vecExpr(s"id + ${10000000L * (b + 1)}", "0.0d")} END""")
             .as("embedding"))
         .as[(Long, Seq[Double])].collect()
-      val (_, t) = time {
-        mem.addData(rows.toIndexedSeq)
-        gate.processAllAvailable()
-      }
-      t
-    }
-    gate.stop()
+      time { mem.addData(rows.toIndexedSeq); gate.processAllAvailable() }._2
+    } finally gate.stop()
     val admitted = spark.read.parquet(s"$base/gate/data").count() - nVecs / 2
     // ~half of each batch is novel; dups must not be admitted
     assert(admitted <= 3L * batchRows * 6 / 10,
       s"gate admitted $admitted of ${3 * batchRows} — dups leaking through")
 
-    val sweepJson = sweep.map { case (c, t, share, pairs, drops) =>
-      s"""{"n_cells":$c,"s":${fmt(t)},"max_share":${fmt(share)},""" +
-        s""""pairs":$pairs,"drops":$drops}"""
-    }.mkString(",")
-    println(
-      s"""{"bench":"semantic_sf1","n_vecs":$nVecs,"dim":$dim,"tau":$tau,""" +
-      s""""sweep":[$sweepJson],""" +
-      s""""gate_batch_rows":$batchRows,""" +
-      s""""gate_batch_s":[${batches.map(fmt).mkString(",")}],""" +
-      s""""gate_admitted":$admitted}""")
-    spark.stop()
+    ("bench" -> "semantic_sf1") ~ ("n_vecs" -> nVecs) ~ ("dim" -> dim) ~
+      ("tau" -> tau) ~
+      ("sweep" -> sweep.map { case (c, t, share, pairs, drops) =>
+        ("n_cells" -> c) ~ ("s" -> t) ~ ("max_share" -> share) ~
+          ("pairs" -> pairs) ~ ("drops" -> drops)
+      }) ~
+      ("gate_batch_rows" -> batchRows) ~ ("gate_batch_s" -> batches) ~
+      ("gate_admitted" -> admitted)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
 
 /** Throughput bench for the COMPOSED streaming ingest
   * ([[graft.streaming.Streams.curationIngestSink]]): standing indexes
@@ -20,35 +21,33 @@ import org.apache.spark.sql.functions._
   *    batch is the excise-everything worst case. Each replica carries
   *    its base doc's embedding (`doc_id % stride`), so the few rows
   *    that survive rung 2 meet their base at cosine 1 in rung 3.
-  *  - **Kill-and-resume**: the query is STOPPED at the halfway batch
-  *    and a fresh sink resumes from the checkpoint — the recorded
-  *    `resume_s` is recovery + that batch (centroid reload, offset
-  *    log replay, the batch itself).
+  *  - **Kill-and-resume** ([[BenchHarness.streamProtocol]]): the query
+  *    is STOPPED at the halfway batch and a fresh sink resumes from the
+  *    checkpoint — the recorded `resume_s` is recovery + that batch
+  *    (centroid reload, offset log replay, the batch itself).
   *  - **Convergence**: the final batch is RE-SENT verbatim (nulls and
   *    whitespace-only rows excluded — those pass the gate by
   *    contract); the output row count must not move. Asserted
   *    in-bench, recorded as `replay_s` / `replay_added`.
   *
-  * One JSON line (the [[Bench]] discipline); recorded in BASELINE.md's
+  * The [[ScaleBench]] family `stream_ingest`; recorded in BASELINE.md's
   * streaming-ingest section.
   */
 object StreamIngestBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.{fmt, sfDir, time}
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
+    import spark.implicits._
     val batchRows = BenchHarness.env("SPARK_GRAFT_BATCH_ROWS", "1250").toInt
     val repl = BenchHarness.env("SPARK_GRAFT_REPL", "1").toInt
-    val cpus = BenchHarness.cpus()
-    val spark = BenchHarness.session(cpus)
-    import spark.implicits._
 
-    val wd = BenchHarness.tmp("graft_streambench_")
+    val wd = ctx.tmp
     val (keyIdx, gramIdx, ivfIdx) = (s"$wd/keys", s"$wd/grams", s"$wd/ivf")
 
     val docs =
       if (repl <= 1)
-        Tables.load(spark, sfDir, "documents").select(col("doc_id"), col("text"))
-      else BenchHarness.replicatedDocs(spark, sfDir, repl, cpus, salt = true)
-    val embs = Tables.load(spark, sfDir, "embeddings")
+        Tables.load(spark, ctx.sfDir, "documents").select(col("doc_id"), col("text"))
+      else BenchHarness.replicatedDocs(spark, ctx.sfDir, repl, ctx.cpus, salt = true)
+    val embs = Tables.load(spark, ctx.sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val standing = docs.filter(col("doc_id") % 4 === 0)
     graft.ops.Dedup.buildExactKeyIndex(standing, "text", keyIdx)
@@ -70,59 +69,28 @@ object StreamIngestBench {
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, Array[Float])]
-    def start() = graft.streaming.Streams.curationIngestSink(spark,
-      mem.toDF().toDF("doc_id", "text", "embedding"),
-      "doc_id", "text", "embedding",
-      keyIdx, gramIdx, ivfIdx, s"$wd/out", s"$wd/ckpt")
-
     val batches = incoming.grouped(batchRows).toVector
-    val resumeAt = batches.size / 2
-    var q = start()
-    var resumeS = -1.0
-    val batchTimes = try {
-      batches.zipWithIndex.map { case (rows, i) =>
-        if (i == resumeAt && i > 0) {
-          // kill-and-resume: stop, enqueue, restart from the checkpoint
-          q.stop()
-          mem.addData(rows.toIndexedSeq)
-          val (q2, t) = time {
-            val qq = start(); qq.processAllAvailable(); qq
-          }
-          q = q2
-          resumeS = t
-          (rows.size, t)
-        } else {
-          mem.addData(rows.toIndexedSeq)
-          val (_, t) = time(q.processAllAvailable())
-          (rows.size, t)
-        }
-      }
-    } catch { case e: Throwable => q.stop(); throw e }
-
     // convergence: the last batch re-sent verbatim must admit NOTHING
     // (null/whitespace rows excluded — they pass through by contract)
     val replayRows = batches.last
       .filter(r => r._2 != null && r._2.trim.nonEmpty)
-    val before = spark.read.parquet(s"$wd/out").count()
-    mem.addData(replayRows.toIndexedSeq)
-    val (_, replayS) = time(q.processAllAvailable())
-    q.stop()
-    val after = spark.read.parquet(s"$wd/out").count()
-    assert(after == before,
-      s"re-sent batch must add nothing: $before -> $after")
+    val r = BenchHarness.streamProtocol[Array[(Long, String, Array[Float])]](
+      batches,
+      () => graft.streaming.Streams.curationIngestSink(spark,
+        mem.toDF().toDF("doc_id", "text", "embedding"),
+        "doc_id", "text", "embedding",
+        keyIdx, gramIdx, ivfIdx, s"$wd/out", s"$wd/ckpt"),
+      rows => mem.addData(rows.toIndexedSeq),
+      () => mem.addData(replayRows.toIndexedSeq),
+      () => spark.read.parquet(s"$wd/out").count(), "re-sent batch")
 
-    val totalRows = batchTimes.map(_._1).sum
-    val totalSec = batchTimes.map(_._2).sum
-    val admitted = spark.read.parquet(s"$wd/out").count()
-    println(
-      s"""{"bench":"stream_ingest","sf":"$sfDir","repl":$repl,""" +
-      s""""batch_rows":$batchRows,""" +
-      s""""n_batches":${batchTimes.size},"rows_in":$totalRows,""" +
-      s""""rows_admitted":$admitted,"total_s":${fmt(totalSec)},""" +
-      s""""rows_per_s":${fmt(totalRows / totalSec)},""" +
-      s""""resume_s":${fmt(resumeS)},"replay_s":${fmt(replayS)},""" +
-      s""""replay_added":${after - before},""" +
-      s""""batch_s":[${batchTimes.map(t => fmt(t._2)).mkString(",")}]}""")
-    spark.stop()
+    val totalRows = incoming.length
+    val totalSec = r.batchS.sum
+    ("bench" -> "stream_ingest") ~ ("repl" -> repl) ~
+      ("batch_rows" -> batchRows) ~
+      ("n_batches" -> batches.size) ~ ("rows_in" -> totalRows) ~
+      ("rows_admitted" -> (r.outRows + r.replayAdded)) ~
+      ("total_s" -> totalSec) ~ ("rows_per_s" -> totalRows / totalSec) ~
+      r.fields
   }
 }

@@ -25,8 +25,6 @@ object Tables {
     * conf this replaced was global state that bled into concurrent readers
     * of other nanos parquet in the same session).
     */
-  private[graft] def eventsRawSchema: StructType = eventsLongSchema
-
   private val eventsLongSchema = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", LongType),
@@ -72,11 +70,4 @@ object Tables {
           s"events.ts has unsupported type $other at $path")
     }
   }
-
-  /** Register every fixture table as a temp view (for the SQL surface —
-    * the reference pushes arbitrary SQL to its backing engine, ours is
-    * Spark SQL; see SURVEY.md §2.5 / reference task.py:180,256).
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.json4s.JsonDSL._
+
+import BenchHarness.{dirBytes, medianOf, time}
 
 /** Spot-bench for the WARC source at a volume where the fixture suite
   * (500 records at sf0.1) cannot show anything — the evidence behind
@@ -20,16 +23,15 @@ import org.apache.spark.sql.functions._
   * entity + charset mass included so decode is real work), written as
   * one `.warc.gz` and as 8 shards. Measures warm medians of the full
   * scan-decode-count (responses → html non-null count — forces parse +
-  * charset + materialization). One JSON line on stdout (the [[Bench]]
-  * discipline); recorded in BASELINE.md and WARC_BENCH.json.
+  * charset + materialization). The [[ScaleBench]] family `warc`;
+  * recorded in BASELINE.md.
   */
 object WarcBench {
-  def main(args: Array[String]): Unit = {
-    import BenchHarness.{medianOf, time}
+  def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
+    val spark = ctx.spark
     val n = BenchHarness.env("SPARK_GRAFT_WARC_RECORDS", "100000").toInt
-    val spark = BenchHarness.session(BenchHarness.cpus(), logLevel = "ERROR")
 
-    val base = BenchHarness.tmp("graft_warcbench_")
+    val base = ctx.tmp
     def html(i: Int): String = {
       val para = s"record $i the quick brown fox jumped over the lazy " +
         s"dog caf&eacute; r&#8217;s &mdash; block ${i % 97} " +
@@ -38,21 +40,17 @@ object WarcBench {
       s"<html><head><title>doc $i</title></head><body><h1>D$i</h1>" +
         s"<p>$para</p><ul><li>alpha $i</li><li>beta</li></ul></body></html>"
     }
-    def record(i: Int): Array[Byte] = {
-      val cs = Seq("utf-8", "iso-8859-1", "windows-1252")(i % 3)
+    // record i carrying record `content`'s html in its charset
+    def response(i: Int, content: Int, urn: String): Array[Byte] =
       graft.sources.WarcWriter.responseRecord(
-        s"https://bench.example/doc/$i", "2026-01-02T03:04:05Z",
-        s"<urn:bench:$i>", html(i), cs, declareInHeader = true)
-    }
+        s"https://bench.example/doc/$i", "2026-01-02T03:04:05Z", urn,
+        html(content), Seq("utf-8", "iso-8859-1", "windows-1252")(content % 3),
+        declareInHeader = true)
+    def record(i: Int): Array[Byte] = response(i, i, s"<urn:bench:$i>")
     // a record whose content is its group-of-3 LEADER's — byte-identical
     // re-fetches at the 3× rate for the digest arm
-    def record3dup(i: Int): Array[Byte] = {
-      val leader = i - i % 3
-      val cs = Seq("utf-8", "iso-8859-1", "windows-1252")(leader % 3)
-      graft.sources.WarcWriter.responseRecord(
-        s"https://bench.example/doc/$i", "2026-01-02T03:04:05Z",
-        f"<urn:bench:$i%09d>", html(leader), cs, declareInHeader = true)
-    }
+    def record3dup(i: Int): Array[Byte] =
+      response(i, i - i % 3, f"<urn:bench:$i%09d>")
     def mediaBody(i: Int): Array[Byte] = {
       val b = new Array[Byte](1500)
       var j = 0
@@ -60,7 +58,7 @@ object WarcBench {
       b(0) = 0x89.toByte; b(1) = 0x50; b(2) = 0x4E; b(3) = 0x47
       b
     }
-    def WarcWriter8shards(dir: String, rec: Int => Array[Byte]): Unit =
+    def write8shards(dir: String, rec: Int => Array[Byte]): Unit =
       (0 until 8).foreach { s =>
         graft.sources.WarcWriter.write(spark, s"$dir/crawl-$s.warc.gz",
           (s until n by 8).iterator.map(rec))
@@ -68,19 +66,7 @@ object WarcBench {
     // one big member-per-record gz + 8 shards of the same population
     val (_, tWrite1) = time(graft.sources.WarcWriter.write(spark,
       s"$base/one/crawl.warc.gz", (0 until n).iterator.map(record)))
-    val (_, tWrite8) = time {
-      (0 until 8).foreach { s =>
-        graft.sources.WarcWriter.write(spark,
-          s"$base/eight/crawl-$s.warc.gz",
-          (s until n by 8).iterator.map(record))
-      }
-    }
-    def dirBytes(p: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isFile) f.length()
-        else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      walk(new java.io.File(p))
-    }
+    val (_, tWrite8) = time(write8shards(s"$base/eight", record))
     val gzBytes = dirBytes(s"$base/one")
 
     def scan(path: String): Long = graft.sources.WarcReader
@@ -95,7 +81,7 @@ object WarcBench {
     // its group-of-3 leader's — byte-identical bytes, same digest).
     // responses() decodes all n; responsesDeduped() decodes n/3 — the
     // delta is the transcode work the pre-decode digest rung skips.
-    WarcWriter8shards(s"$base/dup", i => record3dup(i))
+    write8shards(s"$base/dup", i => record3dup(i))
     def scanDeduped(path: String): Long = graft.sources.WarcReader
       .responsesDeduped(spark, path)
       .where(col("html").isNotNull).count()
@@ -121,7 +107,7 @@ object WarcBench {
     // ── mixed-media arm: every other record is a ~1.5 KB binary
     // (image content type). The text-ish gate drops media pre-decode;
     // the decode-all arm transcodes the garbage too.
-    WarcWriter8shards(s"$base/mixed", i =>
+    write8shards(s"$base/mixed", i =>
       if (i % 2 == 0) record(i)
       else graft.sources.WarcWriter.mediaResponseRecord(
         s"https://bench.example/img/$i", "2026-01-02T03:04:05Z",
@@ -135,29 +121,19 @@ object WarcBench {
     val tMixGate = medianOf(3)(scan(s"$base/mixed"))
     val tMixAll = medianOf(3)(scanAll(s"$base/mixed"))
 
-    def fmt(d: Double): String = BenchHarness.fmt(d, scale = 3)
-    val recsPerSec1 = n / t1
-    val recsPerSec8 = n / t8
-    val json =
-      s"""{"metric":"warc_scan","records":$n,"gz_bytes":$gzBytes,""" +
-        s""""write_1f_s":${fmt(tWrite1)},"write_8f_s":${fmt(tWrite8)},""" +
-        s""""scan_1file_s":${fmt(t1)},"scan_8file_s":${fmt(t8)},""" +
-        s""""recs_per_s_1f":${fmt(recsPerSec1)},""" +
-        s""""recs_per_s_8f":${fmt(recsPerSec8)},""" +
-        s""""speedup_8f":${fmt(t1 / t8)},""" +
-        s""""dup3x_decode_all_s":${fmt(tDupAll)},""" +
-        s""""dup3x_digest_dedup_s":${fmt(tDupDd)},""" +
-        s""""dup3x_dedup_speedup":${fmt(tDupAll / tDupDd)},""" +
-        s""""dup3x_intake_plain_s":${fmt(tDupIntakePlain)},""" +
-        s""""dup3x_intake_digest_s":${fmt(tDupIntakeDd)},""" +
-        s""""dup3x_intake_speedup":${fmt(tDupIntakePlain / tDupIntakeDd)},""" +
-        s""""mixed_gate_s":${fmt(tMixGate)},""" +
-        s""""mixed_decode_all_s":${fmt(tMixAll)},""" +
-        s""""mixed_gate_speedup":${fmt(tMixAll / tMixGate)}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_WARC_BENCH_OUT", "WARC_BENCH.json")),
-      (json + "\n").getBytes("UTF-8"))
-    println(json)
-    spark.stop()
+    ("metric" -> "warc_scan") ~ ("records" -> n) ~ ("gz_bytes" -> gzBytes) ~
+      ("write_1f_s" -> tWrite1) ~ ("write_8f_s" -> tWrite8) ~
+      ("scan_1file_s" -> t1) ~ ("scan_8file_s" -> t8) ~
+      ("recs_per_s_1f" -> n / t1) ~ ("recs_per_s_8f" -> n / t8) ~
+      ("speedup_8f" -> t1 / t8) ~
+      ("dup3x_decode_all_s" -> tDupAll) ~
+      ("dup3x_digest_dedup_s" -> tDupDd) ~
+      ("dup3x_dedup_speedup" -> tDupAll / tDupDd) ~
+      ("dup3x_intake_plain_s" -> tDupIntakePlain) ~
+      ("dup3x_intake_digest_s" -> tDupIntakeDd) ~
+      ("dup3x_intake_speedup" -> tDupIntakePlain / tDupIntakeDd) ~
+      ("mixed_gate_s" -> tMixGate) ~
+      ("mixed_decode_all_s" -> tMixAll) ~
+      ("mixed_gate_speedup" -> tMixAll / tMixGate)
   }
 }

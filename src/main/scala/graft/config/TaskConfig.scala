@@ -114,11 +114,6 @@ object TaskConfig {
       case JObject(fields) => fields
       case _               => Seq.empty
     }
-
-    def asString: Option[String] = j match {
-      case JString(s) => Some(s)
-      case _          => None
-    }
   }
 
   /** Whole task file: tasks + optional connections + optional schedule
