@@ -131,4 +131,38 @@ class JdbcTaskSpec extends SparkSpec {
     val out = Files.readString(Paths.get(s"$wd/output/kv.csv"))
     assert(out == "k,v\na,1\nb,2\n")
   }
+
+  private def logFiles(wd: String, prefix: String): Seq[String] =
+    Files.list(Paths.get(s"$wd/log")).toArray.map(_.toString).toSeq
+      .filter(_.split('/').last.startsWith(prefix))
+
+  test("db-csv over a non-empty table whose filter drops every row still writes: header on truncate, nothing appended") {
+    val (wd, db) = setup()
+    Files.writeString(Paths.get(s"$wd/output/kept.csv"), "NAME,BAL\nold,1\n")
+    run(wd,
+      s"""{${connections(db)}, "tasks": [
+         |  {"type": "sql-exec", "name": "ddl",
+         |   "source": {"command": "CREATE TABLE people (name VARCHAR(50), bal VARCHAR(20))"},
+         |   "target": {"connection": "main"}},
+         |  {"type": "csv-db", "name": "load",
+         |   "source": {"file": "people.csv"},
+         |   "target": {"connection": "main", "table": "people"}},
+         |  {"type": "db-csv", "name": "fresh",
+         |   "source": {"connection": "main", "command": "SELECT name, bal FROM people"},
+         |   "transform": {"filter": "{BAL} == 'none'"},
+         |   "target": {"file": "fresh.csv", "truncate": true, "delimiter": ","}},
+         |  {"type": "db-csv", "name": "kept",
+         |   "source": {"connection": "main", "command": "SELECT name, bal FROM people"},
+         |   "transform": {"filter": "{BAL} == 'none'"},
+         |   "target": {"file": "kept.csv", "delimiter": ","}}
+         |]}""".stripMargin)
+    assert(Files.readString(Paths.get(s"$wd/output/fresh.csv")) == "NAME,BAL\n")
+    assert(Files.readString(Paths.get(s"$wd/output/kept.csv")) == "NAME,BAL\nold,1\n")
+    Seq("fresh", "kept").foreach { name =>
+      val logs = logFiles(wd, s"db-csv_${name}_")
+      assert(logs.size == 1, s"one per-task log for $name, got $logs")
+      val log = Files.readString(Paths.get(logs.head))
+      assert(log.contains("wrote ") && log.contains("0 rows written in"), log)
+    }
+  }
 }
