@@ -26,20 +26,22 @@ object TaskLog {
     def write(msg: String): Unit = ()
   }
 
-  /** Writes to a file, optionally echoing to the console. */
+  /** Writes to a file, optionally echoing to the console. The file is
+    * opened on the first write: a log that is never written leaves none.
+    */
   final class FileLog(path: String, verbose: Boolean) extends TaskLog {
-    new File(path).getParentFile match {
-      case null => ()
-      case p    => p.mkdirs()
-    }
-    private val out = new PrintWriter(new FileWriter(path, true))
+    private var out: PrintWriter = null
     def write(msg: String): Unit = {
+      if (out == null) {
+        Option(new File(path).getParentFile).foreach(_.mkdirs())
+        out = new PrintWriter(new FileWriter(path, true))
+      }
       val line = s"${LocalDateTime.now.format(DateTimeFormatter.ISO_LOCAL_DATE_TIME)} $msg"
       out.println(line)
       out.flush()
       if (verbose) println(line)
     }
-    override def close(): Unit = out.close()
+    override def close(): Unit = if (out != null) out.close()
   }
 
   def forRun(logDir: String, verbose: Boolean): TaskLog =

@@ -21,11 +21,16 @@ import org.apache.spark.sql.DataFrame
   */
 object CsvSink {
 
-  def write(df: DataFrame, targetFile: String, node: Node, truncate: Boolean): Unit = {
+  /** `keep` is read once a single-file write's job has run: false drops
+    * the staged output and leaves the target untouched. A distributed
+    * write cannot be taken back and ignores it.
+    */
+  def write(df: DataFrame, targetFile: String, node: Node, truncate: Boolean,
+            keep: => Boolean = true): Unit = {
     val sep = node.str("delimiter", ";")
     val enc = node.str("encoding", "utf-8")
     val singleFile = node.bool("single_file", default = true)
-    if (singleFile) writeSingle(df, targetFile, sep, enc, truncate)
+    if (singleFile) writeSingle(df, targetFile, sep, enc, truncate, keep)
     else {
       val writer = df.write
         .option("header", truncate.toString) // append carries no header (petl appendcsv)
@@ -38,7 +43,7 @@ object CsvSink {
   }
 
   private def writeSingle(df: DataFrame, targetFile: String, sep: String,
-                          enc: String, truncate: Boolean): Unit = {
+                          enc: String, truncate: Boolean, keep: => Boolean): Unit = {
     val tmp = Files.createTempDirectory("graft_csv_").toString
     val tmpOut = s"$tmp/out"
     // coalesce(1) is narrow, so it adds no shuffle: the whole stage that
@@ -51,19 +56,21 @@ object CsvSink {
         .option("encoding", enc)
         .option("emptyValue", "")
         .csv(tmpOut)
-      val part = new File(tmpOut).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-        .getOrElse(throw new IllegalStateException(s"no part file produced in $tmpOut"))
-      val target = Paths.get(targetFile)
-      Option(target.getParent).foreach(Files.createDirectories(_))
-      if (truncate)
-        Files.move(part.toPath, target, StandardCopyOption.REPLACE_EXISTING)
-      else {
-        // stream the part into the target — never buffer the whole file in
-        // driver memory
-        val out = Files.newOutputStream(target,
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-        try Files.copy(part.toPath, out) finally out.close()
+      if (keep) {
+        val part = new File(tmpOut).listFiles()
+          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+          .getOrElse(throw new IllegalStateException(s"no part file produced in $tmpOut"))
+        val target = Paths.get(targetFile)
+        Option(target.getParent).foreach(Files.createDirectories(_))
+        if (truncate)
+          Files.move(part.toPath, target, StandardCopyOption.REPLACE_EXISTING)
+        else {
+          // stream the part into the target — never buffer the whole file in
+          // driver memory
+          val out = Files.newOutputStream(target,
+            StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+          try Files.copy(part.toPath, out) finally out.close()
+        }
       }
     } finally deleteRecursively(new File(tmp))
   }

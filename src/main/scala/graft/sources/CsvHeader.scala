@@ -10,15 +10,19 @@ import org.apache.spark.sql.execution.datasources.CodecStreams
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** The all-string schema Spark's CSV reader infers under `header=true,
-  * inferSchema=false`, built on the driver from a single file's header line
-  * instead of by a Spark job. `None` (a directory, a glob not matching
-  * exactly one file, a file with no header line) leaves it to Spark. Lives
-  * in Spark's package space: `CSVOptions` and `CSVUtils` are private[sql].
+/** What Spark's CSV reader makes of a single file under `header=true,
+  * inferSchema=false`, found on the driver instead of by a Spark job: the
+  * all-string schema its header inference builds, and whether its data
+  * path yields any row. The read stops at the first data row. `None` (a
+  * directory, a glob not matching exactly one file, a file with no header
+  * line) leaves both to Spark. Lives in Spark's package space:
+  * `CSVOptions` and `CSVUtils` are private[sql].
   */
 object CsvHeader {
-  def schema(spark: org.apache.spark.sql.SparkSession, path: String,
-             options: Map[String, String]): Option[StructType] = {
+  private val Bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte)
+
+  def read(spark: org.apache.spark.sql.SparkSession, path: String,
+           options: Map[String, String]): Option[(StructType, Boolean)] = {
     val state = spark.asInstanceOf[SparkSession].sessionState
     val conf = state.newHadoopConfWithOptions(options)
     val csv = new CSVOptions(options, state.conf.csvColumnPruning, state.conf.sessionLocalTimeZone)
@@ -27,18 +31,33 @@ object CsvHeader {
       .flatMap { file =>
         val in = CodecStreams.createInputStream(conf, file)
         try {
-          val lines = csv.lineSeparatorInRead.fold(new LineReader(in))(new LineReader(in, _))
+          val reader = csv.lineSeparatorInRead.fold(new LineReader(in))(new LineReader(in, _))
           val text = new Text
+          val lines = Iterator.continually(reader.readLine(text)).takeWhile(_ > 0).zipWithIndex
+            .map { case (_, i) =>
+              // Hadoop's LineRecordReader, which feeds both of Spark's
+              // reads, drops a UTF-8 byte order mark from the first line
+              val skip = if (i == 0 && text.getLength >= 3 && text.getBytes.startsWith(Bom)) 3 else 0
+              new String(text.getBytes, skip, text.getLength - skip, csv.charset)
+            }
+            .filterNot(l => csv.isCommentSet && l.startsWith(csv.comment.toString))
           // CSVUtils.readHeaderLine, but skipping only the lines Spark's
           // first-line query skips: empty or all spaces (SQL trim keeps a
-          // tab-only line, String.trim drops it), and comments
-          Iterator.continually(lines.readLine(text)).takeWhile(_ > 0)
-            .map(_ => new String(text.getBytes, 0, text.getLength, csv.charset))
-            .find(l => l.exists(_ != ' ') && !(csv.isCommentSet && l.startsWith(csv.comment.toString)))
+          // tab-only line, String.trim drops it)
+          val rest = lines.dropWhile(!_.exists(_ != ' '))
+          rest.nextOption().map { header =>
+            // the data path (CSVExprUtils) drops every line whose
+            // String.trim is empty, then the first line left as the
+            // header: any later line is a row
+            (header, (Iterator(header) ++ rest).filter(_.trim.nonEmpty).drop(1).hasNext)
+          }
         } finally in.close()
       }
-      .flatMap(line => Option(new CsvParser(csv.asParserSettings).parseLine(line)))
-      .map(row => StructType(CSVUtils.makeSafeHeader(row, state.conf.caseSensitiveAnalysis, csv)
-        .map(StructField(_, StringType))))
+      .flatMap { case (line, rows) =>
+        Option(new CsvParser(csv.asParserSettings).parseLine(line)).map { cells =>
+          (StructType(CSVUtils.makeSafeHeader(cells, state.conf.caseSensitiveAnalysis, csv)
+            .map(StructField(_, StringType))), rows)
+        }
+      }
   }
 }

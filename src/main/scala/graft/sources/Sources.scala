@@ -15,7 +15,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * For a single file the header is read on the driver
   * ([[org.apache.spark.sql.graft.CsvHeader]]) and handed to the reader as
   * its schema, so no Spark job runs to find it; a directory or a glob
-  * matching several files keeps Spark's own inference.
+  * matching several files keeps Spark's own inference. The same read
+  * tells whether the file holds a data row ([[csvWithRows]]), which lets
+  * an ETL task skip an empty source without a Spark job.
   * Typed columns are opt-in via a source `"schema"` node —
   * `{"schema": {"name": "string", "bal": "int"}}` — parsed as Spark DDL
   * in declaration order (position-mapped to the file, like the header).
@@ -56,29 +58,41 @@ object Sources {
           schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).orc(path)
 
-  def csv(spark: SparkSession, path: String, node: Node): DataFrame = {
+  def csv(spark: SparkSession, path: String, node: Node): DataFrame =
+    csvWithRows(spark, path, node)._1
+
+  /** [[csv]], with whether the source holds a data row when the driver-side
+    * header read can tell: a single regular file with a header line, in
+    * both the inferred and the typed-`schema` branch. `None` (a directory,
+    * a glob, a missing path, a 0-byte or blank file) leaves it to a Spark
+    * job.
+    */
+  private[graft] def csvWithRows(spark: SparkSession, path: String,
+                                 node: Node): (DataFrame, Option[Boolean]) = {
     val options = Map("header" -> "true", "inferSchema" -> "false",
       "sep" -> node.str("delimiter", ";"),
       "encoding" -> node.str("encoding", "utf-8"))
     val reader = spark.read.options(options)
+    val head = CsvHeader.read(spark, path, options)
     val fields = node.objFields("schema")
-    if (fields.isEmpty)
-      CsvHeader.schema(spark, path, options).fold(reader.csv(path))(reader.schema(_).csv(path))
-    else {
-      // {"schema": {"col": "type", ...}} — declaration order maps to file
-      // column order, types are Spark DDL (int, bigint, double, date,
-      // decimal(10,2), ...). Never inference: the declared schema is the
-      // contract, malformed cells become null (Spark's permissive mode)
-      // exactly like a failed petl convert.
-      val ddl = fields.map { case (name, t) =>
-        val tpe = t match {
-          case org.json4s.JString(s) => s
-          case other                 => other.values.toString
-        }
-        s"`$name` $tpe"
-      }.mkString(", ")
-      reader.schema(StructType.fromDDL(ddl)).csv(path)
-    }
+    val df =
+      if (fields.isEmpty) head.fold(reader.csv(path)) { case (schema, _) => reader.schema(schema).csv(path) }
+      else {
+        // {"schema": {"col": "type", ...}} — declaration order maps to file
+        // column order, types are Spark DDL (int, bigint, double, date,
+        // decimal(10,2), ...). Never inference: the declared schema is the
+        // contract, malformed cells become null (Spark's permissive mode)
+        // exactly like a failed petl convert.
+        val ddl = fields.map { case (name, t) =>
+          val tpe = t match {
+            case org.json4s.JString(s) => s
+            case other                 => other.values.toString
+          }
+          s"`$name` $tpe"
+        }.mkString(", ")
+        reader.schema(StructType.fromDDL(ddl)).csv(path)
+      }
+    (df, head.map(_._2))
   }
 
   /** SQL statement assembly (reference _parse_sql, task.py:94-107):

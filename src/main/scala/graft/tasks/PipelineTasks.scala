@@ -23,12 +23,14 @@ import org.json4s.{JDecimal, JDouble, JInt, JString}
   */
 object PipelineTasks {
 
-  private def sourceDf(ctx: TaskContext, task: Node): DataFrame = {
+  /** The task's source, with whether it holds a row when that is known
+    * without a Spark job (a single CSV file).
+    */
+  private def sourceDf(ctx: TaskContext, task: Node): (DataFrame, Option[Boolean]) = {
     val src = task("source")
     val path = s"${ctx.dir(src.str("folder", "input"))}/${src.str("file")}"
-    src.str("format", "parquet") match {
+    def read: DataFrame = src.str("format", "parquet") match {
       case "parquet" => ctx.spark.read.parquet(path)
-      case "csv"     => graft.sources.Sources.csv(ctx.spark, path, src)
       case "jsonl"   => src.strOpt("schema") match {
         // "schema" is a DDL string ("doc_id LONG, text STRING"). Omitting
         // it falls back to inference — fine for a one-off task file,
@@ -64,6 +66,8 @@ object PipelineTasks {
           robotsGate = src.flag("robots_gate"))
       case f => throw new IllegalArgumentException(s"unknown source format: $f")
     }
+    if (src.str("format", "parquet") == "csv") graft.sources.Sources.csvWithRows(ctx.spark, path, src)
+    else (read, None)
   }
 
   private def sink(ctx: TaskContext, task: Node)(df: DataFrame,
@@ -75,7 +79,7 @@ object PipelineTasks {
         df.write.mode(if (tgt.bool("truncate")) "overwrite" else "append")
           .format(if (f == "jsonl") "json" else f).save(out)
         lg.write(s"wrote $out")
-      case "csv" => Tasks.csvTarget(ctx, task)(df, lg, meter)
+      case "csv" => Tasks.CsvTarget(ctx, task)(df, lg, meter)
       case "warc" =>
         // crawl REPACK: rows in the WarcRecord response projection
         // (url/warc_date/record_id/http_status?/http_content_type?/
@@ -420,7 +424,7 @@ object PipelineTasks {
         case "records"   => graft.sources.WarcReader.read(ctx.spark, path).toDF
         case m => throw new IllegalArgumentException(s"unknown warc mode: $m")
       }
-      Tasks.etl(ctx, task, log, "warc")(df) { (d, lg, meter) =>
+      Tasks.etl(ctx, task, log, "warc")((df, None)) { (d, lg, meter) =>
         sink(ctx, task)(d, lg, meter)
       }
     }
@@ -726,7 +730,7 @@ object PipelineTasks {
   object FitTask extends Task {
     def run(ctx: TaskContext, task: Node, log: TaskLog): Unit = {
       val cfg = task("fit")
-      val df0 = sourceDf(ctx, task)
+      val (df0, _) = sourceDf(ctx, task)
       val df = cfg.strOpt("train_where").map(w => df0.where(expr(w)))
         .getOrElse(df0)
       val path = ctx.dir(cfg.str("model"))

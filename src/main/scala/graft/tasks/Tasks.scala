@@ -2,14 +2,17 @@ package graft.tasks
 
 import graft.config.TaskConfig.Node
 import graft.connections.Connections
-import graft.runner.TaskLog
+import graft.runner.{ProgressMeter, TaskLog}
 import graft.sinks.CsvSink
 import graft.sources.Sources
 import graft.transform.Transforms
 import java.io.File
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import scala.util.Try
 
 /** Execution context shared by all tasks: the session, the connection
   * registry, and the working directory holding the reference's standard
@@ -35,12 +38,20 @@ trait CustomTask {
   * (TaskFactory._tasks, task.py:577-594), Spark-first.
   *
   * Shared ETL semantics (SURVEY.md §2.2/§2.4):
-  *  - empty source → "Task skipped. No rows on source", sink untouched.
-  *    We probe with isEmpty (one lightweight job) instead of the
-  *    reference's double materialization (task.py:181 re-runs the source).
-  *  - a CSV-sourced task runs two Spark jobs: that probe and the sink's
-  *    write. The header is read on the driver ([[Sources.csv]]) and the
-  *    transform block is analysed as one projection per step.
+  *  - empty source → "Task skipped. No rows on source", sink untouched,
+  *    no per-task log file. The reference runs the source twice to learn
+  *    this (task.py:181); graft asks the cheapest place that knows:
+  *     - a single-file CSV source is read on the driver up to its first
+  *       data row ([[Sources.csvWithRows]]), so no Spark job runs;
+  *     - any other source into a single-file CSV target is counted by
+  *       an `observe` node during the write job itself, whose output
+  *       waits in a temp dir and is dropped when the count is 0;
+  *     - everything else (a CSV directory, a distributed CSV or a JDBC
+  *       target, the pipeline sinks, whose writes cannot be taken back)
+  *       probes with `isEmpty`, one lightweight job.
+  *  - so a CSV-sourced task runs one Spark job, the sink's write: the
+  *    header is read on the driver too, and the transform block is
+  *    analysed as one projection per step.
   *  - transform block order fixed: modules → convert → filter → remove →
   *    rename.
   *  - truncate vs append per sink type.
@@ -48,40 +59,78 @@ trait CustomTask {
   */
 object Tasks {
 
+  private val NoRows = "Task skipped. No rows on source"
+
+  /** Runs one ETL task: `source` gives the frame and, when known without
+    * a Spark job, whether it holds a row.
+    */
   private[tasks] def etl(ctx: TaskContext, task: Node, log: TaskLog, taskType: String)
-                 (source: => DataFrame)
-                 (sink: (DataFrame, TaskLog, graft.runner.ProgressMeter) => Unit): Unit = {
-    val df = source
-    if (df.isEmpty) log.write("Task skipped. No rows on source")
+                 (source: => (DataFrame, Option[Boolean]))
+                 (sink: (DataFrame, TaskLog, ProgressMeter) => Unit): Unit = {
+    val (df, hasRows) = source
+    val counted = sink match {
+      case t: CsvTarget if hasRows.isEmpty && t.staged => Some(t)
+      case _                                         => None
+    }
+    if (!hasRows.getOrElse(counted.nonEmpty || !df.isEmpty)) log.write(NoRows)
     else {
-      val out = Transforms(df, task, log, Some(ctx.workDir))
+      // counted below the transforms: a filter that drops every row
+      // still writes, as with a probed source
+      val rows = Observation()
+      val out = Transforms(if (counted.isEmpty) df else df.observe(rows, count(lit(1)).as("n")),
+        task, log, Some(ctx.workDir))
+      // the count arrives through the listener bus; a plan that pruned it
+      // away (a constant-false filter above the source) falls back to a probe
+      lazy val keep = counted.isEmpty || {
+        ListenerBridge.drain(ctx.spark.sparkContext, 5000)
+        rows.future.value.flatMap(_.toOption).flatMap(r => Try(r.getAs[Long]("n")).toOption)
+          .fold(!df.isEmpty)(_ != 0L)
+      }
       val taskLog = TaskLog.forTask(ctx.logDir, taskType, task.str("name", "task"))
       // K5 progress metering (task.py:200): 10k-row ticks into the
-      // per-task log while the sink job runs, plus a final total line.
-      val meter = new graft.runner.ProgressMeter(taskLog)
-      try meter.metered(ctx.spark) { sink(out, taskLog, meter) }
-      finally taskLog.close()
+      // per-task log while the sink job runs, plus a final total line —
+      // kept out of the log when the write is dropped, so none appears
+      var dropped = false
+      val meter = new ProgressMeter(msg => if (!dropped) taskLog.write(msg))
+      try meter.metered(ctx.spark) {
+        counted.fold(sink(out, taskLog, meter))(_.write(out, taskLog, keep))
+        dropped = !keep
+      } finally taskLog.close()
+      if (dropped) log.write(NoRows)
     }
   }
 
-  private def csvSource(ctx: TaskContext, task: Node, defaultFolder: String): DataFrame = {
+  private def csvSource(ctx: TaskContext, task: Node, defaultFolder: String)
+      : (DataFrame, Option[Boolean]) = {
     val src = task("source")
     val folder = src.str("folder", defaultFolder)
-    Sources.csv(ctx.spark, s"${ctx.dir(folder)}/${src.str("file")}", src)
+    Sources.csvWithRows(ctx.spark, s"${ctx.dir(folder)}/${src.str("file")}", src)
   }
 
-  private[tasks] def csvTarget(ctx: TaskContext, task: Node)
-                       (df: DataFrame, lg: TaskLog, meter: graft.runner.ProgressMeter): Unit = {
-    val tgt = task("target")
-    val folder = tgt.str("folder", "output")
-    val out = s"${ctx.dir(folder)}/${tgt.str("file")}"
-    val truncate = tgt.bool("truncate")
-    CsvSink.write(df, out, tgt, truncate) // file sink: rows metered via native output metrics
-    lg.write(s"wrote $out (truncate=$truncate)")
+  /** A CSV target. A single-file one (the default) is `staged`: its write
+    * job lands in a temp dir that is merged into the target afterwards,
+    * so the write can still be dropped once the job has run.
+    */
+  private[tasks] final case class CsvTarget(ctx: TaskContext, task: Node)
+      extends ((DataFrame, TaskLog, ProgressMeter) => Unit) {
+    private val tgt = task("target")
+    val staged: Boolean = tgt.bool("single_file", default = true)
+
+    def apply(df: DataFrame, lg: TaskLog, meter: ProgressMeter): Unit = write(df, lg, keep = true)
+
+    /** Writes `df`; a staged target reads `keep` after the write job and
+      * leaves the target untouched when it is false.
+      */
+    def write(df: DataFrame, lg: TaskLog, keep: => Boolean): Unit = {
+      val out = s"${ctx.dir(tgt.str("folder", "output"))}/${tgt.str("file")}"
+      val truncate = tgt.bool("truncate")
+      CsvSink.write(df, out, tgt, truncate, keep) // file sink: rows metered via native output metrics
+      if (keep) lg.write(s"wrote $out (truncate=$truncate)")
+    }
   }
 
   private def dbTarget(ctx: TaskContext, task: Node)
-                      (df: DataFrame, lg: TaskLog, meter: graft.runner.ProgressMeter): Unit = {
+                      (df: DataFrame, lg: TaskLog, meter: ProgressMeter): Unit = {
     val tgt = task("target")
     val conn = ctx.connections.get(tgt.str("connection"))
     // JDBC writes report no output metrics — meter.wrap counts rows in-task.
@@ -125,7 +174,7 @@ object Tasks {
 
   object DbCsv extends Task {
     def run(ctx: TaskContext, task: Node, log: TaskLog): Unit =
-      etl(ctx, task, log, "db-csv")(sqlSource(ctx, task))(csvTarget(ctx, task))
+      etl(ctx, task, log, "db-csv")((sqlSource(ctx, task), None))(CsvTarget(ctx, task))
   }
 
   object CsvDb extends Task {
@@ -135,22 +184,22 @@ object Tasks {
 
   object DbDb extends Task {
     def run(ctx: TaskContext, task: Node, log: TaskLog): Unit =
-      etl(ctx, task, log, "db-db")(sqlSource(ctx, task))(dbTarget(ctx, task))
+      etl(ctx, task, log, "db-db")((sqlSource(ctx, task), None))(dbTarget(ctx, task))
   }
 
   object CsvCsv extends Task {
     def run(ctx: TaskContext, task: Node, log: TaskLog): Unit =
-      etl(ctx, task, log, "csv-csv")(csvSource(ctx, task, "input"))(csvTarget(ctx, task))
+      etl(ctx, task, log, "csv-csv")(csvSource(ctx, task, "input"))(CsvTarget(ctx, task))
   }
 
   object XmlCsv extends Task {
     def run(ctx: TaskContext, task: Node, log: TaskLog): Unit =
-      etl(ctx, task, log, "xml-csv")(xmlSource(ctx, task))(csvTarget(ctx, task))
+      etl(ctx, task, log, "xml-csv")((xmlSource(ctx, task), None))(CsvTarget(ctx, task))
   }
 
   object XmlDb extends Task {
     def run(ctx: TaskContext, task: Node, log: TaskLog): Unit =
-      etl(ctx, task, log, "xml-db")(xmlSource(ctx, task))(dbTarget(ctx, task))
+      etl(ctx, task, log, "xml-db")((xmlSource(ctx, task), None))(dbTarget(ctx, task))
   }
 
   object XlsCsv extends Task {
@@ -159,9 +208,9 @@ object Tasks {
         val src = task("source")
         val path = s"${ctx.dir(src.str("folder", "input"))}/${src.str("file")}"
         // use_view default true, the reference's (task.py:325-326)
-        graft.sources.XlsReader.read(ctx.spark, path, src.strOpt("sheet"),
-          src.bool("use_view", default = true))
-      }(csvTarget(ctx, task))
+        (graft.sources.XlsReader.read(ctx.spark, path, src.strOpt("sheet"),
+          src.bool("use_view", default = true)), None)
+      }(CsvTarget(ctx, task))
   }
 
   object SqlExec extends Task {

@@ -29,4 +29,21 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The Spark jobs `body` starts. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBridge.drain(sc, 10000)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerBridge.drain(sc, 10000)
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
 }

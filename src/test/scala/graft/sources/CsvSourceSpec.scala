@@ -11,6 +11,9 @@ import java.nio.file.{Files, Paths}
   * looks like and wherever it sits. Each case also pins whether Spark's
   * reader finds any row (`isEmpty`): its data path drops every line whose
   * `String.trim` is empty and then the first line left as the header.
+  * The driver-side read behind [[Sources.csvWithRows]] must give the same
+  * answer for a single file with a header line, and no answer otherwise,
+  * so that the task keeps its `isEmpty` probe.
   */
 class CsvSourceSpec extends SparkSpec {
 
@@ -23,11 +26,12 @@ class CsvSourceSpec extends SparkSpec {
   }
 
   /** files (relative path → bytes), the path to read (relative to the
-    * case's directory), the expected column names if pinned, and whether
-    * Spark's reader finds no row
+    * case's directory), the expected column names if pinned, whether
+    * Spark's reader finds no row, and whether that is left to a probe
     */
   private case class Case(name: String, json: String, files: Seq[(String, Array[Byte])],
-                          rel: String, names: Option[Seq[String]], isEmpty: Boolean)
+                          rel: String, names: Option[Seq[String]], isEmpty: Boolean,
+                          probed: Boolean = false)
 
   private def file(text: String): Seq[(String, Array[Byte])] = Seq("f.csv" -> text.getBytes(UTF_8))
 
@@ -52,6 +56,12 @@ class CsvSourceSpec extends SparkSpec {
       Some(Seq("\t")), isEmpty = true),
     Case("UTF-8 byte order mark", "{}", file("\uFEFFa;b\n1;2\n"), "f.csv", Some(Seq("a", "b")),
       isEmpty = false),
+    // Hadoop's line reader drops the mark from the file's first line, so
+    // that line is blank to Spark
+    Case("byte order mark alone on the first line", "{}", file("\uFEFF\na;b\n1;2\n"), "f.csv",
+      Some(Seq("a", "b")), isEmpty = false),
+    Case("byte order mark alone before a header with no rows", "{}", file("\uFEFF\na;b\n"),
+      "f.csv", Some(Seq("a", "b")), isEmpty = true),
     Case("ISO-8859-1 with encoding", """{"encoding": "ISO-8859-1"}""",
       Seq("f.csv" -> "café;b\nçà;2\n".getBytes(ISO_8859_1)), "f.csv", Some(Seq("café", "b")),
       isEmpty = false),
@@ -69,10 +79,11 @@ class CsvSourceSpec extends SparkSpec {
     Case("header and one space-padded single-cell row", "{}", file("a\n  x  \n"), "f.csv",
       Some(Seq("a")), isEmpty = false),
     Case("0-byte file", "{}", Seq("f.csv" -> Array.emptyByteArray), "f.csv", Some(Seq.empty),
-      isEmpty = true),
+      isEmpty = true, probed = true),
     Case("directory of two files with different headers", "{}",
       Seq("d/p1.csv" -> "a;b\n1;2\n".getBytes(UTF_8),
-          "d/p2.csv" -> "x;y;z\n3;4;5\n6;7;8\n".getBytes(UTF_8)), "d", None, isEmpty = false))
+          "d/p2.csv" -> "x;y;z\n3;4;5\n6;7;8\n".getBytes(UTF_8)), "d", None, isEmpty = false,
+      probed = true))
 
   private def sparkReader(src: TaskConfig.Node) = spark.read
     .option("header", "true")
@@ -86,23 +97,30 @@ class CsvSourceSpec extends SparkSpec {
       c.files.foreach { case (f, bytes) => write(s"$dir/$f", bytes) }
       val src = node(c.json)
       val path = s"$dir/${c.rel}"
-      val got = Sources.csv(spark, path, src)
+      val (got, hasRows) = Sources.csvWithRows(spark, path, src)
       val want = sparkReader(src).csv(path)
       assert(got.schema == want.schema)
       assert(got.collect().toSeq == want.collect().toSeq)
       c.names.foreach(n => assert(got.columns.toSeq == n))
       assert(want.isEmpty == c.isEmpty)
       assert(got.isEmpty == c.isEmpty)
+      assert(hasRows == (if (c.probed) None else Some(!c.isEmpty)))
+      assert(Sources.csv(spark, path, src).schema == got.schema)
     }
   }
 
   test("Sources.csv with a typed schema reads a header-only file as Spark does: no row") {
     val dir = tmpDir("graft_csvsrc_")
     write(s"$dir/f.csv", "a;b\n".getBytes(UTF_8))
+    write(s"$dir/g.csv", "a;b\n\t\nx;1\n".getBytes(UTF_8))
     val src = node("""{"schema": {"a": "string", "b": "int"}}""")
-    val got = Sources.csv(spark, s"$dir/f.csv", src)
+    val (got, hasRows) = Sources.csvWithRows(spark, s"$dir/f.csv", src)
     val want = sparkReader(src).schema("`a` string, `b` int").csv(s"$dir/f.csv")
     assert(got.schema == want.schema)
     assert(want.isEmpty && got.isEmpty)
+    assert(hasRows == Some(false))
+    val (withRow, rowKnown) = Sources.csvWithRows(spark, s"$dir/g.csv", src)
+    assert(withRow.collect().toSeq.map(_.toSeq) == Seq(Seq("x", 1)))
+    assert(rowKnown == Some(true))
   }
 }

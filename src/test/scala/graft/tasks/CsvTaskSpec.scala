@@ -49,19 +49,11 @@ class CsvTaskSpec extends SparkSpec {
     assert(out == "name;bal\nBOB;2000\nCAROL;1500\n")
   }
 
-  test("a csv-csv task with the full transform block runs two Spark jobs: the probe and the write") {
+  test("a csv-csv task with the full transform block runs one Spark job: the write") {
     val wd = setup()
     writeFile(s"$wd/input/items.csv",
       "id;flag;price;disc;ship;tax\n1;A;10.5;0.05;AIR;0.1\n2;R;3.0;0.01;;0.2\n3;N;7.25;0.04;MAIL;0.0\n")
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBridge.drain(sc, 10000)
-    sc.addSparkListener(listener)
-    try {
+    val jobs = jobsOf {
       runTasks(wd,
         """{"tasks": [{
           |  "type": "csv-csv", "name": "jobs",
@@ -75,12 +67,30 @@ class CsvTaskSpec extends SparkSpec {
           |  },
           |  "target": {"file": "items_out.csv", "truncate": true}
           |}]}""".stripMargin)
-      org.apache.spark.graft.ListenerBridge.drain(sc, 10000)
-    } finally sc.removeSparkListener(listener)
-    // the header is read on the driver: no inference job
-    assert(jobs.get() == 2, s"expected the isEmpty probe and the write, saw ${jobs.get()} jobs")
+    }
+    // the header and the first data row are read on the driver: no
+    // inference job, no isEmpty probe
+    assert(jobs == 1, s"expected only the write, saw $jobs jobs")
     assert(read(s"$wd/output/items_out.csv") ==
       "id;flag;extended_price;disc;ship\n1;a;10.5;0.05;AIR\n3;n;7.25;0.04;MAIL\n")
+  }
+
+  test("an empty single-file CSV source is skipped with no Spark job and no per-task log") {
+    val wd = setup()
+    writeFile(s"$wd/input/blank_rows.csv", "a;b\n\n \t\n")
+    writeFile(s"$wd/output/kept.csv", "a;b\nold;1\n")
+    writeFile(s"$wd/task.json",
+      """{"tasks": [{
+        |  "type": "csv-csv", "name": "blank",
+        |  "source": {"file": "blank_rows.csv"},
+        |  "target": {"file": "kept.csv"}
+        |}]}""".stripMargin)
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    val jobs = jobsOf(TaskRunner.runFile(s"$wd/task.json", spark, wd, lines += _))
+    assert(jobs == 0, s"expected no Spark job, saw $jobs")
+    assert(lines.contains("Task skipped. No rows on source"), lines)
+    assert(read(s"$wd/output/kept.csv") == "a;b\nold;1\n")
+    assert(Files.list(Paths.get(s"$wd/log")).count() == 0)
   }
 
   test("typed schema opt-in: declared types flow through filter; default stays all-string") {

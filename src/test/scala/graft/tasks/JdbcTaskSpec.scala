@@ -23,10 +23,10 @@ class JdbcTaskSpec extends SparkSpec {
        |  {"name": "main", "driver": "Derby", "database": "$db"}
        |]""".stripMargin
 
-  private def run(wd: String, json: String): Unit = {
+  private def run(wd: String, json: String, log: TaskLog = TaskLog.Silent): Unit = {
     val f = s"$wd/task.json"
     Files.writeString(Paths.get(f), json)
-    TaskRunner.runFile(f, spark, wd, TaskLog.Silent)
+    TaskRunner.runFile(f, spark, wd, log)
   }
 
   test("sql-exec DDL, csv-db load, then db-csv export round-trips") {
@@ -164,5 +164,66 @@ class JdbcTaskSpec extends SparkSpec {
       val log = Files.readString(Paths.get(logs.head))
       assert(log.contains("wrote ") && log.contains("0 rows written in"), log)
     }
+  }
+
+  /** A Derby table `people` holding `rows`. */
+  private def peopleTable(wd: String, db: String, rows: String*): Unit =
+    run(wd,
+      s"""{${connections(db)}, "tasks": [
+         |  {"type": "sql-exec", "name": "ddl",
+         |   "source": {"command": "CREATE TABLE people (name VARCHAR(50), bal VARCHAR(20))"},
+         |   "target": {"connection": "main"}}${rows.map(r => s""",
+         |  {"type": "sql-exec", "name": "row",
+         |   "source": {"command": "INSERT INTO people VALUES ($r)"},
+         |   "target": {"connection": "main"}}""").mkString}
+         |]}""".stripMargin)
+
+  test("db-csv from an empty table leaves the target untouched, writes no per-task log and logs the skip") {
+    val (wd, db) = setup()
+    peopleTable(wd, db)
+    Files.writeString(Paths.get(s"$wd/output/kept.csv"), "NAME,BAL\nold,1\n")
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    run(wd,
+      s"""{${connections(db)}, "tasks": [
+         |  {"type": "db-csv", "name": "fresh",
+         |   "source": {"connection": "main", "command": "SELECT name, bal FROM people"},
+         |   "target": {"file": "fresh.csv", "truncate": true, "delimiter": ","}},
+         |  {"type": "db-csv", "name": "kept",
+         |   "source": {"connection": "main", "command": "SELECT name, bal FROM people"},
+         |   "target": {"file": "kept.csv", "delimiter": ","}}
+         |]}""".stripMargin, lines += _)
+    assert(!Files.exists(Paths.get(s"$wd/output/fresh.csv")))
+    assert(Files.readString(Paths.get(s"$wd/output/kept.csv")) == "NAME,BAL\nold,1\n")
+    assert(logFiles(wd, "db-csv_").isEmpty, logFiles(wd, "db-csv_"))
+    assert(lines.count(_ == "Task skipped. No rows on source") == 2, lines)
+  }
+
+  test("a db-csv task into a single-file CSV target runs one Spark job: the write") {
+    val (wd, db) = setup()
+    peopleTable(wd, db, "'alice', '10'", "'bob', '2000'")
+    val jobs = jobsOf(run(wd,
+      s"""{${connections(db)}, "tasks": [
+         |  {"type": "db-csv", "name": "export",
+         |   "source": {"connection": "main",
+         |              "command": "SELECT bal, COUNT(*) AS n FROM people GROUP BY bal"},
+         |   "target": {"file": "out.csv", "truncate": true, "delimiter": ","}}
+         |]}""".stripMargin))
+    assert(jobs == 1, s"expected only the write, saw $jobs jobs")
+    assert(Files.readString(Paths.get(s"$wd/output/out.csv")).toLowerCase.linesIterator.toSeq.sorted ==
+      Seq("10,1", "2000,1", "bal,n"))
+  }
+
+
+  test("db-csv whose constant-false filter prunes the row count away still writes the header") {
+    val (wd, db) = setup()
+    peopleTable(wd, db, "'alice', '10'")
+    run(wd,
+      s"""{${connections(db)}, "tasks": [
+         |  {"type": "db-csv", "name": "export",
+         |   "source": {"connection": "main", "command": "SELECT name, bal FROM people"},
+         |   "transform": {"filter": "1 == 2"},
+         |   "target": {"file": "out.csv", "truncate": true, "delimiter": ","}}
+         |]}""".stripMargin)
+    assert(Files.readString(Paths.get(s"$wd/output/out.csv")) == "NAME,BAL\n")
   }
 }
