@@ -12,6 +12,16 @@ import org.apache.spark.sql.functions._
   */
 object Extensions {
 
+  /** A fresh `graft_<name>_*` dir under `java.io.tmpdir`, deleted when the
+    * JVM exits: the queries return lazy frames that read it, so it cannot
+    * go when the query function returns.
+    */
+  private[graft] def tempDir(name: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_${name}_").toFile
+    org.apache.spark.graft.ShutdownDelete.register(dir)
+    dir.toString
+  }
+
   type Q = (SparkSession, String) => DataFrame
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
@@ -688,8 +698,7 @@ object Extensions {
     val planted = paraChromePlant(
       t(s, d, "documents").where(col("text").isNotNull))
     val idx = paraIdxDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q154_paraidx_").toString + "/idx"
+      val p = tempDir("q154_paraidx") + "/idx"
       Dedup.buildParagraphIndex(planted.where(col("doc_id") % 2 === 0),
         "doc_id", "text", p, minDocFreq = 3)
       p
@@ -732,8 +741,7 @@ object Extensions {
     */
   private def warcFixture(s: SparkSession, d: String): String =
     warcDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q153_warc_").toString + "/crawl.warc.gz"
+      val p = tempDir("q153_warc") + "/crawl.warc.gz"
       val docRows = t(s, d, "documents").where(col("text").isNotNull)
         .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
         .collect() // fixture construction: bounded by the documents table
@@ -775,8 +783,7 @@ object Extensions {
   private val warcDupDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def warcDupFixture(s: SparkSession, d: String): String =
     warcDupDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q158_warc_").toString + "/crawl.warc.gz"
+      val p = tempDir("q158_warc") + "/crawl.warc.gz"
       val fixedDigest = graft.sources.WarcWriter.payloadDigest(
         warcDupPage(warcDupFixedBody).getBytes("UTF-8"))
       val docRows = t(s, d, "documents").where(col("text").isNotNull)
@@ -810,8 +817,7 @@ object Extensions {
   private val warcRefetchDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def warcRefetchFixture(s: SparkSession, d: String): String =
     warcRefetchDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q159_warc_").toString + "/crawl.warc.gz"
+      val p = tempDir("q159_warc") + "/crawl.warc.gz"
       val docRows = t(s, d, "documents").where(col("text").isNotNull)
         .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
         .collect() // fixture construction: bounded by the documents table
@@ -859,8 +865,7 @@ object Extensions {
   val q160_key_index_card: Q = (s, d) => {
     val docs = t(s, d, "documents").where(col("text").isNotNull)
     val idx = keyCardDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q160_keyidx_").toString + "/idx"
+      val p = tempDir("q160_keyidx") + "/idx"
       Dedup.buildExactKeyIndex(docs.where(col("doc_id") % 2 === 0),
         "text", p)
       Dedup.appendExactKeys(s, docs.where(col("doc_id") % 2 === 1),
@@ -912,8 +917,7 @@ object Extensions {
   private val warcForgeDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def warcForgeFixture(s: SparkSession, d: String): String =
     warcForgeDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q166_warc_").toString + "/crawl.warc.gz"
+      val p = tempDir("q166_warc") + "/crawl.warc.gz"
       val docRows = t(s, d, "documents").where(col("text").isNotNull)
         .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
         .collect() // fixture construction: bounded by the documents table
@@ -1041,8 +1045,7 @@ object Extensions {
   private val warcRobotsDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def warcRobotsFixture(s: SparkSession, d: String): String =
     warcRobotsDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q162_warc_").toString + "/crawl.warc.gz"
+      val p = tempDir("q162_warc") + "/crawl.warc.gz"
       val docRows = t(s, d, "documents").where(col("text").isNotNull)
         .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
         .collect() // fixture construction: bounded by the documents table
@@ -1112,8 +1115,7 @@ object Extensions {
   private val warcRecipeDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def warcRecipeFixture(s: SparkSession, d: String): String =
     warcRecipeDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q165_warc_").toString + "/crawl.warc.gz"
+      val p = tempDir("q165_warc") + "/crawl.warc.gz"
       val docRows = t(s, d, "documents").where(col("text").isNotNull)
         .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
         .collect() // fixture construction: bounded by the documents table
@@ -1208,7 +1210,7 @@ object Extensions {
   private val pqIndexDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def pqIndexDir(s: SparkSession, d: String): String =
     pqIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q101_pqidx_").toString
+      val p = tempDir("q101_pqidx")
       Similarity.buildPqIndex(t(s, d, "embeddings"), "vec_id", "embedding", p,
         m = 4, nCodes = 16)
       p
@@ -1228,7 +1230,7 @@ object Extensions {
   private val ivfPqIndexDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def ivfPqIndexDir(s: SparkSession, d: String): String =
     ivfPqIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q103_ivfpq_").toString
+      val p = tempDir("q103_ivfpq")
       Similarity.buildIvfPqIndex(t(s, d, "embeddings"), "vec_id", "embedding", p,
         nCells = 16, m = 4, nCodes = 16)
       p
@@ -1314,7 +1316,7 @@ object Extensions {
   private val ivfPqResIndexDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def ivfPqResDir(s: org.apache.spark.sql.SparkSession, d: String): String =
     ivfPqResIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q109_ivfpqr_").toString
+      val p = tempDir("q109_ivfpqr")
       Similarity.buildIvfPqIndex(t(s, d, "embeddings"), "vec_id", "embedding", p,
         nCells = 16, m = 4, nCodes = 16, residual = true)
       p
@@ -1635,7 +1637,7 @@ object Extensions {
   val q91_excise_against_index: Q = (s, d) => {
     val docs = t(s, d, "documents")
     val dir = gramIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q91_grams_").toString
+      val p = tempDir("q91_grams")
       Dedup.buildGramIndex(docs.filter(col("doc_id") % 4 === 0), "text", p, w = 8)
       p
     })
@@ -1658,8 +1660,7 @@ object Extensions {
   val q94_jsonl_roundtrip: Q = (s, d) => {
     val docs = t(s, d, "documents")
     val dir = jsonlDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q94_jsonl_").toString + "/docs"
+      val p = tempDir("q94_jsonl") + "/docs"
       docs.write.mode("overwrite").json(p)
       p
     })
@@ -1725,8 +1726,7 @@ object Extensions {
   val q99_lines_against_index: Q = (s, d) => {
     val lined = reflow3(t(s, d, "documents"))
     val idx = lineIdxDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q99_lineidx_").toString + "/idx"
+      val p = tempDir("q99_lineidx") + "/idx"
       Dedup.buildLineIndex(lined.where(col("doc_id") % 2 === 0),
         "doc_id", "lined", p, minDocFreq = 3)
       p
@@ -1748,8 +1748,7 @@ object Extensions {
   val q96_orc_roundtrip: Q = (s, d) => {
     val docs = t(s, d, "documents")
     val dir = orcDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_q96_orc_").toString + "/docs"
+      val p = tempDir("q96_orc") + "/docs"
       docs.write.mode("overwrite").orc(p)
       p
     })
@@ -1797,7 +1796,7 @@ object Extensions {
   private val pipeKeyDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def pipeKeyDir(s: SparkSession, d: String): String =
     pipeKeyDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q93_keys_").toString
+      val p = tempDir("q93_keys")
       Dedup.buildExactKeyIndex(t(s, d, "documents").filter(col("doc_id") % 4 === 0),
         "text", p)
       p
@@ -1887,7 +1886,7 @@ object Extensions {
   private val ivfIndexDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def ivfIndexDir(s: SparkSession, d: String): String =
     ivfIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q57_ivfidx_").toString
+      val p = tempDir("q57_ivfidx")
       Similarity.buildIvfIndex(t(s, d, "embeddings"), "vec_id", "embedding", p,
         nCells = 16)
       p
@@ -1910,7 +1909,7 @@ object Extensions {
   private val ivfQIndexDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def ivfQIndexDir(s: SparkSession, d: String): String =
     ivfQIndexDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q61_ivfqidx_").toString
+      val p = tempDir("q61_ivfqidx")
       Similarity.buildIvfIndexQuantized(t(s, d, "embeddings"), "vec_id", "embedding", p,
         nCells = 16)
       p
@@ -1935,7 +1934,7 @@ object Extensions {
   val q62_incremental_dedup: Q = (s, d) => {
     val docs = t(s, d, "documents")
     val dir = exactKeyDirs.getOrElseUpdate(d, {
-      val p = java.nio.file.Files.createTempDirectory("graft_q62_keys_").toString
+      val p = tempDir("q62_keys")
       Dedup.buildExactKeyIndex(docs.filter(col("doc_id") % 2 === 0), "text", p)
       p
     })
