@@ -28,6 +28,12 @@ import BenchHarness.time
 object RelationalCoreBench {
   private val OFF = 100000000L
 
+  /** The relational core: q01..q26 incl. the q12b/q17b twins, picked by
+    * the whole leading number (q100..q166 share its first two digits).
+    */
+  private[graft] def isCore(query: String): Boolean =
+    query.drop(1).takeWhile(_.isDigit).toIntOption.exists(i => i >= 1 && i <= 26)
+
   def run(ctx: ScaleBench.Ctx): ScaleBench.Record = {
     val spark = ctx.spark
     val sfDir = ctx.sfDir
@@ -37,10 +43,7 @@ object RelationalCoreBench {
     val dir = ctx.tmp
     replicate(spark, sfDir, dir, repl)
 
-    // the relational core: q01..q26 incl. the q12b/q17b twins
-    val core = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      n.slice(1, 3).toIntOption.exists(i => i >= 1 && i <= 26)
-    }
+    val core = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) => isCore(n) }
 
     def timeAll(d: String): Seq[(String, Double)] = {
       core.foreach { case (_, fn) => // warm-up, untimed

@@ -116,4 +116,10 @@ class ScaleBenchSpec extends SparkSpec {
       .foreach(k => assert(rec \ k != JNothing, s"missing $k"))
     assert(read(out).keySet == Set("excise"))
   }
+
+  test("the relational family times the 28 core queries: q01-q26 and the q12b/q17b twins") {
+    val core = SparkEntry.queries.keys.filter(RelationalCoreBench.isCore)
+      .map(_.takeWhile(_ != '_')).toSeq.sorted
+    assert(core == ((1 to 26).map(i => f"q$i%02d") ++ Seq("q12b", "q17b")).sorted)
+  }
 }
