@@ -28,10 +28,11 @@ object TaskLog {
 
   /** Writes to a file, optionally echoing to the console. The file is
     * opened on the first write: a log that is never written leaves none.
+    * Synchronized: a progress meter writes from Spark's listener thread.
     */
   final class FileLog(path: String, verbose: Boolean) extends TaskLog {
     private var out: PrintWriter = null
-    def write(msg: String): Unit = {
+    def write(msg: String): Unit = synchronized {
       if (out == null) {
         Option(new File(path).getParentFile).foreach(_.mkdirs())
         out = new PrintWriter(new FileWriter(path, true))
@@ -41,7 +42,7 @@ object TaskLog {
       out.flush()
       if (verbose) println(line)
     }
-    override def close(): Unit = if (out != null) out.close()
+    override def close(): Unit = synchronized { if (out != null) out.close() }
   }
 
   def forRun(logDir: String, verbose: Boolean): TaskLog =

@@ -68,9 +68,11 @@ object Tasks {
                  (source: => (DataFrame, Option[Boolean]))
                  (sink: (DataFrame, TaskLog, ProgressMeter) => Unit): Unit = {
     val (df, hasRows) = source
+    // a frame with no columns cannot be written as CSV (an empty XML
+    // source), so only its probe can skip it
     val counted = sink match {
-      case t: CsvTarget if hasRows.isEmpty && t.staged => Some(t)
-      case _                                         => None
+      case t: CsvTarget if hasRows.isEmpty && t.staged && df.columns.nonEmpty => Some(t)
+      case _ => None
     }
     if (!hasRows.getOrElse(counted.nonEmpty || !df.isEmpty)) log.write(NoRows)
     else {

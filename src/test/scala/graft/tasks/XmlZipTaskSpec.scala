@@ -71,6 +71,25 @@ class XmlZipTaskSpec extends SparkSpec {
     assert(lines.size == 3)
   }
 
+  test("xml-csv value form with no data row skips the task: no output, no per-task log") {
+    val wd = setup()
+    Files.writeString(Paths.get(s"$wd/input/none.xml"), "<table></table>")
+    Files.writeString(Paths.get(s"$wd/input/head.xml"),
+      "<table><tr><td>name</td><td>qty</td></tr></table>")
+    run(wd,
+      """{"tasks": [
+        |  {"type": "xml-csv", "name": "none",
+        |   "source": {"file": "none.xml", "row": "tr", "value": "td"},
+        |   "target": {"file": "none.csv", "truncate": true}},
+        |  {"type": "xml-csv", "name": "head",
+        |   "source": {"file": "head.xml", "row": "tr", "value": "td"},
+        |   "target": {"file": "head.csv", "truncate": true}}
+        |]}""".stripMargin)
+    assert(!Files.exists(Paths.get(s"$wd/output/none.csv")))
+    assert(!Files.exists(Paths.get(s"$wd/output/head.csv")))
+    assert(Files.list(Paths.get(s"$wd/log")).count() == 0)
+  }
+
   test("missing row/value/mapping raises like the reference ValueError") {
     val wd = setup()
     Files.writeString(Paths.get(s"$wd/input/b.xml"), "<t><tr><td>x</td></tr></t>")
