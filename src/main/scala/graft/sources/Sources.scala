@@ -76,7 +76,8 @@ object Sources {
     val head = CsvHeader.read(spark, path, options)
     val fields = node.objFields("schema")
     val df =
-      if (fields.isEmpty) head.fold(reader.csv(path)) { case (schema, _) => reader.schema(schema).csv(path) }
+      if (fields.isEmpty)
+        head.fold(reader.csv(path)) { case (schema, _) => reader.schema(schema).csv(path) }
       else {
         // {"schema": {"col": "type", ...}} — declaration order maps to file
         // column order, types are Spark DDL (int, bigint, double, date,

@@ -29,7 +29,8 @@ object PipelineTasks {
   private def sourceDf(ctx: TaskContext, task: Node): (DataFrame, Option[Boolean]) = {
     val src = task("source")
     val path = s"${ctx.dir(src.str("folder", "input"))}/${src.str("file")}"
-    def read: DataFrame = src.str("format", "parquet") match {
+    val format = src.str("format", "parquet")
+    def read: DataFrame = format match {
       case "parquet" => ctx.spark.read.parquet(path)
       case "jsonl"   => src.strOpt("schema") match {
         // "schema" is a DDL string ("doc_id LONG, text STRING"). Omitting
@@ -66,7 +67,7 @@ object PipelineTasks {
           robotsGate = src.flag("robots_gate"))
       case f => throw new IllegalArgumentException(s"unknown source format: $f")
     }
-    if (src.str("format", "parquet") == "csv") graft.sources.Sources.csvWithRows(ctx.spark, path, src)
+    if (format == "csv") graft.sources.Sources.csvWithRows(ctx.spark, path, src)
     else (read, None)
   }
 
