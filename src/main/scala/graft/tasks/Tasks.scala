@@ -68,8 +68,9 @@ object Tasks {
                  (source: => (DataFrame, Option[Boolean]))
                  (sink: (DataFrame, TaskLog, ProgressMeter) => Unit): Unit = {
     val (df, hasRows) = source
-    // a frame with no columns cannot be written as CSV (an empty XML
-    // source), so only its probe can skip it
+    // with no driver-side answer, a staged CSV target counts the source in
+    // its own write job instead; a frame with no columns cannot be written
+    // as CSV (an XML source with no row), so only a probe can skip it
     val counted = sink match {
       case t: CsvTarget if hasRows.isEmpty && t.staged && df.columns.nonEmpty => Some(t)
       case _ => None
