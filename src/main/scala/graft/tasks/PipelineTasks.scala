@@ -31,7 +31,7 @@ object PipelineTasks {
     val path = s"${ctx.dir(src.str("folder", "input"))}/${src.str("file")}"
     val format = src.str("format", "parquet")
     def read: DataFrame = format match {
-      case "parquet" => ctx.spark.read.parquet(path)
+      case "parquet" => graft.Tables.parquet(ctx.spark, path)
       case "jsonl"   => src.strOpt("schema") match {
         // "schema" is a DDL string ("doc_id LONG, text STRING"). Omitting
         // it falls back to inference — fine for a one-off task file,

@@ -33,7 +33,7 @@ class TablesSpec extends SparkSpec {
     */
   private def digest(df: DataFrame): (Long, java.math.BigDecimal) = {
     val r = df.agg(count(lit(1)),
-      sum(xxhash64(df.columns.toSeq.map(df.col): _*).cast("decimal(38,0)"))).head
+      sum(xxhash64(df.columns.toSeq.map(df.col): _*).cast("decimal(38,0)"))).head()
     (r.getLong(0), r.getDecimal(1))
   }
 
@@ -225,5 +225,17 @@ class TablesSpec extends SparkSpec {
     for (name <- Seq("lineitem", "events"))
       sameFailure(s"missing $name")(Tables.load(spark, s"$dir/missing", name).collect(),
         spark.read.parquet(s"$dir/missing/$name.parquet"))
+  }
+
+  test("Tables.load runs no Spark job on a single-file table") {
+    val partDir = tmpDir("graft_part_jobs_")
+    sparkPartFile(partDir, "parts")
+    val files = fixtures.flatMap(fx => Tables.names.map(fx -> _))
+      .filter { case (dir, name) => new java.io.File(s"$dir/$name.parquet").isFile } ++
+      eventFiles.map { case (_, dir) => dir -> "events" } :+ (partDir -> "parts")
+    for ((dir, name) <- files) {
+      val jobs = jobsOf { Tables.load(spark, dir, name); () }
+      assert(jobs == 0, s"$dir/$name: $jobs jobs")
+    }
   }
 }

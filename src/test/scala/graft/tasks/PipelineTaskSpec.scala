@@ -179,6 +179,23 @@ class PipelineTaskSpec extends SparkSpec {
       rows(Packing.chunkDocs(docs, "doc_id", "text", maxWords = 8, overlap = 2)))
   }
 
+  test("a single-file parquet source starts no schema job") {
+    val wd = tmpDir("graft_pipetask_")
+    // the same file, once bare and once as a one-file directory: only
+    // the directory needs Spark's schema inference job
+    Files.createDirectories(Paths.get(s"$wd/input/docs_dir"))
+    Files.copy(Paths.get(s"$sfDir/documents.parquet"), Paths.get(s"$wd/input/docs.parquet"))
+    Files.copy(Paths.get(s"$sfDir/documents.parquet"), Paths.get(s"$wd/input/docs_dir/part-0.parquet"))
+    def chunkJobs(file: String): Int = jobsOf(runTask(wd,
+      s"""{"tasks": [{"type": "chunk", "name": "ch",
+         |  "source": {"folder": "input", "file": "$file"},
+         |  "chunk": {"max_words": 8, "overlap": 2},
+         |  "target": {"file": "chk_$file", "truncate": true}}]}""".stripMargin))
+    val fromDir = chunkJobs("docs_dir")
+    assert(chunkJobs("docs.parquet") == fromDir - 1)
+    assert(rows(outParquet(wd, "chk_docs.parquet")) == rows(outParquet(wd, "chk_docs_dir")))
+  }
+
   test("pack_ids task == Packing.packTokens (token-id materialization parity)") {
     val wd = tmpDir("graft_pipetask_")
     runTask(wd,
