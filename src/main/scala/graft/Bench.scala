@@ -72,7 +72,8 @@ object Bench {
     val runs = BenchHarness.env("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val attemptsMax =
       BenchHarness.env("SPARK_GRAFT_BENCH_ATTEMPTS", "3").toInt
-    val spark = BenchHarness.session(BenchHarness.cpus(default = 4))
+    val cpus = BenchHarness.cpus(default = 4)
+    val spark = BenchHarness.session(cpus)
     graft.functions.VectorFunctions.registerSql(spark)
 
     // SPARK_GRAFT_BENCH_ONLY: comma-separated selectors — iterate on one
@@ -276,8 +277,10 @@ object Bench {
         s""""band_drift_n":${a.bandDrift.size},""" +
         s""""contended":${a.contended},"record":${a.record}}"""
     }.mkString("[", ",", "]")
+    val sha = BenchHarness.gitSha().fold("null")(s => "\"" + s + "\"")
     val shared =
-      s""""runs":$runs,"sf":"$sfDir",""" +
+      s""""runs":$runs,"sf":"$sfDir","cpus":$cpus,""" +
+        s""""git_sha":$sha,""" +
         s""""loadavg_before":"${chosen.loadBefore}",""" +
         s""""loadavg_after":"${chosen.loadAfter}",""" +
         s""""loadavg_during_max":${fmt3(chosen.loadDuringMax)},""" +

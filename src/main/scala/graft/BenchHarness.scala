@@ -70,6 +70,15 @@ object BenchHarness {
     walk(new java.io.File(p))
   }
 
+  /** The HEAD commit of the git checkout holding `dir`, or None outside
+    * one (or without git).
+    */
+  def gitSha(dir: java.io.File = new java.io.File(".")): Option[String] = {
+    import scala.sys.process._
+    scala.util.Try(Process(Seq("git", "rev-parse", "HEAD"), dir).!!(ProcessLogger(_ => ())).trim)
+      .toOption
+  }
+
   /** Contention sentinel: the 1/5/15-minute fields of `/proc/loadavg`.
     * Recorded before/after a bench run so a judge can adjudicate
     * driver-run noise (a 2-3× single-sample outlier under load) from the

@@ -32,6 +32,12 @@ class ScaleBenchSpec extends SparkSpec {
     Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
       .getOrElse(Array.empty[String]).filter(_.startsWith("graft_")).toSet
 
+  test("gitSha names the checkout's HEAD, and nothing outside a checkout") {
+    assume(Files.isDirectory(Paths.get(".git")))
+    assert(BenchHarness.gitSha().exists(_.matches("[0-9a-f]{40}")))
+    assert(BenchHarness.gitSha(new java.io.File(tmpDir("graft_nogit_"))).isEmpty)
+  }
+
   test("a family's record parses back with the context block, its own fields and doubles at 4 decimals") {
     val out = artifact(tmpDir("graft_sbspec_"))
     var workDir = ""
