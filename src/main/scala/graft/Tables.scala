@@ -78,7 +78,7 @@ object Tables {
         read(spark, path, fileSchema).withColumn("ts", col("ts").cast(TimestampType))
       case Some(TimestampType) =>
         read(spark, path, fileSchema)
-      case Some(LongType) | None => // None: the converter rejected TIMESTAMP(NANOS)
+      case Some(LongType) | None => // None: TIMESTAMP(NANOS), which the converter rejects
         spark.read.schema(eventsLongSchema).parquet(path)
           .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case Some(other) =>
