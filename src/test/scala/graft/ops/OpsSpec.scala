@@ -1874,6 +1874,118 @@ class OpsSpec extends SparkSpec {
       s"replayed same-token append must overwrite (sum 3 < 4), got: $out4")
   }
 
+  test("paragraph index: standing-frequency bans, appends extend, same-token replay never double-counts") {
+    val standing = Seq(
+      (1L, "cookie banner\n\nalpha one"),
+      (2L, "cookie banner\n\nbeta two"),
+      (3L, "cookie banner\n\ngamma three"),
+      (4L, "footer nav\n\ndelta four"),
+      (5L, "footer nav\n\nepsilon five"))
+      .toDF("doc_id", "text")
+    val idx = tmpDir("graft_paraidx_") + "/idx"
+    Dedup.buildParagraphIndex(standing, "doc_id", "text", idx, minDocFreq = 3)
+
+    // "new promo" is frequent only WITHIN the probe batch: standing df 0
+    val probe = Seq(
+      (10L, "cookie banner\n\nnew promo\n\nten"),
+      (11L, "new promo\n\neleven"),
+      (12L, "new promo\n\nfooter nav\n\ntwelve"))
+      .toDF("doc_id", "text")
+    def run(path: String, df: org.apache.spark.sql.DataFrame = probe,
+            exclude: Option[String] = None) =
+      Dedup.removeParagraphsAgainstIndex(spark, df, "doc_id", "text", path,
+          excludeToken = exclude)
+        .as[(Long, String, Long, Long)].collect().map(r => r._1 -> r).toMap
+    val out1 = run(idx)
+    assert(out1(10L) == ((10L, "new promo\n\nten", 3L, 1L)), s"${out1(10L)}")
+    assert(out1(11L) == ((11L, "new promo\n\neleven", 2L, 0L)), s"${out1(11L)}")
+    // "footer nav" has standing df 2 < 3: kept
+    assert(out1(12L) == ((12L, "new promo\n\nfooter nav\n\ntwelve", 3L, 0L)),
+      s"${out1(12L)}")
+
+    // append a slice carrying "footer nav" once: summed df 3 -> banned
+    Dedup.appendParagraphCounts(Seq((20L, "footer nav\n\nzeta"))
+      .toDF("doc_id", "text"), "doc_id", "text", idx, token = "t1")
+    val out2 = run(idx)
+    assert(out2(12L) == ((12L, "new promo\n\ntwelve", 3L, 1L)),
+      s"appended count must push footer nav over the threshold: ${out2(12L)}")
+
+    // excludeToken: the replaying batch probes as if its delta were absent
+    val out3 = run(idx, exclude = Some("t1"))
+    assert(out3(12L)._4 == 0L, s"excluded delta must not count: ${out3(12L)}")
+
+    // replay idempotence: standing df 2 + one append of df 1 = 3 < 4; a
+    // double-counted same-token re-append would reach 4 and ban
+    val idx4 = tmpDir("graft_paraidx4_") + "/idx"
+    Dedup.buildParagraphIndex(standing.where(col("doc_id") <= 2), "doc_id",
+      "text", idx4, minDocFreq = 4)
+    val slice = Seq((30L, "cookie banner\n\nthirty")).toDF("doc_id", "text")
+    Dedup.appendParagraphCounts(slice, "doc_id", "text", idx4, token = "b7")
+    Dedup.appendParagraphCounts(slice, "doc_id", "text", idx4, token = "b7")
+    val out4 = run(idx4, Seq((40L, "cookie banner\n\nforty")).toDF("doc_id", "text"))
+    assert(out4(40L)._4 == 0L,
+      s"replayed same-token append must overwrite (sum 3 < 4), got: ${out4(40L)}")
+  }
+
+  test("batch and index removal share one ban rule, for lines and paragraphs") {
+    type Df = org.apache.spark.sql.DataFrame
+    case class UnitCase(seam: String, builder: String,
+                        batch: (Df, Int) => Df,
+                        build: (Df, String, Int) => Unit,
+                        append: (Df, String, String) => Unit,
+                        probe: (Df, String) => Df)
+    val cases = Seq(
+      UnitCase("\n", "buildLineIndex",
+        Dedup.removeFrequentLines(_, "doc_id", "text", _),
+        Dedup.buildLineIndex(_, "doc_id", "text", _, _),
+        Dedup.appendLineCounts(_, "doc_id", "text", _, _),
+        Dedup.removeLinesAgainstIndex(spark, _, "doc_id", "text", _)),
+      UnitCase("\n\n", "buildParagraphIndex",
+        Dedup.removeFrequentParagraphs(_, "doc_id", "text", _),
+        Dedup.buildParagraphIndex(_, "doc_id", "text", _, _),
+        Dedup.appendParagraphCounts(_, "doc_id", "text", _, _),
+        Dedup.removeParagraphsAgainstIndex(spark, _, "doc_id", "text", _)))
+    for (c <- cases) {
+      // planted chrome at df 12+1 / 8 / 4 over 24 docs: banned, banned,
+      // kept at minDocFreq 5; intra-doc repeats count once per doc
+      val body = (1L to 24L).map { i =>
+        val units = Seq(
+          Some("accept cookies to continue").filter(_ => i % 2 == 0),
+          Some(s"body of doc $i"),
+          Some("share this page").filter(_ => i % 3 == 0),
+          Some("rare footer").filter(_ => i % 5 == 0),
+          Some(" ").filter(_ => i % 4 == 1),
+          Some(s"body of doc $i")).flatten
+        (i, units.mkString(c.seam))
+      }
+      val docs = (body ++ Seq((25L, "accept cookies to continue"),
+          (26L, null.asInstanceOf[String]), (27L, "")))
+        .toDF("doc_id", "text")
+      val idx = tmpDir("graft_unitparity_") + "/idx"
+      c.build(docs, idx, 5)
+      val batch = c.batch(docs, 5).orderBy("doc_id").collect().toSeq
+      val probed = c.probe(docs, idx).orderBy("doc_id").collect().toSeq
+      assert(batch == probed, s"${c.builder}: batch and index forms differ")
+      assert(batch.map(_.getLong(0)) == ((1L to 25L) :+ 27L),
+        s"${c.builder}: null text drops, every other doc stays")
+      assert(batch.exists(r => r.getLong(0) == 25L && r.getString(1) == ""),
+        s"${c.builder}: an all-chrome doc survives empty")
+      assert(batch.count(_.getString(1).contains("rare footer")) == 4,
+        s"${c.builder}: df 4 < 5 must keep the rare footer")
+      assert(!batch.exists(r => r.getString(1).contains("cookies") ||
+        r.getString(1).contains("share this")), s"${c.builder}: chrome left")
+
+      val reserved = intercept[IllegalArgumentException](
+        c.append(docs, idx, "base"))
+      assert(reserved.getMessage ==
+        s"requirement failed: token 'base' is reserved for ${c.builder}")
+      val badToken = intercept[IllegalArgumentException](
+        c.append(docs, idx, "b/1"))
+      assert(badToken.getMessage ==
+        "requirement failed: line-index append token must be [A-Za-z0-9_-]+: 'b/1'")
+    }
+  }
+
   test("curate lineMinDocFreq: planted boilerplate line gone before excision, default None unchanged") {
     // distinct-word tails keep every doc through the q74 screens; the
     // shared first line is boilerplate in 3 docs, doc 4 is ONLY that
