@@ -1178,74 +1178,91 @@ object Dedup {
     rebuildWithoutPositions(docs, exPos)
   }
 
+  /** A boilerplate-removal unit — the line or the paragraph. Each step
+    * of the removal family below (batch removal, rebuild, document
+    * frequency, index build, count append, index probe) has one
+    * implementation over this value; the two units differ only in it:
+    *
+    *  - `subdir`: the count layout's directory (`lines`, `paras`);
+    *  - `key`, `unit`, `pos`: the md5 key, the unit text and its
+    *    in-doc order column of `split`'s units frame;
+    *  - `seam` rejoins the kept units; `counter` names the output's
+    *    unit count (`n_lines`, `n_paras`);
+    *  - `builder` names the index builder in the reserved-token message;
+    *  - `split` (df, idCol, textCol) → (base, units): base is
+    *    (doc_id, counter) per non-null doc, units is (doc_id, pos,
+    *    unit, key);
+    *  - `counted` selects the units that count toward document
+    *    frequency (and so can be banned).
+    */
+  private[graft] final case class TextUnit(
+      subdir: String, key: String, unit: String, pos: String,
+      seam: String, counter: String, builder: String,
+      split: (DataFrame, String, String) => (DataFrame, DataFrame),
+      counted: Column)
+
+  /** Lines: `\n`-separated verbatim strings; lines blank after trim are
+    * structure, not boilerplate — never counted, never removed.
+    */
+  private[graft] val Lines = TextUnit("lines", "lh", "line", "pos", "\n",
+    "n_lines", "buildLineIndex", splitLines, trim(col("line")) =!= "")
+
+  /** Paragraphs: [[graft.ops.TextAnalysis.paragraphsCol]]'s units
+    * (blank-line split, trimmed, empties dropped), every one counted —
+    * `lit(true)`, which the optimizer prunes.
+    */
+  private[graft] val Paras = TextUnit("paras", "ph", "para", "para_idx",
+    "\n\n", "n_paras", "buildParagraphIndex", splitParas, lit(true))
+
   /** Corpus-frequency LINE removal — the CCNet/RefinedWeb boilerplate
-    * rule, the line-granular member of the excision family: a line
-    * whose corpus document-frequency reaches `minDocFreq` is navigation
-    * chrome / cookie banner / template text, and EVERY occurrence is
-    * removed (no keeper — unlike [[exciseDupSpans]], where the first
-    * doc keeps the span, boilerplate carries no training signal in any
-    * copy). Lines are `\n`-separated verbatim strings; lines blank
-    * after trim are structure, not boilerplate — never counted, never
-    * removed. Docs with null `textCol` are dropped (the [[exciseDupSpans]]
-    * convention); docs whose every line is banned survive with
-    * `clean_text = ''`.
-    *
-    * Scale shape: counting shuffles (doc_id, lh)-distinct rows — the
-    * line hash is md5 (the gram-index `gh` convention: fixed 32-char
-    * shuffle key, never the line text) and doc_id in the key means no
-    * corpus-global hot key; the df count itself is partial-aggregated
-    * (algebraic). The banned side of the final anti-join is DISTINCT
-    * boilerplate lines — by definition few strings however many
-    * occurrences they have — so AQE broadcasts it and the probe side
-    * never shuffles (occurrence skew of a mega-frequent line is
-    * irrelevant in a broadcast anti-join). Rebuild state is per-doc
-    * bounded (a doc's own lines).
-    *
-    * Output: (doc_id, clean_text, n_lines, n_removed).
+    * rule, the line-granular member of the excision family. Output
+    * (doc_id, clean_text, n_lines, n_removed); see [[removeFrequent]].
     */
   def removeFrequentLines(df: DataFrame, idCol: String, textCol: String,
-                          minDocFreq: Int = 2): DataFrame = {
-    require(minDocFreq >= 2, s"minDocFreq must be >= 2: $minDocFreq")
-    val (base, lines) = splitLines(df, idCol, textCol)
-    val banned = lines.where(trim(col("line")) =!= "")
-      .select(col("lh"), col("doc_id")).distinct()
-      .groupBy(col("lh")).agg(count(lit(1)).as("_df"))
-      .filter(col("_df") >= minDocFreq)
-      .select(col("lh"))
-    rebuildWithoutBannedLines(base, lines, banned)
-  }
+                          minDocFreq: Int = 2): DataFrame =
+    removeFrequent(Lines, df, idCol, textCol, minDocFreq)
 
-  /** Paragraph-granular boilerplate removal — [[removeFrequentLines]]'s
-    * rule at the unit real web boilerplate actually repeats at (cookie
-    * banners, footers, share blocks are PARAGRAPHS; the line rule
-    * shreds them only when line reflow happens to align): paragraphs
-    * ([[graft.ops.TextAnalysis.paragraphsCol]] — blank-line split,
-    * trimmed, empties dropped) appearing in ≥ `minDocFreq` DISTINCT
-    * documents are removed everywhere, survivors rejoin with the
-    * canonical `\n\n` seam in original order. Output (doc_id,
-    * clean_text, n_paras, n_removed); a doc whose every paragraph is
-    * banned survives as ''.
-    *
-    * Scale shape mirrors the line family: md5 paragraph keys (the
-    * exchange moves 16-byte hashes + the kept text once), one
-    * distinct-doc groupBy for the ban set, one anti-join + per-doc
-    * rebuild — no window over the corpus, no driver collect.
+  /** [[removeFrequentLines]]' rule at the unit real web boilerplate
+    * actually repeats at (cookie banners, footers, share blocks are
+    * PARAGRAPHS; the line rule shreds them only when line reflow happens
+    * to align); survivors rejoin with the canonical `\n\n` seam. Output
+    * (doc_id, clean_text, n_paras, n_removed); see [[removeFrequent]].
     */
   def removeFrequentParagraphs(df: DataFrame, idCol: String, textCol: String,
-                               minDocFreq: Int = 2): DataFrame = {
+                               minDocFreq: Int = 2): DataFrame =
+    removeFrequent(Paras, df, idCol, textCol, minDocFreq)
+
+  /** Batch boilerplate removal at unit `u`: a unit whose corpus
+    * document-frequency reaches `minDocFreq` is navigation chrome /
+    * cookie banner / template text, and EVERY occurrence is removed (no
+    * keeper — unlike [[exciseDupSpans]], where the first doc keeps the
+    * span, boilerplate carries no training signal in any copy); the
+    * survivors rejoin with `u.seam` in original order. Docs with null
+    * `textCol` are dropped (the [[exciseDupSpans]] convention); docs
+    * whose every unit is banned survive with `clean_text = ''`.
+    *
+    * Scale shape: counting shuffles (doc_id, key)-distinct rows — the
+    * key is md5 (the gram-index `gh` convention: fixed 32-char shuffle
+    * key, never the unit text) and doc_id in the key means no
+    * corpus-global hot key; the df count itself is partial-aggregated
+    * (algebraic). The banned side of the final anti-join is DISTINCT
+    * boilerplate units — by definition few strings however many
+    * occurrences they have — so AQE broadcasts it and the probe side
+    * never shuffles. Rebuild state is per-doc bounded (a doc's own
+    * units); no window over the corpus, no driver collect.
+    */
+  private[graft] def removeFrequent(u: TextUnit, df: DataFrame, idCol: String,
+      textCol: String, minDocFreq: Int): DataFrame = {
     require(minDocFreq >= 2, s"minDocFreq must be >= 2: $minDocFreq")
-    val (base, paras) = splitParas(df, idCol, textCol)
-    val banned = paras.select(col("ph"), col("doc_id")).distinct()
-      .groupBy(col("ph")).agg(count(lit(1)).as("_df"))
-      .filter(col("_df") >= minDocFreq)
-      .select(col("ph"))
-    rebuildWithoutBannedParas(base, paras, banned)
+    val (base, units) = u.split(df, idCol, textCol)
+    val banned = docFreq(u, units)
+      .filter(col("df") >= minDocFreq).select(col(u.key))
+    rebuild(u, base, units, banned)
   }
 
-  /** (base, paras) of the paragraph family — the [[splitLines]] twin:
-    * base keeps the un-exploded doc with its non-empty paragraph count,
-    * paras is segmentParagraphs' (doc_id, para_idx, para) plus the md5
-    * key `ph`.
+  /** (base, paras): base keeps the un-exploded doc with its non-empty
+    * paragraph count, paras is segmentParagraphs' (doc_id, para_idx,
+    * para) plus the md5 key `ph`.
     */
   private def splitParas(df: DataFrame, idCol: String,
                          textCol: String): (DataFrame, DataFrame) = {
@@ -1259,29 +1276,9 @@ object Dedup {
     (base, paras)
   }
 
-  /** Anti-join `paras` against `banned` (ph) and rejoin each doc's kept
-    * paragraphs with the canonical `\n\n` seam in original order —
-    * shared by the batch and index forms. Output (doc_id, clean_text,
-    * n_paras, n_removed); an all-banned doc survives as ''.
-    */
-  private def rebuildWithoutBannedParas(base: DataFrame, paras: DataFrame,
-                                        banned: DataFrame): DataFrame = {
-    val agg = paras.join(banned, Seq("ph"), "left_anti")
-      .groupBy(col("doc_id"))
-      .agg(concat_ws("\n\n",
-        expr("transform(array_sort(collect_list(struct(para_idx, para))), " +
-          "x -> x.para)")).as("clean_text"),
-        count(lit(1)).as("_kept"))
-    base.join(agg, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        col("n_paras"),
-        (col("n_paras") - coalesce(col("_kept"), lit(0L))).as("n_removed"))
-  }
-
-  /** (base, lines) of the line family: base keeps the un-exploded doc
-    * with row-local n_lines (the denominator never costs an explode
-    * branch), lines is (doc_id, pos 1-based, line, lh md5).
+  /** (base, lines): base keeps the un-exploded doc with row-local
+    * n_lines (the denominator never costs an explode branch), lines is
+    * (doc_id, pos 1-based, line, lh md5).
     */
   private def splitLines(df: DataFrame, idCol: String,
                          textCol: String): (DataFrame, DataFrame) = {
@@ -1293,106 +1290,154 @@ object Dedup {
         posexplode(split(col("_t"), "\n")).as(Seq("_p0", "line")))
       .select(col("doc_id"), (col("_p0") + 1).as("pos"), col("line"),
         md5(col("line")).as("lh"))
-    (base, lines)
+    (base.select(col("doc_id"), col("n_lines")), lines)
   }
 
-  /** Anti-join `lines` against `banned` (lh) and re-join each doc's kept
-    * lines in position order — the line family's rebuild, shared by the
-    * batch and index forms. Output (doc_id, clean_text, n_lines,
-    * n_removed); docs whose every line banned survive with ''.
+  /** Anti-join `units` against `banned` (u.key) and rejoin each doc's
+    * kept units with `u.seam` in position order — shared by the batch
+    * and index forms. Output (doc_id, clean_text, u.counter, n_removed);
+    * an all-banned doc survives as ''.
     */
-  private def rebuildWithoutBannedLines(base: DataFrame, lines: DataFrame,
-                                        banned: DataFrame): DataFrame = {
-    val agg = lines.join(banned, Seq("lh"), "left_anti")
+  private def rebuild(u: TextUnit, base: DataFrame, units: DataFrame,
+                      banned: DataFrame): DataFrame = {
+    val agg = units.join(banned, Seq(u.key), "left_anti")
       .groupBy(col("doc_id"))
-      .agg(concat_ws("\n",
-        expr("transform(array_sort(collect_list(struct(pos, line))), " +
-          "x -> x.line)")).as("clean_text"),
+      .agg(concat_ws(u.seam,
+        expr(s"transform(array_sort(collect_list(struct(${u.pos}, " +
+          s"${u.unit}))), x -> x.${u.unit})")).as("clean_text"),
         count(lit(1)).as("_kept"))
-    base.select(col("doc_id"), col("n_lines"))
-      .join(agg, Seq("doc_id"), "left")
+    base.join(agg, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("clean_text"), lit("")).as("clean_text"),
-        col("n_lines"),
-        (col("n_lines") - coalesce(col("_kept"), lit(0L))).as("n_removed"))
+        col(u.counter),
+        (col(u.counter) - coalesce(col("_kept"), lit(0L))).as("n_removed"))
   }
 
-  /** Per-slice line document-frequency table: one (lh, df) row per
-    * distinct non-blank line — df counts DISTINCT docs (a line
+  /** (key, df) per counted unit — df counts DISTINCT docs (a unit
     * stuttered inside one doc is intra-doc repetition, not corpus
-    * boilerplate). Shared by [[buildLineIndex]] and
-    * [[appendLineCounts]] so the persisted counts and their probes
-    * can never desynchronize.
+    * boilerplate). The batch ban and the persisted deltas both count
+    * here, so the two forms can never desynchronize.
     */
-  private def lineDfDelta(df: DataFrame, idCol: String,
-                          textCol: String): DataFrame =
-    df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        explode(split(col(textCol), "\n")).as("line"))
-      .where(trim(col("line")) =!= "")
-      .select(col("doc_id"), md5(col("line")).as("lh")).distinct()
-      .groupBy(col("lh")).agg(count(lit(1)).as("df"))
+  private def docFreq(u: TextUnit, units: DataFrame): DataFrame =
+    units.where(u.counted).select(col(u.key), col("doc_id")).distinct()
+      .groupBy(col(u.key)).agg(count(lit(1)).as("df"))
 
-  private def lineTokenOk(token: String): Unit =
+  private def tokenOk(token: String): Unit =
     require(token.nonEmpty && token.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
       s"line-index append token must be [A-Za-z0-9_-]+: '$token'")
 
-  /** Persist the standing corpus's LINE document-frequencies — the
-    * INCREMENTAL end of the boilerplate-line family
-    * ([[removeFrequentLines]]' standing-corpus form), completing the
-    * index symmetry (exact keys ⇄ lexical bands ⇄ semantic cells ⇄
-    * span grams ⇄ line COUNTS). Unlike the set-valued indexes,
-    * membership cannot decide boilerplate — FREQUENCY does — so the
-    * artifact is a count table and there is no Bloom screen (a line's
-    * ban status needs the summed df, not a maybe-bit). Layout:
+  /** Persist the standing corpus's LINE document-frequencies —
+    * [[removeFrequentLines]]' standing-corpus form; layout
+    * `lines/delta=<token>/` (lh, df) and `params/`, see
+    * [[buildCountIndex]].
+    */
+  def buildLineIndex(docs: DataFrame, idCol: String, textCol: String,
+                     path: String, minDocFreq: Int = 2): Unit =
+    buildCountIndex(Lines, docs, idCol, textCol, path, minDocFreq)
+
+  /** Persist the standing corpus's PARAGRAPH document-frequencies —
+    * [[removeFrequentParagraphs]]' standing-corpus form (q152's);
+    * layout `paras/delta=<token>/` (ph, df) and `params/`, see
+    * [[buildCountIndex]].
+    */
+  def buildParagraphIndex(docs: DataFrame, idCol: String, textCol: String,
+                          path: String, minDocFreq: Int = 2): Unit =
+    buildCountIndex(Paras, docs, idCol, textCol, path, minDocFreq)
+
+  /** Persist the standing corpus's unit document-frequencies — the
+    * INCREMENTAL end of the boilerplate family, completing the index
+    * symmetry (exact keys ⇄ lexical bands ⇄ semantic cells ⇄ span
+    * grams ⇄ unit COUNTS) and batch ⇄ index ⇄ stream symmetry for each
+    * unit. Unlike the set-valued indexes, membership cannot decide
+    * boilerplate — FREQUENCY does — so the artifact is a count table
+    * and there is no Bloom screen (a unit's ban status needs the summed
+    * df, not a maybe-bit). Layout:
     *
-    *   `lines/delta=<token>/` — (lh: md5 hex, df: long) per appended
-    *       slice. Each append OVERWRITES its own token's directory, so
-    *       an at-least-once replay REPLACES its delta instead of
-    *       double-counting — count idempotence by layout, the property
-    *       the set indexes get from anti-join appends. The token is a
-    *       Spark partition column: probes excluding their own token
-    *       prune it at the scan.
+    *   `<u.subdir>/delta=<token>/` — (u.key: md5 hex, df: long) per
+    *       appended slice. Each append OVERWRITES its own token's
+    *       directory, so an at-least-once replay REPLACES its delta
+    *       instead of double-counting — count idempotence by layout,
+    *       the property the set indexes get from anti-join appends. The
+    *       token is a Spark partition column: probes excluding their
+    *       own token prune it at the scan.
     *   `params/` — (min_doc_freq): probes ban at the SAME threshold
     *       the layout was declared with.
     *
-    * Probe-side aggregation (sum df per lh over the deltas) is
-    * index-sized — distinct lines, not corpus lines; periodic
+    * Probe-side aggregation (sum df per key over the deltas) is
+    * index-sized — distinct units, not corpus units; periodic
     * [[IndexMaintenance.compact]] keeps per-delta small files in
-    * check, and [[IndexMaintenance.consolidateLineDeltas]] folds
-    * deltas BEHIND the sink's committed checkpoint offset into
-    * `delta=base` (bounding the one-directory-per-batch growth over a
-    * stream's lifetime). Folding an UNCOMMITTED token would break the
-    * overwrite-idempotence and the probe exclusion of its replay,
-    * which is why consolidation is checkpoint-gated rather than a
-    * blind merge.
+    * check, and [[IndexMaintenance.consolidateLineDeltas]] /
+    * [[IndexMaintenance.consolidateParagraphDeltas]] fold deltas BEHIND
+    * the sink's committed checkpoint offset into `delta=base` (bounding
+    * the one-directory-per-batch growth over a stream's lifetime).
+    * Folding an UNCOMMITTED token would break the overwrite-idempotence
+    * and the probe exclusion of its replay, which is why consolidation
+    * is checkpoint-gated rather than a blind merge.
     */
-  def buildLineIndex(docs: DataFrame, idCol: String, textCol: String,
-                     path: String, minDocFreq: Int = 2): Unit = {
+  private def buildCountIndex(u: TextUnit, docs: DataFrame, idCol: String,
+      textCol: String, path: String, minDocFreq: Int): Unit = {
     require(minDocFreq >= 2, s"minDocFreq must be >= 2: $minDocFreq")
     val spark = docs.sparkSession
     import spark.implicits._
-    lineDfDelta(docs, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$path/lines/delta=base")
+    docFreq(u, u.split(docs, idCol, textCol)._2)
+      .write.mode("overwrite").parquet(s"$path/${u.subdir}/delta=base")
     Seq(minDocFreq).toDF("min_doc_freq")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
   }
 
   /** Admit a slice's line counts into a [[buildLineIndex]] layout under
-    * `token` (use the streaming batchId): same-token re-appends
-    * OVERWRITE — the replay-idempotence contract of the layout.
+    * `token` (use the streaming batchId); see [[appendCounts]].
     */
   def appendLineCounts(docs: DataFrame, idCol: String, textCol: String,
-                       path: String, token: String): Unit = {
-    lineTokenOk(token)
-    require(token != "base", "token 'base' is reserved for buildLineIndex")
-    lineDfDelta(docs, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$path/lines/delta=$token")
+                       path: String, token: String): Unit =
+    appendCounts(Lines, docs, idCol, textCol, path, token)
+
+  /** Admit a slice's paragraph counts into a [[buildParagraphIndex]]
+    * layout under `token` (use the streaming batchId); see
+    * [[appendCounts]].
+    */
+  def appendParagraphCounts(docs: DataFrame, idCol: String, textCol: String,
+                            path: String, token: String): Unit =
+    appendCounts(Paras, docs, idCol, textCol, path, token)
+
+  /** Admit a slice's unit counts under `token`: same-token re-appends
+    * OVERWRITE — the replay-idempotence contract of the layout. `base`
+    * is reserved for the builder.
+    */
+  private[graft] def appendCounts(u: TextUnit, docs: DataFrame, idCol: String,
+      textCol: String, path: String, token: String): Unit = {
+    tokenOk(token)
+    require(token != "base", s"token 'base' is reserved for ${u.builder}")
+    docFreq(u, u.split(docs, idCol, textCol)._2)
+      .write.mode("overwrite").parquet(s"$path/${u.subdir}/delta=$token")
   }
 
-  /** Remove lines whose STANDING-corpus document frequency reaches the
-    * layout's `min_doc_freq` — [[removeFrequentLines]] against a
-    * [[buildLineIndex]] layout. Standing-only like
+  /** [[removeFrequentLines]] against a [[buildLineIndex]] layout; see
+    * [[removeAgainstIndex]].
+    */
+  def removeLinesAgainstIndex(spark: org.apache.spark.sql.SparkSession,
+                              df: DataFrame, idCol: String, textCol: String,
+                              path: String,
+                              excludeToken: Option[String] = None,
+                              knownMinDocFreq: Option[Int] = None): DataFrame =
+    removeAgainstIndex(Lines, spark, df, idCol, textCol, path, excludeToken,
+      knownMinDocFreq)
+
+  /** [[removeFrequentParagraphs]] against a [[buildParagraphIndex]]
+    * layout; see [[removeAgainstIndex]].
+    */
+  def removeParagraphsAgainstIndex(spark: org.apache.spark.sql.SparkSession,
+                                   df: DataFrame, idCol: String,
+                                   textCol: String, path: String,
+                                   excludeToken: Option[String] = None,
+                                   knownMinDocFreq: Option[Int] = None)
+      : DataFrame =
+    removeAgainstIndex(Paras, spark, df, idCol, textCol, path, excludeToken,
+      knownMinDocFreq)
+
+  /** Remove units whose STANDING-corpus document frequency reaches the
+    * layout's `min_doc_freq` — [[removeFrequent]] against a
+    * [[buildCountIndex]] layout. Standing-only like
     * [[exciseAgainstIndex]]: within-batch frequency is the batch op's
     * job; run it first if the batch can carry its own boilerplate.
     * `excludeToken` skips that delta when summing — a replaying batch
@@ -1410,104 +1455,22 @@ object Dedup {
     * broadcasts the anti-join; the delta exclusion is partition
     * pruning on the token column, not a filter over rows.
     */
-  def removeLinesAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-                              df: DataFrame, idCol: String, textCol: String,
-                              path: String,
-                              excludeToken: Option[String] = None,
-                              knownMinDocFreq: Option[Int] = None): DataFrame = {
-    excludeToken.foreach(lineTokenOk)
+  private[graft] def removeAgainstIndex(u: TextUnit,
+      spark: org.apache.spark.sql.SparkSession, df: DataFrame, idCol: String,
+      textCol: String, path: String, excludeToken: Option[String],
+      knownMinDocFreq: Option[Int]): DataFrame = {
+    excludeToken.foreach(tokenOk)
     val minDocFreq = knownMinDocFreq.getOrElse(
       spark.read.parquet(s"$path/params")
         .select(col("min_doc_freq")).head().getInt(0))
-    val deltas0 = spark.read.parquet(s"$path/lines")
-    val deltas = excludeToken match {
-      case Some(t) => deltas0.where(col("delta") =!= t)
-      case None    => deltas0
-    }
-    val banned = deltas.groupBy(col("lh"))
+    val deltas = spark.read.parquet(s"$path/${u.subdir}")
+    val banned = excludeToken.fold(deltas)(t => deltas.where(col("delta") =!= t))
+      .groupBy(col(u.key))
       .agg(sum(col("df")).as("_df"))
       .filter(col("_df") >= minDocFreq)
-      .select(col("lh"))
-    val (base, lines) = splitLines(df, idCol, textCol)
-    rebuildWithoutBannedLines(base, lines, banned)
-  }
-
-  /** Per-slice paragraph document-frequencies — segmentParagraphs'
-    * units (blank-line split, trimmed, empties dropped), distinct per
-    * doc, md5-keyed. Shared by [[buildParagraphIndex]] and
-    * [[appendParagraphCounts]] so the persisted counts and their probes
-    * can never desynchronize.
-    */
-  private def paraDfDelta(df: DataFrame, idCol: String,
-                          textCol: String): DataFrame =
-    graft.ops.TextAnalysis.segmentParagraphs(df, idCol, textCol)
-      .select(col("doc_id"), md5(col("para")).as("ph")).distinct()
-      .groupBy(col("ph")).agg(count(lit(1)).as("df"))
-
-  /** Persist the standing corpus's PARAGRAPH document-frequencies —
-    * [[buildLineIndex]]'s twin at the unit web boilerplate actually
-    * repeats at (q152's standing-corpus form), completing batch ⇄
-    * index ⇄ stream symmetry for the paragraph rule. Same layout and
-    * idempotence contract as the line index, under `paras/`:
-    *
-    *   `paras/delta=<token>/` — (ph: md5 hex, df: long) per appended
-    *       slice; same-token appends OVERWRITE (replay replaces, never
-    *       double-counts), probes excluding their own token prune it
-    *       at the scan (the token is a partition column).
-    *   `params/` — (min_doc_freq).
-    */
-  def buildParagraphIndex(docs: DataFrame, idCol: String, textCol: String,
-                          path: String, minDocFreq: Int = 2): Unit = {
-    require(minDocFreq >= 2, s"minDocFreq must be >= 2: $minDocFreq")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    paraDfDelta(docs, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$path/paras/delta=base")
-    Seq(minDocFreq).toDF("min_doc_freq")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-  }
-
-  /** Admit a slice's paragraph counts into a [[buildParagraphIndex]]
-    * layout under `token` (use the streaming batchId): same-token
-    * re-appends OVERWRITE — the replay-idempotence contract.
-    */
-  def appendParagraphCounts(docs: DataFrame, idCol: String, textCol: String,
-                            path: String, token: String): Unit = {
-    lineTokenOk(token)
-    require(token != "base",
-      "token 'base' is reserved for buildParagraphIndex")
-    paraDfDelta(docs, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$path/paras/delta=$token")
-  }
-
-  /** Remove paragraphs whose STANDING-corpus document frequency reaches
-    * the layout's `min_doc_freq` — [[removeFrequentParagraphs]] against
-    * a [[buildParagraphIndex]] layout; the contract, exclusion
-    * semantics and scale shape of [[removeLinesAgainstIndex]] at the
-    * paragraph unit (ban set broadcast, token exclusion is partition
-    * pruning).
-    */
-  def removeParagraphsAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-                                   df: DataFrame, idCol: String,
-                                   textCol: String, path: String,
-                                   excludeToken: Option[String] = None,
-                                   knownMinDocFreq: Option[Int] = None)
-      : DataFrame = {
-    excludeToken.foreach(lineTokenOk)
-    val minDocFreq = knownMinDocFreq.getOrElse(
-      spark.read.parquet(s"$path/params")
-        .select(col("min_doc_freq")).head().getInt(0))
-    val deltas0 = spark.read.parquet(s"$path/paras")
-    val deltas = excludeToken match {
-      case Some(t) => deltas0.where(col("delta") =!= t)
-      case None    => deltas0
-    }
-    val banned = deltas.groupBy(col("ph"))
-      .agg(sum(col("df")).as("_df"))
-      .filter(col("_df") >= minDocFreq)
-      .select(col("ph"))
-    val (base, paras) = splitParas(df, idCol, textCol)
-    rebuildWithoutBannedParas(base, paras, banned)
+      .select(col(u.key))
+    val (base, units) = u.split(df, idCol, textCol)
+    rebuild(u, base, units, banned)
   }
 
   /** Persist the standing corpus's word-gram index — the INCREMENTAL

@@ -196,7 +196,7 @@ object IndexMaintenance {
     */
   def consolidateLineDeltas(spark: SparkSession, path: String,
                             checkpoint: String): Seq[String] =
-    consolidateCountDeltas(spark, path, checkpoint, "lines", "lh")
+    consolidateCountDeltas(spark, path, checkpoint, Dedup.Lines)
 
   /** [[consolidateLineDeltas]] for a paragraph-count layout
     * ([[graft.ops.Dedup.buildParagraphIndex]]) — same contract, same
@@ -204,13 +204,13 @@ object IndexMaintenance {
     */
   def consolidateParagraphDeltas(spark: SparkSession, path: String,
                                  checkpoint: String): Seq[String] =
-    consolidateCountDeltas(spark, path, checkpoint, "paras", "ph")
+    consolidateCountDeltas(spark, path, checkpoint, Dedup.Paras)
 
   private def consolidateCountDeltas(spark: SparkSession, path: String,
-                                     checkpoint: String, subdir: String,
-                                     keyCol: String): Seq[String] =
+                                     checkpoint: String,
+                                     unit: Dedup.TextUnit): Seq[String] =
     lastCommitted(spark, checkpoint).map { last =>
-      val unitsDir = s"${path.stripSuffix("/")}/$subdir"
+      val unitsDir = s"${path.stripSuffix("/")}/${unit.subdir}"
       val lp = new org.apache.hadoop.fs.Path(unitsDir)
       val lfs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val tokens = lfs.listStatus(lp).toSeq.map(_.getPath.getName)
@@ -225,7 +225,7 @@ object IndexMaintenance {
         stageAndSwap(spark, unitsDir) { tmp =>
           val all = spark.read.parquet(unitsDir)
           all.where(col("delta").isin(folded: _*))
-            .groupBy(col(keyCol)).agg(sum(col("df")).as("df"))
+            .groupBy(col(unit.key)).agg(sum(col("df")).as("df"))
             .write.mode("overwrite").parquet(s"$tmp/delta=base")
           kept.foreach(t =>
             all.where(col("delta") === t).drop("delta")

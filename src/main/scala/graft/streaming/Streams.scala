@@ -624,22 +624,7 @@ object Streams {
       val reps = graft.ops.Dedup.exact(withText, idCol, textCol)
         .select(col(idCol))
       val deduped = withText.join(broadcast(reps), Seq(idCol), "left_semi")
-      val withinBatch = graft.ops.Dedup
-        .exciseDupSpans(deduped, idCol, textCol, w)
-      val screened = graft.ops.Dedup
-        .exciseAgainstIndex(spark,
-          withinBatch.select(col("doc_id"), col("clean_text").as("text")),
-          "doc_id", "text", indexPath)
-        .join(withinBatch.select(col("doc_id"), col("n_words").as("_nw"),
-          col("n_excised").as("_ex1")), Seq("doc_id"))
-        .select(col("doc_id"), col("clean_text"),
-          col("_nw").as("n_words"),
-          (col("_ex1") + col("n_excised")).as("n_excised"))
-        // "excised to emptiness" requires something to have been
-        // excisABLE: a whitespace-only row (n_words = 0) passes
-        // through like the nulls, it carried nothing to excise
-        .where(col("clean_text") =!= "" || col("n_words") === 0)
-      admit(screened) {
+      admit(gramScreen(spark, deduped, idCol, textCol, indexPath, w)) {
         _.unionByName(nullTextRows(batch, idCol, textCol, "n_words", "n_excised"))
           .write.mode("append").parquet(outPath)
       } { emitted =>
@@ -650,6 +635,33 @@ object Streams {
           "_gram_text", indexPath)
       }
     }
+  }
+
+  /** The excision family's two-pass screen over non-null-text rows,
+    * shared by [[gramExciseSink]] and [[curationIngestSink]]'s rung 2:
+    * within-batch span excision at width `w`
+    * ([[graft.ops.Dedup.exciseDupSpans]]), then standing-gram excision
+    * against `indexPath` ([[graft.ops.Dedup.exciseAgainstIndex]]).
+    * Output (doc_id, clean_text, n_words, n_excised) with n_excised
+    * summed over both passes; rows excised to emptiness drop. "Excised
+    * to emptiness" requires something to have been excisABLE: a
+    * whitespace-only row (n_words = 0) passes through like the nulls,
+    * it carried nothing to excise.
+    */
+  private def gramScreen(spark: org.apache.spark.sql.SparkSession,
+                         df: DataFrame, idCol: String, textCol: String,
+                         indexPath: String, w: Int): DataFrame = {
+    val withinBatch = graft.ops.Dedup.exciseDupSpans(df, idCol, textCol, w)
+    graft.ops.Dedup
+      .exciseAgainstIndex(spark,
+        withinBatch.select(col("doc_id"), col("clean_text").as("text")),
+        "doc_id", "text", indexPath)
+      .join(withinBatch.select(col("doc_id"), col("n_words").as("_nw"),
+        col("n_excised").as("_ex1")), Seq("doc_id"))
+      .select(col("doc_id"), col("clean_text"),
+        col("_nw").as("n_words"),
+        (col("_ex1") + col("n_excised")).as("n_excised"))
+      .where(col("clean_text") =!= "" || col("n_words") === 0)
   }
 
   /** One bounded driver read of an integer build parameter (`w`,
@@ -665,24 +677,48 @@ object Streams {
   /** Streaming boilerplate-line removal — the [[graft.ops.Dedup
     * .buildLineIndex]] count layout's sink end, completing the family's
     * streaming symmetry (keys ⇄ bands ⇄ cells ⇄ grams ⇄ line counts).
-    * Each micro-batch:
+    * Survivors append as (doc_id, clean_text, n_lines, n_removed); see
+    * [[unitRemovalSink]].
+    */
+  def lineRemovalSink(spark: org.apache.spark.sql.SparkSession,
+                      stream: DataFrame, idCol: String, textCol: String,
+                      indexPath: String, outPath: String, checkpoint: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    unitRemovalSink(spark, stream, idCol, textCol, indexPath, outPath,
+      checkpoint, graft.ops.Dedup.Lines)
+
+  /** [[lineRemovalSink]] at the PARAGRAPH unit, against a
+    * [[graft.ops.Dedup.buildParagraphIndex]] layout — the streaming rung
+    * of the q152 rule (cookie banners / footers / share blocks repeat as
+    * paragraphs; the line rule only shreds them when reflow aligns).
+    * Survivors append as (doc_id, clean_text, n_paras, n_removed); see
+    * [[unitRemovalSink]].
+    */
+  def paragraphRemovalSink(spark: org.apache.spark.sql.SparkSession,
+                           stream: DataFrame, idCol: String, textCol: String,
+                           indexPath: String, outPath: String,
+                           checkpoint: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    unitRemovalSink(spark, stream, idCol, textCol, indexPath, outPath,
+      checkpoint, graft.ops.Dedup.Paras)
+
+  /** The one micro-batch of [[lineRemovalSink]] and
+    * [[paragraphRemovalSink]] at `unit`:
     *
-    *  1. within-batch pass: [[graft.ops.Dedup.removeFrequentLines]] at
-    *     the LAYOUT's threshold (a batch can carry its own chrome);
-    *  2. standing pass: [[graft.ops.Dedup.removeLinesAgainstIndex]]
-    *     probing with `excludeToken = b<batchId>` — a replaying batch
-    *     that already appended its counts sees EXACTLY the standing
-    *     state of its first run;
-    *  3. survivors append to `outPath` as (doc_id, clean_text, n_lines,
-    *     n_removed) with n_removed totalled across both passes; rows
-    *     whose every line was removed drop (all-boilerplate — nothing
-    *     to train on), rows empty WITHOUT removal pass through, and
-    *     null-text rows pass as (doc_id, null, 0, 0) — the
-    *     [[ingestGate]] admit-null contract;
-    *  4. the batch's ORIGINAL line counts admit under token
-    *     `b<batchId>` ([[graft.ops.Dedup.appendLineCounts]]) — an
-    *     OVERWRITE of that token's delta, so the append itself is
-    *     idempotent.
+    *  1-2. [[unitScreen]]: within-batch removal at the LAYOUT's
+    *     threshold (a batch can carry its own chrome), then the standing
+    *     probe with `excludeToken = b<batchId>` — a replaying batch that
+    *     already appended its counts sees EXACTLY the standing state of
+    *     its first run;
+    *  3. survivors append to `outPath` BEFORE the index advances, with
+    *     n_removed totalled across both passes; rows whose every unit
+    *     was removed drop (all-boilerplate — nothing to train on), rows
+    *     empty WITHOUT removal pass through, and null-text rows pass as
+    *     (doc_id, null, 0, 0) — the [[ingestGate]] admit-null contract;
+    *  4. the batch's ORIGINAL unit counts admit under token
+    *     `b<batchId>` ([[graft.ops.Dedup.appendLineCounts]] /
+    *     [[graft.ops.Dedup.appendParagraphCounts]]) — an OVERWRITE of
+    *     that token's delta, so the append itself is idempotent.
     *
     * REPLAY contract — EXACT convergence, no residual: unlike the
     * set-valued sinks (whose replays probe an index already holding
@@ -695,94 +731,54 @@ object Streams {
     * .compactOutput]] keyed on doc_id removes them (keep-any is safe —
     * they are equal).
     *
-    * Frequency banning is inherently retrospective: a chrome line
+    * Frequency banning is inherently retrospective: a chrome unit
     * arriving one-per-batch bans only once its summed df crosses the
     * threshold — earlier carriers passed (the stream cannot know the
     * future). Closed corpora wanting the global answer run the batch
-    * op (q97) instead.
-    */
-  def lineRemovalSink(spark: org.apache.spark.sql.SparkSession,
-                      stream: DataFrame, idCol: String, textCol: String,
-                      indexPath: String, outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    unitRemovalSink(spark, stream, idCol, textCol, indexPath, outPath,
-      checkpoint, "n_lines", graft.ops.Dedup.removeFrequentLines,
-      graft.ops.Dedup.removeLinesAgainstIndex,
-      graft.ops.Dedup.appendLineCounts)
-
-  /** [[lineRemovalSink]] at the PARAGRAPH unit — the streaming rung of
-    * the q152 rule (cookie banners / footers / share blocks repeat as
-    * paragraphs; the line rule only shreds them when reflow aligns).
-    * Per micro-batch, against a
-    * [[graft.ops.Dedup.buildParagraphIndex]] layout:
-    *
-    *  1. within-batch [[graft.ops.Dedup.removeFrequentParagraphs]] at
-    *     the layout's threshold;
-    *  2. [[graft.ops.Dedup.removeParagraphsAgainstIndex]] over the
-    *     survivors, excluding this batch's own token — the standing
-    *     counts a replay sees are exactly the first run's;
-    *  3. cleaned docs append to `outPath` BEFORE the index advances —
-    *     all-boilerplate docs (clean_text '' with removals) drop,
-    *     docs empty on arrival pass through, null-text rows pass
-    *     through null (the line sink's contract);
-    *  4. the batch's ORIGINAL paragraph counts admit under token
-    *     `b<batchId>` ([[graft.ops.Dedup.appendParagraphCounts]]) —
-    *     an overwrite, so the append is idempotent.
-    *
-    * REPLAY contract: exact convergence, the line sink's argument
-    * verbatim — the count layout gives replays the first run's exact
-    * inputs (step 2's exclusion pins the standing counts, steps 1/2
-    * deterministic, step 4 replaces), so the only at-least-once
-    * artifact is `outPath` re-appending byte-identical rows
-    * (compactOutput keyed on doc_id removes them; keep-any is safe).
-    */
-  def paragraphRemovalSink(spark: org.apache.spark.sql.SparkSession,
-                           stream: DataFrame, idCol: String, textCol: String,
-                           indexPath: String, outPath: String,
-                           checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    unitRemovalSink(spark, stream, idCol, textCol, indexPath, outPath,
-      checkpoint, "n_paras", graft.ops.Dedup.removeFrequentParagraphs,
-      graft.ops.Dedup.removeParagraphsAgainstIndex,
-      graft.ops.Dedup.appendParagraphCounts)
-
-  /** The one micro-batch of [[lineRemovalSink]] and
-    * [[paragraphRemovalSink]], over the unit's `Dedup` functions
-    * (within-batch removal, standing probe, count admission) and its
-    * counter column `units`: within-batch pass at the layout's
-    * threshold, standing probe excluding the batch's own `b<batchId>`
-    * token, output append, then the batch's original counts admit under
-    * that token.
+    * op (q97, q152) instead.
     */
   private def unitRemovalSink(
       spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
       idCol: String, textCol: String, indexPath: String, outPath: String,
-      checkpoint: String, units: String,
-      removeFrequent: (DataFrame, String, String, Int) => DataFrame,
-      removeAgainstIndex: (org.apache.spark.sql.SparkSession, DataFrame,
-        String, String, String, Option[String], Option[Int]) => DataFrame,
-      appendCounts: (DataFrame, String, String, String, String) => Unit)
+      checkpoint: String, unit: graft.ops.Dedup.TextUnit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val minDocFreq = layoutParam(spark, indexPath, "min_doc_freq")
     batches(stream, checkpoint) { (batch, batchId) =>
       val token = s"b$batchId"
       val withText = batch.where(col(textCol).isNotNull)
-      val withinBatch = removeFrequent(withText, idCol, textCol, minDocFreq)
-      val screened = removeAgainstIndex(spark,
-          withinBatch.select(col("doc_id"), col("clean_text").as("text")),
-          "doc_id", "text", indexPath, Some(token), Some(minDocFreq))
-        .join(withinBatch.select(col("doc_id"), col(units).as("_nu"),
-          col("n_removed").as("_rm1")), Seq("doc_id"))
-        .select(col("doc_id"), col("clean_text"), col("_nu").as(units),
-          (col("_rm1") + col("n_removed")).as("n_removed"))
-        // empty + something removed = all-boilerplate, drop; empty
-        // with NOTHING removed was empty on arrival, pass through
-        .where(col("clean_text") =!= "" || col("n_removed") === 0)
-      admit(screened) {
-        _.unionByName(nullTextRows(batch, idCol, textCol, units, "n_removed"))
+      admit(unitScreen(spark, unit, withText, idCol, textCol, indexPath,
+          token, minDocFreq)) {
+        _.unionByName(nullTextRows(batch, idCol, textCol, unit.counter,
+            "n_removed"))
           .write.mode("append").parquet(outPath)
-      }(_ => appendCounts(withText, idCol, textCol, indexPath, token))
+      }(_ => graft.ops.Dedup.appendCounts(unit, withText, idCol, textCol,
+        indexPath, token))
     }
+  }
+
+  /** The removal family's two-pass screen over non-null-text rows, shared
+    * by [[unitRemovalSink]] and [[curationIngestSink]]'s line rung:
+    * within-batch removal at `minDocFreq` (the layout's threshold), then
+    * the standing probe of `indexPath` excluding `token`. Output
+    * (doc_id, clean_text, unit.counter, n_removed) with n_removed
+    * summed over both passes; a row emptied BY removal
+    * (all-boilerplate) drops, one empty with nothing removed was empty
+    * on arrival and stays.
+    */
+  private def unitScreen(spark: org.apache.spark.sql.SparkSession,
+                         unit: graft.ops.Dedup.TextUnit, df: DataFrame,
+                         idCol: String, textCol: String, indexPath: String,
+                         token: String, minDocFreq: Int): DataFrame = {
+    val withinBatch = graft.ops.Dedup.removeFrequent(unit, df, idCol,
+      textCol, minDocFreq)
+    graft.ops.Dedup.removeAgainstIndex(unit, spark,
+        withinBatch.select(col("doc_id"), col("clean_text").as("text")),
+        "doc_id", "text", indexPath, Some(token), Some(minDocFreq))
+      .join(withinBatch.select(col("doc_id"), col(unit.counter).as("_nu"),
+        col("n_removed").as("_rm1")), Seq("doc_id"))
+      .select(col("doc_id"), col("clean_text"), col("_nu").as(unit.counter),
+        (col("_rm1") + col("n_removed")).as("n_removed"))
+      .where(col("clean_text") =!= "" || col("n_removed") === 0)
   }
 
   /** The COMPOSED streaming ingest — [[ingestGate]] →
@@ -948,19 +944,8 @@ object Streams {
           // batch-curate order — chrome first, verbatim spans second ──
           val lined0 = lineIndexPath match {
             case Some(p) =>
-              val wb = graft.ops.Dedup.removeFrequentLines(
-                fresh, idCol, textCol, lineMdf.get)
-              graft.ops.Dedup.removeLinesAgainstIndex(spark,
-                  wb.select(col("doc_id"), col("clean_text").as("text")),
-                  "doc_id", "text", p,
-                  excludeToken = Some(s"b$batchId"),
-                  knownMinDocFreq = lineMdf)
-                .join(wb.select(col("doc_id"), col("n_removed").as("_rm1")),
-                  Seq("doc_id"))
-                // emptied BY removal = all-boilerplate, drop; empty
-                // with nothing removed was empty on arrival, keep
-                .where(col("clean_text") =!= "" ||
-                  (col("n_removed") + col("_rm1")) === 0)
+              unitScreen(spark, graft.ops.Dedup.Lines, fresh, idCol,
+                  textCol, p, s"b$batchId", lineMdf.get)
                 // kept newlines re-normalize to the single-space
                 // convention the word-level rungs split on
                 .select(col("doc_id").as(idCol),
@@ -972,19 +957,8 @@ object Streams {
               linedP = Some(lined0.persist()); lined0
             } else lined0
           // ── rung 2: the gramExciseSink excisions ──
-          val withinBatch = graft.ops.Dedup
-            .exciseDupSpans(lined, idCol, textCol, w)
-          val screened = graft.ops.Dedup
-            .exciseAgainstIndex(spark,
-              withinBatch.select(col("doc_id"), col("clean_text").as("text")),
-              "doc_id", "text", gramIndexPath)
-            .join(withinBatch.select(col("doc_id"), col("n_words").as("_nw"),
-              col("n_excised").as("_ex1")), Seq("doc_id"))
-            .select(col("doc_id"), col("clean_text"),
-              col("_nw").as("n_words"),
-              (col("_ex1") + col("n_excised")).as("n_excised"))
-            .where(col("clean_text") =!= "" || col("n_words") === 0)
-            .persist()
+          val screened = gramScreen(spark, lined, idCol, textCol,
+            gramIndexPath, w).persist()
           try {
             // ── rung 3: the semanticGateSink screens on survivors ──
             // zero-norm vectors are excluded like null ones (the q81
