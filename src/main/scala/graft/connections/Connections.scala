@@ -112,14 +112,29 @@ class Connections(file: TaskFile, spark: SparkSession) {
       case _        => Map.empty
     }
 
-  private[connections] def jdbcProps(node: Node): java.util.Properties = {
-    val p = new java.util.Properties()
-    node.strOpt("user").filter(_.nonEmpty).foreach(p.setProperty("user", _))
-    node.strOpt("pass").filter(_.nonEmpty).foreach(p.setProperty("password", _))
-    p.setProperty("batchsize", node.str("batchsize", "10000"))
-    vendorProps(node).foreach { case (k, v) => p.setProperty(k, v) }
+  /** What every connection carries — reader, writer and raw exec:
+    * `user` and `password` when set, plus [[vendorProps]].
+    */
+  private def connectionProps(node: Node): Map[String, String] =
+    node.strOpt("user").filter(_.nonEmpty).map("user" -> _).toMap ++
+      node.strOpt("pass").filter(_.nonEmpty).map("password" -> _) ++
+      vendorProps(node)
+
+  /** The read path's options: [[connectionProps]], batching and the
+    * `initializing` statements.
+    */
+  private def readOptions(node: Node): Map[String, String] = {
     val init = initSql(node)
-    if (init.nonEmpty) p.setProperty("sessionInitStatement", init.mkString("; "))
+    connectionProps(node) + ("batchsize" -> node.str("batchsize", "10000")) ++
+      Option.when(init.nonEmpty)("sessionInitStatement" -> init.mkString("; "))
+  }
+
+  private[connections] def jdbcProps(node: Node): java.util.Properties =
+    toProperties(readOptions(node))
+
+  private def toProperties(m: Map[String, String]): java.util.Properties = {
+    val p = new java.util.Properties()
+    m.foreach { case (k, v) => p.setProperty(k, v) }
     p
   }
 
@@ -144,10 +159,7 @@ class Connections(file: TaskFile, spark: SparkSession) {
       .format("jdbc")
       .option("url", jdbcUrl(node))
       .option("query", sql)
-      .options(jdbcProps(node).entrySet().toArray.map { e =>
-        val kv = e.asInstanceOf[java.util.Map.Entry[AnyRef, AnyRef]]
-        kv.getKey.toString -> kv.getValue.toString
-      }.toMap)
+      .options(readOptions(node))
       .load()
 
   /** Table write with the reference's truncate-vs-append semantics
@@ -172,9 +184,7 @@ class Connections(file: TaskFile, spark: SparkSession) {
         .option("url", jdbcUrl(node))
         .option("dbtable", qualified)
         .option("batchsize", node.str("batchsize", "10000"))
-      vendorProps(node).foreach { case (k, v) => writer.option(k, v) }
-      node.strOpt("user").filter(_.nonEmpty).foreach(writer.option("user", _))
-      node.strOpt("pass").filter(_.nonEmpty).foreach(writer.option("password", _))
+        .options(connectionProps(node))
       if (truncate)
         // truncate=true keeps the target table's DDL and empties it — the
         // exact petl todb contract (truncate, then insert).
@@ -196,11 +206,8 @@ class Connections(file: TaskFile, spark: SparkSession) {
       spark.sql(sql).write.format("noop").mode("overwrite").save()
     }
     else {
-      val props = new java.util.Properties()
-      node.strOpt("user").filter(_.nonEmpty).foreach(props.setProperty("user", _))
-      node.strOpt("pass").filter(_.nonEmpty).foreach(props.setProperty("password", _))
-      vendorProps(node).foreach { case (k, v) => props.setProperty(k, v) }
-      val conn = java.sql.DriverManager.getConnection(jdbcUrl(node), props)
+      val conn = java.sql.DriverManager.getConnection(jdbcUrl(node),
+        toProperties(connectionProps(node)))
       try {
         val st = conn.createStatement()
         initSql(node).foreach(st.execute)
