@@ -3,7 +3,7 @@ package graft.sinks
 import graft.config.TaskConfig.Node
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 
 /** CSV sink with the reference's file semantics (petl tocsv/appendcsv,
   * /root/reference/dasladen/task.py:199-202 et al.):
@@ -31,16 +31,21 @@ object CsvSink {
     val enc = node.str("encoding", "utf-8")
     val singleFile = node.bool("single_file", default = true)
     if (singleFile) writeSingle(df, targetFile, sep, enc, truncate, keep)
-    else {
-      val writer = df.write
-        .option("header", truncate.toString) // append carries no header (petl appendcsv)
-        .option("sep", sep)
-        .option("encoding", enc)
-        .option("emptyValue", "") // same cell serialization as single-file mode
-        .mode(if (truncate) "overwrite" else "append")
-      writer.csv(targetFile)
-    }
+    else csvWriter(df, sep, enc, truncate)
+      .mode(if (truncate) "overwrite" else "append")
+      .csv(targetFile)
   }
+
+  /** The writer options both modes share: append carries no header
+    * (petl appendcsv), and an empty string is written as an empty cell.
+    */
+  private def csvWriter(df: DataFrame, sep: String, enc: String,
+                        truncate: Boolean): DataFrameWriter[Row] =
+    df.write
+      .option("header", truncate.toString)
+      .option("sep", sep)
+      .option("encoding", enc)
+      .option("emptyValue", "")
 
   private def writeSingle(df: DataFrame, targetFile: String, sep: String,
                           enc: String, truncate: Boolean, keep: => Boolean): Unit = {
@@ -50,12 +55,7 @@ object CsvSink {
     // feeds it (the scan and the transforms back to the last shuffle)
     // runs as the one task that writes the single file
     try {
-      df.coalesce(1).write
-        .option("header", truncate.toString)
-        .option("sep", sep)
-        .option("encoding", enc)
-        .option("emptyValue", "")
-        .csv(tmpOut)
+      csvWriter(df.coalesce(1), sep, enc, truncate).csv(tmpOut)
       if (keep) {
         val part = new File(tmpOut).listFiles()
           .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
