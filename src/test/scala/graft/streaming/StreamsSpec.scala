@@ -1641,6 +1641,78 @@ class StreamsSpec extends SparkSpec {
     }
   }
 
+  test("every vector-index sink stores a streamed row exactly as its builder stored it") {
+    implicit val sqlCtx = spark.sqlContext
+    val rng = new scala.util.Random(53)
+    // float vectors, so the double cast is exercised; a null and an
+    // empty vector must be refused by builder and sink alike
+    val corpus: Seq[(Long, Seq[Float])] =
+      (1L to 40L).map(i => (i, Seq.fill(8)(rng.nextFloat() - 0.5f))) ++
+        Seq((98L, null), (99L, Seq.empty[Float]))
+    val S = graft.ops.Similarity
+    type Frame = org.apache.spark.sql.DataFrame
+    type Sink = (Frame, String, String) => org.apache.spark.sql.streaming.StreamingQuery
+    def ivfDrift: Sink = (df, path, ckpt) => Streams.ivfDriftCardSink(spark,
+      df, "vec_id", "embedding", path, ckpt, s"${path}_card")
+    val layouts: Seq[(String, (Frame, String) => Unit, Sink)] = Seq(
+      ("lsh", S.buildLshIndex(_, "vec_id", "embedding", _, dim = 8, nBits = 3),
+        (df, path, ckpt) => Streams.lshIndexSink(df, "embedding", path, ckpt,
+          dim = 8, nBits = 3)),
+      ("lsh int8", S.buildLshIndexQuantized(_, "vec_id", "embedding", _,
+          dim = 8, nBits = 3),
+        (df, path, ckpt) => Streams.lshIndexQuantizedSink(df, "vec_id",
+          "embedding", path, ckpt, dim = 8, nBits = 3)),
+      ("ivf", S.buildIvfIndex(_, "vec_id", "embedding", _, nCells = 4),
+        (df, path, ckpt) => Streams.ivfIndexSink(spark, df, "embedding", path,
+          ckpt)),
+      ("ivf int8", S.buildIvfIndexQuantized(_, "vec_id", "embedding", _,
+          nCells = 4),
+        (df, path, ckpt) => Streams.ivfIndexQuantizedSink(spark, df, "vec_id",
+          "embedding", path, ckpt)),
+      ("pq", S.buildPqIndex(_, "vec_id", "embedding", _, m = 2, nCodes = 4),
+        (df, path, ckpt) => Streams.pqIndexSink(spark, df, "vec_id",
+          "embedding", path, ckpt)),
+      ("ivf_pq raw", S.buildIvfPqIndex(_, "vec_id", "embedding", _, nCells = 4,
+          m = 2, nCodes = 4),
+        (df, path, ckpt) => Streams.ivfPqIndexSink(spark, df, "vec_id",
+          "embedding", path, ckpt)),
+      ("ivf_pq residual", S.buildIvfPqIndex(_, "vec_id", "embedding", _,
+          nCells = 4, m = 2, nCodes = 4, residual = true),
+        (df, path, ckpt) => Streams.ivfPqIndexSink(spark, df, "vec_id",
+          "embedding", path, ckpt)),
+      ("drift card, ivf", S.buildIvfIndex(_, "vec_id", "embedding", _,
+          nCells = 4), ivfDrift),
+      ("drift card, ivf_int8", S.buildIvfIndexQuantized(_, "vec_id",
+          "embedding", _, nCells = 4), ivfDrift),
+      ("drift card, ivf_pq raw", S.buildIvfPqIndex(_, "vec_id", "embedding", _,
+          nCells = 4, m = 2, nCodes = 4), ivfDrift),
+      ("drift card, ivf_pq residual", S.buildIvfPqIndex(_, "vec_id",
+          "embedding", _, nCells = 4, m = 2, nCodes = 4, residual = true),
+        ivfDrift))
+    for ((name, build, sink) <- layouts) {
+      val dir = tmpDir("graft_placement_")
+      build(corpus.toDF("vec_id", "embedding"), s"$dir/idx")
+      val mem = MemoryStream[(Long, Seq[Float])]
+      val q = sink(mem.toDF().toDF("vec_id", "embedding"), s"$dir/idx",
+        s"$dir/ckpt")
+      try {
+        mem.addData(corpus: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      // the partition column reads back from the directory name, so a
+      // row-level comparison covers the partition dir and every stored
+      // column at once
+      val data = spark.read.parquet(s"$dir/idx/data")
+      val perRow = data.groupBy(data.columns.map(col): _*).count()
+        .select("vec_id", "count").as[(Long, Long)].collect()
+      assert(perRow.map(_._1).sorted.toSeq == (1L to 40L),
+        s"$name: one distinct stored row per valid id: ${perRow.toList}")
+      assert(perRow.forall(_._2 == 2L),
+        s"$name: the built and the streamed row must be identical: " +
+          perRow.filter(_._2 != 2L).toList)
+    }
+  }
+
   test("streaming text-index sink: streamed docs pair with the batch corpus, no re-tokenization") {
     implicit val sqlCtx = spark.sqlContext
     val base = "the quick brown fox jumps over the lazy dog near the river bank today"
