@@ -7,6 +7,24 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType}
 
+/** Content equality for the expressions that carry constant arrays
+  * (centroids, codebooks, lookup tables): case-class equality compares
+  * arrays by identity, so two plans built from separately read copies of
+  * the same tables would not canonicalize equal, breaking
+  * ReusedExchange. Every constructor field is compared with
+  * `Objects.deepEquals` and hashed with `Arrays.deepHashCode`.
+  */
+trait ContentEquality extends Product {
+  override def equals(o: Any): Boolean = o match {
+    case p: Product if p.getClass == getClass =>
+      productIterator.zip(p.productIterator)
+        .forall { case (a, b) => java.util.Objects.deepEquals(a, b) }
+    case _ => false
+  }
+  override def hashCode(): Int =
+    java.util.Arrays.deepHashCode(productIterator.map(_.asInstanceOf[AnyRef]).toArray)
+}
+
 /** Codegen'd dot product over two `array<double>` columns.
   *
   * The composable form — `aggregate(zip_with(a, b, _*_), 0d, _+_)` —
@@ -328,7 +346,7 @@ object RandomHyperplanes {
   */
 case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with ImplicitCastInputTypes {
+  with ImplicitCastInputTypes with ContentEquality {
 
   import org.apache.spark.sql.types.IntegerType
 
@@ -351,18 +369,6 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
       s"${ev.value} = org.apache.spark.sql.graft.NearestCentroid.nearest($cRef, $nRef, $v);"
     })
   }
-
-  // array contents define equality; the default case-class equality on
-  // Array is identity-based, which breaks plan canonicalization (and so
-  // ReusedExchange) across copies
-  override def equals(o: Any): Boolean = o match {
-    case NearestCentroid(c, cs) =>
-      c == child && cs.length == centroids.length &&
-        cs.zip(centroids).forall { case (a, b) => java.util.Arrays.equals(a, b) }
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * child.hashCode() + centroids.map(java.util.Arrays.hashCode).toSeq.hashCode()
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
     copy(child = newChild)
@@ -708,7 +714,7 @@ object WordGramHashes {
   */
 case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with ImplicitCastInputTypes {
+  with ImplicitCastInputTypes with ContentEquality {
 
   import org.apache.spark.sql.types.IntegerType
 
@@ -738,21 +744,6 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
       s"${ev.value} = org.apache.spark.sql.graft.PqEncode.encode($cbRef, $n2Ref, $v);"
     })
   }
-
-  // content-based equality: the default identity equality on nested
-  // arrays breaks plan canonicalization (see NearestCentroid)
-  override def equals(o: Any): Boolean = o match {
-    case PqEncode(c, cbs) =>
-      c == child && cbs.length == codebooks.length &&
-        cbs.zip(codebooks).forall { case (a, b) =>
-          a.length == b.length &&
-            a.zip(b).forall { case (x, y) => java.util.Arrays.equals(x, y) }
-        }
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * child.hashCode() +
-      codebooks.map(_.map(java.util.Arrays.hashCode).toSeq).toSeq.hashCode()
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
     copy(child = newChild)
@@ -812,7 +803,7 @@ object PqEncode {
 case class PqAdcScore(child: Expression, dots: Array[Array[Double]],
                       norm2: Array[Array[Double]], qNorm: Double)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with ImplicitCastInputTypes {
+  with ImplicitCastInputTypes with ContentEquality {
 
   import org.apache.spark.sql.types.IntegerType
 
@@ -835,18 +826,6 @@ case class PqAdcScore(child: Expression, dots: Array[Array[Double]],
         s"java.lang.Double.longBitsToDouble(${qBits}L), $v);"
     })
   }
-
-  override def equals(o: Any): Boolean = o match {
-    case PqAdcScore(c, ds, ns, qn) =>
-      c == child && qn == qNorm &&
-        ds.length == dots.length && ns.length == norm2.length &&
-        ds.zip(dots).forall { case (a, b) => java.util.Arrays.equals(a, b) } &&
-        ns.zip(norm2).forall { case (a, b) => java.util.Arrays.equals(a, b) }
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * (31 * child.hashCode() + qNorm.hashCode()) +
-      dots.map(java.util.Arrays.hashCode).toSeq.hashCode()
 
   override protected def withNewChildInternal(newChild: Expression): PqAdcScore =
     copy(child = newChild)
@@ -886,7 +865,7 @@ object PqAdcScore {
   */
 case class PqQueryLut(child: Expression, codebooks: Array[Array[Array[Double]]])
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with ImplicitCastInputTypes {
+  with ImplicitCastInputTypes with ContentEquality {
 
   require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
     "PqQueryLut needs at least one codeword per subspace")
@@ -906,21 +885,6 @@ case class PqQueryLut(child: Expression, codebooks: Array[Array[Array[Double]]])
       s"${ev.value} = org.apache.spark.sql.graft.PqQueryLut.compute($cbRef, $v);"
     })
   }
-
-  // content-based equality: identity equality on nested arrays breaks
-  // plan canonicalization (see PqEncode)
-  override def equals(o: Any): Boolean = o match {
-    case PqQueryLut(c, cbs) =>
-      c == child && cbs.length == codebooks.length &&
-        cbs.zip(codebooks).forall { case (a, b) =>
-          a.length == b.length &&
-            a.zip(b).forall { case (x, y) => java.util.Arrays.equals(x, y) }
-        }
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * child.hashCode() +
-      codebooks.map(_.map(java.util.Arrays.hashCode).toSeq).toSeq.hashCode()
 
   override protected def withNewChildInternal(newChild: Expression): PqQueryLut =
     copy(child = newChild)
@@ -970,7 +934,7 @@ object PqQueryLut {
 case class PqAdcScoreBatch(first: Expression, second: Expression, third: Expression,
                            norm2: Array[Array[Double]])
   extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-  with ImplicitCastInputTypes {
+  with ImplicitCastInputTypes with ContentEquality {
 
   import org.apache.spark.sql.types.IntegerType
 
@@ -992,17 +956,6 @@ case class PqAdcScoreBatch(first: Expression, second: Expression, third: Express
       s"${ev.value} = org.apache.spark.sql.graft.PqAdcScoreBatch.score($nRef, $c, $l, $q);"
     })
   }
-
-  override def equals(o: Any): Boolean = o match {
-    case PqAdcScoreBatch(a, b, c, ns) =>
-      a == first && b == second && c == third &&
-        ns.length == norm2.length &&
-        ns.zip(norm2).forall { case (x, y) => java.util.Arrays.equals(x, y) }
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * Seq(first, second, third).hashCode() +
-      norm2.map(java.util.Arrays.hashCode).toSeq.hashCode()
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): PqAdcScoreBatch =
@@ -1041,7 +994,7 @@ object PqAdcScoreBatch {
   */
 case class CentroidResidual(left: Expression, right: Expression,
                             centroids: Array[Array[Double]])
-  extends BinaryExpression with ImplicitCastInputTypes {
+  extends BinaryExpression with ImplicitCastInputTypes with ContentEquality {
 
   import org.apache.spark.sql.types.IntegerType
 
@@ -1062,16 +1015,6 @@ case class CentroidResidual(left: Expression, right: Expression,
       s"${ev.value} = org.apache.spark.sql.graft.CentroidResidual.compute($cRef, $v, $c);"
     })
   }
-
-  override def equals(o: Any): Boolean = o match {
-    case CentroidResidual(l, r, cs) =>
-      l == left && r == right && cs.length == centroids.length &&
-        cs.zip(centroids).forall { case (a, b) => java.util.Arrays.equals(a, b) }
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * Seq(left, right).hashCode() +
-      centroids.map(java.util.Arrays.hashCode).toSeq.hashCode()
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CentroidResidual =
@@ -1110,7 +1053,7 @@ case class PqResidualQueryLut(child: Expression,
                               codebooks: Array[Array[Array[Double]]],
                               centroids: Array[Array[Double]])
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with ImplicitCastInputTypes {
+  with ImplicitCastInputTypes with ContentEquality {
 
   require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
     "PqResidualQueryLut needs at least one codeword per subspace")
@@ -1131,22 +1074,6 @@ case class PqResidualQueryLut(child: Expression,
         s".compute($cbRef, $ceRef, $v);"
     })
   }
-
-  override def equals(o: Any): Boolean = o match {
-    case PqResidualQueryLut(c, cbs, ces) =>
-      c == child && cbs.length == codebooks.length &&
-        cbs.zip(codebooks).forall { case (a, b) =>
-          a.length == b.length &&
-            a.zip(b).forall { case (x, y) => java.util.Arrays.equals(x, y) }
-        } &&
-        ces.length == centroids.length &&
-        ces.zip(centroids).forall { case (x, y) => java.util.Arrays.equals(x, y) }
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * (31 * child.hashCode() +
-      codebooks.map(_.map(java.util.Arrays.hashCode).toSeq).toSeq.hashCode()) +
-      centroids.map(java.util.Arrays.hashCode).toSeq.hashCode()
 
   override protected def withNewChildInternal(newChild: Expression): PqResidualQueryLut =
     copy(child = newChild)
@@ -1226,7 +1153,7 @@ case class PqAdcResidualScore(first: Expression, second: Expression,
                               cd: Array[Array[Array[Double]]],
                               cn2: Array[Double])
   extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-  with ImplicitCastInputTypes {
+  with ImplicitCastInputTypes with ContentEquality {
 
   import org.apache.spark.sql.types.IntegerType
 
@@ -1253,23 +1180,6 @@ case class PqAdcResidualScore(first: Expression, second: Expression,
         s".score($nRef, $dRef, $cRef, $codes, $cell, $lut);"
     })
   }
-
-  override def equals(o: Any): Boolean = o match {
-    case PqAdcResidualScore(a, b, c, ns, ds, cs) =>
-      a == first && b == second && c == third &&
-        java.util.Arrays.equals(cs, cn2) &&
-        ns.length == norm2.length &&
-        ns.zip(norm2).forall { case (x, y) => java.util.Arrays.equals(x, y) } &&
-        ds.length == cd.length &&
-        ds.zip(cd).forall { case (x, y) =>
-          x.length == y.length &&
-            x.zip(y).forall { case (u, v) => java.util.Arrays.equals(u, v) }
-        }
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * Seq(first, second, third).hashCode() +
-      java.util.Arrays.hashCode(cn2)
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -1932,7 +1842,7 @@ object GopherStats {
 case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
                             nProbe: Int)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with ImplicitCastInputTypes {
+  with ImplicitCastInputTypes with ContentEquality {
 
   require(nProbe >= 1 && nProbe <= centroids.length,
     s"nProbe must be in [1, ${centroids.length}]: $nProbe")
@@ -1956,17 +1866,6 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
       s"${ev.value} = org.apache.spark.sql.graft.NearestCentroids.nearestK($cRef, $nRef, $v, $nProbe);"
     })
   }
-
-  // same array-content equality rationale as NearestCentroid
-  override def equals(o: Any): Boolean = o match {
-    case NearestCentroids(c, cs, p) =>
-      c == child && p == nProbe && cs.length == centroids.length &&
-        cs.zip(centroids).forall { case (a, b) => java.util.Arrays.equals(a, b) }
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * (31 * child.hashCode() + nProbe) +
-      centroids.map(java.util.Arrays.hashCode).toSeq.hashCode()
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
     copy(child = newChild)

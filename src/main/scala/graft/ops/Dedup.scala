@@ -1322,9 +1322,9 @@ object Dedup {
     units.where(u.counted).select(col(u.key), col("doc_id")).distinct()
       .groupBy(col(u.key)).agg(count(lit(1)).as("df"))
 
-  private def tokenOk(token: String): Unit =
+  private def tokenOk(u: TextUnit)(token: String): Unit =
     require(token.nonEmpty && token.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
-      s"line-index append token must be [A-Za-z0-9_-]+: '$token'")
+      s"${u.unit}-index append token must be [A-Za-z0-9_-]+: '$token'")
 
   /** Persist the standing corpus's LINE document-frequencies —
     * [[removeFrequentLines]]' standing-corpus form; layout
@@ -1406,7 +1406,7 @@ object Dedup {
     */
   private[graft] def appendCounts(u: TextUnit, docs: DataFrame, idCol: String,
       textCol: String, path: String, token: String): Unit = {
-    tokenOk(token)
+    tokenOk(u)(token)
     require(token != "base", s"token 'base' is reserved for ${u.builder}")
     docFreq(u, u.split(docs, idCol, textCol)._2)
       .write.mode("overwrite").parquet(s"$path/${u.subdir}/delta=$token")
@@ -1459,7 +1459,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, df: DataFrame, idCol: String,
       textCol: String, path: String, excludeToken: Option[String],
       knownMinDocFreq: Option[Int]): DataFrame = {
-    excludeToken.foreach(tokenOk)
+    excludeToken.foreach(tokenOk(u))
     val minDocFreq = knownMinDocFreq.getOrElse(
       spark.read.parquet(s"$path/params")
         .select(col("min_doc_freq")).head().getInt(0))

@@ -68,6 +68,16 @@ object Similarity {
 
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))
 
+  /** A vector with geometry: null and empty vectors can neither seed,
+    * refine nor be placed in a layout.
+    */
+  private def hasVector(vecCol: String): Column =
+    col(vecCol).isNotNull && size(col(vecCol)) > 0
+
+  /** The rows of `df` whose vector has geometry, as (id, `_v` double). */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.where(hasVector(vecCol)).select(col(idCol), asDouble(col(vecCol)).as("_v"))
+
   /** Brute-force cosine top-k against one query vector (by id).
     * Broadcast the 1-row query side; `orderBy(...).limit(k)` plans as
     * TakeOrderedAndProject — per-partition heap + driver merge, no global
@@ -430,9 +440,7 @@ object Similarity {
                          nCells: Int = 16, perCell: Int = 10,
                          kmeansIters: Int = 0): DataFrame = {
     require(perCell >= 1, s"perCell must be positive: $perCell")
-    val e = emb
-      .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
+    val e = vectors(emb, idCol, vecCol)
     val centroids = ivfCentroids(e, idCol, nCells, kmeansIters)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cell")).orderBy(col("_h"), col(idCol))
@@ -879,8 +887,7 @@ object Similarity {
 
   private def semCells(emb: DataFrame, idCol: String, vecCol: String,
                        nCells: Int): DataFrame = {
-    val e = emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
+    val e = vectors(emb, idCol, vecCol)
     val centroids = ivfCentroids(e, idCol, nCells, kmeansIters = 0)
     // norm precomputed BELOW the cell exchange (8 bytes/row on the wire)
     // so the within-cell quadratic pair scan pays one dot per pair, not
@@ -917,8 +924,7 @@ object Similarity {
     */
   def ivfCellProfile(emb: DataFrame, idCol: String, vecCol: String,
                      nCells: Int = 16): DataFrame = {
-    val e = emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
+    val e = vectors(emb, idCol, vecCol)
     val centroids = ivfCentroids(e, idCol, nCells, kmeansIters = 0)
     val counts = e
       .select(graft.functions.VectorFunctions.nearestCentroid(col("_v"), centroids)
@@ -947,7 +953,7 @@ object Similarity {
     */
   def embeddingCard(emb: DataFrame, idCol: String, vecCol: String,
                     labelCol: String): DataFrame = {
-    val hasVec = col(vecCol).isNotNull && size(col(vecCol)) > 0
+    val hasVec = hasVector(vecCol)
     emb.select(col(labelCol).as("label"),
         when(hasVec, lit(0L)).otherwise(1L).as("_novec"),
         when(hasVec, size(col(vecCol))).as("_dim"),
@@ -1148,6 +1154,98 @@ object Similarity {
   // time (PartitionFilters in the scan) and touches only nProbe/nCells
   // (IVF) or (nBits+1)/2^nBits (LSH) of the data on disk.
 
+  /** One vector-index layout's row placement: the one rule by which
+    * every writer of the layout (its builder, its streaming index sink,
+    * the drift card and the semantic gates) turns an input row into a
+    * stored row. Batch-built and streamed rows therefore land in the
+    * same partition with the same encoding, and every probe matches
+    * both.
+    *
+    *  - `part`: the partition column and its value from the `double`
+    *    vector: `bucket` ([[lshPlacement]]), `cell` ([[cellPlacement]]),
+    *    or none (flat PQ);
+    *  - `store`: what a stored row keeps ([[Floats]], [[Int8]] or
+    *    [[Codes]]).
+    */
+  private[graft] final case class Placement(part: Option[(String, Column => Column)],
+                                            store: Store) {
+    private def partCols: Seq[Column] = part.map(p => col(p._1)).toSeq
+
+    /** The stored rows of `df`. Rows without a vector are refused (a
+      * null partition value would land in `__HIVE_DEFAULT_PARTITION__`,
+      * invisible to every probe); the vector is cast to `double` once,
+      * placed, then stored. `idCol` is read only by the coded stores.
+      */
+    def rows(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
+      def placed(d: DataFrame, v: Column) =
+        part.fold(d) { case (name, of) => d.withColumn(name, of(v)) }
+      def keep(stored: Column*) = placed(vectors(df, idCol, vecCol), col("_v"))
+        .select((col(idCol) +: stored) ++ partCols: _*)
+      val vf = graft.functions.VectorFunctions
+      store match {
+        case Floats => placed(df.where(hasVector(vecCol)), asDouble(col(vecCol)))
+        case Int8 =>
+          keep(vf.quantizeInt8(col("_v")).as("_z")).select(Seq(col(idCol),
+            col("_z.scale").as("scale"), col("_z.q").as("q")) ++ partCols: _*)
+        case Codes(cb, residualTo) =>
+          keep(vf.pqEncode(residualTo.fold(col("_v"))(cents =>
+            vf.centroidResidual(col("_v"), col("cell"), cents)), cb).as("codes"))
+      }
+    }
+
+    /** Write placed `rows` to `path/data`, partitioned by `part`. */
+    def write(rows: DataFrame, path: String, mode: String): Unit = {
+      val w = rows.write.mode(mode)
+      part.fold(w)(p => w.partitionBy(p._1)).parquet(s"$path/data")
+    }
+  }
+
+  /** What a stored row keeps. */
+  private[graft] sealed trait Store
+  /** Every input column, the vector as given. */
+  private[graft] case object Floats extends Store
+  /** (id, scale, q: array<byte>), quantized after placing. */
+  private[graft] case object Int8 extends Store
+  /** (id, codes: array<int>) against `codebooks`; a residual layout
+    * encodes `v − centroid[cell]` against its `residualTo` centroids.
+    */
+  private[graft] final case class Codes(codebooks: Array[Array[Array[Double]]],
+                                        residualTo: Option[Array[Array[Double]]])
+      extends Store
+
+  /** LSH placement: partition `bucket` = "b" + the sign bits, so
+    * Hive-style partition type inference cannot misread a bit string
+    * as an integer (e.g. "0111" → 111) and break probe matching.
+    */
+  private[graft] def lshPlacement(dim: Int, nBits: Int, store: Store): Placement =
+    Placement(Some("bucket" -> ((v: Column) => concat(lit("b"), lshBucket(v, dim, nBits)))),
+      store)
+
+  /** IVF placement: partition `cell` = the nearest centroid. */
+  private[graft] def cellPlacement(centroids: Array[Array[Double]],
+                                   store: Store): Placement =
+    Placement(Some("cell" -> ((v: Column) =>
+      graft.functions.VectorFunctions.nearestCentroid(v, centroids))), store)
+
+  /** The frozen placement of the standing `layout` (`ivf`, `ivf_int8`,
+    * `pq` or `ivf_pq`) at `path`: its centroids, codebooks and residual
+    * marker, read once. The caller names the layout, so a meta-less
+    * layout places as its writer expects. Frozen because stored cells
+    * and codes only match the tables that produced them: refinement
+    * means rebuild, not drift.
+    */
+  private[graft] def standingPlacement(spark: org.apache.spark.sql.SparkSession,
+                                       path: String, layout: String): Placement = {
+    lazy val cents = readCentroidMatrix(spark, path)
+    layout match {
+      case "ivf" => cellPlacement(cents, Floats)
+      case "ivf_int8" => cellPlacement(cents, Int8)
+      case "pq" => Placement(None, Codes(readCodebooks(spark, path), None))
+      case "ivf_pq" => cellPlacement(cents, Codes(readCodebooks(spark, path),
+        Option.when(isResidualIndex(spark, path))(cents)))
+    }
+  }
+
   /** Build an IVF index at `path`:
     *   `path/centroids` — (cell, centroid), nCells rows;
     *   `path/data`      — the corpus + `cell`, partitioned by cell.
@@ -1164,15 +1262,13 @@ object Similarity {
     // null/empty vectors carry no geometry: they cannot seed, refine or
     // be assigned a cell (a null assignment would NPE the refinement's
     // cell lookup and an all-empty cell would zero a centroid)
-    val clean = emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-    val e = clean.select(col(idCol), asDouble(col(vecCol)).as("_v"))
-    val centroids = ivfCentroids(e, idCol, nCells, kmeansIters)
+    val centroids = ivfCentroids(vectors(emb, idCol, vecCol), idCol, nCells,
+      kmeansIters)
     writeCentroids(spark, centroids, path)
     writeIndexMeta(spark, path, Seq("layout" -> "ivf",
       "n_cells" -> nCells.toString, "kmeans_iters" -> kmeansIters.toString))
-    clean.withColumn("cell",
-        graft.functions.VectorFunctions.nearestCentroid(asDouble(col(vecCol)), centroids))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
+    val p = cellPlacement(centroids, Floats)
+    p.write(p.rows(emb, idCol, vecCol), path, "overwrite")
   }
 
   /** The seed sample every IVF centroid set and PQ codebook starts
@@ -1232,17 +1328,13 @@ object Similarity {
                              path: String, nCells: Int = 16,
                              kmeansIters: Int = 0): Unit = {
     val spark = emb.sparkSession
-    val clean = emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-    val e = clean.select(col(idCol), asDouble(col(vecCol)).as("_v"))
-    val centroids = ivfCentroids(e, idCol, nCells, kmeansIters)
+    val centroids = ivfCentroids(vectors(emb, idCol, vecCol), idCol, nCells,
+      kmeansIters)
     writeCentroids(spark, centroids, path)
     writeIndexMeta(spark, path, Seq("layout" -> "ivf_int8",
       "n_cells" -> nCells.toString, "kmeans_iters" -> kmeansIters.toString))
-    e.select(col(idCol),
-        graft.functions.VectorFunctions.quantizeInt8(col("_v")).as("_z"),
-        graft.functions.VectorFunctions.nearestCentroid(col("_v"), centroids).as("cell"))
-      .select(col(idCol), col("_z.scale").as("scale"), col("_z.q").as("q"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
+    val p = cellPlacement(centroids, Int8)
+    p.write(p.rows(emb, idCol, vecCol), path, "overwrite")
   }
 
   /** The cosine point probe over an already-pruned `scan` whose stored
@@ -1307,16 +1399,14 @@ object Similarity {
   }
 
   /** Build an LSH index at `path/data`: corpus + `bucket`, partitioned by
-    * bucket. The partition value is prefixed 'b' ("b0101") so Hive-style
-    * partition type inference cannot misread a bit string as an integer
-    * (e.g. "0111" → 111), which would silently break probe matching.
+    * bucket. The partition value is prefixed 'b' ("b0101"), see
+    * [[lshPlacement]].
     */
   def buildLshIndex(emb: DataFrame, idCol: String, vecCol: String, path: String,
-                    dim: Int, nBits: Int = 8): Unit =
-    emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .withColumn("bucket",
-        concat(lit("b"), lshBucket(asDouble(col(vecCol)), dim, nBits)))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/data")
+                    dim: Int, nBits: Int = 8): Unit = {
+    val p = lshPlacement(dim, nBits, Floats)
+    p.write(p.rows(emb, idCol, vecCol), path, "overwrite")
+  }
 
   /** [[buildLshIndex]] with int8-QUANTIZED storage — the bucket-
     * partitioned member of the quantized-layout family
@@ -1326,14 +1416,10 @@ object Similarity {
     * every probed scan.
     */
   def buildLshIndexQuantized(emb: DataFrame, idCol: String, vecCol: String,
-                             path: String, dim: Int, nBits: Int = 8): Unit =
-    emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol),
-        graft.functions.VectorFunctions.quantizeInt8(asDouble(col(vecCol))).as("_z"),
-        concat(lit("b"), lshBucket(asDouble(col(vecCol)), dim, nBits)).as("bucket"))
-      .select(col(idCol), col("_z.scale").as("scale"), col("_z.q").as("q"),
-        col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/data")
+                             path: String, dim: Int, nBits: Int = 8): Unit = {
+    val p = lshPlacement(dim, nBits, Int8)
+    p.write(p.rows(emb, idCol, vecCol), path, "overwrite")
+  }
 
   /** Top-k over a quantized LSH index ([[buildLshIndexQuantized]]): same
     * driver-side probe selection and PartitionFilters pruning as
@@ -1479,8 +1565,7 @@ object Similarity {
                           cb: Array[Array[Array[Double]]]): Double = {
     val sub = cb(0)(0).length
     val cbB = cb // stable reference for the closure-free expressions
-    val e = emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(asDouble(col(vecCol)).as("_v"))
+    val e = emb.where(hasVector(vecCol)).select(asDouble(col(vecCol)).as("_v"))
     val recon = e
       .select(col("_v"),
         graft.functions.VectorFunctions.pqEncode(col("_v"), cbB).as("_codes"))
@@ -1518,8 +1603,7 @@ object Similarity {
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryId: Long, k: Int, m: Int = 4, nCodes: Int = 16,
              scale: Int = 6): DataFrame = {
-    val e = emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
+    val e = vectors(emb, idCol, vecCol)
     // ONE bounded driver job for both setup fetches (the ivfTopK shape)
     val seeded = e
       .select(col(idCol).as("_id"), col("_v"), md5(col(idCol).cast("string")).as("_h"))
@@ -1622,8 +1706,7 @@ object Similarity {
                 k: Int, m: Int = 4, nCodes: Int = 16,
                 scale: Int = 6): DataFrame = {
     requireIntegralId(corpus, idCol, "pqKnnJoin")
-    val e = corpus.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
+    val e = vectors(corpus, idCol, vecCol)
     val cb = pqCodebooks(md5Seeds(e, idCol, "_v", nCodes), m)
     val n2 = pqNorm2(cb)
     val probed = pqProbeSide(queries, qIdCol, qVecCol, cb)
@@ -1660,17 +1743,15 @@ object Similarity {
   def buildPqIndex(emb: DataFrame, idCol: String, vecCol: String, path: String,
                    m: Int = 4, nCodes: Int = 16, kmeansIters: Int = 0): Unit = {
     val spark = emb.sparkSession
-    val e = emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol), asDouble(col(vecCol)).as("_v"))
+    val e = vectors(emb, idCol, vecCol)
     val cb = pqRefine(e, pqCodebooks(md5Seeds(e, idCol, "_v", nCodes), m),
       kmeansIters)
     writeCodebooks(spark, cb, path)
     writeIndexMeta(spark, path, Seq("layout" -> "pq",
       "m" -> m.toString, "n_codes" -> nCodes.toString,
       "kmeans_iters" -> kmeansIters.toString))
-    e.select(col(idCol),
-        graft.functions.VectorFunctions.pqEncode(col("_v"), cb).as("codes"))
-      .write.mode("overwrite").parquet(s"$path/data")
+    val p = Placement(None, Codes(cb, None))
+    p.write(p.rows(emb, idCol, vecCol), path, "overwrite")
   }
 
   /** Build an IVF-PQ index at `path` — the cell-partitioned layout with
@@ -1724,8 +1805,7 @@ object Similarity {
                       nCells: Int = 16, m: Int = 4, nCodes: Int = 16,
                       kmeansIters: Int = 0, residual: Boolean = false): Unit = {
     val spark = emb.sparkSession
-    val clean = emb.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-    val e = clean.select(col(idCol), asDouble(col(vecCol)).as("_v"))
+    val e = vectors(emb, idCol, vecCol)
     val centroids = ivfCentroids(e, idCol, nCells, kmeansIters)
     writeCentroids(spark, centroids, path)
     // in residual mode the quantized quantity is v − centroid[cell] —
@@ -1749,17 +1829,8 @@ object Similarity {
       "encoding" -> (if (residual) "residual" else "raw"),
       "n_cells" -> nCells.toString, "m" -> m.toString,
       "n_codes" -> nCodes.toString, "kmeans_iters" -> kmeansIters.toString))
-    if (residual) {
-      enc.select(col(idCol),
-          graft.functions.VectorFunctions.pqEncode(col("_r"), cb).as("codes"),
-          col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
-    } else {
-      e.select(col(idCol),
-          graft.functions.VectorFunctions.pqEncode(col("_v"), cb).as("codes"),
-          graft.functions.VectorFunctions.nearestCentroid(col("_v"), centroids).as("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
-    }
+    val p = cellPlacement(centroids, Codes(cb, Option.when(residual)(centroids)))
+    p.write(p.rows(emb, idCol, vecCol), path, "overwrite")
   }
 
   /** The ONE constructor a corpus-scale (100 TB) deployment calls —

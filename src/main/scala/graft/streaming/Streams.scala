@@ -21,10 +21,12 @@ import org.apache.spark.sql.functions._
 object Streams {
 
   /** The one query starter every sink here shares: each micro-batch of
-    * `stream` goes to `f` through `foreachBatch` (plain appends, so a
-    * batch-built layout and streamed appends coexist — the parquet file
-    * sink's `_spark_metadata` log would hide non-log files from later
-    * reads), under `checkpoint`, in append mode.
+    * `stream` goes to `f` through `foreachBatch`, under `checkpoint`, in
+    * append mode. Sinks write plain appends rather than use the parquet
+    * file sink: its `_spark_metadata` log makes later batch reads of a
+    * directory see ONLY log-recorded files, silently hiding a
+    * batch-built layout, so with plain appends the batch-built corpus
+    * and streamed appends coexist.
     */
   private def batches(stream: DataFrame, checkpoint: String)
                      (f: (DataFrame, Long) => Unit)
@@ -34,6 +36,19 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .start()
+
+  /** A vector-index sink: each micro-batch is placed and appended by the
+    * layout's own [[graft.ops.Similarity.Placement]], the one its
+    * builder writes with, so streamed and batch-built rows share
+    * partitions and encodings and every probe sees both as soon as the
+    * batch commits. A replayed micro-batch may append twice
+    * (at-least-once): a duplicate vector only re-ranks as itself;
+    * rebuild to compact.
+    */
+  private def indexSink(p: graft.ops.Similarity.Placement, stream: DataFrame,
+                        idCol: String, vecCol: String, path: String,
+                        checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    batches(p.rows(stream, idCol, vecCol), checkpoint)((b, _) => p.write(b, path, "append"))
 
   /** The crash-window order every admitting sink keeps, in one place:
     * persist the screened batch (its consumers must not re-run the
@@ -167,27 +182,15 @@ object Streams {
     * buckets are assigned in-flight (same deterministic plane matrix, so
     * batch-built and stream-appended rows land in the same partitions)
     * and appended as bucket-partitioned parquet. Probes
-    * ([[graft.ops.Similarity.lshIndexTopK]]) see new vectors as soon as
-    * their batch commits, still pruning to nBits+1 partition
-    * directories. Appends run through `foreachBatch`, not the parquet
-    * file sink, so a batch-built layout and streamed appends coexist
-    * (the file sink's `_spark_metadata` log would hide non-log files
-    * from later reads — see [[ivfIndexSink]]); replayed micro-batches
-    * are at-least-once.
+    * ([[graft.ops.Similarity.lshIndexTopK]]) still prune to nBits+1
+    * partition directories.
     */
   def lshIndexSink(stream: DataFrame, vecCol: String, path: String,
                    checkpoint: String, dim: Int,
                    nBits: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    batches(stream
-      // same admission rule as the batch builders: a null/empty vector
-      // would land in __HIVE_DEFAULT_PARTITION__, invisible to every probe
-      .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .withColumn("bucket", concat(lit("b"),
-        graft.functions.VectorFunctions.lshBucket(
-          transform(col(vecCol), _.cast("double")), dim, nBits))),
-      checkpoint) { (batch, _) =>
-      batch.write.mode("append").partitionBy("bucket").parquet(s"$path/data")
-    }
+    // float storage keeps every input column: no id column to select
+    indexSink(graft.ops.Similarity.lshPlacement(dim, nBits, graft.ops.Similarity.Floats),
+      stream, idCol = null, vecCol, path, checkpoint)
 
   /** Continuously maintain a persisted IVF index built by
     * [[graft.ops.Similarity.buildIvfIndex]]: the index's OWN centroid
@@ -195,28 +198,15 @@ object Streams {
     * stream as a `NearestCentroid` projection, and rows append into the
     * same cell-partitioned layout batch probes already prune. Centroids
     * are frozen at sink start — the IVF contract: assignments must match
-    * the stored table, so refinement means rebuild, not drift.
-    *
-    * Writes go through `foreachBatch` as plain partitioned appends, NOT
-    * the parquet file sink: the file sink's `_spark_metadata` log makes
-    * later batch reads of the directory see ONLY log-recorded files,
-    * silently hiding the batch-built corpus (pinned by the mixed-layout
-    * spec). Cost: a replayed micro-batch after crash recovery may append
-    * twice (at-least-once) — acceptable for an ANN index, where a
-    * duplicate vector only re-ranks as itself; rebuild to compact.
+    * the stored table, so refinement means rebuild, not drift. The
+    * batch-built corpus stays visible to later reads (pinned by the
+    * mixed-layout spec).
     */
   def ivfIndexSink(spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
                    vecCol: String, indexPath: String,
-                   checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, indexPath)
-    batches(stream
-      .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .withColumn("cell", graft.functions.VectorFunctions.nearestCentroid(
-        transform(col(vecCol), _.cast("double")), centroids)),
-      checkpoint) { (batch, _) =>
-      batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
-    }
-  }
+                   checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    indexSink(graft.ops.Similarity.standingPlacement(spark, indexPath, "ivf"),
+      stream, idCol = null, vecCol, indexPath, checkpoint)
 
   /** Continuously maintain a persisted EXACT-dedup key index built by
     * [[graft.ops.Dedup.buildExactKeyIndex]] — admitted documents'
@@ -902,7 +892,7 @@ object Streams {
     // contract (centroids are frozen), the gram width, and the line
     // layout's threshold (all fixed at index build; appends never
     // change any of them)
-    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, ivfIndexPath)
+    val ivf = graft.ops.Similarity.standingPlacement(spark, ivfIndexPath, "ivf")
     val w = layoutParam(spark, gramIndexPath, "w")
     val lineMdf = lineIndexPath.map(layoutParam(spark, _, "min_doc_freq"))
     // learned-screen rungs (the batch Config.pplModel/nbModel twins):
@@ -960,49 +950,13 @@ object Streams {
           val screened = gramScreen(spark, lined, idCol, textCol,
             gramIndexPath, w).persist()
           try {
-            // ── rung 3: the semanticGateSink screens on survivors ──
-            // zero-norm vectors are excluded like null ones (the q81
-            // absence rule): cosineGuarded reads them as 0 ≥ nothing,
-            // so they can match no row at tau > 0 — and were they
-            // admitted, their IVF append would not be idempotent
-            // under replay (a zero vector cannot meet itself at
-            // cosine 1, the window-(b) convergence argument)
-            val vecs = batch
-              .select(col(idCol).as("doc_id"), col(vecCol).as("_vec"))
-              .join(screened.select(col("doc_id")), Seq("doc_id"), "left_semi")
-              .where(col("_vec").isNotNull && size(col("_vec")) > 0 &&
-                exists(col("_vec"), _ =!= 0.0f))
-              .withColumn("_v", transform(col("_vec"), _.cast("double")))
-              .withColumn("_vn", graft.ops.Similarity.norm(col("_v")))
-              .withColumn("cell", graft.functions.VectorFunctions
-                .nearestCentroid(col("_v"), centroids))
-              .repartition(col("cell"))
-              .persist()
-            try {
-              val inBatchDups = vecs.as("a")
-                .join(vecs.as("b"),
-                  col("a.cell") === col("b.cell") &&
-                    col("b.doc_id") < col("a.doc_id") &&
-                    graft.ops.Similarity.cosineWithNorms(
-                      col("a._v"), col("b._v"),
-                      col("a._vn"), col("b._vn")) >= tau)
-                .select(col("a.doc_id")).distinct()
-              val survVec = vecs.join(inBatchDups, Seq("doc_id"), "left_anti")
-              val probeCells = survVec.select(col("cell")).distinct()
-                .collect().map(_.getInt(0)) // bounded by nCells
-              val standingDups =
-                if (probeCells.isEmpty) inBatchDups.limit(0)
-                else survVec.join(
-                  spark.read.parquet(s"$ivfIndexPath/data")
-                    .filter(col("cell").isin(probeCells.toIndexedSeq: _*))
-                    .select(col("cell").as("_icell"),
-                      transform(col(ivfVecCol), _.cast("double")).as("_iv"))
-                    .withColumn("_ivn", graft.ops.Similarity.norm(col("_iv"))),
-                  col("cell") === col("_icell") &&
-                    graft.ops.Similarity.cosineWithNorms(
-                      col("_v"), col("_iv"), col("_vn"), col("_ivn")) >= tau,
-                  "left_semi").select(col("doc_id"))
-              val semDrop = inBatchDups.unionByName(standingDups).distinct()
+            // ── rung 3: the semanticGateSink screen on survivors; rows
+            // whose vector it does not screen (null, empty, zero) pass
+            // (the q81 absence rule) ──
+            semanticScreen(spark, batch
+                .select(col(idCol).as("doc_id"), col(vecCol).as("_vec"))
+                .join(screened.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+              "doc_id", "_vec", ivf, ivfIndexPath, ivfVecCol, tau) { (survVec, semDrop) =>
               // ── rung 4: emit, then advance the indexes in REPLAY
               // order — vectors → grams → exact keys LAST (the key
               // append is the rung-1 replay gate: any crash before
@@ -1019,8 +973,10 @@ object Streams {
                 // probes the IVF data it is about to advance), so a
                 // post-append count would recompute against the
                 // advanced index, not this batch's view. Every count
-                // is a cache scan (or populates the cache the write
-                // below reuses) ──
+                // but `vec_rows` is a cache scan (or populates the
+                // cache the write below reuses); `vec_rows` re-runs
+                // the cell-restricted standing probe over the
+                // persisted within-batch survivors ──
                 val counts = metrics.map { _ =>
                   val emitted = survivors.count()
                   Seq("rows_in" -> batch.count(),
@@ -1029,20 +985,14 @@ object Streams {
                     Seq("grams" -> screened.count(),
                       "semantic" -> emitted,
                       "out_rows" -> (emitted + nulls.count()),
-                      "vec_rows" -> survVec
-                        .join(survivors.select(col("doc_id")),
-                          Seq("doc_id"), "left_semi").count())
+                      "vec_rows" -> survVec.count())
                 }
                 survivors.unionByName(nulls)
                   .write.mode("append").parquet(outPath)
                 counts
-              } { survivors =>
-                survVec.join(survivors.select(col("doc_id")),
-                    Seq("doc_id"), "left_semi")
-                  .select(col("doc_id").as(ivfIdCol),
-                    col("_vec").as(ivfVecCol), col("cell"))
-                  .write.mode("append").partitionBy("cell")
-                  .parquet(s"$ivfIndexPath/data")
+              } { _ =>
+                ivf.write(survVec.select(col("doc_id").as(ivfIdCol),
+                  col("_vec").as(ivfVecCol), col("cell")), ivfIndexPath, "append")
                 // grams of original ∪ STAGE-2 survivors' emitted text
                 // (`screened`, not `survivors`): rung-3-dropped
                 // content was SEEN, and `screened` is what a
@@ -1066,7 +1016,7 @@ object Streams {
               // (a crashed batch leaves no line, its replay logs its
               // own)
               ladder.foreach(metrics.get.record(batchId, _))
-            } finally vecs.unpersist()
+            }
           } finally screened.unpersist()
         } finally {
           fresh.unpersist()
@@ -1463,20 +1413,13 @@ object Streams {
 
   /** The SEMANTIC admission gate — [[graft.ops.Similarity.semDedup]]'s
     * streaming twin over a persisted IVF index
-    * ([[graft.ops.Similarity.buildIvfIndex]]), per micro-batch:
-    *
-    *  1. cell assignment with the index's own frozen centroids (bounded
-    *     driver read at sink start, the [[ivfIndexSink]] contract);
-    *  2. within-batch screen: the q80 greedy-by-id rule — a row drops
-    *     when a lower-id batchmate in the same cell has cosine ≥ `tau`;
-    *  3. standing-corpus screen: survivors anti-join the index data
-    *     RESTRICTED to the batch's own cells (a bounded `isin` on the
-    *     partition column — directory pruning, never a full index read)
-    *     against cosine ≥ `tau`;
-    *  4. admitted rows append into the cell-partitioned layout — so
-    *     batch N+1 screens against batch N's admissions (each batch
-    *     re-lists the index), and a replayed row meets itself at
-    *     cosine 1 and drops (at-least-once replays cannot re-admit).
+    * ([[graft.ops.Similarity.buildIvfIndex]]): each micro-batch runs
+    * [[semanticScreen]] under the index's own frozen centroids (bounded
+    * driver read at sink start, the [[ivfIndexSink]] contract), and the
+    * survivors append into the cell-partitioned layout — so batch N+1
+    * screens against batch N's admissions (each batch re-lists the
+    * index), and a replayed row meets itself at cosine 1 and drops
+    * (at-least-once replays cannot re-admit).
     *
     * The dedup ladder's streaming end: exact keys ([[ingestGate]]),
     * lexical bands ([[textIndexSink]]-fed screens), and semantic cells
@@ -1486,112 +1429,106 @@ object Streams {
                        stream: DataFrame, idCol: String, vecCol: String,
                        indexPath: String, checkpoint: String,
                        tau: Double = 0.4): org.apache.spark.sql.streaming.StreamingQuery = {
-    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, indexPath)
-    batches(stream
-      // null, empty AND zero-norm vectors are excluded: a zero vector
-      // carries no direction (cosineGuarded reads it as 0 ≥ nothing),
-      // so admitting it adds un-matchable dead weight — and breaks
-      // replay idempotence: every other admitted row meets ITSELF at
-      // cosine 1 on a post-append replay and is not re-appended, but a
-      // zero vector cannot, so it would duplicate per replay
-      .where(col(vecCol).isNotNull && size(col(vecCol)) > 0 &&
-        exists(col(vecCol), _ =!= 0.0f)), checkpoint) {
-      (batch, _) =>
-        val b = batch
-          .withColumn("_v", transform(col(vecCol), _.cast("double")))
-          .withColumn("_vn", graft.ops.Similarity.norm(col("_v")))
-          .withColumn("cell", graft.functions.VectorFunctions.nearestCentroid(
-            col("_v"), centroids))
-        val part = b.select(col(idCol), col("cell"), col("_v"), col("_vn"))
-          .repartition(col("cell"))
-        // the guarded-cosine form: defense in depth for zero-norm INDEX
-        // rows (a pre-existing layout may carry them) — an undefined
-        // cosine never matches, rather than killing the batch with an
-        // ANSI DIVIDE_BY_ZERO that checkpoint replay would re-throw
-        // forever
-        val inBatchDups = part.as("a")
-          .join(part.as("b"),
-            col("a.cell") === col("b.cell") &&
-              col(s"b.$idCol") < col(s"a.$idCol") &&
-              graft.ops.Similarity.cosineWithNorms(col("a._v"), col("b._v"),
-                col("a._vn"), col("b._vn")) >= tau)
-          .select(col(s"a.$idCol")).distinct()
-        // persisted: both the probe-cell collect and the admitted write
-        // replay this DAG (assignment + quadratic within-batch screen) —
-        // without the cache it would execute twice per batch
-        val surv = b.join(inBatchDups, Seq(idCol), "left_anti").persist()
-        try {
-          val probeCells = surv.select(col("cell")).distinct()
-            .collect().map(_.getInt(0)) // bounded by nCells
-          val admitted =
-            if (probeCells.isEmpty) surv
-            else {
-              val idx = spark.read.parquet(s"$indexPath/data")
-                .filter(col("cell").isin(probeCells.toIndexedSeq: _*))
-                .select(col("cell").as("_icell"),
-                  transform(col(vecCol), _.cast("double")).as("_iv"))
-                .withColumn("_ivn", graft.ops.Similarity.norm(col("_iv")))
-              surv.join(idx,
-                col("cell") === col("_icell") &&
-                  graft.ops.Similarity.cosineWithNorms(
-                    col("_v"), col("_iv"), col("_vn"), col("_ivn")) >= tau,
-                "left_anti")
-            }
-          admitted.drop("_v", "_vn")
-            .write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
-        } finally surv.unpersist()
+    val ivf = graft.ops.Similarity.standingPlacement(spark, indexPath, "ivf")
+    batches(stream, checkpoint) { (batch, _) =>
+      semanticScreen(spark, batch, idCol, vecCol, ivf, indexPath, vecCol, tau) {
+        (survivors, _) => ivf.write(survivors, indexPath, "append")
+      }
     }
+  }
+
+  /** The semantic screen of [[semanticGateSink]] and
+    * [[curationIngestSink]]'s rung 3 over one batch's `rows`:
+    *
+    *  1. null, empty AND zero vectors are not screened: a zero vector
+    *     carries no direction (cosineGuarded reads it as 0 ≥ nothing),
+    *     so admitting it adds un-matchable dead weight — and breaks
+    *     replay idempotence: every other admitted row meets ITSELF at
+    *     cosine 1 on a post-append replay and is not re-appended, but a
+    *     zero vector cannot, so it would duplicate per replay;
+    *  2. cell assignment by the index's frozen `ivf` placement;
+    *  3. within-batch screen: the q80 greedy-by-id rule — a row drops
+    *     when a lower-id batchmate in the same cell has cosine ≥ `tau`;
+    *  4. standing-corpus screen: survivors anti-join the index data
+    *     (vectors in `indexVecCol`) RESTRICTED to the batch's own cells
+    *     (a bounded `isin` on the partition column — directory pruning,
+    *     never a full index read) against cosine ≥ `tau`.
+    *
+    * `use` gets the survivors (`rows`' columns plus `cell`) and the ids
+    * the screen dropped. The within-batch survivors stay persisted until
+    * `use` returns: the probe-cell collect and every consumer read them
+    * instead of re-running the quadratic within-batch join.
+    */
+  private def semanticScreen[A](spark: org.apache.spark.sql.SparkSession,
+                                rows: DataFrame, idCol: String, vecCol: String,
+                                ivf: graft.ops.Similarity.Placement,
+                                indexPath: String, indexVecCol: String,
+                                tau: Double)
+                               (use: (DataFrame, DataFrame) => A): A = {
+    val b = ivf.rows(rows.where(exists(col(vecCol), _ =!= 0.0f)), idCol, vecCol)
+      .withColumn("_v", transform(col(vecCol), _.cast("double")))
+      .withColumn("_vn", graft.ops.Similarity.norm(col("_v")))
+    val part = b.select(col(idCol), col("cell"), col("_v"), col("_vn"))
+      .repartition(col("cell"))
+    // the guarded-cosine form: defense in depth for zero-norm INDEX
+    // rows (a pre-existing layout may carry them) — an undefined
+    // cosine never matches, rather than killing the batch with an
+    // ANSI DIVIDE_BY_ZERO that checkpoint replay would re-throw
+    // forever
+    val inBatchDups = part.as("a")
+      .join(part.as("b"),
+        col("a.cell") === col("b.cell") &&
+          col(s"b.$idCol") < col(s"a.$idCol") &&
+          graft.ops.Similarity.cosineWithNorms(col("a._v"), col("b._v"),
+            col("a._vn"), col("b._vn")) >= tau)
+      .select(col(s"a.$idCol")).distinct()
+    val surv = b.join(inBatchDups, Seq(idCol), "left_anti").persist()
+    try {
+      val probeCells = surv.select(col("cell")).distinct()
+        .collect().map(_.getInt(0)) // bounded by nCells
+      val survivors =
+        if (probeCells.isEmpty) surv
+        else surv.join(spark.read.parquet(s"$indexPath/data")
+            .filter(col("cell").isin(probeCells.toIndexedSeq: _*))
+            .select(col("cell").as("_icell"),
+              transform(col(indexVecCol), _.cast("double")).as("_iv"))
+            .withColumn("_ivn", graft.ops.Similarity.norm(col("_iv"))),
+          col("cell") === col("_icell") &&
+            graft.ops.Similarity.cosineWithNorms(
+              col("_v"), col("_iv"), col("_vn"), col("_ivn")) >= tau,
+          "left_anti")
+      use(survivors.drop("_v", "_vn"),
+        b.select(col(idCol)).join(survivors, Seq(idCol), "left_anti"))
+    } finally surv.unpersist()
   }
 
   /** Continuously maintain a QUANTIZED persisted LSH index built by
     * [[graft.ops.Similarity.buildLshIndexQuantized]]: buckets from the
     * full-precision vector (the builder's geometry rule), rows land as
     * (id, scale, q: array<byte>) — the bucket-partitioned twin of
-    * [[ivfIndexQuantizedSink]], with [[lshIndexSink]]'s admission guard
-    * and `foreachBatch` append discipline.
+    * [[ivfIndexQuantizedSink]].
     */
   def lshIndexQuantizedSink(stream: DataFrame, idCol: String, vecCol: String,
                             path: String, checkpoint: String, dim: Int,
                             nBits: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    batches(stream
-      .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol),
-        graft.functions.VectorFunctions.quantizeInt8(
-          transform(col(vecCol), _.cast("double"))).as("_z"),
-        concat(lit("b"), graft.functions.VectorFunctions.lshBucket(
-          transform(col(vecCol), _.cast("double")), dim, nBits)).as("bucket"))
-      .select(col(idCol), col("_z.scale").as("scale"), col("_z.q").as("q"),
-        col("bucket")), checkpoint) { (batch, _) =>
-      batch.write.mode("append").partitionBy("bucket").parquet(s"$path/data")
-    }
+    indexSink(graft.ops.Similarity.lshPlacement(dim, nBits, graft.ops.Similarity.Int8),
+      stream, idCol, vecCol, path, checkpoint)
 
   /** Continuously maintain a QUANTIZED persisted IVF index built by
     * [[graft.ops.Similarity.buildIvfIndexQuantized]]: same frozen-centroid
-    * contract and `foreachBatch` append discipline as [[ivfIndexSink]],
-    * but each arriving vector is int8-quantized in-flight — cells are
-    * assigned from the FULL-precision vector (the builder's rule, so
-    * batch-built and streamed rows share geometry) and the row lands as
+    * contract as [[ivfIndexSink]], but each arriving vector is
+    * int8-quantized in-flight — cells are assigned from the
+    * FULL-precision vector (the builder's rule, so batch-built and
+    * streamed rows share geometry) and the row lands as
     * (id, scale, q: array<byte>), the 4×-narrower layout every
-    * quantized probe reads. Replayed micro-batches are at-least-once,
-    * like the float sink.
+    * quantized probe reads.
     */
   def ivfIndexQuantizedSink(spark: org.apache.spark.sql.SparkSession,
                             stream: DataFrame, idCol: String, vecCol: String,
                             indexPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, indexPath)
-    batches(stream
-      .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol),
-        graft.functions.VectorFunctions.quantizeInt8(
-          transform(col(vecCol), _.cast("double"))).as("_z"),
-        graft.functions.VectorFunctions.nearestCentroid(
-          transform(col(vecCol), _.cast("double")), centroids).as("cell"))
-      .select(col(idCol), col("_z.scale").as("scale"), col("_z.q").as("q"),
-        col("cell")), checkpoint) { (batch, _) =>
-      batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
-    }
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    indexSink(graft.ops.Similarity.standingPlacement(spark, indexPath, "ivf_int8"),
+      stream, idCol, vecCol, indexPath, checkpoint)
 
   /** IVF index sink WITH A DRIFT CARD — the streaming member of the
     * rebuild-audit family (q111/q114 watched, not polled): appends each
@@ -1627,27 +1564,11 @@ object Streams {
     require(layout == "ivf" || layout == "ivf_int8" || layout == "ivf_pq",
       s"ivfDriftCardSink: layout '$layout' at $indexPath is not an IVF " +
         "cell layout (flat PQ has no cells to drift)")
-    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, indexPath)
-    val clean = stream.where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-    val placed = layout match {
-      case "ivf" =>
-        clean.withColumn("cell", graft.functions.VectorFunctions.nearestCentroid(
-          transform(col(vecCol), _.cast("double")), centroids))
-      case "ivf_int8" =>
-        clean.select(col(idCol),
-            graft.functions.VectorFunctions.quantizeInt8(
-              transform(col(vecCol), _.cast("double"))).as("_z"),
-            graft.functions.VectorFunctions.nearestCentroid(
-              transform(col(vecCol), _.cast("double")), centroids).as("cell"))
-          .select(col(idCol), col("_z.scale").as("scale"), col("_z.q").as("q"),
-            col("cell"))
-      case _ => // ivf_pq: the index sink's own residual-aware encode
-        ivfPqEncoded(spark, clean, idCol, vecCol, indexPath)
-    }
-    batches(placed, checkpoint) {
+    val p = graft.ops.Similarity.standingPlacement(spark, indexPath, layout)
+    batches(p.rows(stream, idCol, vecCol), checkpoint) {
       (batch, batchId) =>
         val n = batch.count()
-        batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
+        p.write(batch, indexPath, "append")
         val drift =
           if (layout == "ivf")
             graft.ops.Similarity.ivfRebuildDrift(spark, indexPath, idCol, vecCol)
@@ -1722,24 +1643,12 @@ object Streams {
     * sink start, the PQ analog of [[ivfIndexSink]]'s frozen-centroid
     * contract: stored codes are only decodable against the codebooks
     * that produced them, so refinement means rebuild, not drift.
-    * `foreachBatch` plain appends (the parquet file sink's
-    * `_spark_metadata` log would hide the batch-built corpus); replayed
-    * micro-batches are at-least-once — a duplicate code row only
-    * re-ranks as itself; rebuild to compact.
     */
   def pqIndexSink(spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
                   idCol: String, vecCol: String, indexPath: String,
-                  checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val cb = readCodebooks(spark, indexPath)
-    batches(stream
-      .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol),
-        graft.functions.VectorFunctions.pqEncode(
-          transform(col(vecCol), _.cast("double")), cb).as("codes")),
-      checkpoint) { (batch, _) =>
-      batch.write.mode("append").parquet(s"$indexPath/data")
-    }
-  }
+                  checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    indexSink(graft.ops.Similarity.standingPlacement(spark, indexPath, "pq"),
+      stream, idCol, vecCol, indexPath, checkpoint)
 
   /** Continuously maintain an IVF-PQ index built by
     * [[graft.ops.Similarity.buildIvfPqIndex]] — [[pqIndexSink]]'s frozen
@@ -1752,52 +1661,13 @@ object Streams {
     * A RESIDUAL layout (`meta` marker) is honored: arriving vectors
     * encode `v − centroid[cell]`, exactly what the batch builder stored
     * — a raw encode appended into a residual index would be silently
-    * mis-scored by every probe. Same at-least-once replay cost as the
-    * other vector sinks.
+    * mis-scored by every probe.
     */
   def ivfPqIndexSink(spark: org.apache.spark.sql.SparkSession, stream: DataFrame,
                      idCol: String, vecCol: String, indexPath: String,
                      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    batches(ivfPqEncoded(spark, stream, idCol, vecCol, indexPath),
-        checkpoint) { (batch, _) =>
-      batch.write.mode("append").partitionBy("cell").parquet(s"$indexPath/data")
-    }
-
-  /** The IVF-PQ sink's in-flight projection, shared with the drift
-    * card: place by the layout's frozen centroids, encode against its
-    * frozen codebooks (residual-aware per the meta marker) — one
-    * codegen'd pipeline yielding (id, codes, cell).
-    */
-  private def ivfPqEncoded(spark: org.apache.spark.sql.SparkSession,
-                           stream: DataFrame, idCol: String, vecCol: String,
-                           indexPath: String): DataFrame = {
-    val cb = readCodebooks(spark, indexPath)
-    val centroids = graft.ops.Similarity.readCentroidMatrix(spark, indexPath)
-    val residual = graft.ops.Similarity.isResidualIndex(spark, indexPath)
-    val placed = stream
-      .where(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(col(idCol), transform(col(vecCol), _.cast("double")).as("_v"))
-      .withColumn("cell",
-        graft.functions.VectorFunctions.nearestCentroid(col("_v"), centroids))
-    if (residual)
-      placed.select(col(idCol),
-        graft.functions.VectorFunctions.pqEncode(
-          graft.functions.VectorFunctions.centroidResidual(
-            col("_v"), col("cell"), centroids), cb).as("codes"),
-        col("cell"))
-    else
-      placed.select(col(idCol),
-        graft.functions.VectorFunctions.pqEncode(col("_v"), cb).as("codes"),
-        col("cell"))
-  }
-
-  /** One bounded driver read of a PQ codebook table — the sink-start
-    * freeze. Delegates to [[graft.ops.Similarity.readCodebooks]] so the
-    * sinks and the query side share one layout reader.
-    */
-  private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Array[Array[Array[Double]]] =
-    graft.ops.Similarity.readCodebooks(spark, path)
+    indexSink(graft.ops.Similarity.standingPlacement(spark, indexPath, "ivf_pq"),
+      stream, idCol, vecCol, indexPath, checkpoint)
 
   /** Continuously maintain a persisted TEXT-dedup index built by
     * [[graft.ops.Dedup.buildTextIndex]] — the streaming member of the

@@ -1981,8 +1981,9 @@ class OpsSpec extends SparkSpec {
         s"requirement failed: token 'base' is reserved for ${c.builder}")
       val badToken = intercept[IllegalArgumentException](
         c.append(docs, idx, "b/1"))
+      val unit = if (c.seam == "\n") "line" else "para"
       assert(badToken.getMessage ==
-        "requirement failed: line-index append token must be [A-Za-z0-9_-]+: 'b/1'")
+        s"requirement failed: $unit-index append token must be [A-Za-z0-9_-]+: 'b/1'")
     }
   }
 
