@@ -516,6 +516,31 @@ class StreamsSpec extends SparkSpec {
     assert(data.count() == 80 && data.columns.toSet == Set("vec_id", "codes", "cell"))
   }
 
+  test("ivfDriftCardSink reads and places each micro-batch once") {
+    implicit val sqlCtx = spark.sqlContext
+    val rng = new scala.util.Random(31)
+    def vec(): Seq[Double] = Seq.fill(8)(rng.nextDouble() - 0.5)
+    val dir = tmpDir("graft_driftonce_")
+    graft.ops.Similarity.buildIvfIndex(
+      (0L until 40L).map(i => (i, vec())).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", s"$dir/idx", nCells = 4)
+    // every evaluation of the stream's rows passes through the UDF, so
+    // the accumulator counts how often the sink reads the batch
+    val evals = spark.sparkContext.longAccumulator("drift_card_reads")
+    val seen = udf { (v: Seq[Double]) => evals.add(1); v }.asNondeterministic()
+    val mem = MemoryStream[(Long, Seq[Double])]
+    val q = Streams.ivfDriftCardSink(spark,
+      mem.toDF().select($"_1".as("vec_id"), seen($"_2").as("embedding")),
+      "vec_id", "embedding", s"$dir/idx", s"$dir/ckpt", s"$dir/card")
+    try {
+      mem.addData((100L until 125L).map(i => (i, vec())): _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val card = spark.read.parquet(s"$dir/card").select("n_appended").as[Long].collect()
+    assert(card.toSeq == Seq(25L))
+    assert(evals.value == 25L, s"25 rows read ${evals.value} times")
+  }
+
   test("packTokensStream: completed sequences equal the batch twin; partial carries across batches") {
     implicit val sqlCtx = spark.sqlContext
     val bpe = graft.functions.TokenCounters.tinyBpe
