@@ -1567,8 +1567,14 @@ object Streams {
     val p = graft.ops.Similarity.standingPlacement(spark, indexPath, layout)
     batches(p.rows(stream, idCol, vecCol), checkpoint) {
       (batch, batchId) =>
-        val n = batch.count()
-        p.write(batch, indexPath, "append")
+        // the count and the append share one read and placement of the batch
+        val placed = batch.persist()
+        val n =
+          try {
+            val n = placed.count()
+            p.write(placed, indexPath, "append")
+            n
+          } finally placed.unpersist()
         val drift =
           if (layout == "ivf")
             graft.ops.Similarity.ivfRebuildDrift(spark, indexPath, idCol, vecCol)
