@@ -10,23 +10,29 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
   * cumulative written-row count crosses a 10k boundary, plus a final
   * total line.
   *
-  * Row counts are collected per completed Spark task, from two sources:
-  *  - native output metrics (`recordsWritten`) — zero overhead, plan
-  *    untouched; covers every file/table sink.
+  * Row counts come from three sources:
+  *  - a single-file CSV write: its one task counts the rows it writes and
+  *    returns the count ([[graft.sinks.CsvSink]]); `Tasks.etl` feeds it to
+  *    [[record]] on the driver, so that write needs no listener and no
+  *    listener-bus drain.
+  *  - native output metrics (`recordsWritten`) of each completed Spark
+  *    task, seen by the listener [[metered]] registers — zero overhead,
+  *    plan untouched; covers every other file/table sink (the single-file
+  *    CSV task reports them too, for a meter listening around it).
   *  - a named per-meter accumulator incremented by [[wrap]] — covers JDBC
   *    sinks, where Spark's writer leaves output metrics at 0. A task
   *    reporting both (a wrapped file write) contributes the max of the
   *    two, never the sum.
   *
-  * Scale notes: this is a driver-side listener aggregating O(#tasks)
-  * events — no extra shuffle, no collect, and file sinks keep whole-stage
-  * codegen (only JDBC sinks pay the [[wrap]] row pass, which is noise
-  * next to the network insert). With parallel writers the cumulative
-  * count crosses boundaries in jumps, so cadence is "a line at least
-  * every 10k rows" — the reference's single-threaded stream emits exactly
-  * one per 10k, ours may batch several boundaries into one crossing.
-  * The runner executes tasks sequentially (reference semantics), so the
-  * session-global listener observes only its own task's writes.
+  * Scale notes: the listener aggregates O(#tasks) events on the driver —
+  * no extra shuffle, no collect, and file sinks keep whole-stage codegen
+  * (only JDBC sinks pay the [[wrap]] row pass, which is noise next to the
+  * network insert). With parallel writers the cumulative count crosses
+  * boundaries in jumps, so cadence is "a line at least every 10k rows" —
+  * the reference's single-threaded stream emits exactly one per 10k, ours
+  * may batch several boundaries into one crossing. The runner executes
+  * tasks sequentially (reference semantics), so the session-global
+  * listener observes only its own task's writes.
   */
 final class ProgressMeter(log: TaskLog, every: Long = 10000L) extends SparkListener {
   private val total = new AtomicLong()
@@ -81,8 +87,21 @@ final class ProgressMeter(log: TaskLog, every: Long = 10000L) extends SparkListe
     finally {
       org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext, 5000)
       spark.sparkContext.removeSparkListener(this)
-      val secs = (System.nanoTime() - t0) / 1e9
-      log.write(f"${total.get}%d rows written in $secs%.2f s")
+      logTotal()
     }
+  }
+
+  /** Counts `rows` that a finished write reported on the driver, ticking
+    * the marks they cross, and logs the final total, as [[metered]] does
+    * once its write has ended.
+    */
+  def record(rows: Long): Unit = {
+    add(rows)
+    logTotal()
+  }
+
+  private def logTotal(): Unit = {
+    val secs = (System.nanoTime() - t0) / 1e9
+    log.write(f"${total.get}%d rows written in $secs%.2f s")
   }
 }

@@ -3,7 +3,8 @@ package graft.sinks
 import graft.config.TaskConfig.Node
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graft.CsvFile
 
 /** CSV sink with the reference's file semantics (petl tocsv/appendcsv,
   * /root/reference/dasladen/task.py:199-202 et al.):
@@ -12,67 +13,64 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
   *  - append: append DATA ROWS ONLY — no header, even onto a missing file
   *
   * Two modes (SURVEY.md §7.5 item 3):
-  *  - parity (default): ONE file at the target path. Spark writes a temp
-  *    directory; the part file is moved (truncate) or byte-appended
-  *    (append) on the driver. Right for task-DSL outputs, wrong for 100 TB.
+  *  - parity (default): ONE file at the target path. One Spark job over
+  *    the frame coalesced to one partition: its single task streams the
+  *    header (truncate only) and the rows, rendered by Spark's own CSV
+  *    generator, into a file in a `graft_csv_` temp directory and returns
+  *    the file and its row count ([[org.apache.spark.sql.graft.CsvFile]]).
+  *    The driver then moves (truncate) or byte-appends (append) that file
+  *    alone. The bytes are those of `coalesce(1).write.csv`, without
+  *    Hadoop's commit protocol; neither side buffers the rows. Right for
+  *    task-DSL outputs, wrong for 100 TB.
   *  - distributed ("single_file": false): native partitioned-directory
   *    write — the scalable path (header per part on overwrite; Spark's
   *    append mode for appends).
   */
 object CsvSink {
 
-  /** `keep` is read once a single-file write's job has run: false drops
-    * the staged output and leaves the target untouched. A distributed
-    * write cannot be taken back and ignores it.
+  /** Writes `df` to `targetFile`. A single-file write passes the metrics
+    * its job observed (`Dataset.observe`) to `keep` once the job has run:
+    * false drops the staged file and leaves the target untouched. Returns
+    * the rows a single-file write put into the target, None when it was
+    * dropped. A distributed write cannot be taken back, ignores `keep`
+    * and returns None: its rows are in Spark's output metrics.
     */
   def write(df: DataFrame, targetFile: String, node: Node, truncate: Boolean,
-            keep: => Boolean = true): Unit = {
-    val sep = node.str("delimiter", ";")
-    val enc = node.str("encoding", "utf-8")
-    val singleFile = node.bool("single_file", default = true)
-    if (singleFile) writeSingle(df, targetFile, sep, enc, truncate, keep)
-    else csvWriter(df, sep, enc, truncate)
-      .mode(if (truncate) "overwrite" else "append")
-      .csv(targetFile)
+            keep: Map[String, Row] => Boolean = _ => true): Option[Long] = {
+    // append carries no header (petl appendcsv), and an empty string is
+    // written as an empty cell
+    val options = Map(
+      "header" -> truncate.toString,
+      "sep" -> node.str("delimiter", ";"),
+      "encoding" -> node.str("encoding", "utf-8"),
+      "emptyValue" -> "")
+    if (node.bool("single_file", default = true)) writeSingle(df, targetFile, options, truncate, keep)
+    else {
+      df.write.options(options).mode(if (truncate) "overwrite" else "append").csv(targetFile)
+      None
+    }
   }
 
-  /** The writer options both modes share: append carries no header
-    * (petl appendcsv), and an empty string is written as an empty cell.
-    */
-  private def csvWriter(df: DataFrame, sep: String, enc: String,
-                        truncate: Boolean): DataFrameWriter[Row] =
-    df.write
-      .option("header", truncate.toString)
-      .option("sep", sep)
-      .option("encoding", enc)
-      .option("emptyValue", "")
-
-  private def writeSingle(df: DataFrame, targetFile: String, sep: String,
-                          enc: String, truncate: Boolean, keep: => Boolean): Unit = {
-    val tmp = Files.createTempDirectory("graft_csv_").toString
-    val tmpOut = s"$tmp/out"
-    // coalesce(1) is narrow, so it adds no shuffle: the whole stage that
-    // feeds it (the scan and the transforms back to the last shuffle)
-    // runs as the one task that writes the single file
+  private def writeSingle(df: DataFrame, targetFile: String, options: Map[String, String],
+                          truncate: Boolean, keep: Map[String, Row] => Boolean): Option[Long] = {
+    val tmp = Files.createTempDirectory("graft_csv_")
     try {
-      csvWriter(df.coalesce(1), sep, enc, truncate).csv(tmpOut)
-      if (keep) {
-        val part = new File(tmpOut).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-          .getOrElse(throw new IllegalStateException(s"no part file produced in $tmpOut"))
+      val staged = CsvFile.write(df, tmp.toString, options)
+      if (!keep(staged.observed)) None
+      else {
         val target = Paths.get(targetFile)
         Option(target.getParent).foreach(Files.createDirectories(_))
         if (truncate)
-          Files.move(part.toPath, target, StandardCopyOption.REPLACE_EXISTING)
+          Files.move(staged.file, target, StandardCopyOption.REPLACE_EXISTING)
         else {
-          // stream the part into the target — never buffer the whole file in
-          // driver memory
+          // stream the file into the target — never buffer it in driver memory
           val out = Files.newOutputStream(target,
             StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-          try Files.copy(part.toPath, out) finally out.close()
+          try Files.copy(staged.file, out) finally out.close()
         }
+        Some(staged.rows)
       }
-    } finally deleteRecursively(new File(tmp))
+    } finally deleteRecursively(tmp.toFile)
   }
 
   private def deleteRecursively(f: File): Unit = {

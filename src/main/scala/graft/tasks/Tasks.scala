@@ -9,10 +9,8 @@ import graft.transform.Transforms
 import java.io.File
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
-import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
-import scala.util.Try
 
 /** Execution context shared by all tasks: the session, the connection
   * registry, and the working directory holding the reference's standard
@@ -44,8 +42,10 @@ trait CustomTask {
   *     - a single-file CSV source is read on the driver up to its first
   *       data row ([[Sources.csvWithRows]]), so no Spark job runs;
   *     - any other source into a single-file CSV target is counted by
-  *       an `observe` node during the write job itself, whose output
-  *       waits in a temp dir and is dropped when the count is 0;
+  *       a named `observe` node in the write job itself. The count is
+  *       read from that job's own `observedMetrics` once its `collect()`
+  *       returns, with no wait on the listener bus; the staged file waits
+  *       in a temp dir and is dropped when the count is 0;
   *     - everything else (a CSV directory, a distributed CSV or a JDBC
   *       target, the pipeline sinks, whose writes cannot be taken back)
   *       probes with `isEmpty`, one lightweight job.
@@ -60,6 +60,8 @@ trait CustomTask {
 object Tasks {
 
   private val NoRows = "Task skipped. No rows on source"
+  // the name of the source count a staged CSV write observes
+  private val SourceRows = "graft_source_rows"
 
   /** Runs one ETL task: `source` gives the frame and, when known without
     * a Spark job, whether it holds a row.
@@ -72,34 +74,37 @@ object Tasks {
     // its own write job instead; a frame with no columns cannot be written
     // as CSV (an XML source with no row), so only a probe can skip it
     val counted = sink match {
-      case t: CsvTarget if hasRows.isEmpty && t.staged && df.columns.nonEmpty => Some(t)
-      case _ => None
+      case t: CsvTarget => hasRows.isEmpty && t.staged && df.columns.nonEmpty
+      case _ => false
     }
-    if (!hasRows.getOrElse(counted.nonEmpty || !df.isEmpty)) log.write(NoRows)
+    if (!hasRows.getOrElse(counted || !df.isEmpty)) log.write(NoRows)
     else {
       // counted below the transforms: a filter that drops every row
       // still writes, as with a probed source
-      val rows = Observation()
-      val out = Transforms(if (counted.isEmpty) df else df.observe(rows, count(lit(1)).as("n")),
+      val out = Transforms(if (counted) df.observe(SourceRows, count(lit(1))) else df,
         task, log, Some(ctx.workDir))
-      // the count arrives through the listener bus; a plan that pruned it
-      // away (a constant-false filter above the source) falls back to a probe
-      lazy val keep = counted.isEmpty || {
-        ListenerBridge.drain(ctx.spark.sparkContext, 5000)
-        rows.future.value.flatMap(_.toOption).flatMap(r => Try(r.getAs[Long]("n")).toOption)
-          .fold(!df.isEmpty)(_ != 0L)
-      }
+      // the count is read from the write job's own observed metrics; a
+      // plan that pruned it away (a constant-false filter above the
+      // source) falls back to a probe
+      def keep(observed: Map[String, Row]): Boolean =
+        !counted || observed.get(SourceRows).fold(!df.isEmpty)(_.getLong(0) != 0L)
       val taskLog = TaskLog.forTask(ctx.logDir, taskType, task.str("name", "task"))
       // K5 progress metering (task.py:200): 10k-row ticks into the
-      // per-task log while the sink job runs, plus a final total line —
-      // kept out of the log when the write is dropped, so none appears
-      var dropped = false
-      val meter = new ProgressMeter(msg => if (!dropped) taskLog.write(msg))
-      try meter.metered(ctx.spark) {
-        counted.fold(sink(out, taskLog, meter))(_.write(out, taskLog, keep))
-        dropped = !keep
-      } finally taskLog.close()
-      if (dropped) log.write(NoRows)
+      // per-task log, plus a final total line. A staged CSV write returns
+      // its row count, recorded once the file has landed (none when the
+      // write is dropped); any other sink is metered while its job runs.
+      val meter = new ProgressMeter(taskLog)
+      val written =
+        try sink match {
+          case t: CsvTarget if t.staged =>
+            val rows = t.write(out, taskLog, keep)
+            rows.foreach(meter.record)
+            rows.nonEmpty
+          case _ =>
+            meter.metered(ctx.spark)(sink(out, taskLog, meter))
+            true
+        } finally taskLog.close()
+      if (!written) log.write(NoRows)
     }
   }
 
@@ -119,16 +124,22 @@ object Tasks {
     private val tgt = task("target")
     val staged: Boolean = tgt.bool("single_file", default = true)
 
-    def apply(df: DataFrame, lg: TaskLog, meter: ProgressMeter): Unit = write(df, lg, keep = true)
+    // rows reach a meter listening around this write through the write
+    // tasks' output metrics
+    def apply(df: DataFrame, lg: TaskLog, meter: ProgressMeter): Unit = {
+      write(df, lg, _ => true); ()
+    }
 
-    /** Writes `df`; a staged target reads `keep` after the write job and
-      * leaves the target untouched when it is false.
+    /** Writes `df`; a staged target hands its write job's observed
+      * metrics to `keep` and leaves the target untouched when it is false.
+      * Returns the rows a staged write put into the target.
       */
-    def write(df: DataFrame, lg: TaskLog, keep: => Boolean): Unit = {
+    def write(df: DataFrame, lg: TaskLog, keep: Map[String, Row] => Boolean): Option[Long] = {
       val out = s"${ctx.dir(tgt.str("folder", "output"))}/${tgt.str("file")}"
       val truncate = tgt.bool("truncate")
-      CsvSink.write(df, out, tgt, truncate, keep) // file sink: rows metered via native output metrics
-      if (keep) lg.write(s"wrote $out (truncate=$truncate)")
+      val rows = CsvSink.write(df, out, tgt, truncate, keep)
+      if (rows.nonEmpty || !staged) lg.write(s"wrote $out (truncate=$truncate)")
+      rows
     }
   }
 

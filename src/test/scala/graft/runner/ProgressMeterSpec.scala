@@ -29,4 +29,14 @@ class ProgressMeterSpec extends SparkSpec {
     assert(ticks.map(_.split(" ").head) == Seq("10", "20", "30"), ticks.mkString("; "))
     assert(log.lines.last.startsWith("35 rows written in"))
   }
+
+  test("a count recorded on the driver ticks each mark it crosses, then the total") {
+    val log = new CapturingLog
+    val meter = new ProgressMeter(log, every = 10000L)
+    meter.record(25000L)
+    val ticks = log.lines.filter(_.matches("\\d+ rows in .*"))
+    assert(ticks.map(_.split(" ").head) == Seq("10000", "20000"), ticks.mkString("; "))
+    assert(log.lines.size == 3 && log.lines.last.startsWith("25000 rows written in"))
+    assert(meter.totalRows == 25000L)
+  }
 }
