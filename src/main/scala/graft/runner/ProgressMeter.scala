@@ -24,15 +24,15 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
   *    reporting both (a wrapped file write) contributes the max of the
   *    two, never the sum.
   *
-  * Scale notes: the listener aggregates O(#tasks) events on the driver —
-  * no extra shuffle, no collect, and file sinks keep whole-stage codegen
-  * (only JDBC sinks pay the [[wrap]] row pass, which is noise next to the
-  * network insert). With parallel writers the cumulative count crosses
-  * boundaries in jumps, so cadence is "a line at least every 10k rows" —
-  * the reference's single-threaded stream emits exactly one per 10k, ours
-  * may batch several boundaries into one crossing. The runner executes
-  * tasks sequentially (reference semantics), so the session-global
-  * listener observes only its own task's writes.
+  * Scale notes: this is a driver-side listener aggregating O(#tasks)
+  * events — no extra shuffle, no collect, and file sinks keep whole-stage
+  * codegen (only JDBC sinks pay the [[wrap]] row pass, which is noise
+  * next to the network insert). With parallel writers the cumulative
+  * count crosses boundaries in jumps, so cadence is "a line at least
+  * every 10k rows" — the reference's single-threaded stream emits exactly
+  * one per 10k, ours may batch several boundaries into one crossing.
+  * The runner executes tasks sequentially (reference semantics), so the
+  * session-global listener observes only its own task's writes.
   */
 final class ProgressMeter(log: TaskLog, every: Long = 10000L) extends SparkListener {
   private val total = new AtomicLong()

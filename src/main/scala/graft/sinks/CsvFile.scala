@@ -21,8 +21,7 @@ import org.apache.spark.sql.types.StructType
   * task attempt, and the task returns that name and its row count. There
   * is no Hadoop commit protocol: no job setup, no task commit, no
   * `_temporary` renames, no `_SUCCESS`. Lives in Spark's package space:
-  * `CSVOptions`, `DataSource` and the task's output metrics are
-  * private[sql] or private[spark].
+  * `CSVOptions` and the setters of a task's output metrics are private.
   */
 object CsvFile {
 

@@ -70,13 +70,14 @@ object Tasks {
                  (source: => (DataFrame, Option[Boolean]))
                  (sink: (DataFrame, TaskLog, ProgressMeter) => Unit): Unit = {
     val (df, hasRows) = source
+    val staged = sink match {
+      case t: CsvTarget if t.staged => Some(t)
+      case _ => None
+    }
     // with no driver-side answer, a staged CSV target counts the source in
     // its own write job instead; a frame with no columns cannot be written
     // as CSV (an XML source with no row), so only a probe can skip it
-    val counted = sink match {
-      case t: CsvTarget => hasRows.isEmpty && t.staged && df.columns.nonEmpty
-      case _ => false
-    }
+    val counted = staged.nonEmpty && hasRows.isEmpty && df.columns.nonEmpty
     if (!hasRows.getOrElse(counted || !df.isEmpty)) log.write(NoRows)
     else {
       // counted below the transforms: a filter that drops every row
@@ -95,12 +96,12 @@ object Tasks {
       // write is dropped); any other sink is metered while its job runs.
       val meter = new ProgressMeter(taskLog)
       val written =
-        try sink match {
-          case t: CsvTarget if t.staged =>
+        try staged match {
+          case Some(t) =>
             val rows = t.write(out, taskLog, keep)
             rows.foreach(meter.record)
             rows.nonEmpty
-          case _ =>
+          case None =>
             meter.metered(ctx.spark)(sink(out, taskLog, meter))
             true
         } finally taskLog.close()

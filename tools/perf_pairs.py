@@ -9,9 +9,10 @@ the same seed (S + pair index), and flips which side goes first from one
 pair to the next, so drift in machine load falls on both sides alike.
 The records each run appends to its checkout's
 `.bench_build/results/runs.jsonl` are collected into `DIR/parent.jsonl`
-and `DIR/change.jsonl` (default: the current directory). Then it prints
-one line per pair, `perfbench/compare.py parent.jsonl change.jsonl` (the
-change's copy), and how many pairs the change was faster in on `wall_s`.
+and `DIR/change.jsonl` (default: `.bench_build/pairs/W` in CHANGE_DIR,
+which git ignores). Then it prints one line per pair,
+`perfbench/compare.py parent.jsonl change.jsonl` (the change's copy),
+and how many pairs the change was faster in on `wall_s`.
 Exits 1 when any run was not correct or had a failed operation.
 """
 import argparse
@@ -48,10 +49,11 @@ def main() -> None:
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed0", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=15)
-    ap.add_argument("--out", default=".")
+    ap.add_argument("--out")
     args = ap.parse_args()
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
-    os.makedirs(args.out, exist_ok=True)
+    out = args.out or os.path.join(sides["change"], ".bench_build", "pairs", args.workload)
+    os.makedirs(out, exist_ok=True)
     recs = {"parent": [], "change": []}
     for i in range(args.pairs):
         seed = args.seed0 + i
@@ -64,7 +66,7 @@ def main() -> None:
               f"change {c:.3f} ({c / p:.2f}x)", flush=True)
     paths = {}
     for side, rs in recs.items():
-        paths[side] = os.path.join(args.out, f"{side}.jsonl")
+        paths[side] = os.path.join(out, f"{side}.jsonl")
         with open(paths[side], "w") as fh:
             fh.writelines(json.dumps(r) + "\n" for r in rs)
     subprocess.run([sys.executable, os.path.join(sides["change"], "perfbench", "compare.py"),
