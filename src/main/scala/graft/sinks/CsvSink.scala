@@ -28,34 +28,24 @@ import org.apache.spark.sql.graft.CsvFile
   */
 object CsvSink {
 
-  /** Writes `df` to `targetFile`. A single-file write passes the metrics
-    * its job observed (`Dataset.observe`) to `keep` once the job has run:
-    * false drops the staged file and leaves the target untouched. Returns
-    * the rows a single-file write put into the target, None when it was
-    * dropped. A distributed write cannot be taken back, ignores `keep`
-    * and returns None: its rows are in Spark's output metrics.
+  /** Writes `df` to `targetFile`, as one file ([[writeSingle]]) unless
+    * the node sets `"single_file": false`.
     */
-  def write(df: DataFrame, targetFile: String, node: Node, truncate: Boolean,
-            keep: Map[String, Row] => Boolean = _ => true): Option[Long] = {
-    // append carries no header (petl appendcsv), and an empty string is
-    // written as an empty cell
-    val options = Map(
-      "header" -> truncate.toString,
-      "sep" -> node.str("delimiter", ";"),
-      "encoding" -> node.str("encoding", "utf-8"),
-      "emptyValue" -> "")
-    if (node.bool("single_file", default = true)) writeSingle(df, targetFile, options, truncate, keep)
-    else {
-      df.write.options(options).mode(if (truncate) "overwrite" else "append").csv(targetFile)
-      None
-    }
-  }
+  def write(df: DataFrame, targetFile: String, node: Node, truncate: Boolean): Unit =
+    if (node.bool("single_file", default = true)) { writeSingle(df, targetFile, node, truncate); () }
+    else df.write.options(options(node, truncate)).mode(if (truncate) "overwrite" else "append")
+      .csv(targetFile)
 
-  private def writeSingle(df: DataFrame, targetFile: String, options: Map[String, String],
-                          truncate: Boolean, keep: Map[String, Row] => Boolean): Option[Long] = {
+  /** Writes `df` as the one file `targetFile`. Passes the metrics its job
+    * observed (`Dataset.observe`) to `keep` once the job has run: false
+    * drops the staged file and leaves the target untouched. Returns the
+    * rows put into the target, None when the write was dropped.
+    */
+  def writeSingle(df: DataFrame, targetFile: String, node: Node, truncate: Boolean,
+                  keep: Map[String, Row] => Boolean = _ => true): Option[Long] = {
     val tmp = Files.createTempDirectory("graft_csv_")
     try {
-      val staged = CsvFile.write(df, tmp.toString, options)
+      val staged = CsvFile.write(df, tmp.toString, options(node, truncate))
       if (!keep(staged.observed)) None
       else {
         val target = Paths.get(targetFile)
@@ -72,6 +62,14 @@ object CsvSink {
       }
     } finally deleteRecursively(tmp.toFile)
   }
+
+  // append carries no header (petl appendcsv), and an empty string is
+  // written as an empty cell
+  private def options(node: Node, truncate: Boolean): Map[String, String] = Map(
+    "header" -> truncate.toString,
+    "sep" -> node.str("delimiter", ";"),
+    "encoding" -> node.str("encoding", "utf-8"),
+    "emptyValue" -> "")
 
   private def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

@@ -98,7 +98,7 @@ object Tasks {
       val written =
         try staged match {
           case Some(t) =>
-            val rows = t.write(out, taskLog, keep)
+            val rows = t.writeStaged(out, taskLog, keep)
             rows.foreach(meter.record)
             rows.nonEmpty
           case None =>
@@ -125,23 +125,27 @@ object Tasks {
     private val tgt = task("target")
     val staged: Boolean = tgt.bool("single_file", default = true)
 
+    private def out = s"${ctx.dir(tgt.str("folder", "output"))}/${tgt.str("file")}"
+    private def truncate = tgt.bool("truncate")
+
     // rows reach a meter listening around this write through the write
     // tasks' output metrics
     def apply(df: DataFrame, lg: TaskLog, meter: ProgressMeter): Unit = {
-      write(df, lg, _ => true); ()
+      CsvSink.write(df, out, tgt, truncate)
+      wrote(lg)
     }
 
-    /** Writes `df`; a staged target hands its write job's observed
+    /** Writes `df` to a staged target: hands the write job's observed
       * metrics to `keep` and leaves the target untouched when it is false.
-      * Returns the rows a staged write put into the target.
+      * Returns the rows put into the target, None when dropped.
       */
-    def write(df: DataFrame, lg: TaskLog, keep: Map[String, Row] => Boolean): Option[Long] = {
-      val out = s"${ctx.dir(tgt.str("folder", "output"))}/${tgt.str("file")}"
-      val truncate = tgt.bool("truncate")
-      val rows = CsvSink.write(df, out, tgt, truncate, keep)
-      if (rows.nonEmpty || !staged) lg.write(s"wrote $out (truncate=$truncate)")
+    def writeStaged(df: DataFrame, lg: TaskLog, keep: Map[String, Row] => Boolean): Option[Long] = {
+      val rows = CsvSink.writeSingle(df, out, tgt, truncate, keep)
+      if (rows.nonEmpty) wrote(lg)
       rows
     }
+
+    private def wrote(lg: TaskLog): Unit = lg.write(s"wrote $out (truncate=$truncate)")
   }
 
   private def dbTarget(ctx: TaskContext, task: Node)

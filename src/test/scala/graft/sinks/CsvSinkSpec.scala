@@ -40,7 +40,7 @@ class CsvSinkSpec extends SparkSpec {
       : (Array[Byte], Option[Long]) = {
     val target = Paths.get(tmpDir("graft_csvsink_"), "t.csv")
     if (!truncate) Files.write(target, Prior)
-    val rows = CsvSink.write(df, target.toString, node(sep, enc), truncate)
+    val rows = CsvSink.writeSingle(df, target.toString, node(sep, enc), truncate)
     (Files.readAllBytes(target), rows)
   }
 

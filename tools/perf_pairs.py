@@ -2,17 +2,18 @@
 """Alternating benchmark pairs of two checkouts.
 
     python3 tools/perf_pairs.py PARENT_DIR CHANGE_DIR --workload W --pairs N
-        [--seed0 S] [--seconds 15] [--out DIR]
+        [--seed0 S]
 
 Each pair runs `perfbench/run.py --trace 0` once in each checkout, with
-the same seed (S + pair index), and flips which side goes first from one
+the same seed (S + pair index) and the run length `run_seconds` of the
+change's `BENCHMARK.json`, and flips which side goes first from one
 pair to the next, so drift in machine load falls on both sides alike.
 The records each run appends to its checkout's
-`.bench_build/results/runs.jsonl` are collected into `DIR/parent.jsonl`
-and `DIR/change.jsonl` (default: `.bench_build/pairs/W` in CHANGE_DIR,
-which git ignores). Then it prints one line per pair,
-`perfbench/compare.py parent.jsonl change.jsonl` (the change's copy),
-and how many pairs the change was faster in on `wall_s`.
+`.bench_build/results/runs.jsonl` are collected into `parent.jsonl` and
+`change.jsonl` in `.bench_build/pairs/W` of CHANGE_DIR (git ignores it).
+Then it prints one line per pair, `perfbench/compare.py parent.jsonl
+change.jsonl` (the change's copy), and how many pairs the change was
+faster in on `wall_s`.
 Exits 1 when any run was not correct or had a failed operation.
 """
 import argparse
@@ -22,7 +23,7 @@ import subprocess
 import sys
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
+def run_once(checkout: str, workload: str, seed: int, seconds: int) -> dict:
     """One benchmark run in `checkout`; returns the record it appended."""
     results = os.path.join(checkout, ".bench_build", "results", "runs.jsonl")
     seen = len(open(results).readlines()) if os.path.exists(results) else 0
@@ -48,17 +49,17 @@ def main() -> None:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed0", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=15)
-    ap.add_argument("--out")
     args = ap.parse_args()
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
-    out = args.out or os.path.join(sides["change"], ".bench_build", "pairs", args.workload)
+    with open(os.path.join(sides["change"], "BENCHMARK.json")) as fh:
+        seconds = json.load(fh)["run_seconds"]
+    out = os.path.join(sides["change"], ".bench_build", "pairs", args.workload)
     os.makedirs(out, exist_ok=True)
     recs = {"parent": [], "change": []}
     for i in range(args.pairs):
         seed = args.seed0 + i
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-        pair = {side: run_once(sides[side], args.workload, seed, args.seconds) for side in order}
+        pair = {side: run_once(sides[side], args.workload, seed, seconds) for side in order}
         for side in order:
             recs[side].append(pair[side])
         p, c = wall(pair["parent"]), wall(pair["change"])
